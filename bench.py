@@ -354,10 +354,11 @@ class CdcBench(_Bench):
         self.cfg = PipelineConfig(n_buckets=max(32, cpus), write_mode="auto")
         self.tmp = tempfile.mkdtemp(prefix="qwatch_bench_", dir=_fast_dir())
         # warmup (excluded): C2 JIT tiering + codecs + python workers.
-        # TWO epochs, not one — under write_mode="auto" epoch 0 takes the
-        # COW path and epochs >= 1 the delta path, so a one-epoch warmup
-        # leaves the delta write plan cold and trial 0 runs 2-3x slow
-        # (measured; it was the r4 artifact's loose-trial culprit).
+        # TWO epochs, not one — a one-epoch warmup left trial 0 running
+        # 2-3x slow (measured; it was the r4 artifact's loose-trial
+        # culprit). Every write_mode="auto" epoch takes the delta path,
+        # so the second epoch repeats the first one's write plan on a
+        # table that already holds deltas.
         from qwatch_spark.operators.apply import apply_changes
 
         wt = SnapshotTable.create(f"{self.tmp}/warm", n_buckets=self.cfg.n_buckets)
@@ -421,8 +422,8 @@ class StreamBench(_Bench):
         # warmup (excluded): the streaming runner's plan shapes (file
         # source, foreachBatch, dead-letter probe) JIT on a small feed so
         # trial 1 is a real sample, not a codegen warmup. 8 files /
-        # trigger cap 4 = two epochs, so the delta write path (epochs
-        # >= 1 under write_mode="auto") is warm too.
+        # trigger cap 4 = two epochs, each through the delta write path
+        # (every write_mode="auto" epoch takes it).
         from qwatch_spark.streaming import run_stream
 
         write_feed_files(spark, f"{self.tmp}/warmfeed", 50_000, files=8)
@@ -483,8 +484,8 @@ class EntityBench(_Bench):
         # warmup (excluded): entity routing + skeleton union + link
         # derivation have their own plan shapes (bench_scaling learned
         # this the hard way — single-table warmup left entity codegen in
-        # the measured window). Two epochs so the delta write path
-        # (epochs >= 1 under write_mode="auto") is warm too — a one-epoch
+        # the measured window). Two epochs, each through the delta write
+        # path (every write_mode="auto" epoch takes it) — a one-epoch
         # warmup left trial 0 running 2.4x slow (measured), which under
         # interleaved best-of-3 on a noisy host is exactly how the r4
         # artifact's 129k ev/s reading happened.

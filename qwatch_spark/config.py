@@ -76,10 +76,6 @@ class PipelineConfig:
     # auto/delta: compact any bucket once it carries more than this many
     # delta versions (read amplification bound)
     compact_every: int = 8
-    # auto: additionally compact a bucket once its delta chain exceeds
-    # this many bytes on disk (None disables the byte trigger); bounds
-    # read amplification in I/O terms when epochs are few but large
-    compact_bytes: int | None = None
     # manifest commit protocol for tables THIS pipeline creates:
     #   localfs — atomic rename + mutation-counter guard (single writer)
     #   cas     — put-if-absent commit log: safe under concurrent
@@ -119,28 +115,6 @@ class PipelineConfig:
     # over the filter files — no table scan); rebuild() at maintenance
     # cadence remains the full consolidation that sheds dead entries
     fp_merge_segments: int = 64
-    # where a delta epoch's per-bucket commit stats (row/delete counts,
-    # seq and warc_ts ranges — the zone map + lineage inputs) come from:
-    #   auto   — footer (below); the default
-    #   footer — post-write parquet-footer metadata reads through the
-    #            datafs seam (zero Spark jobs; local: ~130 µs/file
-    #            native loop, s3: ONE tree LIST + pooled ranged GETs,
-    #            measured flat-within-2× at 8× file count)
-    #   task   — harvested DURING the write job via observe() metrics
-    #            fused into the write stage: NO post-write read of any
-    #            kind, the lake-format write-task-stats idiom. Built,
-    #            proven byte-equivalent, and MEASURED SLOWER in every
-    #            regime tested (scripts/bench_commit_stats.py task arm:
-    #            the 6-aggregates-per-bucket-per-row observe set added
-    #            +2.1 s to a 60k-row/64-bucket write vs the footer
-    #            path's 12 ms post-write read, +46 s at 512 buckets) —
-    #            the observe cost scales rows × buckets while footers
-    #            scale with files. Kept as an explicit option for
-    #            tiny-batch/high-RTT regimes and as the three-way
-    #            stats oracle; "auto" deliberately never picks it.
-    #   job    — ONE narrow aggregate job over the written files (the
-    #            always-correct fallback the other modes degrade to)
-    commit_stats_mode: str = "auto"
 
     def __post_init__(self) -> None:
         unknown = [r for r in self.rules if r not in KNOWN_FILTER_RULES]
@@ -188,11 +162,6 @@ class PipelineConfig:
             )
         if self.compact_every < 1:
             raise ValueError("compact_every must be >= 1")
-        if self.commit_stats_mode not in ("auto", "task", "footer", "job"):
-            raise ValueError(
-                "commit_stats_mode must be auto|task|footer|job, got "
-                f"{self.commit_stats_mode!r}"
-            )
 
     @classmethod
     def from_dict(cls, raw: dict[str, Any]) -> "PipelineConfig":

@@ -25,6 +25,7 @@ destroy handler keeping the destroyed node with `destroyed` stamped
 from __future__ import annotations
 
 import datetime as dt
+import logging
 import os
 import shutil
 import time
@@ -38,6 +39,8 @@ from qwatch_spark.operators.evolution import resolve_schema
 from qwatch_spark.operators.rules import apply_rules
 from qwatch_spark.plans.snapshot_table import SnapshotTable, _ziso, bucket_expr
 from qwatch_spark.schema import METRICS_SCHEMA
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -255,70 +258,6 @@ def _delta_footer_stats(
                 st["ts_hi"] if acc["hi"] is None
                 else max(acc["hi"], st["ts_hi"])
             )
-    return res
-
-
-def _use_task_stats(cfg) -> bool:
-    """True when the delta commit should harvest its per-bucket stats
-    DURING the write job (observe() metrics fused into the write stage)
-    instead of reading anything back afterward. EXPLICIT opt-in only —
-    deliberately independent of bucket count: the observe form costs 6
-    conditional aggregates per bucket evaluated per row — measured
-    (scripts/bench_commit_stats.py task arm) at +2.1 s on a
-    60k-row/64-bucket write and +46 s at 512 buckets, versus a 12 ms
-    footer read — rows × buckets beats files in every regime tested,
-    so "auto" never picks this; it exists for tiny-batch/high-RTT
-    regimes and as the three-way stats oracle
-    (tests/test_commit_stats_modes.py)."""
-    return getattr(cfg, "commit_stats_mode", "auto") == "task"
-
-
-def _task_stats_metrics(n_buckets: int) -> list:
-    """The observe() expression set: per bucket, row count, delete count
-    (`_del` is non-null exactly on deletes), seq min/max, and warc_ts
-    min/max (null-skipping, like the footer path and the aggregate
-    job). All six are plain JVM-side aggregates, so the harvest rides
-    the write stage's existing pass over the rows — the write-task
-    stats collection lake formats do in their committers, expressed
-    through the one hook Spark gives a PySpark caller (r7 verdict #8)."""
-    ms = []
-    for b in range(n_buckets):
-        c = F.col("b") == b
-        ms += [
-            F.count(F.when(c, F.lit(1))).alias(f"n_{b}"),
-            F.count(F.when(c, F.col("_del"))).alias(f"nd_{b}"),
-            F.min(F.when(c, F.col("seq"))).alias(f"ms_{b}"),
-            F.max(F.when(c, F.col("seq"))).alias(f"xs_{b}"),
-            F.min(F.when(c, F.col("warc_ts"))).alias(f"lo_{b}"),
-            F.max(F.when(c, F.col("warc_ts"))).alias(f"hi_{b}"),
-        ]
-    return ms
-
-
-def _task_stats_fold(
-    vals: dict, n_buckets: int, touched: list[int]
-) -> dict | None:
-    """Fold an Observation's metric row into the same
-    {b: {n, nd, min_seq, max_seq, lo, hi}} shape `_delta_footer_stats`
-    returns. None (→ the caller's always-correct job fallback) if the
-    observed bucket set disagrees with the written partition dirs —
-    that cannot happen for a completed write, but stats must never be
-    the component that corrupts a commit."""
-    res: dict[int, dict] = {}
-    for b in range(n_buckets):
-        n = vals.get(f"n_{b}")
-        if not n:
-            continue
-        res[int(b)] = {
-            "n": int(n),
-            "nd": int(vals[f"nd_{b}"]),
-            "min_seq": vals[f"ms_{b}"],
-            "max_seq": vals[f"xs_{b}"],
-            "lo": vals[f"lo_{b}"],
-            "hi": vals[f"hi_{b}"],
-        }
-    if sorted(res) != [int(b) for b in touched]:
-        return None
     return res
 
 
@@ -551,19 +490,6 @@ def apply_changes(
                 # yields exactly one file per touched bucket
                 F.col("_b").alias("b"),
             )
-            obs = None
-            if _use_task_stats(cfg):
-                # task-side stats: the write job itself emits the
-                # per-bucket commit stats (observe() metrics fused into
-                # the write stage), deleting the post-write read — no
-                # footer fetches, no fallback job, nothing re-opens the
-                # files the tasks just closed
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                snap = snap.observe(
-                    obs, *_task_stats_metrics(table.n_buckets)
-                )
             (
                 snap.write.mode("overwrite")
                 .partitionBy("b")
@@ -581,20 +507,14 @@ def apply_changes(
                     int((time.time() - t0) * 1000),
                 )
             t = time.time()
-            # the batch/zone-map/lineage stats every commit needs, by
-            # cfg.commit_stats_mode: task-side observe() metrics the
-            # write job already computed (zero post-write I/O of any
-            # kind), or the just-written files' FOOTERS — a driver-side
-            # metadata read, zero Spark jobs (under concurrent
-            # multi-table applies, a per-table stats job queued behind
-            # other tables' writes was the dominant commit cost). Either
-            # falls back to ONE narrow aggregate job over the
-            # (page-cached) files when a required input is missing.
-            fstats = None
-            if obs is not None:
-                fstats = _task_stats_fold(obs.get, table.n_buckets, touched)
-            elif getattr(cfg, "commit_stats_mode", "auto") != "job":
-                fstats = _delta_footer_stats(out, touched)
+            # the batch/zone-map/lineage stats every commit needs, from
+            # the just-written files' FOOTERS — a driver-side metadata
+            # read, zero Spark jobs (under concurrent multi-table
+            # applies, a per-table stats job queued behind other
+            # tables' writes was the dominant commit cost). Falls back
+            # to ONE narrow aggregate job over the (page-cached) files
+            # when a required statistic is missing.
+            fstats = _delta_footer_stats(out, touched)
             if fstats is None:
                 per_b = (
                     spark.read.parquet(out)
@@ -769,17 +689,12 @@ def apply_changes(
             # bound read amplification: fold deltas once a bucket carries
             # more than compact_every of them (atomic maintenance swap)
             t = time.time()
-            compacted = table.compact(
-                spark,
-                max_deltas=cfg.compact_every,
-                max_delta_bytes=cfg.compact_bytes,
-            )
+            compacted = table.compact(spark, max_deltas=cfg.compact_every)
             if compacted:
                 phases["compact"] = time.time() - t
 
         phases = {k: round(v, 3) for k, v in phases.items()}
-        if os.environ.get("QWATCH_PROFILE"):
-            print(f"[apply epoch={epoch_id}] phases={phases}")
+        log.debug("apply epoch=%s phases=%s", epoch_id, phases)
         return ApplyStats(
             int(epoch_id), False, n_events, n_up, n_del, len(touched), wall_ms,
             phases,

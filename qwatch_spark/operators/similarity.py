@@ -14,11 +14,14 @@
 - `cosine_near_dup_pairs` — embedding near-duplicate pairs ≥ threshold
   (banded-LSH candidates, then exact cosine refine on candidates only).
 
-Numerics: float32 is widened to float64 (exact), products are summed as
-DECIMAL(30,15) — decimal addition is associative, so the reduction is
-order-independent and bit-stable across engines and partitionings
-(a double sum would drift with partition order). Final cosine is rounded
-to 9 places.
+Numerics: float32 is widened to float64 (exact), each product is cast to
+DECIMAL(30,15) and the products are folded left to right in array order.
+Every partial sum is rounded to 1e-14 (Spark types decimal(38,15) +
+decimal(30,15) as decimal(38,14)), so the sum is not exact and depends
+on element order — but that order is the array's own, so the result is
+bit-stable across partitionings and re-runs, and any engine that folds
+in array order with the same decimal rounding reproduces it. Final
+cosine is rounded to 9 places.
 
 All pure Column expressions (`zip_with`/`aggregate`/higher-order
 functions) — JVM-side, no UDFs.
@@ -40,7 +43,8 @@ _ACC = "decimal(38,15)"
 
 
 def _dec_sum(arr: Column) -> Column:
-    """Order-independent exact sum of an array of decimals."""
+    """Left fold of an array of decimals in array order; every partial
+    sum rounds to 1e-14 (see `_py_norm`)."""
     return F.aggregate(
         arr,
         F.lit(0).cast(_ACC),
@@ -65,19 +69,24 @@ def cosine_sim(a: Column, b: Column, scale: int = 9) -> Column:
 
 
 def _py_norm(vec) -> float:
-    """Driver-side replica of sqrt(`_norm_sq`) for one vector — exact to
-    the Column expressions, term for term (same argument as
-    `_lsh_query_buckets`: Decimal(repr(x)) == BigDecimal.valueOf(double),
-    HALF_UP quantize == the decimal(30,15) cast, exact decimal sums both
-    sides, float(Decimal) == Decimal.toDouble, IEEE sqrt both sides)."""
+    """Driver-side replica of sqrt(`_norm_sq`) for one vector — bit-equal
+    to the Column expressions, term for term: Decimal(repr(x)) ==
+    BigDecimal.valueOf(double), HALF_UP quantize == the decimal(30,15)
+    cast, float(Decimal) == Decimal.toDouble, IEEE sqrt both sides. The
+    running sum is NOT exact: `acc + v` in `_dec_sum` adds decimal(38,15)
+    to decimal(30,15), which needs precision 39, so Spark's precision-loss
+    rule types every partial sum decimal(38,14) — each step rounds HALF_UP
+    to 1e-14, and so must this loop."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
     q15 = Decimal("1e-15")
+    q14 = Decimal("1e-14")
     s = Decimal(0)
     for x in vec:
         fx = float(x)
-        s += Decimal(repr(fx * fx)).quantize(q15, rounding=ROUND_HALF_UP)
+        sq = Decimal(repr(fx * fx)).quantize(q15, rounding=ROUND_HALF_UP)
+        s = (s + sq).quantize(q14, rounding=ROUND_HALF_UP)
     return math.sqrt(float(s))
 
 

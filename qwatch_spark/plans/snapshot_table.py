@@ -874,54 +874,6 @@ class SnapshotTable:
         self._swap_or_cleanup(manifest, out, extra_paths=written)
         return new_version
 
-    def commit_delta_epoch(
-        self,
-        updates: DataFrame,
-        touched_buckets: list[int],
-        epoch_id: int,
-        evolved_payload: T.StructType,
-    ) -> int:
-        """Merge-on-read commit: write ONLY the epoch's deduped updates as
-        delta files — apply cost is O(batch), independent of table size.
-        Readers resolve base ∪ deltas by the (warc_ts, seq) total order;
-        `compact()` folds deltas back into bases. The scale path for
-        high-frequency epochs over a 10^10-row table, where per-epoch
-        copy-on-write of every touched bucket would rewrite the world.
-
-        `updates` must already be in snapshot format (payload +
-        seq/is_deleted/last_op/last_epoch), one row per url."""
-        if self.has_epoch(epoch_id):
-            return self.version
-        new_version = self.version + 1
-        token = _vtoken(new_version)
-        out = os.path.join(self.path, "data", f"v={token}")
-        cols = [f.name for f in full_schema(evolved_payload).fields]
-        (
-            updates.withColumn("b", bucket_expr(self.n_buckets, self.key_col))
-            .select("b", *cols)
-            .repartition(max(len(touched_buckets), 1), "b")
-            .write.mode("overwrite")
-            .partitionBy("b")
-            .parquet(out)
-        )
-        manifest = dict(self._manifest)
-        manifest["version"] = new_version
-        manifest["schema"] = evolved_payload.json()
-        self._record_epoch(manifest, epoch_id)
-        cur = self._buckets_of(self._manifest, only=touched_buckets)
-        updates: dict = {}
-        for b in touched_buckets:
-            e = self._bucket_entry(cur.get(str(int(b)), {"base": None, "deltas": []}))
-            updates[str(int(b))] = {
-                "base": e["base"],
-                "deltas": [*e["deltas"], token],
-                "z": e["z"],
-                **({"zf": e["zf"]} if e["zf"] else {}),
-            }
-        written = self._apply_bucket_updates(manifest, updates)
-        self._swap_or_cleanup(manifest, out, extra_paths=written)
-        return new_version
-
     @staticmethod
     def _file_ts_ranges(d: str, max_workers: int | None = None) -> dict | None:
         """Per-file warc_ts ranges from parquet FOOTERS for every file

@@ -43,9 +43,9 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "snappy")
         # INT64 micros, not the legacy INT96 default: INT96 chunks carry
         # NO min/max statistics, which disables (a) row-group skipping on
-        # warc_ts predicates and (b) the footer-stats commit fast path
-        # (apply.py::_delta_footer_stats) that replaces a per-epoch Spark
-        # job with a metadata read
+        # warc_ts predicates and (b) the delta commit's footer stats read
+        # (apply.py::_delta_footer_stats), which then falls back to a
+        # per-epoch Spark aggregate job
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # local mode = single JVM: the driver heap IS the executor memory;
         # size it to the host or 32-way task concurrency GC-thrashes

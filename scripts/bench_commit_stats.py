@@ -40,6 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from qwatch_spark.config import PipelineConfig  # noqa: E402
 from qwatch_spark.datagen import gen_feed_df  # noqa: E402
+import qwatch_spark.operators.apply as apply_mod  # noqa: E402
 from qwatch_spark.operators.apply import (  # noqa: E402
     _delta_footer_stats,
     apply_changes,
@@ -134,36 +135,36 @@ def main() -> None:
         assert _delta_footer_stats(a["s3_out"], a["touched"]) == \
             _delta_footer_stats(a["out"], a["touched"])
 
-    # ---- task-side arm (r7 verdict #8): stats harvested DURING the
-    # write via observe() metrics vs the post-write footer read vs the
-    # aggregate job. Measured as whole apply epochs on fresh tables so
-    # the observe expressions' cost on the write stage is visible (6
-    # conditional aggregates per bucket per row — the reason "auto"
-    # cuts over to footers at high bucket counts): at n_buckets=64 the
-    # harvest should be free; at 512 the write-stage overhead is the
-    # honest price tag next to the footer path's post-write wall.
-    task_trials = int(os.environ.get("TASK_TRIALS", "3"))
-    task_arm: dict = {}
+    # ---- whole-epoch arm: the footer stats read vs the aggregate-job
+    # fallback it replaces, measured as full apply epochs on fresh tables
+    # so each stats phase is timed inside a real commit. The job arm
+    # forces the fallback by making the footer harvest report missing
+    # statistics, exactly as an INT96 or stats-less file would.
+    epoch_trials = int(os.environ.get("EPOCH_TRIALS", "3"))
+    epoch_arm: dict = {}
     feed = gen_feed_df(spark, ROWS).drop("epoch_hint")
     feed = feed.localCheckpoint()  # same materialized input every trial
-    for i in range(task_trials):
+    for i in range(epoch_trials):
         for nb in (64, 512):
-            for mode in ("task", "footer", "job"):
-                cfg = PipelineConfig(
-                    n_buckets=nb, write_mode="delta", commit_stats_mode=mode
-                )
-                p = os.path.join(work, f"ta_{mode}{nb}_{i}")
+            for mode in ("footer", "job"):
+                cfg = PipelineConfig(n_buckets=nb, write_mode="delta")
+                p = os.path.join(work, f"ep_{mode}{nb}_{i}")
                 t = SnapshotTable.create(p, n_buckets=nb)
-                stats = apply_changes(spark, feed, t, 0, cfg)
-                e = task_arm.setdefault(
+                if mode == "job":
+                    apply_mod._delta_footer_stats = lambda out, touched: None
+                try:
+                    stats = apply_changes(spark, feed, t, 0, cfg)
+                finally:
+                    apply_mod._delta_footer_stats = _delta_footer_stats
+                e = epoch_arm.setdefault(
                     f"{mode}_{nb}", {"write": [], "commit_stats": []}
                 )
                 e["write"].append(round(stats.phases["write"], 4))
                 e["commit_stats"].append(
                     round(stats.phases["commit_stats"], 4)
                 )
-    task_best = {
-        k: {ph: min(ws) for ph, ws in v.items()} for k, v in task_arm.items()
+    epoch_best = {
+        k: {ph: min(ws) for ph, ws in v.items()} for k, v in epoch_arm.items()
     }
     # stop the JVM before timing: hundreds of idle executor threads add
     # wakeup-latency noise to the 256-thread RTT waves we're measuring
@@ -242,8 +243,8 @@ def main() -> None:
         "engine_excess_ratio_512_over_64": round(excess_ratio, 3),
         "engine_flat_within_2x": excess_ratio <= 2.0,
         "sequential_model_walls": seq_model,
-        "task_arm_best": task_best,
-        "task_arm_trials": task_arm,
+        "epoch_arm_best": epoch_best,
+        "epoch_arm_trials": epoch_arm,
         "local_trials_64": arms[64]["local"],
         "local_trials_512": arms[512]["local"],
         "remote_trials_64": arms[64]["remote"],

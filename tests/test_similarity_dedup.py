@@ -1622,3 +1622,32 @@ def test_wait_no_fold_timeout_is_typed(tmp_path):
     assert __import__("time").monotonic() - t0 >= 0.3
     os.remove(sim._fold_marker(vdir))
     assert sim._wait_no_fold(path, timeout_s=0.3) == (vdir, 3)
+
+
+@pytest.mark.parametrize("source", ["float", "double", "sf0.01"])
+def test_py_norm_bit_equal_to_column_norm(spark, source):
+    """`_py_norm` (driver-side query norm) must equal sqrt(`_norm_sq`)
+    bit for bit — the IVF/LSH top-k paths divide engine dots by it, so a
+    one-ulp drift can reorder ties against cosine_topk. Seeded
+    array<float> / array<double> vectors over magnitudes 1e-7…1e4 and
+    dims 1…256 (both ends included), plus the sf0.01 embeddings."""
+    import os
+
+    from qwatch_spark.operators.similarity import _norm_sq, _py_norm
+
+    if source == "sf0.01":
+        df = spark.read.parquet(
+            os.path.join(os.path.dirname(SF), "sf0.01", "embeddings.parquet")
+        ).select(F.col("embedding").alias("v"))
+    else:
+        rng = np.random.default_rng(20260)
+        dims = [1, 256] + [int(d) for d in rng.integers(1, 257, size=298)]
+        rows = [
+            ([float(x) for x in rng.standard_normal(d) * 10.0 ** rng.uniform(-7, 4)],)
+            for d in dims
+        ]
+        df = spark.createDataFrame(rows, f"v array<{source}>")
+    got = df.select("v", F.sqrt(_norm_sq(F.col("v"))).alias("n")).collect()
+    assert got
+    bad = [r["v"] for r in got if _py_norm(r["v"]) != r["n"]]
+    assert not bad, f"{len(bad)}/{len(got)} norms differ, e.g. {bad[0][:4]}"
