@@ -24,6 +24,8 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    from qwatch_spark.plans.objectstore import CAS_BACKENDS
+
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--feed-dir", required=True)
     p.add_argument("--table", required=True)
@@ -37,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--compact-every", type=int, default=None)
     p.add_argument("--min-quality", type=float, default=None)
     p.add_argument("--commit-protocol", choices=("localfs", "cas"), default=None)
-    p.add_argument("--cas-backend", choices=("localfs", "memory"), default=None)
+    p.add_argument("--cas-backend", choices=CAS_BACKENDS, default=None)
     p.add_argument("--manifest-shards", type=int, default=None)
     p.add_argument("--feed-format", choices=("parquet", "json"), default=None)
     p.add_argument(

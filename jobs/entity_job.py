@@ -26,6 +26,8 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    from qwatch_spark.plans.objectstore import CAS_BACKENDS
+
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--feed-dir", required=True)
     p.add_argument("--base", required=True, help="parent dir of entity tables")
@@ -35,7 +37,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--n-buckets", type=int, default=None)
     p.add_argument("--write-mode", choices=("cow", "delta", "auto"), default=None)
     p.add_argument("--commit-protocol", choices=("localfs", "cas"), default=None)
-    p.add_argument("--cas-backend", choices=("localfs", "memory"), default=None)
+    p.add_argument("--cas-backend", choices=CAS_BACKENDS, default=None)
     p.add_argument("--manifest-shards", type=int, default=None)
     p.add_argument("--once", action="store_true", help="drain and exit")
     p.add_argument("--interval", default=None, help="e.g. '30 seconds'")

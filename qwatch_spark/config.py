@@ -81,10 +81,10 @@ class PipelineConfig:
     #   cas     — put-if-absent commit log: safe under concurrent
     #             writers on any store with a conditional put
     commit_protocol: str = "localfs"
-    # cas conditional-put backend for tables this pipeline creates:
-    #   localfs — os.link put-if-absent (default)
-    #   memory  — in-process fake (tests / porting template; an S3/GCS
-    #             adapter is a new CasBackend in plans/commit_backend.py)
+    # where the CAS commit log of tables this pipeline creates lives
+    # (plans/objectstore.py):
+    #   localfs — the table dir, os.link put-if-absent (default)
+    #   s3      — an S3 bucket, conditional put (If-None-Match: *)
     cas_backend: str = "localfs"
     # shard the manifest's bucket entries into this many side files
     # (None = inline). Size ≥ n_buckets/32 once n_buckets is large:
@@ -135,12 +135,12 @@ class PipelineConfig:
                 f"unknown commit_protocol {self.commit_protocol!r} "
                 "(expected 'localfs' or 'cas')"
             )
-        from qwatch_spark.plans.commit_backend import BACKENDS
+        from qwatch_spark.plans.objectstore import CAS_BACKENDS
 
-        if self.cas_backend not in BACKENDS:
+        if self.cas_backend not in CAS_BACKENDS:
             raise ValueError(
                 f"unknown cas_backend {self.cas_backend!r} "
-                f"(expected one of {sorted(BACKENDS)})"
+                f"(expected one of {CAS_BACKENDS})"
             )
         from qwatch_spark.sources.feed import FEED_FORMATS
 

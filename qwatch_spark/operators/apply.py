@@ -128,17 +128,18 @@ def _delta_footer_stats(
     that predates `_del`) — the caller then falls back to the Spark
     aggregate job, so correctness NEVER depends on footers.
 
-    Scale shape: O(touched files) metadata reads through the
-    `plans/datafs` seam, at the FS's OWN parallelism (`io_workers`):
-    local footers are ~75 µs of native CPU where a pool measured 8×
-    slower, so local runs the plain loop; object-store footers are a
-    round-trip each, so `s3://` overlaps a wide thread pool — which is
-    what keeps the commit's stats phase ~flat as touched-file count
-    grows instead of re-serializing at thousands of touched buckets
-    (measured in scripts/bench_commit_stats.py, recorded in
-    BENCH/BASELINE.md). `datafs_for` serves local paths directly and
-    `s3://` through the same pluggable client the CAS commit log uses;
-    unknown schemes return None here → the Spark-job fallback. This is how lake
+    Scale shape: O(touched files) metadata reads through the object
+    store (`plans/objectstore`), at the store's OWN parallelism
+    (`io_workers`): local footers are ~75 µs of native CPU where a pool
+    measured 8× slower, so local runs the plain loop; object-store
+    footers are a round-trip each, so `s3://` overlaps a wide thread
+    pool — which is what keeps the commit's stats phase ~flat as
+    touched-file count grows instead of re-serializing at thousands of
+    touched buckets (measured in scripts/bench_commit_stats.py,
+    recorded in BENCH/BASELINE.md). `store_for` serves local paths
+    directly and `s3://` through the same client the CAS commit log
+    uses; unknown schemes return None here → the Spark-job fallback.
+    This is how lake
     formats collect per-file stats at commit time, minus write-task
     harvesting (Spark owns the data write, so the driver pool is the
     seam we own). The Spark job it replaces cost a scheduler
@@ -147,13 +148,11 @@ def _delta_footer_stats(
     a 5.5 s entity-stream wall was this job × 6 table-epochs)."""
     import datetime as dt
 
-    from qwatch_spark.plans.datafs import datafs_for
+    from qwatch_spark.plans.objectstore import store_for
 
-    fs = datafs_for(out)
-    if fs is None:
+    store = store_for(out)
+    if store is None:
         return None
-    if max_workers is None:
-        max_workers = fs.io_workers  # local: sequential; s3: wide
 
     def norm_ts(v):
         if isinstance(v, dt.datetime):
@@ -219,16 +218,20 @@ def _delta_footer_stats(
     # phase 1: ONE tree listing of the epoch dir covers every touched
     # bucket (~1000 keys per object-store LIST round-trip — per-bucket
     # LISTs would pay one round-trip per touched bucket)
-    tree = fs.list_parquet_tree(out)
+    tree: dict[str, list[str]] = {}
+    for rel, _size, _mt in store.list_tree(out):
+        rel_dir, _, name = rel.rpartition("/")
+        if name.endswith(".parquet"):
+            tree.setdefault(rel_dir, []).append(f"{out.rstrip('/')}/{rel}")
     pairs: list[tuple[int, str]] = []
     for b in touched:
         files = tree.get(f"b={b}")
         if not files:
             return None
         pairs.extend((int(b), f) for f in files)
-    # phase 2: every touched FILE's footer — the FS overlaps the byte
-    # fetches and parses serially (see DataFS.parquet_metadata_many)
-    mds = fs.parquet_metadata_many([f for _b, f in pairs], max_workers)
+    # phase 2: every touched FILE's footer — the store overlaps the
+    # byte fetches and parses serially (see S3Store.parquet_metadata_many)
+    mds = store.parquet_metadata_many([f for _b, f in pairs], max_workers)
     per_file = [file_stats(md) for md in mds]
     res: dict[int, dict] = {}
     for (b, _f), st in zip(pairs, per_file):

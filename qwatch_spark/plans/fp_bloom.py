@@ -50,16 +50,17 @@ Reference analog: qwatch has no dedup story at all — every event
 re-MERGEs into Neo4j unconditionally (outputs/neo4j.go:474-506); this
 index is what lets the same semantics survive a 10^10-event feed.
 
-Storage: every file operation goes through the `plans/indexfs` seam —
-the same one the ANN serving indexes run their pointer protocol on —
-so the bloom index works where a 100 TB table's side indexes actually
-live: local paths keep plain file ops; an `s3://` table stores
-segments as objects (atomic puts, one LIST per listing, GETs for
-loads). The probe UDF runs on EXECUTORS, where driver-set class hooks
-do not exist, so the Column captures a picklable `indexfs_spec` and
-rebuilds the client worker-side. Segment files are write-once under
-nonce-unique names (the table part-file contract), which is what lets
-remote caches trust the name without a freshness stamp.
+Storage: every file operation goes through the object store
+(`plans/objectstore`) — the same one the ANN serving indexes run their
+pointer protocol on — so the bloom index works where a 100 TB table's
+side indexes actually live: local paths keep plain file ops; an
+`s3://` table stores segments as objects (atomic puts, one LIST per
+listing, GETs for loads). The probe UDF runs on EXECUTORS, where
+driver-set class hooks do not exist, so the Column captures a
+picklable `store_spec` and rebuilds the client worker-side. Segment
+files are write-once under nonce-unique names (the table part-file
+contract), which is what lets remote caches trust the name without a
+freshness stamp.
 """
 
 from __future__ import annotations
@@ -72,11 +73,7 @@ import time
 import numpy as np
 import pandas as pd
 
-from qwatch_spark.plans.indexfs import (
-    indexfs_for,
-    indexfs_from_spec,
-    indexfs_spec,
-)
+from qwatch_spark.plans.objectstore import store_for, store_from_spec, store_spec
 
 BLOOM_DIR = "_fp_bloom"
 META_FILE = "_meta.json"
@@ -147,7 +144,7 @@ class _Bloom:
         return hit
 
 
-def _load_segment(fs, path: str) -> tuple[int, np.ndarray] | None:
+def _load_segment(store, path: str) -> tuple[int, np.ndarray] | None:
     """None ONLY when the file no longer exists (consolidated away by a
     concurrent rebuild/merge — the caller must then fall back to the
     directory's CURRENT files, which the superset discipline guarantees
@@ -157,20 +154,17 @@ def _load_segment(fs, path: str) -> tuple[int, np.ndarray] | None:
 
     Cache validity: local files stamp with mtime_ns (an external
     rebuild at the same path must never serve a dead snapshot); object
-    stores carry `immutable_blobs` — segment names are nonce-unique and
-    write-once, so the name alone keys the cache and a cached entry is
-    served without any round-trip (a vanished-but-cached segment is a
-    harmless superset: its coverage was folded into newer files)."""
-    if getattr(fs, "immutable_blobs", False):
-        key = (path, 0)
-    else:
-        try:
-            key = (path, fs.stamp(path))
-        except FileNotFoundError:
-            return None
+    stores stamp 0 without a round-trip — segment names are
+    nonce-unique and write-once, so the name alone keys the cache (a
+    vanished-but-cached segment is a harmless superset: its coverage
+    was folded into newer files)."""
+    try:
+        key = (path, store.stamp(path))
+    except FileNotFoundError:
+        return None
     cached = _SEG_CACHE.get(key)
     if cached is None:
-        data = fs.get_bytes(path)
+        data = store.get(path)
         if data is None:
             return None
         try:
@@ -185,6 +179,16 @@ def _load_segment(fs, path: str) -> tuple[int, np.ndarray] | None:
     return cached
 
 
+def _segments(store, d: str) -> list[str]:
+    """Sorted paths of the `.npz` segment files directly under `d` —
+    one LIST on an object store."""
+    return [
+        f"{d}/{rel}"
+        for rel, _size, _mt in store.list_tree(d)
+        if rel.endswith(".npz") and "/" not in rel
+    ]
+
+
 class FpBloomIndex:
     """The `<table>/_fp_bloom/` directory: segments + enablement meta."""
 
@@ -194,7 +198,9 @@ class FpBloomIndex:
             if "://" in table_path
             else os.path.join(table_path, BLOOM_DIR)
         )
-        self.fs = indexfs_for(table_path)
+        self.store = store_for(table_path)
+        if self.store is None:
+            raise ValueError(f"no object store client for {table_path!r}")
 
     def _p(self, name: str) -> str:
         return f"{self.dir}/{name}" if "://" in self.dir else os.path.join(
@@ -204,13 +210,13 @@ class FpBloomIndex:
     # ---------- lifecycle ----------
 
     def enabled(self) -> bool:
-        return self.fs.exists(self._p(META_FILE))
+        return self.store.exists(self._p(META_FILE))
 
     def requested(self) -> bool:
         """Enablement has been requested (fp_index="auto" crossed its
         row threshold) but the one-time bootstrap rebuild hasn't run
         yet — maintenance performs it; see `request_enable`."""
-        return self.fs.exists(self._p(REQUEST_FILE))
+        return self.store.exists(self._p(REQUEST_FILE))
 
     def request_enable(self) -> None:
         """Mark the index for enablement WITHOUT paying the O(table)
@@ -224,11 +230,11 @@ class FpBloomIndex:
         the bootstrap's live-row snapshot predates them — double
         coverage is a harmless superset."""
         marker = self._p(REQUEST_FILE)
-        if not self.fs.exists(marker):
-            self.fs.put_file(marker, str(time.time()))
+        if not self.store.exists(marker):
+            self.store.put(marker, str(time.time()).encode())
 
     def segment_paths(self) -> list[str]:
-        return self.fs.list_files(self.dir, ".npz")
+        return _segments(self.store, self.dir)
 
     def _write_filter(self, name: str, bloom: _Bloom) -> str:
         buf = io.BytesIO()
@@ -240,7 +246,7 @@ class FpBloomIndex:
         final = self._p(name)
         # atomic visibility either way: tmp+rename locally, an object
         # put on a store — readers see whole files only
-        self.fs.put_bytes(final, buf.getvalue())
+        self.store.put(final, buf.getvalue())
         return final
 
     # ---------- distributed build ----------
@@ -321,7 +327,7 @@ class FpBloomIndex:
         by_m: dict[int, list[tuple[str, int]]] = {}
         loaded: dict[str, tuple[int, np.ndarray]] = {}
         for p, epoch in segs:
-            seg = _load_segment(self.fs, p)
+            seg = _load_segment(self.store, p)
             if seg is None:
                 continue
             loaded[p] = seg
@@ -340,7 +346,7 @@ class FpBloomIndex:
             for p, _epoch in members:
                 # delete is idempotent: a racing merger that already
                 # removed it is fine — the coverage is already folded
-                self.fs.delete_file(p)
+                self.store.delete(p)
                 removed += 1
         return removed
 
@@ -387,13 +393,13 @@ class FpBloomIndex:
             f"full-w{committed}-{os.urandom(4).hex()}.npz", bloom
         )
         meta = self._p(META_FILE)
-        if not self.fs.exists(meta):
-            self.fs.put_file(
+        if not self.store.exists(meta):
+            self.store.put(
                 meta,
                 json.dumps(
                     {"k": K_HASHES, "bits_per_key": BITS_PER_KEY,
                      "created_at": time.time()}
-                ),
+                ).encode(),
             )
         for p in old:
             name = p.rsplit("/", 1)[-1]
@@ -403,7 +409,7 @@ class FpBloomIndex:
                 except ValueError:
                     continue
                 if epoch <= committed:
-                    self.fs.delete_file(p)
+                    self.store.delete(p)
             elif name.startswith("full-w"):
                 try:
                     # full-w{W}-{hex}.npz, W may be NEGATIVE (-1 = a
@@ -413,9 +419,9 @@ class FpBloomIndex:
                 except ValueError:
                     continue
                 if w <= committed:
-                    self.fs.delete_file(p)  # superseded consolidation
+                    self.store.delete(p)  # superseded consolidation
         # the bootstrap this marker requested has now run
-        self.fs.delete_file(self._p(REQUEST_FILE))
+        self.store.delete(self._p(REQUEST_FILE))
         return path
 
     # ---------- the gate-side probe ----------
@@ -434,14 +440,14 @@ class FpBloomIndex:
         path_set = set(paths)
         idx_dir = self.dir
         # the UDF body runs in EXECUTOR workers, where driver-set class
-        # hooks (S3CasBackend.client_factory) do not exist — the
-        # picklable spec rides the closure and rebuilds the client
-        # worker-side (local tables carry a stateless LocalIndexFS)
-        fs_spec = indexfs_spec(idx_dir)
+        # hooks (S3Store.client_factory) do not exist — the picklable
+        # spec rides the closure and rebuilds the client worker-side
+        # (local tables carry the stateless LocalStore)
+        spec = store_spec(idx_dir)
 
         @F.pandas_udf("boolean")
         def probe(fps: pd.Series) -> pd.Series:
-            fs = indexfs_from_spec(fs_spec)
+            store = store_from_spec(spec)
             # evict cache entries for THIS index's segments that no
             # longer exist (consolidated away by rebuild) — a
             # long-running worker otherwise accumulates dead filters
@@ -460,7 +466,7 @@ class FpBloomIndex:
                 hit = np.zeros(len(vals), dtype=bool)
                 probe_paths = list(paths)
                 for p in probe_paths:
-                    seg = _load_segment(fs, p)
+                    seg = _load_segment(store, p)
                     if seg is None:
                         # a listed segment vanished mid-probe (a
                         # concurrent rebuild/merge consolidated it):
@@ -469,7 +475,7 @@ class FpBloomIndex:
                         # CURRENT listing is a complete superset —
                         # extend the probe with any files we have not
                         # already tested
-                        current = fs.list_files(idx_dir, ".npz")
+                        current = _segments(store, idx_dir)
                         probe_paths += [
                             c for c in current if c not in probe_paths
                         ]

@@ -20,7 +20,7 @@ import time
 
 from pyspark.sql import SparkSession
 
-from qwatch_spark.plans.commit_backend import CommitConflictError
+from qwatch_spark.plans.objectstore import CommitConflictError
 from qwatch_spark.plans.snapshot_table import SnapshotTable
 
 
@@ -52,7 +52,7 @@ def maintain_once(
         out["compacted_buckets"] = len(victims)
         out["version"] = table.version
     except CommitConflictError:
-        # typed catch (commit_backend.CommitConflictError), not message
+        # typed catch (objectstore.CommitConflictError), not message
         # matching — unrelated RuntimeErrors must surface
         out["lost_race"] = True
         table = SnapshotTable(table_path)  # rebase before vacuum

@@ -52,17 +52,73 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from qwatch_spark.plans.commit_backend import (
-    BACKENDS,
+from qwatch_spark.plans.objectstore import (
+    CAS_BACKENDS,
     CommitConflictError,
     StaleBaseError,
-    cas_backend,
+    store_for,
 )
 from qwatch_spark.schema import PAGE_SCHEMA, schema_from_json
 
 MANIFEST = "manifest.json"
 COMMITS_DIR = "_commits"  # CAS protocol: put-if-absent commit log
 SHARDS_DIR = "manifest_shards"  # sharded-manifest bucket-entry files
+
+
+class CasLog:
+    """The CAS commit log: slot n is the object `<root>/_commits/m=<n>.json`
+    holding mutation n's manifest JSON. The CAS protocol needs exactly
+    four operations — put-if-absent of a slot (the linearization point
+    of the whole protocol), list, read, delete — and runs them through
+    the table's object store, so the same protocol commits on a local
+    filesystem (`os.link`, failing EEXIST) and on S3 (`If-None-Match:
+    *`). A slot body is the writer's whole manifest, and data commits
+    carry nonce version tokens, so the stores' read-back on an existing
+    slot tells our own landed write from a rival's; a rival slot with
+    byte-identical content is the same commit, so taking it as ours is
+    sound."""
+
+    def __init__(self, store, root: str):
+        self.store = store
+        self.dir = f"{root.rstrip('/')}/{COMMITS_DIR}"
+
+    @classmethod
+    def for_table(cls, table_path: str, kind: str) -> "CasLog":
+        """`kind` is the manifest's `cas_backend`. "s3" on a plain
+        table path keeps the log in bucket `cas` under the table's real
+        path, so one table directory can commit through either store."""
+        if kind not in CAS_BACKENDS:
+            raise ValueError(
+                f"unknown cas_backend {kind!r} (expected one of {CAS_BACKENDS})"
+            )
+        root = table_path
+        if kind == "s3" and not table_path.startswith("s3://"):
+            root = f"s3://cas/{os.path.realpath(table_path).lstrip('/')}"
+        store = store_for(root)
+        if store is None:
+            raise ValueError(f"no object store client for {root!r}")
+        return cls(store, root)
+
+    def _slot(self, n: int) -> str:
+        return f"{self.dir}/m={int(n)}.json"
+
+    def put_if_absent(self, n: int, data: str) -> bool:
+        """Atomically create slot `n`; False if it already exists."""
+        return self.store.put_if_absent(self._slot(n), data.encode())
+
+    def slots(self) -> list[int]:
+        return sorted(
+            int(rel[2:-5])
+            for rel, _size, _mt in self.store.list_tree(self.dir)
+            if rel.startswith("m=") and rel.endswith(".json") and "/" not in rel
+        )
+
+    def read(self, n: int) -> str | None:
+        data = self.store.get(self._slot(n))
+        return None if data is None else data.decode()
+
+    def delete(self, n: int) -> None:
+        self.store.delete(self._slot(n))
 
 # engine bookkeeping columns stored alongside the payload in every file
 BOOKKEEPING_FIELDS = [
@@ -149,10 +205,10 @@ class SnapshotTable:
                 f"unknown commit_protocol {commit_protocol!r} "
                 "(expected 'localfs' or 'cas')"
             )
-        if cas_backend not in BACKENDS:
+        if cas_backend not in CAS_BACKENDS:
             raise ValueError(
                 f"unknown cas_backend {cas_backend!r} "
-                f"(expected one of {sorted(BACKENDS)})"
+                f"(expected one of {CAS_BACKENDS})"
             )
         if manifest_shards is not None and not (
             1 <= manifest_shards <= n_buckets
@@ -194,7 +250,7 @@ class SnapshotTable:
         # only a pointer cache. A writer that crashed after its CAS
         # linearization (commit slot created) but before the pointer swap
         # leaves the pointer stale — heal forward to the newest commit.
-        backend = cas_backend(manifest.get("cas_backend", "localfs"), self.path)
+        backend = CasLog.for_table(self.path, manifest.get("cas_backend", "localfs"))
         slots = backend.slots()
         top = max(slots) if slots else -1
         if top > manifest.get("mutation", 0):
@@ -218,21 +274,19 @@ class SnapshotTable:
         table) into a loud error instead of silent committed-data loss.
 
         ``cas``: true compare-and-swap. The linearization point is an
-        atomic put-if-absent of commit slot n through the table's
-        `CasBackend` (commit_backend.py — localfs: ``os.link`` into
-        ``_commits/m=<n>.json``, failing EEXIST; the object-store impls
-        are a conditional put: S3 If-None-Match, GCS
-        x-goog-if-generation-match:0, Azure If-None-Match:*; same
-        protocol as Delta Lake's HDFS LogStore). There is NO
-        check-then-act window: a racing writer loses at the create
-        itself regardless of interleaving, and ``manifest.json`` is just
-        a pointer cache healed forward by ``_load_manifest``. Porting to
-        a real object store is a new 4-method CasBackend; nothing in the
-        protocol changes (proven by running the CAS tests through both
-        the localfs and in-memory backends)."""
+        atomic put-if-absent of commit slot n in the table's `CasLog`,
+        through its object store (objectstore.py — localfs: ``os.link``
+        into ``_commits/m=<n>.json``, failing EEXIST; s3: a conditional
+        put, ``If-None-Match: *``; same protocol as Delta Lake's HDFS
+        LogStore). There is NO check-then-act window: a racing writer
+        loses at the create itself regardless of interleaving, and
+        ``manifest.json`` is just a pointer cache healed forward by
+        ``_load_manifest``. The CAS tests run through both stores (s3
+        over the dir-backed fake), so the protocol provably depends on
+        nothing but the store's primitives."""
         target = os.path.join(path, MANIFEST)
         if manifest.get("commit_protocol") == "cas":
-            backend = cas_backend(manifest.get("cas_backend", "localfs"), path)
+            backend = CasLog.for_table(path, manifest.get("cas_backend", "localfs"))
             n = 0 if expected_mutation is None else expected_mutation + 1
             manifest["mutation"] = n
             if expected_mutation is not None:
@@ -301,11 +355,11 @@ class SnapshotTable:
     def version(self) -> int:
         return self._manifest["version"]
 
-    def commit_log_backend(self):
-        """The table's CasBackend (commit_backend.py) — the 4-method
-        conditional-put seam the CAS protocol linearizes through."""
-        return cas_backend(
-            self._manifest.get("cas_backend", "localfs"), self.path
+    def commit_log_backend(self) -> CasLog:
+        """The table's CAS commit log — the conditional-put slots the
+        CAS protocol linearizes through."""
+        return CasLog.for_table(
+            self.path, self._manifest.get("cas_backend", "localfs")
         )
 
     def has_epoch(self, epoch_id: int) -> bool:
@@ -875,46 +929,6 @@ class SnapshotTable:
         return new_version
 
     @staticmethod
-    def _file_ts_ranges(d: str, max_workers: int | None = None) -> dict | None:
-        """Per-file warc_ts ranges from parquet FOOTERS for every file
-        of dir `d`: {fname: [lo_iso, hi_iso] | None} (None = file has
-        rows but no usable range — read it always). Returns None
-        overall when any footer lacks the statistics (INT96 history,
-        stats disabled) — callers then skip the per-file zone map and
-        keep the coarser dir-level one. Metadata-only, through the
-        `plans/datafs` seam at the FS's own parallelism (local paths:
-        plain native loop; `s3://` via the CAS commit log's pluggable
-        client on a wide thread pool — footer reads are round-trips on
-        object storage, so compaction's zone-map harvest stays flat as
-        the file count grows instead of re-serializing the commit one
-        footer at a time; unknown schemes → None, callers keep the
-        dir-level map)."""
-        from qwatch_spark.plans.datafs import datafs_for
-
-        fs = datafs_for(d)
-        if fs is None:
-            return None
-        if max_workers is None:
-            max_workers = fs.io_workers  # local: sequential; s3: wide
-        paths = fs.list_parquet(d)
-        if not paths:
-            # EMPTY dir (exists, zero files) is an exact answer — {} —
-            # e.g. a bucket dir emptied by compaction; MISSING/unreachable
-            # is no answer — None, fold prior token ranges instead
-            # (conflating them made an empty dir inherit stale ranges)
-            return {} if fs.dir_exists(d) else None
-        ranges = [
-            SnapshotTable._ts_range_of_md(md)
-            for md in fs.parquet_metadata_many(paths, max_workers)
-        ]
-        out: dict[str, list | None] = {}
-        for path, r in zip(paths, ranges):
-            if r == "missing":
-                return None
-            out[path.rsplit("/", 1)[-1]] = r
-        return out
-
-    @staticmethod
     def _ts_range_of_md(md):
         """One footer's warc_ts range: [lo_iso, hi_iso], None (all rows
         null — no range, read always), or the sentinel "missing" (a
@@ -960,30 +974,30 @@ class SnapshotTable:
     def _file_ts_ranges_many(
         out: str, buckets, max_workers: int | None = None
     ) -> dict:
-        """`_file_ts_ranges` for MANY bucket dirs of one compaction
-        output in two batched passes: ONE tree listing of `out` (one
-        non-delimited LIST round-trip per ~1000 keys on object storage
-        — the per-victim form pays one LIST per bucket) and ONE pooled
-        footer pass over every file. Returns {str(bucket): result},
-        result exactly as `_file_ts_ranges` (None = fall back to folding
-        prior token ranges for that bucket) — with one deliberate
-        asymmetry: a bucket dir that EXISTS but holds zero parquet files
-        maps to None here (the per-dir form returns the exact {}),
-        because a single tree listing cannot see empty directories at
-        all — and on object stores an empty prefix IS missing. The
-        fallback is conservative, never wrong."""
-        from qwatch_spark.plans.datafs import datafs_for
-
+        """Per-file warc_ts ranges from parquet FOOTERS for the bucket
+        dirs `b=<k>` of one compaction output: {str(k): {fname:
+        [lo_iso, hi_iso] | None} | None} (a file range None = rows but
+        no usable range, read it always). A bucket maps to None when
+        it has no parquet files or any footer lacks the statistics
+        (INT96 history, stats disabled) — callers then fold prior
+        token ranges instead, conservative and never wrong. Two
+        batched passes through the object store at its own width: ONE
+        tree listing of `out` (one LIST round-trip per ~1000 keys on
+        object storage, not one per bucket) and ONE footer pass over
+        every file. Unknown schemes → every bucket None."""
         keys = [str(b) for b in buckets]
-        fs = datafs_for(out)
-        if fs is None:
+        store = store_for(out)
+        if store is None:
             return {k: None for k in keys}
-        if max_workers is None:
-            max_workers = fs.io_workers
-        tree = fs.list_parquet_tree(out)
-        per_bucket = {k: tree.get(f"b={k}", []) for k in keys}
+        per_bucket: dict[str, list[str]] = {k: [] for k in keys}
+        for rel, _size, _mt in store.list_tree(out):
+            bdir, _, name = rel.rpartition("/")
+            if bdir.startswith("b=") and name.endswith(".parquet"):
+                files = per_bucket.get(bdir[2:])
+                if files is not None:
+                    files.append(f"{out.rstrip('/')}/{rel}")
         flat = [(k, p) for k in keys for p in per_bucket[k]]
-        mds = fs.parquet_metadata_many([p for _k, p in flat], max_workers)
+        mds = store.parquet_metadata_many([p for _k, p in flat], max_workers)
         res: dict[str, dict | None] = {
             k: ({} if per_bucket[k] else None) for k in keys
         }
@@ -1391,9 +1405,7 @@ class SnapshotTable:
         # CAS commit log: only the highest mutation is authoritative
         # (loads recover forward to max); older slots are dead weight
         if self._manifest.get("commit_protocol") == "cas":
-            backend = cas_backend(
-                self._manifest.get("cas_backend", "localfs"), self.path
-            )
+            backend = self.commit_log_backend()
             top = self._manifest.get("mutation", 0)
             for n in backend.slots():
                 if n < top:

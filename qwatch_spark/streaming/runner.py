@@ -38,7 +38,7 @@ from qwatch_spark.sources.feed import read_feed_stream, split_dead_letter
 def _is_lost_race(e: Exception) -> bool:
     # typed check, NOT message matching: an unrelated RuntimeError whose
     # text happens to contain "stale" must surface, not be retried 20×
-    from qwatch_spark.plans.commit_backend import CommitConflictError
+    from qwatch_spark.plans.objectstore import CommitConflictError
 
     return isinstance(e, CommitConflictError)
 

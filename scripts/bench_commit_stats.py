@@ -11,9 +11,9 @@ separately because their bottlenecks differ:
   512 touched files is visible (~tens of ms).
 - REMOTE-MODEL (the regime the r6 verdict is about): each LIST/GET is
   a network round-trip. Modeled with FULL FIDELITY: the epoch's delta
-  files are mirrored byte-for-byte into the in-repo FakeS3 behind a
-  client subclass that sleeps one RTT per API call (outside the store
-  lock), and `_delta_footer_stats` runs against the `s3://` path — the
+  files are mirrored byte-for-byte into the in-repo dir-backed fake S3
+  behind a client subclass that sleeps one RTT per API call, and
+  `_delta_footer_stats` runs against the `s3://` path — the
   exact code path a remote table takes (one tree LIST, size-carrying
   listings, pooled ranged tail-GETs, serial native parse). The
   flatness criterion is evaluated on the ENGINE EXCESS over the
@@ -45,7 +45,11 @@ from qwatch_spark.operators.apply import (  # noqa: E402
     _delta_footer_stats,
     apply_changes,
 )
-import qwatch_spark.plans.commit_backend as cb  # noqa: E402
+from qwatch_spark.plans.objectstore import (  # noqa: E402
+    DirBackedFakeS3Client,
+    S3Store,
+    pmap,
+)
 from qwatch_spark.plans.snapshot_table import SnapshotTable  # noqa: E402
 from qwatch_spark.session import get_spark  # noqa: E402
 
@@ -54,14 +58,14 @@ ROWS = int(os.environ.get("ROWS", "60000"))
 RTT = float(os.environ.get("RTT", "0.05"))  # modeled S3 first-byte RTT
 
 
-class SlowS3(cb.FakeS3Client):
-    """FakeS3 with one RTT of latency per API call (slept OUTSIDE the
-    store lock, so concurrent calls overlap exactly like real S3), and
-    real S3's 1000-keys-per-LIST page size (the default fake's
-    page_size=2 exists to exercise the CAS pagination loop)."""
+class SlowS3(DirBackedFakeS3Client):
+    """The fake S3 with one RTT of latency per API call (concurrent
+    calls overlap exactly like real S3), and real S3's 1000-keys-per-
+    LIST page size (the default fake's page_size=2 exists to exercise
+    the pagination loop)."""
 
-    def __init__(self):
-        super().__init__(page_size=1000)
+    def __init__(self, root: str):
+        super().__init__(root, page_size=1000)
 
     def list_objects_v2(self, **kw):
         time.sleep(RTT)
@@ -109,9 +113,9 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     work = tempfile.mkdtemp(prefix="commit_stats_")
-    cb.S3CasBackend.client_factory = SlowS3
-    cb.FakeS3Client._buckets.clear()
-    upload = cb.FakeS3Client()  # latency-free mirror uploads
+    s3_root = os.path.join(work, "s3")
+    S3Store.client_factory = lambda: SlowS3(s3_root)
+    upload = DirBackedFakeS3Client(s3_root)  # latency-free mirror uploads
     arms = {}
     for nb in (64, 512):
         out, touched = build(spark, os.path.join(work, f"t{nb}"), nb)
@@ -170,9 +174,7 @@ def main() -> None:
     # wakeup-latency noise to the 256-thread RTT waves we're measuring
     spark.stop()
 
-    from qwatch_spark.plans.datafs import S3DataFS, pmap
-
-    width = S3DataFS.io_workers
+    width = S3Store.io_workers
     pmap(lambda _x: None, range(width), width)  # warm the shared pool
     for nb, a in arms.items():
         a["floor"] = []

@@ -7,13 +7,14 @@ measure the ENGINE's round-trip structure, not the sandbox's disk.
 This script applies it to the index protocol the round-8 port moved
 onto the storage seam:
 
-- `fold_move` (the post-swap delta fold / committer-free append): the
-  object-store form has no rename, so every part file is one
-  `copy_object` round-trip. The design pools them (`pmap`, 64 wide);
-  the r6-style sequential model (copy_workers=1) is what a naive port
-  would pay. Measured at F fold files: pooled ≈ ceil(F/64)+const RTT
-  waves; sequential ≈ F × RTT. The gap is the design rationale as a
-  number.
+- the fold move (`similarity._append_via_move`, the post-swap delta
+  fold / committer-free append): the object-store form has no rename,
+  so every part file is a `copy_object` + `delete_object` round-trip
+  pair. The design pools them (`pmap` at the store's `io_workers`,
+  64 here); the r6-style sequential model (io_workers=1) is what a
+  naive port would pay. Measured at F fold files: pooled ≈
+  ceil(F/64)+const RTT waves; sequential ≈ 2F × RTT. The gap is the
+  design rationale as a number.
 - `lsh_maintain` end-to-end at an RTT-modeled path: the protocol's
   control-plane cost (pointer GET, claim PUT, two tree LISTs paging at
   1000 keys, marker PUT/DELETE, swap PUT) rides on a Spark data plane
@@ -34,11 +35,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 
-from qwatch_spark.plans.commit_backend import (  # noqa: E402
+from qwatch_spark.plans.objectstore import (  # noqa: E402
     DirBackedFakeS3Client,
-    S3CasBackend,
+    S3Store,
+    store_for,
 )
-from qwatch_spark.plans.indexfs import S3IndexFS  # noqa: E402
 from qwatch_spark.session import get_spark  # noqa: E402
 
 RTT = float(os.environ.get("RTT", "0.05"))
@@ -87,7 +88,7 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     store = tempfile.mkdtemp(prefix="idx_remote_")
-    S3IndexFS.spark_path_for = staticmethod(
+    S3Store.spark_path_for = staticmethod(
         lambda bucket, key: os.path.join(store, bucket, key)
     )
 
@@ -103,23 +104,23 @@ def main() -> None:
         "fold_files": FOLD_FILES,
     }
 
-    # ---- fold_move: pooled copies vs the sequential model ----
-    # FOLD_FILES distinct cells -> fold_move's repartition("cell") +
+    # ---- fold move: pooled copies vs the sequential model ----
+    # FOLD_FILES distinct cells -> the fold's repartition("cell") +
     # partitionBy("cell") writes one file per cell -> FOLD_FILES
-    # copy_object round-trips (plus the pooled scratch deletes)
+    # copy + delete round-trip pairs
     slow_cls = make_slow_client_cls(RTT)
-    S3CasBackend.client_factory = lambda: slow_cls(store, page_size=1000)
+    S3Store.client_factory = lambda: slow_cls(store, page_size=1000)
     fold_df = df.withColumn("cell", F.col("vec_id") % FOLD_FILES)
-    fs = S3IndexFS(slow_cls(store, page_size=1000))
+    fs = store_for("s3://bench")
     pooled, sequential = [], []
     for i in range(TRIALS):
         for arm, workers in (("pooled", 64), ("seq", 1)):
             vdir = f"s3://bench/fold_{arm}_{i}/_v0"
             os.makedirs(os.path.join(store, "bench", f"fold_{arm}_{i}", "_v0"),
                         exist_ok=True)
-            fs.copy_workers = workers
+            fs.io_workers = workers
             t0 = time.monotonic()
-            fs.fold_move(fold_df, vdir, ["cell"])
+            sim._append_via_move(fold_df, vdir, ["cell"])
             wall = round(time.monotonic() - t0, 3)
             (pooled if arm == "pooled" else sequential).append(wall)
     out["fold_pooled_walls"] = pooled
@@ -133,7 +134,7 @@ def main() -> None:
     for i in range(TRIALS):
         for arm, rtt in (("rtt0", 0.0), ("rtt", RTT)):
             cls = DirBackedFakeS3Client if rtt == 0 else make_slow_client_cls(rtt)
-            S3CasBackend.client_factory = (
+            S3Store.client_factory = (
                 lambda c=cls: c(store, page_size=1000)
             )
             path = f"s3://bench/lsh_{arm}_{i}"

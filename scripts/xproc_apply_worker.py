@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from qwatch_spark.config import PipelineConfig  # noqa: E402
 from qwatch_spark.operators.apply import apply_changes  # noqa: E402
-from qwatch_spark.plans.commit_backend import CommitConflictError  # noqa: E402
+from qwatch_spark.plans.objectstore import CommitConflictError  # noqa: E402
 from qwatch_spark.plans.snapshot_table import SnapshotTable  # noqa: E402
 from qwatch_spark.session import get_spark  # noqa: E402
 

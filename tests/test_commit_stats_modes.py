@@ -1,5 +1,5 @@
 """Equivalence of the delta commit's two per-bucket stats harvests:
-`footer` (driver-side parquet-footer metadata through the datafs seam,
+`footer` (driver-side parquet-footer metadata through the object store,
 the default) and `job` (one narrow aggregate over the written files —
 the always-correct fallback, taken when `_delta_footer_stats` returns
 None). Both must yield identical commits: same zone maps, same lineage

@@ -265,13 +265,13 @@ def test_footer_stats_over_fake_s3_match_local(spark, tmp_path):
     working on an `s3://` table path, routed through the SAME pluggable
     client surface the CAS commit log uses — not silently fall back to
     the Spark job exactly where round-trips cost most. Write an epoch
-    locally, mirror its delta files byte-for-byte into the in-repo
-    FakeS3, and both `_delta_footer_stats` and `_file_ts_ranges` must
-    return IDENTICAL results through s3:// (ranged GETs against the
-    fake) as through the local path. Unknown schemes still return None
-    (the Spark-job fallback contract)."""
-    import qwatch_spark.plans.commit_backend as cb
+    locally, mirror its delta files byte-for-byte into the dir-backed
+    fake S3, and both `_delta_footer_stats` and `_file_ts_ranges_many`
+    must return IDENTICAL results through s3:// (ranged GETs against
+    the fake) as through the local path. Unknown schemes still return
+    None (the Spark-job fallback contract)."""
     from qwatch_spark.operators.apply import _delta_footer_stats
+    from qwatch_spark.plans.objectstore import DirBackedFakeS3Client, S3Store
 
     cfg = PipelineConfig(n_buckets=8, write_mode="delta")
     table = SnapshotTable.create(str(tmp_path / "t"), n_buckets=8)
@@ -288,11 +288,11 @@ def test_footer_stats_over_fake_s3_match_local(spark, tmp_path):
     local = _delta_footer_stats(out, touched)
     assert local is not None
 
-    old_factory = cb.S3CasBackend.client_factory
-    cb.S3CasBackend.client_factory = cb.FakeS3Client
-    cb.FakeS3Client._buckets.clear()
+    store = str(tmp_path / "s3")
+    old_factory = S3Store.client_factory
+    S3Store.client_factory = lambda: DirBackedFakeS3Client(store)
     try:
-        client = cb.FakeS3Client()
+        client = DirBackedFakeS3Client(store)
         for b in touched:
             d = os.path.join(out, f"b={b}")
             for f in os.listdir(d):
@@ -305,32 +305,23 @@ def test_footer_stats_over_fake_s3_match_local(spark, tmp_path):
                         )
         remote = _delta_footer_stats(f"s3://bkt/tbl/data/v={tok}", touched)
         assert remote == local
-        b0 = touched[0]
-        local_rng = SnapshotTable._file_ts_ranges(os.path.join(out, f"b={b0}"))
-        remote_rng = SnapshotTable._file_ts_ranges(
-            f"s3://bkt/tbl/data/v={tok}/b={b0}"
-        )
-        assert remote_rng == local_rng and local_rng is not None
-        # the batched many-bucket form (one tree LIST + one pooled
-        # footer pass) must agree with the per-dir form, per bucket,
-        # over BOTH stores
-        want_many = {
-            str(b): SnapshotTable._file_ts_ranges(os.path.join(out, f"b={b}"))
-            for b in touched
-        }
-        assert SnapshotTable._file_ts_ranges_many(out, touched) == want_many
+        # the zone-map harvest (one tree LIST + one pooled footer pass)
+        # agrees per bucket and file over BOTH stores
+        local_rng = SnapshotTable._file_ts_ranges_many(out, touched)
+        assert all(local_rng[str(b)] for b in touched), local_rng
         assert (
             SnapshotTable._file_ts_ranges_many(
                 f"s3://bkt/tbl/data/v={tok}", touched
             )
-            == want_many
+            == local_rng
         )
     finally:
-        cb.S3CasBackend.client_factory = old_factory
-        cb.FakeS3Client._buckets.clear()
+        S3Store.client_factory = old_factory
     # scheme nobody serves driver-side -> None -> Spark-job fallback
     assert _delta_footer_stats("hdfs://nn/tbl/data/v=1", [0]) is None
-    assert SnapshotTable._file_ts_ranges("hdfs://nn/tbl/d/b=0") is None
+    assert SnapshotTable._file_ts_ranges_many("hdfs://nn/tbl/d", [0]) == {
+        "0": None
+    }
 
 
 def test_footer_stats_reads_are_pooled_not_sequential(spark, tmp_path, monkeypatch):
@@ -341,8 +332,8 @@ def test_footer_stats_reads_are_pooled_not_sequential(spark, tmp_path, monkeypat
     sequential sum (sequential would be >= n_files * 25 ms)."""
     import time
 
-    import qwatch_spark.plans.datafs as dfs
     from qwatch_spark.operators.apply import _delta_footer_stats
+    from qwatch_spark.plans.objectstore import LocalStore
 
     cfg = PipelineConfig(n_buckets=16, write_mode="delta")
     table = SnapshotTable.create(str(tmp_path / "t"), n_buckets=16)
@@ -364,13 +355,13 @@ def test_footer_stats_reads_are_pooled_not_sequential(spark, tmp_path, monkeypat
     )
     assert n_files >= 12, f"fixture too small ({n_files} files)"
     delay = 0.025
-    orig_md = dfs.LocalDataFS.parquet_metadata
+    orig_md = LocalStore.parquet_metadata
 
     def slow_md(self, path):
         time.sleep(delay)  # one simulated object-store round-trip
         return orig_md(self, path)
 
-    monkeypatch.setattr(dfs.LocalDataFS, "parquet_metadata", slow_md)
+    monkeypatch.setattr(LocalStore, "parquet_metadata", slow_md)
     t0 = time.monotonic()
     got = _delta_footer_stats(out, touched, max_workers=64)
     wall = time.monotonic() - t0
@@ -420,7 +411,7 @@ def test_footer_stats_fallback_commits_identically(spark, tmp_path, monkeypatch)
 
 
 def test_datafs_size_cache_bounded_and_stale_size_recovery(tmp_path):
-    """r7 verdict #7 + ADVICE: `S3DataFS._sizes` must stay bounded (a
+    """r7 verdict #7 + ADVICE: `S3Store._sizes` must stay bounded (a
     long-lived driver listing millions of files must not leak one dict
     entry per file ever seen), and a footer fetch against a STALE cached
     size (object rewritten behind the listing — outside the write-once
@@ -431,56 +422,50 @@ def test_datafs_size_cache_bounded_and_stale_size_recovery(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    import qwatch_spark.plans.commit_backend as cb
-    from qwatch_spark.plans.datafs import LocalDataFS, S3DataFS
+    from qwatch_spark.plans.objectstore import DirBackedFakeS3Client, S3Store
 
-    cb.FakeS3Client._buckets.clear()
-    try:
-        client = cb.FakeS3Client()
-        buf = _io.BytesIO()
-        pq.write_table(pa.table({"x": [1, 2, 3]}), buf)
-        blob = buf.getvalue()
-        for i in range(10):
-            client.put_object(Bucket="bkt", Key=f"d/f{i:02d}.parquet", Body=blob)
-        fs = S3DataFS(client)
-        fs.size_cache_max = 4
-        paths = fs.list_parquet("s3://bkt/d")
-        assert len(paths) == 10
-        assert len(fs._sizes) <= 4  # bounded despite 10 listed files
-        # evicted entries fall back to one HEAD — footer reads still work
-        md = fs.parquet_metadata_many(paths, max_workers=4)
-        assert all(m.num_rows == 3 for m in md)
-        # stale-size recovery: poison the cache with a wrong size
-        fs._cache_size(paths[0], len(blob) + 7)
-        assert fs.parquet_metadata(paths[0]).num_rows == 3
-        # a genuinely non-parquet object still fails loudly
-        client.put_object(Bucket="bkt", Key="d/bad.parquet", Body=b"junk")
-        fs2 = S3DataFS(client)
-        with pytest.raises(ValueError, match="bad magic"):
-            fs2.parquet_metadata("s3://bkt/d/bad.parquet")
-        # dir existence: object stores equate empty prefix with missing
-        assert fs.dir_exists("s3://bkt/d")
-        assert not fs.dir_exists("s3://bkt/nowhere")
-    finally:
-        cb.FakeS3Client._buckets.clear()
-    # local: empty-but-existing dir is distinguishable from missing
-    lfs = LocalDataFS()
-    d = tmp_path / "empty"
-    d.mkdir()
-    assert lfs.dir_exists(str(d)) and not lfs.dir_exists(str(tmp_path / "no"))
-    assert SnapshotTable._file_ts_ranges(str(d)) == {}  # exact: zero files
-    assert SnapshotTable._file_ts_ranges(str(tmp_path / "no")) is None
+    client = DirBackedFakeS3Client(str(tmp_path / "s3"))
+    buf = _io.BytesIO()
+    pq.write_table(pa.table({"x": [1, 2, 3]}), buf)
+    blob = buf.getvalue()
+    for i in range(10):
+        client.put_object(Bucket="bkt", Key=f"d/f{i:02d}.parquet", Body=blob)
+    fs = S3Store(client)
+    fs.size_cache_max = 4
+    paths = [f"s3://bkt/d/{rel}" for rel, _size, _mt in fs.list_tree("s3://bkt/d")]
+    assert len(paths) == 10
+    assert len(fs._sizes) <= 4  # bounded despite 10 listed files
+    # evicted entries fall back to one HEAD — footer reads still work
+    md = fs.parquet_metadata_many(paths, max_workers=4)
+    assert all(m.num_rows == 3 for m in md)
+    # stale-size recovery: poison the cache with a wrong size
+    fs._cache_size(paths[0], len(blob) + 7)
+    assert fs.parquet_metadata_many([paths[0]])[0].num_rows == 3
+    # a genuinely non-parquet object still fails loudly
+    client.put_object(Bucket="bkt", Key="d/bad.parquet", Body=b"junk")
+    fs2 = S3Store(client)
+    with pytest.raises(ValueError, match="bad magic"):
+        fs2.parquet_metadata_many(["s3://bkt/d/bad.parquet"])
+    # object stores have no empty dirs: an empty prefix lists nothing,
+    # and a tree listing of empty or missing bucket dirs gives no
+    # answer on either store (callers fold prior token ranges)
+    assert fs.list_tree("s3://bkt/nowhere") == []
+    (tmp_path / "t" / "b=0").mkdir(parents=True)
+    assert SnapshotTable._file_ts_ranges_many(str(tmp_path / "t"), [0, 1]) == {
+        "0": None,
+        "1": None,
+    }
 
 
 def test_datafs_shared_pool_shutdown_and_rebuild():
     """The session I/O pool registers an atexit shutdown (r7 verdict #7);
     shutting it down is idempotent and a later pmap transparently
     rebuilds it."""
-    from qwatch_spark.plans import datafs
+    from qwatch_spark.plans import objectstore
 
-    assert datafs.pmap(lambda x: x * 2, [1, 2, 3], max_workers=2) == [2, 4, 6]
-    datafs._shutdown_pool()
-    datafs._shutdown_pool()  # idempotent
-    assert datafs._pool is None
-    assert datafs.pmap(lambda x: x + 1, [1, 2, 3], max_workers=2) == [2, 3, 4]
-    assert datafs._pool is not None
+    assert objectstore.pmap(lambda x: x * 2, [1, 2, 3], max_workers=2) == [2, 4, 6]
+    objectstore._shutdown_pool()
+    objectstore._shutdown_pool()  # idempotent
+    assert objectstore._pool is None
+    assert objectstore.pmap(lambda x: x + 1, [1, 2, 3], max_workers=2) == [2, 3, 4]
+    assert objectstore._pool is not None

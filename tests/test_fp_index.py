@@ -689,7 +689,7 @@ def test_fp_auto_bootstrap_races_live_applier(spark, tmp_path):
     overlap is fine, a gap would resurrect duplicates.)"""
     import threading
 
-    from qwatch_spark.plans.commit_backend import CommitConflictError
+    from qwatch_spark.plans.objectstore import CommitConflictError
     from qwatch_spark.plans.maintenance import maintain_once
 
     def page(i: int) -> bytes:

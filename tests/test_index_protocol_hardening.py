@@ -1,8 +1,9 @@
 """Round-9 hardening of the index protocol's failure edges (the r8
 verdict's "What's wrong" items): vacuum must not retire un-folded delta
 dirs behind a crashed fold, the local pointer read must not translate
-real I/O errors into "legacy layout", and the S3 GET helpers must accept
-the same missing-key code set exists() does."""
+real I/O errors into "legacy layout", and every S3 GET — index pointer,
+blob, CAS commit-log slot — must accept the same missing-key code set
+exists() does."""
 
 import json
 import os
@@ -10,32 +11,32 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from qwatch_spark.plans.commit_backend import S3ClientError
-from qwatch_spark.plans.indexfs import LocalIndexFS, S3IndexFS
+from qwatch_spark.operators.similarity import _pointer_read
+from qwatch_spark.plans.objectstore import LocalStore, S3ClientError, S3Store
+from qwatch_spark.plans.snapshot_table import CasLog
 
 
 def test_local_pointer_read_missing_and_corrupt_are_legacy(tmp_path):
-    fs = LocalIndexFS()
+    fs = LocalStore()
     d = tmp_path / "idx"
     d.mkdir()
-    assert fs.pointer_read(str(d)) == -1  # no pointer: legacy layout
+    assert _pointer_read(fs, str(d)) == -1  # no pointer: legacy layout
     (d / "_current").write_text("{not json")
-    assert fs.pointer_read(str(d)) == -1  # corrupt: legacy, matches S3
+    assert _pointer_read(fs, str(d)) == -1  # corrupt: legacy, matches S3
     (d / "_current").write_text(json.dumps({"wrong_key": 3}))
-    assert fs.pointer_read(str(d)) == -1
+    assert _pointer_read(fs, str(d)) == -1
     (d / "_current").write_text(json.dumps({"version": 7}))
-    assert fs.pointer_read(str(d)) == 7
+    assert _pointer_read(fs, str(d)) == 7
 
 
 def test_local_pointer_read_real_io_error_propagates(tmp_path):
     """An EISDIR/EACCES-class error on `_current` must RAISE, not read
     as -1: a -1 here would route an append's delta files into the index
     ROOT of a versioned index — invisible to probes and folds."""
-    fs = LocalIndexFS()
     d = tmp_path / "idx"
     (d / "_current").mkdir(parents=True)  # open() -> IsADirectoryError
     with pytest.raises(OSError):
-        fs.pointer_read(str(d))
+        _pointer_read(LocalStore(), str(d))
 
 
 class _Get404Client:
@@ -47,10 +48,12 @@ class _Get404Client:
 
 
 def test_s3_get_accepts_bare_404_as_missing():
-    fs = S3IndexFS(_Get404Client())
-    assert fs._get_text("s3://b/idx/_current") is None
-    assert fs.get_bytes("s3://b/idx/blob") is None
-    assert fs.pointer_read("s3://b/idx") == -1  # missing -> legacy
+    fs = S3Store(_Get404Client())
+    assert fs.get("s3://b/idx/_current") is None
+    assert fs.get("s3://b/idx/blob") is None
+    assert _pointer_read(fs, "s3://b/idx") == -1  # missing -> legacy
+    # a CAS commit-log slot read goes through the same error table
+    assert CasLog(fs, "s3://b/tbl").read(0) is None
 
 
 def test_vacuum_skips_data_dirs_while_fold_marker_pending(spark, tmp_path):

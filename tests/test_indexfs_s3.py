@@ -3,7 +3,7 @@ round-7 verdict's #1: through r7 every protocol primitive (pointer
 swap, rival claim, file-snapshot listings, fold moves, vacuum) was a
 local-fs call, so `ivf_maintain`/`lsh_maintain`/vacuum/the append
 conflict check could not run where a 100 TB deployment's indexes live.
-`plans/indexfs.py` is the port seam; this suite proves the SAME
+`plans/objectstore.py` is the port seam; this suite proves the SAME
 protocol — build, append, probe, maintain, conflict-retry, vacuum,
 and the concurrent appender+probers+maintainer stress — over the
 boto3 client surface.
@@ -24,32 +24,35 @@ import pytest
 from pyspark.sql import functions as F
 
 import qwatch_spark.operators.similarity as sim
-from qwatch_spark.plans.commit_backend import (
+from qwatch_spark.plans.objectstore import (
     DirBackedFakeS3Client,
-    S3CasBackend,
+    LocalStore,
     S3ClientError,
+    S3Store,
+    store_for,
 )
-from qwatch_spark.plans.indexfs import LocalIndexFS, S3IndexFS, indexfs_for
 from tests.test_similarity_dedup import _clustered_corpus
 
 
 @pytest.fixture()
 def s3idx(tmp_path):
     """Installs a directory-rooted fake S3 store behind the two class
-    hooks the production port uses (`S3CasBackend.client_factory` for
-    the control plane, `S3IndexFS.spark_path_for` for the data plane)
-    and yields a path factory: name -> `s3://idx/<name>`."""
+    hooks the production port uses (`S3Store.client_factory` for the
+    control plane, `S3Store.spark_path_for` for the data plane) and
+    yields a path factory: name -> `s3://idx/<name>`. Set directly, not
+    through `monkeypatch`, so a test's own `monkeypatch.undo()` cannot
+    drop the fake mid-test."""
     store = tmp_path / "store"
     store.mkdir()
-    old_factory = S3CasBackend.client_factory
-    old_map = S3IndexFS.spark_path_for
-    S3CasBackend.client_factory = lambda: DirBackedFakeS3Client(str(store))
-    S3IndexFS.spark_path_for = lambda bucket, key: str(store / bucket / key)
+    old_factory = S3Store.client_factory
+    old_map = S3Store.spark_path_for
+    S3Store.client_factory = lambda: DirBackedFakeS3Client(str(store))
+    S3Store.spark_path_for = lambda bucket, key: str(store / bucket / key)
     try:
         yield lambda name: f"s3://idx/{name}"
     finally:
-        S3CasBackend.client_factory = old_factory
-        S3IndexFS.spark_path_for = old_map
+        S3Store.client_factory = old_factory
+        S3Store.spark_path_for = old_map
 
 
 def _read_cur(spark, path):
@@ -123,66 +126,97 @@ def test_dir_backed_fake_client_semantics(tmp_path):
         c.put_object(Bucket="b", Key="../../etc/passwd", Body=b"no")
 
 
-def test_indexfs_dispatch_and_primitive_parity(tmp_path):
-    """`indexfs_for` picks the right implementation per scheme, and the
-    two implementations agree on every protocol primitive over
-    equivalent stores (the parity that makes the s3 tests meaningful)."""
-    assert isinstance(indexfs_for(str(tmp_path / "x")), LocalIndexFS)
-    assert isinstance(indexfs_for("file:///tmp/x"), LocalIndexFS)
+def test_indexfs_dispatch_and_primitive_parity(tmp_path, monkeypatch):
+    """`store_for` picks the store per scheme, and the two stores agree
+    on every primitive — and the index protocol built on them — over
+    equivalent roots (the parity that makes the s3 tests meaningful)."""
+    assert isinstance(store_for(str(tmp_path / "x")), LocalStore)
+    assert isinstance(store_for("file:///tmp/x"), LocalStore)
+    assert store_for("hdfs://nn/idx") is None
     with pytest.raises(ValueError, match="scheme"):
-        indexfs_for("hdfs://nn/idx")
+        sim._idx_fs("hdfs://nn/idx")
 
     store = tmp_path / "store"
     store.mkdir()
-    old = S3CasBackend.client_factory
-    S3CasBackend.client_factory = lambda: DirBackedFakeS3Client(str(store))
-    try:
-        pairs = [
-            (indexfs_for(str(tmp_path / "loc")), str(tmp_path / "loc")),
-            (indexfs_for("s3://idx/loc"), "s3://idx/loc"),
+    monkeypatch.setattr(
+        S3Store, "client_factory", lambda: DirBackedFakeS3Client(str(store))
+    )
+    pairs = [
+        (store_for(str(tmp_path / "loc")), str(tmp_path / "loc")),
+        (store_for("s3://idx/loc"), "s3://idx/loc"),
+    ]
+    assert isinstance(pairs[1][0], S3Store)
+    for fs, path in pairs:
+        # put-if-absent: won, the read-back of our own landed write, lost
+        slot = f"{path}/_commits/m=0.json"
+        assert fs.get(slot) is None
+        assert fs.put_if_absent(slot, b"mine") is True
+        assert fs.put_if_absent(slot, b"mine") is True
+        assert fs.put_if_absent(slot, b"rival") is False
+        assert fs.get(slot) == b"mine"
+        # atomic put overwrites; ranged get is a [start, end) slice
+        blob = f"{path}/blob"
+        fs.put(blob, b"hello world")
+        assert fs.get(blob, 6, 11) == b"world"
+        assert fs.get(blob, 6) == b"world"
+        assert fs.get(blob, 0, 5) == b"hello"
+        # copy is bytes (the source survives); move does not keep it
+        fs.copy(blob, f"{path}/sub/copy")
+        fs.move(f"{path}/sub/copy", f"{path}/sub/moved")
+        assert fs.get(blob) == fs.get(f"{path}/sub/moved") == b"hello world"
+        assert not fs.exists(f"{path}/sub/copy")
+        # recursive listing: relative paths, sorted, with sizes + mtimes
+        listed = fs.list_tree(path)
+        assert [(rel, size) for rel, size, _mt in listed] == [
+            ("_commits/m=0.json", 4),
+            ("blob", 11),
+            ("sub/moved", 11),
         ]
-        assert isinstance(pairs[1][0], S3IndexFS)
-        for fs, path in pairs:
-            assert fs.pointer_read(path) == -1  # no pointer yet
-            assert fs.claim_version(path, 0) is True
-            assert fs.claim_version(path, 0) is False  # rival loses
-            fs.pointer_publish(path, 0)
-            assert fs.pointer_read(path) == 0
-            fs.pointer_publish(path, 3)  # re-publish overwrites
-            assert fs.pointer_read(path) == 3
-            marker = f"{path}/_v3/_folding"
-            assert not fs.exists(marker)
-            fs.put_file(marker, "fold in progress")
-            assert fs.exists(marker)
-            fs.delete_file(marker)
-            assert not fs.exists(marker)
-            fs.delete_file(marker)  # idempotent
-            # depth-exact listing: only cell=*/x.parquet, not deeper
-            # staging files nor non-parquet siblings
-            for rel, body in [
-                ("_v3/cell=0/p1.parquet", b"a"),
-                ("_v3/cell=1/p2.parquet", b"b"),
-                ("_v3/cell=1/p2.parquet.crc", b"c"),
-                ("_v3/_SUCCESS", b""),
-                ("_v3/_temporary/0/cell=1/p3.parquet", b"d"),
-            ]:
-                fs.put_file(f"{path}/{rel}", body.decode())
-            parts = fs.list_parts(f"{path}/_v3", ("cell=*",))
-            assert sorted(p.rsplit("/", 2)[-2] for p in parts) == [
-                "cell=0",
-                "cell=1",
-            ]
-            assert {p.rsplit("/", 1)[-1] for p in parts} == {
-                "p1.parquet",
-                "p2.parquet",
-            }
-            assert "_v3" in fs.root_entries(path)
-            assert "_v3.claim" not in fs.root_entries(f"{path}/_v3")
-            assert fs.tree_mtime(f"{path}/_v3") > 0
-            fs.delete_tree(f"{path}/_v3")
-            assert fs.list_parts(f"{path}/_v3", ("cell=*",)) == set()
-    finally:
-        S3CasBackend.client_factory = old
+        assert all(mt > 0 for _rel, _size, mt in listed)
+        assert fs.list_tree(f"{path}/nowhere") == []
+        # idempotent delete; delete_tree takes a prefix or one object
+        fs.delete(blob)
+        fs.delete(blob)
+        assert not fs.exists(blob) and fs.get(blob) is None
+        fs.delete_tree(f"{path}/sub")
+        fs.delete_tree(f"{path}/_commits/m=0.json")
+        assert fs.list_tree(path) == []
+
+        # the index protocol over those primitives
+        assert sim._pointer_read(fs, path) == -1  # no pointer yet
+        assert sim._claim_version(fs, path, 0) is True
+        assert sim._claim_version(fs, path, 0) is False  # rival loses
+        sim._idx_swap_current(path, 0)
+        assert sim._pointer_read(fs, path) == 0
+        sim._idx_swap_current(path, 3)  # re-publish overwrites
+        assert sim._pointer_read(fs, path) == 3
+        marker = f"{path}/_v3/_folding"
+        assert not fs.exists(marker)
+        fs.put(marker, b"fold in progress")
+        assert fs.exists(marker)
+        fs.delete(marker)
+        assert not fs.exists(marker)
+        # depth-exact listing: only cell=*/x.parquet, not deeper
+        # staging files nor non-parquet siblings
+        for rel, body in [
+            ("_v3/cell=0/p1.parquet", b"a"),
+            ("_v3/cell=1/p2.parquet", b"b"),
+            ("_v3/cell=1/p2.parquet.crc", b"c"),
+            ("_v3/_SUCCESS", b""),
+            ("_v3/_temporary/0/cell=1/p3.parquet", b"d"),
+        ]:
+            fs.put(f"{path}/{rel}", body)
+        parts = sim._list_parts(fs, f"{path}/_v3", ("cell=*",))
+        assert sorted(p.rsplit("/", 2)[-2] for p in parts) == [
+            "cell=0",
+            "cell=1",
+        ]
+        assert {p.rsplit("/", 1)[-1] for p in parts} == {
+            "p1.parquet",
+            "p2.parquet",
+        }
+        fs.delete_tree(f"{path}/_v3")
+        assert sim._list_parts(fs, f"{path}/_v3", ("cell=*",)) == set()
 
 
 # ------------------------------------------------------- ivf over s3
@@ -228,7 +262,7 @@ def test_ivf_protocol_over_s3(spark, s3idx):
 
     removed = sim.ivf_vacuum(path, retention_s=0)
     assert removed, "legacy flat layout must be vacuumed"
-    client = S3CasBackend.client_factory()
+    client = S3Store.client_factory()
     root_keys = [
         o["Key"]
         for o in client.list_objects_v2(
@@ -260,11 +294,11 @@ def test_ivf_rival_claim_and_conflict_retry_over_s3(
     path = s3idx("ivf")
     sim.ivf_build_index(df.filter(F.col("vec_id") < 100), path, n_cells=8)
 
-    fs = indexfs_for(path)
-    assert fs.claim_version(path, 0) is True  # rival claims v0
+    fs = sim._idx_fs(path)
+    assert sim._claim_version(fs, path, 0) is True  # rival claims v0
     with pytest.raises(sim.IndexConflictError, match="rival"):
         sim.ivf_maintain(spark, path, n_cells=8, lloyd_iters=0)
-    fs.delete_file(f"{path}/_v0.claim")
+    fs.delete(f"{path}/_v0.claim")
 
     batch = df.filter(F.col("vec_id") >= 100)
     real = sim._idx_current
@@ -308,9 +342,9 @@ def test_lsh_protocol_over_s3(spark, s3idx):
             ),
             path,
         )
-    fs = indexfs_for(path)
+    fs = sim._idx_fs(path)
     data0, _ = sim._idx_current(path)
-    n_before = len(fs.list_parts(data0, ("band=*", "bucket=*")))
+    n_before = len(sim._list_parts(fs, data0, ("band=*", "bucket=*")))
     qids = [1, 77, 150]
     before = {
         q: [
@@ -322,7 +356,7 @@ def test_lsh_protocol_over_s3(spark, s3idx):
     out = sim.lsh_maintain(spark, path)
     assert out["new_version"] == 0 and out["folded"] == 0
     data1, _ = sim._idx_current(path)
-    n_after = len(fs.list_parts(data1, ("band=*", "bucket=*")))
+    n_after = len(sim._list_parts(fs, data1, ("band=*", "bucket=*")))
     assert n_after < n_before / 2, (n_before, n_after)
     after = {
         q: [
@@ -333,8 +367,8 @@ def test_lsh_protocol_over_s3(spark, s3idx):
     }
     assert after == before, "compaction changed probe results"
     assert sim.lsh_vacuum(path, retention_s=0)
-    assert fs.exists(f"{path}/_params/_SUCCESS") or fs.list_parts(
-        f"{path}/_params", ()
+    assert fs.exists(f"{path}/_params/_SUCCESS") or sim._list_parts(
+        fs, f"{path}/_params", ()
     ), "_params must survive vacuum"
     again = {
         q: [
@@ -402,10 +436,10 @@ def test_probe_and_append_round_trip_budget(spark, tmp_path, monkeypatch):
         calls = {}
 
     monkeypatch.setattr(
-        S3CasBackend, "client_factory", lambda: Client(str(store), page_size=1000)
+        S3Store, "client_factory", lambda: Client(str(store), page_size=1000)
     )
     monkeypatch.setattr(
-        S3IndexFS, "spark_path_for", lambda bucket, key: str(store / bucket / key)
+        S3Store, "spark_path_for", lambda bucket, key: str(store / bucket / key)
     )
     rows, df = _clustered_corpus(spark, 120)
     vecs = {i: v for i, v in rows}

@@ -3,6 +3,7 @@ vacuum running BESIDE live applies as a second CAS writer — lost races
 abort cleanly and retry, final state stays exactly the oracle's, and
 the delta-mode apply path never pays the compaction wall itself."""
 
+import os
 import threading
 
 from qwatch_spark.config import PipelineConfig
@@ -191,29 +192,37 @@ def test_index_maintain_job_cli_once(spark, tmp_path):
     assert int(top[0]["vec_id"]) == 5
 
 
-def test_cas_backend_config_plumbing(tmp_path):
+def test_cas_backend_config_plumbing(tmp_path, monkeypatch):
     """PipelineConfig validates cas_backend and create_entity_tables
     propagates it into every entity/link manifest."""
     import pytest
 
     from qwatch_spark.operators.entities import create_entity_tables
+    from qwatch_spark.plans.objectstore import DirBackedFakeS3Client, S3Store
     from qwatch_spark.queries import entity_graph_specs
 
     with pytest.raises(ValueError, match="cas_backend"):
         PipelineConfig(cas_backend="not_a_backend")
+    with pytest.raises(ValueError, match="cas_backend"):
+        PipelineConfig(cas_backend="memory")  # a log that died with its process
+    store = tmp_path / "s3"
+    monkeypatch.setattr(
+        S3Store, "client_factory", lambda: DirBackedFakeS3Client(str(store))
+    )
     specs, links = entity_graph_specs()
     tables = create_entity_tables(
         str(tmp_path / "g"), specs, links, n_buckets=4,
-        commit_protocol="cas", cas_backend="memory",
+        commit_protocol="cas", cas_backend="s3",
     )
     for t in tables.values():
-        assert t._manifest["cas_backend"] == "memory"
-        t.commit_empty_epoch(0)  # commits land in the memory backend
+        assert t._manifest["cas_backend"] == "s3"
+        t.commit_empty_epoch(0)  # commits land in the s3 store
         assert t.commit_log_backend().slots() == [0, 1]
+        assert not os.path.exists(os.path.join(t.path, "_commits"))
 
 
 def test_retry_lost_race_unit():
-    from qwatch_spark.plans.commit_backend import (
+    from qwatch_spark.plans.objectstore import (
         CommitConflictError,
         StaleBaseError,
     )

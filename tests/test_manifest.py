@@ -268,28 +268,26 @@ def test_dead_letter_exactly_once_on_redelivery(spark, tmp_path):
 
 import pytest
 
-# Every CAS-protocol test runs through ALL conditional-put backends —
-# localfs os.link, the in-memory object-store fake, and the S3-shaped
-# adapter speaking boto3's conditional-put surface against an in-repo
-# fake client — proving the protocol depends on nothing but the
-# 4-method CasBackend seam, so the production S3 port is "swap the
+# Every CAS-protocol test runs through BOTH object stores — localfs
+# os.link, and S3's conditional-put surface against the in-repo
+# dir-backed fake client — proving the protocol depends on nothing but
+# the store's primitives, so the production S3 port is "swap the
 # client object", not a protocol change.
-CAS_BACKENDS = ["localfs", "memory", "s3"]
+CAS_BACKENDS = ["localfs", "s3"]
 
 
 @pytest.fixture(autouse=True)
-def _fake_s3_client():
-    """Route the s3 backend at the in-repo FakeS3Client (page_size=2 so
-    slots() pagination is exercised by every multi-commit test) and
-    reset its shared bucket map per test."""
-    from qwatch_spark.plans import commit_backend as cb
+def _fake_s3_client(tmp_path, monkeypatch):
+    """Route the s3 store at a dir-backed fake rooted in this test's
+    tmp dir (page_size=2, so slots() pagination is exercised by every
+    multi-commit test)."""
+    from qwatch_spark.plans.objectstore import DirBackedFakeS3Client, S3Store
 
-    prev = cb.S3CasBackend.client_factory
-    cb.S3CasBackend.client_factory = cb.FakeS3Client
-    cb.FakeS3Client._buckets.clear()
-    yield
-    cb.S3CasBackend.client_factory = prev
-    cb.FakeS3Client._buckets.clear()
+    root = tmp_path / "s3"
+    root.mkdir()
+    monkeypatch.setattr(
+        S3Store, "client_factory", lambda: DirBackedFakeS3Client(str(root))
+    )
 
 
 @pytest.mark.parametrize("backend", CAS_BACKENDS)
@@ -347,15 +345,14 @@ def test_cas_rejects_racer_at_linearization_point(tmp_path, backend):
     # stale slot listing), at the put-if-absent itself:
     from unittest import mock
 
-    from qwatch_spark.plans import commit_backend as cb
+    from qwatch_spark.plans.snapshot_table import CasLog
 
-    cls = cb.BACKENDS[backend]
-    real_slots = cls.slots
+    real_slots = CasLog.slots
 
     def stale_slots(self):
         return [n for n in real_slots(self) if n != crash["mutation"]]
 
-    with mock.patch.object(cls, "slots", stale_slots):
+    with mock.patch.object(CasLog, "slots", stale_slots):
         with pytest.raises(RuntimeError, match="concurrent writer"):
             c.commit_empty_epoch(2)
     # the buried commit is still recoverable by the next loader
@@ -488,15 +485,17 @@ def test_s3_backend_speaks_boto3_conditional_put_surface(tmp_path):
     ConditionalRequestConflict → re-poll until settled, NoSuchKey →
     None. The fake's page_size=2 means the 7-slot listing here takes 4
     LIST round-trips."""
-    from qwatch_spark.plans.commit_backend import (
-        FakeS3Client,
-        S3CasBackend,
+    from qwatch_spark.plans.objectstore import (
+        DirBackedFakeS3Client,
         S3ClientError,
+        S3Store,
     )
+    from qwatch_spark.plans.snapshot_table import CasLog
 
-    client = FakeS3Client()
-    b = S3CasBackend("s3://lake/warehouse/pages", client=client)
-    assert b.bucket == "lake" and b.prefix == "warehouse/pages/_commits/"
+    client = DirBackedFakeS3Client(str(tmp_path / "store"))
+    b = CasLog(S3Store(client), "s3://lake/warehouse/pages")
+    assert b.dir == "s3://lake/warehouse/pages/_commits"
+    assert b._slot(3) == "s3://lake/warehouse/pages/_commits/m=3.json"
     for n in range(7):
         assert b.put_if_absent(n, f'{{"mutation": {n}}}')
     assert not b.put_if_absent(3, "loser")  # 412 → CAS lost

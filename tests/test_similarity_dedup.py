@@ -1020,7 +1020,7 @@ def test_ivf_maintain_rival_claim_and_vacuum(spark, tmp_path):
     rows, df = _clustered_corpus(spark, 150)
     path = str(tmp_path / "ivf")
     ivf_build_index(df, path, n_cells=8)
-    # rival already claimed version 0 (what fs.claim_version creates)
+    # rival already claimed version 0 (what _claim_version creates)
     open(_os.path.join(path, "_v0.claim"), "w").close()
     with pytest.raises(IndexConflictError, match="rival"):
         ivf_maintain(spark, path, n_cells=12)
