@@ -349,8 +349,8 @@ class CdcBench(_Bench):
         super().__init__("cdc")
         self.spark, self.n_events = spark, n_events
         # auto = merge-on-read deltas + bounded compaction: the scale path
-        # (apply cost O(batch), not O(table)); correctness vs cow and the
-        # oracle is pytest-gated (tests/test_delta_mode.py)
+        # (apply cost O(batch), not O(table)); correctness vs the oracle
+        # is pytest-gated (tests/test_delta_mode.py)
         self.cfg = PipelineConfig(n_buckets=max(32, cpus), write_mode="auto")
         self.tmp = tempfile.mkdtemp(prefix="qwatch_bench_", dir=_fast_dir())
         # warmup (excluded): C2 JIT tiering + codecs + python workers.
@@ -587,7 +587,8 @@ class EntityStreamBench(_Bench):
         )
         from qwatch_spark.streaming import run_entity_stream
 
-        # 8 files / trigger cap 4 = two warm epochs (COW + delta paths)
+        # 8 files / trigger cap 4 = two warm epochs (the second one
+        # writes onto tables that already hold deltas)
         write_entity_feed_files(spark, f"{self.tmp}/warmfeed", 50_000, files=8)
         run_entity_stream(
             spark, f"{self.tmp}/warmfeed", f"{self.tmp}/warm",

@@ -24,6 +24,7 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    from qwatch_spark.config import WRITE_MODES
     from qwatch_spark.plans.objectstore import CAS_BACKENDS
 
     p = argparse.ArgumentParser(description=__doc__)
@@ -32,7 +33,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--checkpoint", required=True)
     p.add_argument("--config", help="PipelineConfig file (.json/.yml/.yaml)")
     p.add_argument("--n-buckets", type=int, default=None)
-    p.add_argument("--write-mode", choices=("cow", "delta", "auto"), default=None)
+    p.add_argument("--write-mode", choices=WRITE_MODES, default=None)
     p.add_argument("--rules", default=None, help="comma-separated rule list")
     p.add_argument("--keep-langs", default=None, help="comma-separated langs")
     p.add_argument("--n-salt", type=int, default=None)

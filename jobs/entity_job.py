@@ -26,6 +26,7 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    from qwatch_spark.config import WRITE_MODES
     from qwatch_spark.plans.objectstore import CAS_BACKENDS
 
     p = argparse.ArgumentParser(description=__doc__)
@@ -35,7 +36,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--entities", required=True, help="entity graph yml/json")
     p.add_argument("--config", help="PipelineConfig file (.json/.yml/.yaml)")
     p.add_argument("--n-buckets", type=int, default=None)
-    p.add_argument("--write-mode", choices=("cow", "delta", "auto"), default=None)
+    p.add_argument("--write-mode", choices=WRITE_MODES, default=None)
     p.add_argument("--commit-protocol", choices=("localfs", "cas"), default=None)
     p.add_argument("--cas-backend", choices=CAS_BACKENDS, default=None)
     p.add_argument("--manifest-shards", type=int, default=None)

@@ -23,6 +23,8 @@ KNOWN_FILTER_RULES = (
     "quality_gate",
     "exact_dup_gate",
 )
+# apply strategies (see PipelineConfig.write_mode)
+WRITE_MODES = ("delta", "auto")
 
 
 @dataclasses.dataclass(frozen=True)
@@ -66,13 +68,13 @@ class PipelineConfig:
     # the reference's GELF push feed is JSON events; binary columns ride
     # as base64, malformed lines are dead-lettered with the raw text)
     feed_format: str = "parquet"
-    # physical apply strategy:
-    #   cow   — rewrite touched buckets each epoch (read-optimized)
-    #   delta — merge-on-read: write only the epoch's updates, resolve at
-    #           read time; apply cost O(batch), independent of table size
-    #           (the 10^10-row scale path for frequent epochs)
-    #   auto  — delta commits + automatic compaction via compact_every
-    write_mode: str = "cow"
+    # physical apply strategy (WRITE_MODES). Every epoch is a
+    # merge-on-read delta commit: write only the epoch's updates, resolve
+    # at read time; apply cost O(batch), independent of table size.
+    #   auto  — delta commits + inline compaction via compact_every
+    #   delta — delta commits only; compaction runs elsewhere
+    #           (plans/maintenance.py, jobs/maintain_job.py)
+    write_mode: str = "auto"
     # auto/delta: compact any bucket once it carries more than this many
     # delta versions (read amplification bound)
     compact_every: int = 8
@@ -156,9 +158,10 @@ class PipelineConfig:
                 "manifest_shards must be in [1, n_buckets]; "
                 f"got {self.manifest_shards}"
             )
-        if self.write_mode not in ("cow", "delta", "auto"):
+        if self.write_mode not in WRITE_MODES:
             raise ValueError(
-                f"write_mode must be cow|delta|auto, got {self.write_mode!r}"
+                f"write_mode must be one of {WRITE_MODES}, "
+                f"got {self.write_mode!r}"
             )
         if self.compact_every < 1:
             raise ValueError("compact_every must be >= 1")

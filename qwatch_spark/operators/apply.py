@@ -7,13 +7,16 @@ at-most-once. Ours is set-oriented per micro-batch:
     feed batch
       → rename map + filter rules (vectorized; the F7 stage)
       → schema-evolution resolve vs target (north_rule)
-      → dedup-to-latest per url on (warc_ts, seq)   [W1, skew-aware]
-      → bucket pruning: read ONLY touched buckets of the target
-      → full-outer merge with a latest-wins guard
-        (`WHEN MATCHED AND s.(warc_ts,seq) >= t.(warc_ts,seq)`) —
-        late/out-of-order events can never regress state
-      → atomic epoch-tagged commit (idempotent re-delivery)
-      → per-bucket lineage metrics + commit-log row.
+      → dedup-to-latest per url on (warc_ts, seq), fused with bucket
+        placement [W1]
+      → delta write: only the epoch's deduped rows, one file per touched
+        bucket (merge-on-read — readers resolve base ∪ deltas under a
+        latest-wins (warc_ts, seq) order, so late/out-of-order events
+        can never regress state)
+      → footer stats → fp segment → atomic epoch-tagged manifest commit
+        (idempotent re-delivery)
+      → per-bucket lineage metrics + commit-log row
+      → inline compaction under write_mode="auto".
 
 Deletes become tombstones (is_deleted=true, payload nulled) so an older
 update arriving after a delete cannot resurrect the key — the
@@ -36,9 +39,8 @@ from pyspark.sql import functions as F
 
 from qwatch_spark.config import PipelineConfig
 from qwatch_spark.operators.evolution import resolve_schema
-from qwatch_spark.operators.rules import apply_rules
+from qwatch_spark.operators.rules import FP_COL, apply_rules
 from qwatch_spark.plans.snapshot_table import SnapshotTable, _ziso, bucket_expr
-from qwatch_spark.schema import METRICS_SCHEMA
 
 log = logging.getLogger(__name__)
 
@@ -91,7 +93,6 @@ def _maybe_append_fp_segment(
     when its epoch's rows are provably inside that read — otherwise
     (epoch committed after the snapshot) it survives; either way the
     finished index is a superset of live fingerprints."""
-    from qwatch_spark.operators.rules import FP_COL
     from qwatch_spark.plans.fp_bloom import FpBloomIndex
 
     if not has_fp:
@@ -316,54 +317,6 @@ def _dedup_to_buckets(
     )
 
 
-def merge_cdc(
-    current: DataFrame,
-    updates: DataFrame,
-    epoch_id: int,
-    payload_cols: list[str],
-    key: str = "url",
-) -> DataFrame:
-    """Full-outer key merge with latest-wins guard; returns new bucket
-    contents (payload + bookkeeping). `updates` must be deduped to one
-    row per key and carry (op, warc_ts, seq)."""
-    c, u = current.alias("c"), updates.alias("u")
-    joined = c.join(u, F.col(f"c.{key}") == F.col(f"u.{key}"), "full_outer")
-
-    take_u = F.col(f"u.{key}").isNotNull() & (
-        F.col(f"c.{key}").isNull()
-        | (
-            F.struct(F.col("u.warc_ts"), F.col("u.seq"))
-            >= F.struct(F.col("c.warc_ts"), F.col("c.seq"))
-        )
-    )
-    # normalize the applied opcode: I if the key was absent/tombstoned,
-    # U if it replaced a live row, D for tombstoning (metrics semantics)
-    applied_op = (
-        F.when(F.col("u.op") == "D", F.lit("D"))
-        .when(F.col(f"c.{key}").isNull() | F.col("c.is_deleted"), F.lit("I"))
-        .otherwise(F.lit("U"))
-    )
-
-    cols = [F.coalesce(F.col(f"u.{key}"), F.col(f"c.{key}")).alias(key)]
-    for p in payload_cols:
-        if p == key:
-            continue
-        cols.append(
-            F.when(take_u, F.col(f"u.{p}")).otherwise(F.col(f"c.{p}")).alias(p)
-        )
-    cols += [
-        F.when(take_u, F.col("u.seq")).otherwise(F.col("c.seq")).alias("seq"),
-        F.when(take_u, F.col("u.op") == "D")
-        .otherwise(F.col("c.is_deleted"))
-        .alias("is_deleted"),
-        F.when(take_u, applied_op).otherwise(F.col("c.last_op")).alias("last_op"),
-        F.when(take_u, F.lit(int(epoch_id)))
-        .otherwise(F.col("c.last_epoch"))
-        .alias("last_epoch"),
-    ]
-    return joined.select(*cols)
-
-
 def apply_changes(
     spark: SparkSession,
     feed_df: DataFrame,
@@ -389,8 +342,6 @@ def apply_changes(
         # persist the content fingerprint so the gate's cross-epoch
         # anti-join scans a 16-byte digest column, never stored text
         from pyspark.sql import types as T
-
-        from qwatch_spark.operators.rules import FP_COL
 
         if FP_COL not in {f.name for f in evolved_payload.fields}:
             evolved_payload = T.StructType(
@@ -456,255 +407,148 @@ def apply_changes(
         updates, cfg, kind="post_gate", ctx={"spark": spark, "table": table}
     )
 
-    use_delta = cfg.write_mode in ("delta", "auto")
+    # SINGLE-WRITE path: the deduped batch streams straight into its
+    # final delta files (merge-on-read: commit only the epoch's updates,
+    # O(batch); readers resolve base ∪ deltas by the (warc_ts, seq)
+    # order). No staging copy — at object-store scale that halves the
+    # epoch's PUT volume. Touched buckets come from the written
+    # partition dirs; batch size from parquet footers (no data scan).
     phases: dict[str, float] = {}
-    stage_dir = None
-    try:
-        if use_delta:
-            # SINGLE-WRITE path: the deduped batch streams straight into
-            # its final delta files (merge-on-read: commit only the
-            # epoch's updates, O(batch); readers resolve base ∪ deltas by
-            # the (warc_ts, seq) order). No staging copy — at object-store
-            # scale that halves the epoch's PUT volume. Touched buckets
-            # come from the written partition dirs; batch size from
-            # parquet footers (no data scan). I-vs-U classification would
-            # need a table lookup, so delta lineage records upserts as
-            # 'U' (deletes stay exact).
-            t = time.time()
-            new_version, vtoken, out = table.stage_version_dir()
-            snap = updates.select(
-                *payload_cols,
-                F.col("seq"),
-                (F.col("op") == "D").alias("is_deleted"),
-                F.when(F.col("op") == "D", "D").otherwise("U").alias("last_op"),
-                F.lit(int(epoch_id)).alias("last_epoch"),
-                # commit-stats marker: null for upserts, 1 for deletes —
-                # the parquet footer's per-chunk null_count then yields
-                # EXACT per-bucket delete counts with zero data read
-                # (_delta_footer_stats). ~1 bit/row on disk (RLE); every
-                # reader projects through an explicit schema, so the
-                # extra column is invisible outside this commit path.
-                F.when(F.col("op") == "D", F.lit(1))
-                .cast("tinyint")
-                .alias("_del"),
-                # the dedup already placed every row on its bucket
-                # partition (one task per bucket), so the write below
-                # needs no exchange of its own and partitionBy still
-                # yields exactly one file per touched bucket
-                F.col("_b").alias("b"),
-            )
-            (
-                snap.write.mode("overwrite")
-                .partitionBy("b")
-                .parquet(out)
-            )
-            touched = sorted(
-                int(d[2:]) for d in os.listdir(out) if d.startswith("b=")
-            )
-            phases["write"] = time.time() - t
-            if not touched:  # fully-gated batch: manifest-only commit
-                shutil.rmtree(out, ignore_errors=True)
-                table.commit_empty_epoch(epoch_id)
-                return ApplyStats(
-                    int(epoch_id), False, 0, 0, 0, 0,
-                    int((time.time() - t0) * 1000),
-                )
-            t = time.time()
-            # the batch/zone-map/lineage stats every commit needs, from
-            # the just-written files' FOOTERS — a driver-side metadata
-            # read, zero Spark jobs (under concurrent multi-table
-            # applies, a per-table stats job queued behind other
-            # tables' writes was the dominant commit cost). Falls back
-            # to ONE narrow aggregate job over the (page-cached) files
-            # when a required statistic is missing.
-            fstats = _delta_footer_stats(out, touched)
-            if fstats is None:
-                per_b = (
-                    spark.read.parquet(out)
-                    .groupBy("b")
-                    .agg(
-                        F.count("*").alias("n"),
-                        F.min("warc_ts").alias("lo"),
-                        F.max("warc_ts").alias("hi"),
-                        F.count_if(F.col("last_op") == "D").alias("nd"),
-                        F.min("seq").alias("min_seq"),
-                        F.max("seq").alias("max_seq"),
-                    )
-                    .collect()
-                )
-                fstats = {
-                    int(r["b"]): {
-                        "n": int(r["n"]),
-                        "nd": int(r["nd"]),
-                        "min_seq": r["min_seq"],
-                        "max_seq": r["max_seq"],
-                        "lo": r["lo"],
-                        "hi": r["hi"],
-                    }
-                    for r in per_b
-                }
-            n_events = sum(s["n"] for s in fstats.values())
-            n_deletes_total = sum(s["nd"] for s in fstats.values())
-            zmaps = {
-                b: [_ziso(s["lo"]), _ziso(s["hi"])]
-                for b, s in fstats.items()
-                if s["lo"] is not None
-            }
-            # I-vs-U classification needs a table lookup, so delta lineage
-            # records upserts as 'U' (deletes stay exact); the table's
-            # last_op is repaired to the true I/U at compaction, which
-            # reads the history anyway (METRICS_SCHEMA documents the
-            # cross-mode semantics)
-            metrics_rows = [
-                {
-                    "epoch_id": int(epoch_id),
-                    "bucket": int(b),
-                    "n_insert": 0,
-                    "n_update": int(s["n"] - s["nd"]),
-                    "n_delete": int(s["nd"]),
-                    "min_seq": s["min_seq"],
-                    "max_seq": s["max_seq"],
-                }
-                for b, s in sorted(fstats.items())
-            ]
-            phases["commit_stats"] = time.time() - t
-            t2 = time.time()
-            from qwatch_spark.operators.rules import FP_COL as _FPC
-
-            _maybe_append_fp_segment(
-                table, cfg, lambda: spark.read.parquet(out), epoch_id,
-                n_events,
-                has_fp=_FPC in {f.name for f in evolved_payload.fields},
-            )
-            phases["commit_fp"] = time.time() - t2
-            t2 = time.time()
-            table.commit_prewritten_delta(
-                touched, epoch_id, evolved_payload, new_version, vtoken, zmaps,
-                rows_delta=n_events - n_deletes_total,
-            )
-            phases["commit_swap"] = time.time() - t2
-            phases["commit"] = time.time() - t
-        else:
-            # COW path: stage the deduped batch to the lake instead of
-            # caching — one pass over the feed, then cheap column-pruned
-            # re-reads (merge input + bucket counts) with no executor
-            # memory pressure; the staged batch doubles as a debuggable
-            # artifact of what the epoch applied.
-            stage_dir = os.path.join(table.path, "stage", f"e={int(epoch_id)}")
-            t = time.time()
-            updates.write.mode("overwrite").parquet(stage_dir)
-            updates = spark.read.parquet(stage_dir)
-            phases["stage"] = time.time() - t
-            t = time.time()
-            # one metadata-cheap job: touched buckets, deduped batch size,
-            # AND the per-bucket warc_ts range for the zone map
-            bucket_stats = updates.groupBy("_b").agg(
+    t = time.time()
+    new_version, vtoken, out = table.stage_version_dir()
+    snap = updates.select(
+        *payload_cols,
+        F.col("seq"),
+        (F.col("op") == "D").alias("is_deleted"),
+        F.when(F.col("op") == "D", "D").otherwise("U").alias("last_op"),
+        F.lit(int(epoch_id)).alias("last_epoch"),
+        # commit-stats marker: null for upserts, 1 for deletes — the
+        # parquet footer's per-chunk null_count then yields EXACT
+        # per-bucket delete counts with zero data read
+        # (_delta_footer_stats). ~1 bit/row on disk (RLE); every reader
+        # projects through an explicit schema, so the extra column is
+        # invisible outside this commit path.
+        F.when(F.col("op") == "D", F.lit(1)).cast("tinyint").alias("_del"),
+        # the dedup already placed every row on its bucket partition
+        # (one task per bucket), so the write below needs no exchange of
+        # its own and partitionBy still yields exactly one file per
+        # touched bucket
+        F.col("_b").alias("b"),
+    )
+    snap.write.mode("overwrite").partitionBy("b").parquet(out)
+    touched = sorted(int(d[2:]) for d in os.listdir(out) if d.startswith("b="))
+    phases["write"] = time.time() - t
+    if not touched:  # fully-gated batch: manifest-only commit
+        shutil.rmtree(out, ignore_errors=True)
+        table.commit_epoch(epoch_id)
+        return ApplyStats(
+            int(epoch_id), False, 0, 0, 0, 0, int((time.time() - t0) * 1000)
+        )
+    t = time.time()
+    # the batch/zone-map/lineage stats every commit needs, from the
+    # just-written files' FOOTERS — a driver-side metadata read, zero
+    # Spark jobs (under concurrent multi-table applies, a per-table stats
+    # job queued behind other tables' writes was the dominant commit
+    # cost). Falls back to ONE narrow aggregate job over the
+    # (page-cached) files when a required statistic is missing.
+    fstats = _delta_footer_stats(out, touched)
+    if fstats is None:
+        per_b = (
+            spark.read.parquet(out)
+            .groupBy("b")
+            .agg(
                 F.count("*").alias("n"),
                 F.min("warc_ts").alias("lo"),
                 F.max("warc_ts").alias("hi"),
-                F.count_if(F.col("op") == "D").alias("nd"),
-            ).collect()
-            touched = sorted(r["_b"] for r in bucket_stats)
-            n_events = sum(r["n"] for r in bucket_stats)
-            zmaps = {
-                int(r["_b"]): [_ziso(r["lo"]), _ziso(r["hi"])]
-                for r in bucket_stats
-                if r["lo"] is not None
+                F.count_if(F.col("last_op") == "D").alias("nd"),
+                F.min("seq").alias("min_seq"),
+                F.max("seq").alias("max_seq"),
+            )
+            .collect()
+        )
+        fstats = {
+            int(r["b"]): {
+                "n": int(r["n"]),
+                "nd": int(r["nd"]),
+                "min_seq": r["min_seq"],
+                "max_seq": r["max_seq"],
+                "lo": r["lo"],
+                "hi": r["hi"],
             }
-            phases["plan"] = time.time() - t
-            if not touched:  # fully-gated batch: manifest-only commit
-                table.commit_empty_epoch(epoch_id)
-                return ApplyStats(
-                    int(epoch_id), False, 0, 0, 0, 0,
-                    int((time.time() - t0) * 1000),
-                )
-            t = time.time()
-            current = table.read_buckets(
-                spark, touched, payload_schema=evolved_payload
-            )
-            merged = merge_cdc(
-                current, updates.drop("_b"), epoch_id, payload_cols, key=key
-            )
-            from qwatch_spark.operators.rules import FP_COL as _FPC
+            for r in per_b
+        }
+    n_events = sum(s["n"] for s in fstats.values())
+    n_del = sum(s["nd"] for s in fstats.values())
+    n_up = n_events - n_del
+    zmaps = {
+        b: [_ziso(s["lo"]), _ziso(s["hi"])]
+        for b, s in fstats.items()
+        if s["lo"] is not None
+    }
+    # I-vs-U classification needs a table lookup, so lineage records
+    # upserts as 'U' (deletes stay exact); the table's last_op is
+    # repaired to the true I/U at compaction, which reads the history
+    # anyway (METRICS_SCHEMA documents the semantics)
+    metrics_rows = [
+        {
+            "epoch_id": int(epoch_id),
+            "bucket": int(b),
+            "n_insert": 0,
+            "n_update": int(s["n"] - s["nd"]),
+            "n_delete": int(s["nd"]),
+            "min_seq": s["min_seq"],
+            "max_seq": s["max_seq"],
+        }
+        for b, s in sorted(fstats.items())
+    ]
+    phases["commit_stats"] = time.time() - t
+    t2 = time.time()
+    _maybe_append_fp_segment(
+        table, cfg, lambda: spark.read.parquet(out), epoch_id, n_events,
+        has_fp=FP_COL in {f.name for f in evolved_payload.fields},
+    )
+    phases["commit_fp"] = time.time() - t2
+    t2 = time.time()
+    table.commit_prewritten_delta(
+        touched, epoch_id, evolved_payload, new_version, vtoken, zmaps,
+        rows_delta=n_up,
+    )
+    phases["commit_swap"] = time.time() - t2
+    phases["commit"] = time.time() - t
 
-            _maybe_append_fp_segment(
-                table, cfg, lambda: updates, epoch_id, n_events,
-                has_fp=_FPC in updates.columns,
-            )
-            table.commit_epoch(
-                merged, touched, epoch_id, evolved_payload, zmaps,
-                rows_delta=n_events - sum(int(r["nd"]) for r in bucket_stats),
-            )
-            phases["merge_commit"] = time.time() - t
+    # lineage AFTER the commit point: recomputable
+    t = time.time()
+    table.append_metrics(metrics_rows)
+    phases["lineage"] = time.time() - t
 
-        # lineage AFTER the commit point: recomputable. The delta path
-        # derived metrics_rows inside its single stats job above; the COW
-        # path needs a column-pruned scan of the rewritten buckets
-        # (bucket, last_op, seq only reach the scan) because a rewritten
-        # bucket mixes this epoch's rows with carried-over history.
+    wall_ms = int((time.time() - t0) * 1000)
+    table.append_commit_log(
+        spark,
+        {
+            "epoch_id": int(epoch_id),
+            "batch_fingerprint": f"v{table.version}",
+            "n_events": n_events,
+            "n_upserts": n_up,
+            "n_deletes": n_del,
+            "wall_ms": wall_ms,
+            "events_per_sec": n_events / max(wall_ms, 1) * 1000.0,
+            "committed_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
+        },
+    )
+    if cfg.write_mode == "auto":
+        # bound read amplification: fold deltas once a bucket carries
+        # more than compact_every of them (atomic maintenance swap)
         t = time.time()
-        if not use_delta:
-            written = table.read_buckets(
-                spark, touched, payload_schema=evolved_payload
-            )
-            changed = written.filter(F.col("last_epoch") == int(epoch_id))
-            metrics = (
-                changed.withColumn("bucket", bucket_expr(table.n_buckets, key))
-                .groupBy("bucket")
-                .agg(
-                    F.count_if(F.col("last_op") == "I").alias("n_insert"),
-                    F.count_if(F.col("last_op") == "U").alias("n_update"),
-                    F.count_if(F.col("last_op") == "D").alias("n_delete"),
-                    F.min("seq").alias("min_seq"),
-                    F.max("seq").alias("max_seq"),
-                )
-                .select(
-                    F.lit(int(epoch_id)).alias("epoch_id"),
-                    F.col("bucket"),
-                    "n_insert",
-                    "n_update",
-                    "n_delete",
-                    "min_seq",
-                    "max_seq",
-                )
-            )
-            metrics_rows = [r.asDict() for r in metrics.collect()]
-        table.append_metrics(metrics_rows)
-        phases["lineage"] = time.time() - t
+        compacted = table.compact(spark, max_deltas=cfg.compact_every)
+        if compacted:
+            phases["compact"] = time.time() - t
 
-        n_up = sum(r["n_insert"] + r["n_update"] for r in metrics_rows)
-        n_del = sum(r["n_delete"] for r in metrics_rows)
-        wall_ms = int((time.time() - t0) * 1000)
-        table.append_commit_log(
-            spark,
-            {
-                "epoch_id": int(epoch_id),
-                "batch_fingerprint": f"v{table.version}",
-                "n_events": n_events,
-                "n_upserts": n_up,
-                "n_deletes": n_del,
-                "wall_ms": wall_ms,
-                "events_per_sec": n_events / max(wall_ms, 1) * 1000.0,
-                "committed_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-            },
-        )
-        if cfg.write_mode == "auto":
-            # bound read amplification: fold deltas once a bucket carries
-            # more than compact_every of them (atomic maintenance swap)
-            t = time.time()
-            compacted = table.compact(spark, max_deltas=cfg.compact_every)
-            if compacted:
-                phases["compact"] = time.time() - t
-
-        phases = {k: round(v, 3) for k, v in phases.items()}
-        log.debug("apply epoch=%s phases=%s", epoch_id, phases)
-        return ApplyStats(
-            int(epoch_id), False, n_events, n_up, n_del, len(touched), wall_ms,
-            phases,
-        )
-    finally:
-        if stage_dir is not None:
-            shutil.rmtree(stage_dir, ignore_errors=True)
+    phases = {k: round(v, 3) for k, v in phases.items()}
+    log.debug("apply epoch=%s phases=%s", epoch_id, phases)
+    return ApplyStats(
+        int(epoch_id), False, n_events, n_up, n_del, len(touched), wall_ms,
+        phases,
+    )
 
 
 def replay_feed(

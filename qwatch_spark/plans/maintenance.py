@@ -1,6 +1,6 @@
 """Standalone table maintenance — compaction + vacuum off the apply path.
 
-`write_mode="auto"` compacts INLINE after each apply: simple, but at
+The default `write_mode="auto"` compacts INLINE after each apply: simple, but at
 minute-epochs the fold's tail latency lands on the apply path. The scale
 deployment runs applies in `delta` mode (pure O(batch)) and this
 maintenance loop as a SEPARATE writer on its own cadence — which the CAS

@@ -17,10 +17,11 @@ but at-most-once and one network round-trip per event):
 Physical layout (scale design):
 
 - rows are hash-bucketed by ``pmod(xxhash64(url), n_buckets)``; an epoch
-  rewrites ONLY the buckets its keys touch (partition-level copy-on-write),
-  so apply cost scales with the batch's key spread, not table size. At
+  appends one delta file to ONLY the buckets its keys touch (merge-on-read;
+  ``compact`` folds a bucket's deltas into a new base), so apply cost
+  scales with the batch, not table size. At
   100 TB you'd set n_buckets so a bucket is ~0.5-1 GB (~100k buckets);
-  the manifest (bucket → version int) stays tiny.
+  the manifest (bucket → base + delta version tokens) stays tiny.
 - the bucket column is derived from ``url`` (never stored), so readers
   can prune to buckets of interest and co-partition merges without extra
   storage.
@@ -814,66 +815,18 @@ class SnapshotTable:
         token = _vtoken(v)
         return v, token, os.path.join(self.path, "data", f"v={token}")
 
-    def commit_epoch(
-        self,
-        merged: DataFrame,
-        touched_buckets: list[int],
-        epoch_id: int,
-        evolved_payload: T.StructType,
-        zmaps: dict | None = None,
-        rows_delta: int = 0,
-    ) -> int:
-        """Write merged rows of the touched buckets as a new writer-unique
-        version dir, then atomically swap the manifest. Returns the new
-        version.
-
-        `zmaps` (bucket → [lo, hi] warc_ts range of the epoch's UPDATES)
-        extends each rewritten bucket's zone map: the new base holds
-        current ∪ updates, so its range is the union of the old entry's
-        ranges and the updates' range — no extra job over the data."""
+    def commit_epoch(self, epoch_id: int) -> None:
+        """Record an epoch that produced no changes (all rows gated) —
+        manifest-only: no version bump, no data files."""
         if self.has_epoch(epoch_id):
-            return self.version  # duplicate delivery → no-op
-        new_version = self.version + 1
-        token = _vtoken(new_version)
-        out = os.path.join(self.path, "data", f"v={token}")
-        cols = [f.name for f in full_schema(evolved_payload).fields]
-        (
-            merged.withColumn("b", bucket_expr(self.n_buckets, self.key_col))
-            .select("b", *cols)
-            # co-locate each bucket in one task → exactly one file per
-            # bucket per version (bucket size is governed by n_buckets,
-            # chosen so a bucket ≈ one healthy parquet file at target SF)
-            .repartition(max(len(touched_buckets), 1), "b")
-            .write.mode("overwrite")
-            .partitionBy("b")
-            .parquet(out)
-        )
+            return
         manifest = dict(self._manifest)
-        manifest["version"] = new_version
-        manifest["schema"] = evolved_payload.json()
         self._record_epoch(manifest, epoch_id)
-        self._bump_rows_est(manifest, rows_delta)
-        cur = self._buckets_of(self._manifest, only=touched_buckets)
-        updates: dict = {}
-        for b in touched_buckets:
-            # copy-on-write: the new base subsumes any prior deltas
-            old = self._bucket_entry(cur.get(str(int(b)), {"base": None, "deltas": []}))
-            # only record a range when EVERY contributing file's range is
-            # known — an understated hi would wrongly prune live rows
-            rng = None
-            if zmaps is not None:
-                prior = [t for t in [old["base"], *old["deltas"]] if t is not None]
-                known = [old["z"].get(str(t)) for t in prior]
-                if all(k is not None for k in known):
-                    rng = _zmerge(*known, zmaps.get(int(b)))
-            updates[str(int(b))] = {
-                "base": token,
-                "deltas": [],
-                "z": {str(token): rng} if rng else {},
-            }
-        written = self._apply_bucket_updates(manifest, updates)
-        self._swap_or_cleanup(manifest, out, extra_paths=written)
-        return new_version
+        self._write_manifest(
+            self.path, manifest,
+            expected_mutation=self._manifest.get("mutation", 0),
+        )
+        self._manifest = manifest
 
     def commit_prewritten_delta(
         self,
@@ -881,14 +834,13 @@ class SnapshotTable:
         epoch_id: int,
         evolved_payload: T.StructType,
         new_version: int,
-        token: str | None = None,
+        token: str,
         zmaps: dict | None = None,
         rows_delta: int = 0,
     ) -> int:
         """Manifest-only delta commit for a version dir the CALLER already
-        wrote via `stage_version_dir()` (single-write apply path: the
-        deduped batch streams straight into its final delta files — no
-        staging copy, half the write I/O of stage-then-commit). The
+        wrote via `stage_version_dir()` (the apply path: the deduped
+        batch streams straight into its final delta files). The
         caller must have written partitionBy("b") dirs for exactly
         `touched_buckets`. Crash before this call leaves an orphan
         version dir (vacuum cleans it); the mutation guard rejects stale
@@ -896,7 +848,6 @@ class SnapshotTable:
         loser never clobbered the winner's files."""
         if self.has_epoch(epoch_id):
             return self.version
-        token = token if token is not None else str(int(new_version))
         out = os.path.join(self.path, "data", f"v={token}")
         if new_version != self.version + 1:
             shutil.rmtree(out, ignore_errors=True)
@@ -1041,33 +992,29 @@ class SnapshotTable:
         Maintenance-only: state is unchanged, no epoch consumed. Returns
         the compacted bucket ids.
 
-        Lineage repair rides along for free: the delta apply path writes
+        Lineage repair rides along for free: the apply path writes
         upserts with a coarse ``last_op='U'`` (I-vs-U needs a table
-        lookup the O(batch) path refuses to pay), so cow and delta
-        tables record different last_op for identical feeds. Compaction
-        already reads every retained row of a victim bucket, which is
-        exactly the history needed to reconstruct the truth: a winning
-        DELTA row's previous state is the next-newest retained row of
-        its key (base files hold the full pre-delta key set, tombstones
+        lookup the O(batch) path refuses to pay). Compaction already
+        reads every retained row of a victim bucket, which is exactly
+        the history needed to reconstruct the truth: a winning DELTA
+        row's previous state is the next-newest retained row of its key
+        (base files hold the full pre-delta key set, tombstones
         included), so the winner was an insert iff that previous row is
         absent or a tombstone. Base-file winners keep their recorded
         last_op (their own history was folded away by an earlier
         compaction — recorded truth beats reconstruction there).
-        Post-compaction, cow and delta tables agree row-for-row on
-        last_op for in-order feeds (tested in test_delta_mode +
-        property-tested over random in-order epochings). One honest
-        divergence: cow classifies I-vs-U against the table state in
-        ARRIVAL order, while reconstruction uses EVENT-TIME order — so
-        for a key whose winner arrived in an earlier epoch than an
-        older (late) event, cow says what happened at apply time and
-        the repaired value says what the event-time history implies.
-        A WAL tail is in order, so the normal CDC case never hits
-        this; when it does, the repaired value is the event-time
-        truth. The per-epoch METRICS rows
+        Post-compaction, last_op equals the exact I/U of
+        `tests/oracle.oracle_final_ops` for in-order feeds (tested in
+        test_delta_mode + property-tested over random in-order
+        epochings). For a key
+        whose winner arrived in an earlier epoch than an older (late)
+        event, the repaired value is the event-time truth rather than
+        what happened at apply time; a WAL tail is in order, so the
+        normal CDC case never hits this. The per-epoch METRICS rows
         appended at apply time are immutable history and keep the
-        coarse delta semantics (n_insert=0) — documented in
+        coarse semantics (n_insert=0) — documented in
         schema.METRICS_SCHEMA; consumers wanting exact I/U splits read
-        the table's last_op, not cross-mode metrics."""
+        the table's last_op."""
         victims = [
             int(b)
             for b, e in self._entries(None)
@@ -1217,19 +1164,6 @@ class SnapshotTable:
             else:
                 cols.append(F.col(f"_row.{c}").alias(c))
         return agged.select(*cols)
-
-    def commit_empty_epoch(self, epoch_id: int) -> None:
-        """Record an epoch that produced no changes (all rows gated) —
-        manifest-only: no version bump, no data files."""
-        if self.has_epoch(epoch_id):
-            return
-        manifest = dict(self._manifest)
-        self._record_epoch(manifest, epoch_id)
-        self._write_manifest(
-            self.path, manifest,
-            expected_mutation=self._manifest.get("mutation", 0),
-        )
-        self._manifest = manifest
 
     # ---------- lineage / metrics ----------
 

@@ -55,14 +55,13 @@ EVENT_SCHEMA = T.StructType(
 
 # Lineage / metrics tables (north_rule: per-partition lineage and
 # throughput metrics; the reference has only log lines, outputs/neo4j.go:124).
-# Per-epoch per-bucket lineage. n_insert/n_update semantics depend on the
-# WRITE MODE of the epoch that appended the row: cow epochs classify
-# I-vs-U exactly (table lookup is free there); delta/auto epochs record
-# all upserts as n_update with n_insert=0 (I-vs-U would need the table
-# read the O(batch) path exists to avoid). Do not compare n_insert across
-# modes — the TABLE's last_op column is the exact record (delta winners'
-# last_op is reconstructed from history at compaction; see
-# SnapshotTable.compact), metrics rows are immutable apply-time history.
+# Per-epoch per-bucket lineage. Every epoch records its upserts as
+# n_update with n_insert=0: I-vs-U would need the table read the O(batch)
+# apply path exists to avoid (rows appended by the retired copy-on-write
+# mode may still carry exact n_insert). Deletes are exact. The TABLE's
+# last_op column is the exact record (delta winners' last_op is
+# reconstructed from history at compaction; see SnapshotTable.compact);
+# metrics rows are immutable apply-time history.
 METRICS_SCHEMA = T.StructType(
     [
         T.StructField("epoch_id", T.LongType(), False),

@@ -61,12 +61,11 @@ spark = get_spark(
         "spark.local.dir": f"{{base}}/spill",
     }},
 )
-# write_mode=auto is the 10^10-event scale path (merge-on-read deltas +
-# bounded compaction, apply cost O(batch), SCALING.md §3) — the mode a
-# 10^10-event replay would actually run in; the COW path rereads and
-# rewrites whole touched buckets each epoch, measuring a different job.
-# Identical at both parallelism levels either way. QWATCH_SCALING_MODE
-# overrides for A/B-ing the modes.
+# write_mode=auto (the default) is the 10^10-event scale path
+# (merge-on-read deltas + bounded inline compaction, apply cost O(batch),
+# SCALING.md §3). Identical at both parallelism levels.
+# QWATCH_SCALING_MODE=delta measures the apply path with compaction left
+# to a separate maintenance writer.
 cfg = PipelineConfig(n_buckets=64, write_mode={mode!r})
 
 # warmup epochs (excluded): C2 JIT tiering, codegen, parquet codecs,

@@ -70,8 +70,8 @@ def oracle_final_ops(
     per epoch, the (warc_ts, seq) winner per url applies against the
     state before the epoch (absent/tombstoned → I, live → U, delete →
     D); late winners (older than current state) are ignored. Matches
-    the engine's cow classification — and the compaction-repaired delta
-    classification whenever the epoching is in event-time order."""
+    the engine's compaction-repaired classification whenever the
+    epoching is in event-time order."""
     cfg = cfg or PipelineConfig()
     state: dict[str, dict] = {}
     ops: dict[str, str] = {}

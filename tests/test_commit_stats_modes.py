@@ -33,8 +33,8 @@ def _count_footer_reads(monkeypatch):
     return results
 
 
-def _apply_all(spark, tmp_path, name, feed, epochs, write_mode="delta"):
-    cfg = PipelineConfig(n_buckets=8, write_mode=write_mode)
+def _apply_all(spark, tmp_path, name, feed, epochs, cfg=None):
+    cfg = cfg or PipelineConfig(n_buckets=8, write_mode="delta")
     path = str(tmp_path / f"t_{name}")
     table = SnapshotTable.create(path, n_buckets=8)
     for e in epochs:
@@ -109,6 +109,6 @@ def test_auto_mode_is_footer_never_task(spark, tmp_path, monkeypatch):
     fallback to the aggregate job."""
     feed = gen_feed_df(spark, 400, epoch_size=400)
     footer_reads = _count_footer_reads(monkeypatch)
-    _apply_all(spark, tmp_path, "auto", feed, [0], write_mode="auto")
+    _apply_all(spark, tmp_path, "auto", feed, [0], PipelineConfig(n_buckets=8))
     assert len(footer_reads) == 1, "auto must harvest from footers"
     assert footer_reads[0] is not None, "auto fell back to the stats job"

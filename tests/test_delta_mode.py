@@ -1,5 +1,5 @@
 """Merge-on-read delta commits (write_mode=delta/auto): same final state
-as copy-on-write and the oracle, with O(batch) apply cost."""
+as the oracle, with O(batch) apply cost."""
 
 import os
 
@@ -10,7 +10,7 @@ from qwatch_spark.config import PipelineConfig
 from qwatch_spark.datagen import gen_feed_df, gen_feed_rows
 from qwatch_spark.operators.apply import apply_changes, replay_feed
 from qwatch_spark.plans.snapshot_table import SnapshotTable
-from tests.oracle import oracle_final_pages
+from tests.oracle import oracle_final_ops, oracle_final_pages
 
 N = 3000
 
@@ -40,17 +40,6 @@ def test_delta_replay_matches_oracle(spark, tmp_path, mode):
         assert all(
             len(e["deltas"]) <= 2 for _b, e in table._entries(None)
         )
-
-
-def test_delta_equals_cow(spark, tmp_path):
-    feed = gen_feed_df(spark, N)
-    t_cow = SnapshotTable.create(str(tmp_path / "cow"), n_buckets=8)
-    t_del = SnapshotTable.create(str(tmp_path / "delta"), n_buckets=8)
-    replay_feed(spark, feed, t_cow, PipelineConfig(n_buckets=8, write_mode="cow"))
-    replay_feed(spark, feed, t_del, PipelineConfig(n_buckets=8, write_mode="delta"))
-    assert engine_state(spark, SnapshotTable(t_cow.path)) == engine_state(
-        spark, SnapshotTable(t_del.path)
-    )
 
 
 def test_delta_epoch_idempotent(spark, tmp_path):
@@ -174,39 +163,38 @@ def test_read_buckets_columns_pruning_matches_full_read(spark, tmp_path):
 
 
 def test_compaction_repairs_delta_lineage_to_match_cow(spark, tmp_path):
-    """The delta apply path records upserts coarsely (last_op='U',
-    n_insert=0 — I-vs-U would need a table lookup). Compaction reads the
-    retained history anyway, so it reconstructs each delta winner's TRUE
-    last_op: after full compaction the delta table's (key, last_op)
-    must equal the cow table's row-for-row, including tombstones."""
+    """The apply path records upserts coarsely (last_op='U', n_insert=0 —
+    I-vs-U would need a table lookup). Compaction reads the retained
+    history anyway, so it reconstructs each delta winner's TRUE last_op:
+    after full compaction the table's (key, last_op) must equal the exact
+    per-epoch I/U/D classification the retired copy-on-write path
+    recorded (`oracle_final_ops`), row-for-row, including tombstones."""
     feed = gen_feed_df(spark, N)
-    cow_cfg = PipelineConfig(n_buckets=8, write_mode="cow")
-    cow = SnapshotTable.create(str(tmp_path / "cow"), n_buckets=8)
-    replay_feed(spark, feed, cow, cow_cfg)
-
-    d_cfg = PipelineConfig(n_buckets=8, write_mode="delta")
+    cfg = PipelineConfig(n_buckets=8, write_mode="delta")
     dt_ = SnapshotTable.create(str(tmp_path / "delta"), n_buckets=8)
-    replay_feed(spark, feed, dt_, d_cfg)
+    replay_feed(spark, feed, dt_, cfg)
     dt_ = SnapshotTable(dt_.path)
-    # pre-compaction: delta mode never recorded an insert
+    # pre-compaction: the apply path never recorded an insert
     pre = dt_.read_buckets(spark).select("url", "last_op").collect()
     assert {r["last_op"] for r in pre} <= {"U", "D"}
     dt_.compact(spark, max_deltas=0)  # fold every chain
     dt_ = SnapshotTable(dt_.path)
     assert not dt_.has_deltas()
 
-    want = {
-        r["url"]: r["last_op"]
-        for r in cow.read_buckets(spark).select("url", "last_op").collect()
-    }
+    rows = gen_feed_rows(N)
+    epochs = [
+        [r for r in rows if r["epoch_hint"] == e]
+        for e in sorted({r["epoch_hint"] for r in rows})
+    ]
+    want = oracle_final_ops(epochs, cfg)
     got = {
         r["url"]: r["last_op"]
         for r in dt_.read_buckets(spark).select("url", "last_op").collect()
     }
     assert got == want
     assert "I" in set(got.values())  # inserts actually reconstructed
-    # and the table STATE is still byte-identical to cow
-    assert engine_state(spark, dt_) == engine_state(spark, cow)
+    # and the table STATE still equals the oracle's
+    assert engine_state(spark, dt_) == oracle_final_pages(rows, cfg)
 
 
 def test_footer_stats_match_spark_job(spark, tmp_path):

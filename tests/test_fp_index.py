@@ -41,7 +41,7 @@ FEED = (
 RULES = ("valid_url", "lang_gate", "extract_text", "exact_dup_gate")
 
 
-def cfg(fp_index: bool, write_mode: str = "cow") -> PipelineConfig:
+def cfg(fp_index: bool, write_mode: str = "auto") -> PipelineConfig:
     return PipelineConfig(
         n_buckets=4, rules=RULES, fp_index=fp_index, write_mode=write_mode
     )
@@ -107,7 +107,7 @@ def test_bloom_no_false_negatives_and_low_fp_rate():
     assert fp_rate < 0.02, fp_rate
 
 
-@pytest.mark.parametrize("write_mode", ["cow", "delta"])
+@pytest.mark.parametrize("write_mode", ["auto", "delta"])
 def test_bloom_gate_decides_identically_to_full_scan(spark, tmp_path, write_mode):
     t_off = run_epochs(spark, str(tmp_path / "off"), cfg(False, write_mode))
     t_on = run_epochs(spark, str(tmp_path / "on"), cfg(True, write_mode))
@@ -482,7 +482,7 @@ def test_disk_state_authoritative_append_with_fp_index_false(spark, tmp_path):
     assert "https://a.ex/c" in urls
 
 
-@pytest.mark.parametrize("write_mode", ["cow", "delta"])
+@pytest.mark.parametrize("write_mode", ["auto", "delta"])
 def test_fp_auto_enables_past_row_threshold(spark, tmp_path, write_mode):
     """fp_index='auto' flips the index on only once the manifest's
     live-row estimate crosses fp_auto_rows; below it no index exists
@@ -580,7 +580,7 @@ def test_rows_est_is_a_strict_upper_bound(spark, tmp_path):
     assert t.rows_est >= live
 
 
-@pytest.mark.parametrize("write_mode", ["cow", "delta"])
+@pytest.mark.parametrize("write_mode", ["auto", "delta"])
 def test_fp_auto_never_rebuilds_on_apply_path(spark, tmp_path, write_mode,
                                               monkeypatch):
     """With fp_index='auto' NO apply epoch may run the O(table)

@@ -532,8 +532,8 @@ def test_fp_bloom_over_s3(spark, s3idx):
     t = SnapshotTable.create(
         tempfile.mkdtemp(prefix="fps3_"), n_buckets=4
     )
-    t.commit_empty_epoch(0)
-    t.commit_empty_epoch(1)
+    t.commit_epoch(0)
+    t.commit_epoch(1)
     idx.rebuild(spark, SnapshotTable(t.path))
     names = [p.rsplit("/", 1)[-1] for p in idx.segment_paths()]
     assert len(names) == 1 and names[0].startswith("full-w1-"), names

@@ -216,7 +216,7 @@ def test_cas_backend_config_plumbing(tmp_path, monkeypatch):
     )
     for t in tables.values():
         assert t._manifest["cas_backend"] == "s3"
-        t.commit_empty_epoch(0)  # commits land in the s3 store
+        t.commit_epoch(0)  # commits land in the s3 store
         assert t.commit_log_backend().slots() == [0, 1]
         assert not os.path.exists(os.path.join(t.path, "_commits"))
 

@@ -24,10 +24,10 @@ def manifest_bytes(table) -> int:
 
 def test_manifest_stays_flat_over_many_epochs(tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
-    t.commit_empty_epoch(0)
+    t.commit_epoch(0)
     size_early = manifest_bytes(t)
     for e in range(1, 2000):
-        t.commit_empty_epoch(e)
+        t.commit_epoch(e)
     assert t.has_epoch(0) and t.has_epoch(1999) and not t.has_epoch(2000)
     m = json.load(open(os.path.join(t.path, "manifest.json")))
     assert m["epoch_watermark"] == 1999
@@ -38,11 +38,11 @@ def test_manifest_stays_flat_over_many_epochs(tmp_path):
 def test_out_of_order_epochs_fold_into_watermark(tmp_path):
     t = SnapshotTable.create(str(tmp_path / "t"), SCHEMA, n_buckets=4)
     for e in (0, 2, 3, 7):
-        t.commit_empty_epoch(e)
+        t.commit_epoch(e)
     m = t._manifest
     assert m["epoch_watermark"] == 0 and m["applied_epochs"] == [2, 3, 7]
     assert t.has_epoch(3) and not t.has_epoch(1) and not t.has_epoch(4)
-    t.commit_empty_epoch(1)  # plugs the gap → 0..3 fold
+    t.commit_epoch(1)  # plugs the gap → 0..3 fold
     m = t._manifest
     assert m["epoch_watermark"] == 3 and m["applied_epochs"] == [7]
 
@@ -53,20 +53,20 @@ def test_stale_concurrent_writer_is_rejected(tmp_path):
     path = str(tmp_path / "t")
     t1 = SnapshotTable.create(path, SCHEMA, n_buckets=4)
     t2 = SnapshotTable(path)  # second writer, same base
-    t1.commit_empty_epoch(0)
+    t1.commit_epoch(0)
     with pytest.raises(RuntimeError, match="concurrent writer"):
-        t2.commit_empty_epoch(1)
+        t2.commit_epoch(1)
     # t1 (holding the current mutation) continues fine
-    t1.commit_empty_epoch(1)
+    t1.commit_epoch(1)
     assert t1.has_epoch(1)
 
 
 def test_concurrent_writer_data_never_clobbered(spark, tmp_path):
-    """Two writers race one table with REAL data commits (both COW and
-    delta paths): version dirs are writer-unique, so the loser's abort
-    leaves the winner's committed files untouched, the loser's staging
-    dir is cleaned up, and the final state + lineage are exactly the
-    winner's — no orphaned-clobbered data, before or after vacuum."""
+    """Two writers race one table with REAL data commits: version dirs
+    are writer-unique, so the loser's abort leaves the winner's committed
+    files untouched, the loser's staging dir is cleaned up, and the final
+    state + lineage are exactly the winner's — no orphaned-clobbered
+    data, before or after vacuum."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -74,36 +74,35 @@ def test_concurrent_writer_data_never_clobbered(spark, tmp_path):
     from qwatch_spark.datagen import gen_feed_df
     from qwatch_spark.operators.apply import apply_changes
 
-    for mode in ("cow", "delta"):
-        path = str(tmp_path / f"t_{mode}")
-        cfg = PipelineConfig(n_buckets=4, write_mode=mode)
-        t1 = SnapshotTable.create(path, n_buckets=4)
-        feed0 = gen_feed_df(spark, 300).drop("epoch_hint")
-        apply_changes(spark, feed0, t1, 0, cfg)
-        t2 = SnapshotTable(path)  # writer B loads the manifest here
-        feed1 = (
-            gen_feed_df(spark, 600).filter(F.col("seq") >= 300).drop("epoch_hint")
+    path = str(tmp_path / "t")
+    cfg = PipelineConfig(n_buckets=4, write_mode="delta")
+    t1 = SnapshotTable.create(path, n_buckets=4)
+    feed0 = gen_feed_df(spark, 300).drop("epoch_hint")
+    apply_changes(spark, feed0, t1, 0, cfg)
+    t2 = SnapshotTable(path)  # writer B loads the manifest here
+    feed1 = (
+        gen_feed_df(spark, 600).filter(F.col("seq") >= 300).drop("epoch_hint")
+    )
+    apply_changes(spark, feed1, t1, 1, cfg)  # writer A wins epoch 1
+
+    def snap(t):
+        return sorted(
+            (r["url"], r["warc_ts"], r["seq"], r["is_deleted"])
+            for r in t.read_buckets(spark).collect()
         )
-        apply_changes(spark, feed1, t1, 1, cfg)  # writer A wins epoch 1
 
-        def snap(t):
-            return sorted(
-                (r["url"], r["warc_ts"], r["seq"], r["is_deleted"])
-                for r in t.read_buckets(spark).collect()
-            )
-
-        won = snap(t1)
-        with pytest.raises(RuntimeError, match="concurrent writer|stale"):
-            apply_changes(spark, feed1, t2, 2, cfg)  # writer B loses
-        t3 = SnapshotTable(path)
-        assert snap(t3) == won  # winner's state intact, byte for byte
-        # loser cleaned up its own staging dir: every dir on disk is
-        # referenced or belongs to readable history, and vacuum + re-read
-        # still reproduces the winner's state
-        t3.vacuum(retention_s=0)
-        assert snap(SnapshotTable(path)) == won
-        epochs = {r["epoch_id"] for r in t3.read_metrics(spark).collect()}
-        assert epochs == {0, 1}  # no lineage from the aborted writer
+    won = snap(t1)
+    with pytest.raises(RuntimeError, match="concurrent writer|stale"):
+        apply_changes(spark, feed1, t2, 2, cfg)  # writer B loses
+    t3 = SnapshotTable(path)
+    assert snap(t3) == won  # winner's state intact, byte for byte
+    # loser cleaned up its own staging dir: every dir on disk is
+    # referenced or belongs to readable history, and vacuum + re-read
+    # still reproduces the winner's state
+    t3.vacuum(retention_s=0)
+    assert snap(SnapshotTable(path)) == won
+    epochs = {r["epoch_id"] for r in t3.read_metrics(spark).collect()}
+    assert epochs == {0, 1}  # no lineage from the aborted writer
 
 
 def test_commit_log_backfilled_on_duplicate_delivery(spark, tmp_path):
@@ -300,8 +299,8 @@ def test_cas_protocol_commits_and_heals_forward(tmp_path, backend):
     t = SnapshotTable.create(
         path, SCHEMA, n_buckets=4, commit_protocol="cas", cas_backend=backend
     )
-    t.commit_empty_epoch(0)
-    t.commit_empty_epoch(1)
+    t.commit_epoch(0)
+    t.commit_epoch(1)
     t2 = SnapshotTable(path)
     assert t2.has_epoch(1) and not t2.has_epoch(2)
     # simulate crash-after-linearization: commit slot exists, pointer stale
@@ -326,9 +325,9 @@ def test_cas_rejects_racer_at_linearization_point(tmp_path, backend):
         path, SCHEMA, n_buckets=4, commit_protocol="cas", cas_backend=backend
     )
     b = SnapshotTable(path)  # second writer, same base mutation
-    a.commit_empty_epoch(0)
+    a.commit_epoch(0)
     with pytest.raises(RuntimeError, match="concurrent writer"):
-        b.commit_empty_epoch(1)
+        b.commit_epoch(1)
     # stronger: winner's commit slot exists but its pointer update never
     # landed (crashed mid-commit). The localfs pointer check would PASS
     # here and silently bury the winner's commit; cas still rejects —
@@ -339,7 +338,7 @@ def test_cas_rejects_racer_at_linearization_point(tmp_path, backend):
     crash["mutation"] = base["mutation"] + 1
     assert c.commit_log_backend().put_if_absent(crash["mutation"], json.dumps(crash))
     with pytest.raises(RuntimeError, match="concurrent writer"):
-        c.commit_empty_epoch(2)
+        c.commit_epoch(2)
     # ...and, in the race window where the winner's put lands BETWEEN
     # this writer's LIST and its own put (simulated by serving c a
     # stale slot listing), at the put-if-absent itself:
@@ -354,7 +353,7 @@ def test_cas_rejects_racer_at_linearization_point(tmp_path, backend):
 
     with mock.patch.object(CasLog, "slots", stale_slots):
         with pytest.raises(RuntimeError, match="concurrent writer"):
-            c.commit_empty_epoch(2)
+            c.commit_epoch(2)
     # the buried commit is still recoverable by the next loader
     assert SnapshotTable(path)._manifest["mutation"] == crash["mutation"]
 
@@ -371,13 +370,13 @@ def test_cas_vacuum_prunes_log_but_stale_writer_stays_rejected(tmp_path, backend
     )
     stale = SnapshotTable(path)  # base mutation 0
     for e in range(5):
-        t.commit_empty_epoch(e)
+        t.commit_epoch(e)
     removed = t.vacuum(retention_s=0)
     assert t.commit_log_backend().slots() == [t._manifest["mutation"]]
     assert any(f.startswith("m=") for f in removed)
     # stale writer's slot m=1 is free again, but it is rejected loudly
     with pytest.raises(RuntimeError, match="concurrent writer"):
-        stale.commit_empty_epoch(99)
+        stale.commit_epoch(99)
     assert not SnapshotTable(path).has_epoch(99)
 
 
@@ -434,7 +433,7 @@ def test_commit_protocol_config_plumbing(tmp_path):
 
 @pytest.mark.parametrize("backend", CAS_BACKENDS)
 def test_cas_threads_race_with_retry_no_lost_commits(tmp_path, backend):
-    """8 threads race commit_empty_epoch on one cas table with the
+    """8 threads race commit_epoch on one cas table with the
     optimistic-retry loop a real writer would use (reload + reapply on
     ConcurrentWriter). Every epoch must land exactly once, the commit
     log must be a gap-free mutation sequence, and the final manifest
@@ -454,7 +453,7 @@ def test_cas_threads_race_with_retry_no_lost_commits(tmp_path, backend):
             for _attempt in range(200):
                 t = SnapshotTable(path)  # reload = rebase
                 try:
-                    t.commit_empty_epoch(e)
+                    t.commit_epoch(e)
                     break
                 except RuntimeError as exc:
                     if "concurrent writer" not in str(exc):
@@ -550,7 +549,7 @@ def test_s3_backend_speaks_boto3_conditional_put_surface(tmp_path):
 
 def test_sharded_manifest_equivalent_state_and_bounded_commit_io(spark, tmp_path):
     """A manifest_shards table must produce byte-identical state to an
-    inline twin across COW + delta epochs and compaction, while each
+    inline twin across delta epochs and compaction, while each
     commit rewrites ONLY the dirty shards (bucket b lives in shard
     b % n_shards) plus the small root — per-epoch manifest cost
     O(touched), the 100k-bucket scale fix."""
@@ -688,7 +687,7 @@ def test_vacuum_retention_protects_inflight_staged_files(tmp_path):
     t = SnapshotTable.create(
         str(tmp_path / "t"), SCHEMA, n_buckets=4, commit_protocol="cas"
     )
-    t.commit_empty_epoch(0)
+    t.commit_epoch(0)
     staged = os.path.join(t.path, "data", "v=99-deadbeef")
     os.makedirs(staged)
     open(os.path.join(staged, "part-0.parquet"), "w").close()

@@ -91,10 +91,14 @@ def test_manifest_swap_is_atomic_commit_point(spark, tmp_path):
     apply_changes(spark, feed, table, 0, CFG)
     m1 = json.load(open(os.path.join(table.path, "manifest.json")))
     entries = {b: SnapshotTable._bucket_entry(e) for b, e in m1["buckets"].items()}
-    # base tokens are writer-unique (v=1-<nonce>) but all name version 1
-    assert {str(e["base"]).split("-")[0] for e in entries.values()} == {"1"}
-    for b, e in entries.items():
-        for v in [e["base"], *e["deltas"]]:
+    # version tokens are writer-unique (v=1-<nonce>) but all name version 1
+    tokens = {
+        b: [t for t in [e["base"], *e["deltas"]] if t is not None]
+        for b, e in entries.items()
+    }
+    assert {str(t).split("-")[0] for ts in tokens.values() for t in ts} == {"1"}
+    for b, ts in tokens.items():
+        for v in ts:
             p = os.path.join(table.path, "data", f"v={v}", f"b={b}")
             assert os.path.isdir(p) and any(
                 f.endswith(".parquet") for f in os.listdir(p)
@@ -177,6 +181,35 @@ def test_yaml_config_and_cli_layering(tmp_path):
         PipelineConfig.from_file(str(tmp_path / "bad.yml"))
     with pytest.raises(ValueError, match="unknown filter rule"):
         cfg.with_overrides(rules=("nope",))
+
+
+def test_write_modes_default_auto_and_reject_cow(monkeypatch):
+    """`auto` (delta commits + inline compaction) is the default of
+    exactly two write modes; the retired `cow` value is rejected by the
+    config and by both jobs' --write-mode flags."""
+    from jobs.apply_job import main as apply_main
+    from jobs.entity_job import main as entity_main
+    from qwatch_spark import session
+    from qwatch_spark.config import WRITE_MODES
+
+    assert WRITE_MODES == ("delta", "auto")
+    assert PipelineConfig().write_mode == "auto"
+    with pytest.raises(ValueError, match="write_mode"):
+        PipelineConfig(write_mode="cow")
+
+    def no_spark(*a, **kw):
+        raise AssertionError("--write-mode cow got past the parser")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    common = ["--feed-dir", "f", "--checkpoint", "c", "--once",
+              "--write-mode", "cow"]
+    for main, extra in (
+        (apply_main, ["--table", "t"]),
+        (entity_main, ["--base", "b", "--entities", "e.yml"]),
+    ):
+        with pytest.raises(SystemExit) as exc:
+            main(common + extra)
+        assert exc.value.code == 2  # argparse usage error
 
 
 def test_apply_job_cli_end_to_end(spark, tmp_path):

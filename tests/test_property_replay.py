@@ -42,7 +42,7 @@ def engine_state(spark, table):
 @given(
     seed=st.integers(0, 2**31 - 1),
     n_cuts=st.integers(0, 4),
-    mode=st.sampled_from(["cow", "auto"]),
+    mode=st.sampled_from(["delta", "auto"]),
 )
 def test_any_epoching_and_order_matches_oracle(
     spark, tmp_path_factory, seed, n_cuts, mode
@@ -80,8 +80,8 @@ def test_lineage_repair_matches_cow_and_oracle_any_inorder_epoching(
 ):
     """For ANY in-order epoching (event-time-sorted feed cut at random
     points — the WAL-tail shape), delta replay + full compaction yields
-    the SAME per-key last_op as cow replay, and both equal the dict
-    oracle's op classification."""
+    the dict oracle's exact per-key op classification (the one the
+    retired copy-on-write path recorded at apply time)."""
     import random
 
     from tests.oracle import oracle_final_ops
@@ -93,33 +93,23 @@ def test_lineage_repair_matches_cow_and_oracle_any_inorder_epoching(
     for c in [*cuts, len(rows)]:
         epochs.append(rows[prev:c])
         prev = c
-    cfg_base = dict(n_buckets=4)
-    want = oracle_final_ops(epochs, PipelineConfig(**cfg_base))
+    cfg = PipelineConfig(n_buckets=4, write_mode="delta")
+    want = oracle_final_ops(epochs, cfg)
 
-    def replay(mode, path):
-        cfg = PipelineConfig(write_mode=mode, **cfg_base)
-        t = SnapshotTable.create(str(path), n_buckets=4)
-        for e, ep_rows in enumerate(epochs):
-            batch = spark.createDataFrame(
-                [tuple(r[f.name] for f in EVENT_SCHEMA.fields) for r in ep_rows],
-                EVENT_SCHEMA,
-            )
-            apply_changes(spark, batch, t, e, cfg)
-        return SnapshotTable(str(path))
-
-    base = tmp_path_factory.mktemp("lineage_prop")
-    cow = replay("cow", base / "cow")
-    dt_ = replay("delta", base / "delta")
+    path = tmp_path_factory.mktemp("lineage_prop") / "delta"
+    dt_ = SnapshotTable.create(str(path), n_buckets=4)
+    for e, ep_rows in enumerate(epochs):
+        batch = spark.createDataFrame(
+            [tuple(r[f.name] for f in EVENT_SCHEMA.fields) for r in ep_rows],
+            EVENT_SCHEMA,
+        )
+        apply_changes(spark, batch, dt_, e, cfg)
     dt_.compact(spark, max_deltas=0)
     dt_ = SnapshotTable(dt_.path)
 
-    def ops(t):
-        return {
-            r["url"]: r["last_op"]
-            for r in t.read_buckets(spark, include_deleted=True)
-            .select("url", "last_op").collect()
-        }
-
-    cow_ops, delta_ops = ops(cow), ops(dt_)
-    assert cow_ops == want
+    delta_ops = {
+        r["url"]: r["last_op"]
+        for r in dt_.read_buckets(spark, include_deleted=True)
+        .select("url", "last_op").collect()
+    }
     assert delta_ops == want
