@@ -39,7 +39,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--n-salt", type=int, default=None)
     p.add_argument("--compact-every", type=int, default=None)
     p.add_argument("--min-quality", type=float, default=None)
-    p.add_argument("--commit-protocol", choices=("localfs", "cas"), default=None)
     p.add_argument("--cas-backend", choices=CAS_BACKENDS, default=None)
     p.add_argument("--manifest-shards", type=int, default=None)
     p.add_argument("--feed-format", choices=("parquet", "json"), default=None)
@@ -69,7 +68,6 @@ def main(argv: list[str] | None = None) -> int:
         n_salt=args.n_salt,
         compact_every=args.compact_every,
         min_quality=args.min_quality,
-        commit_protocol=args.commit_protocol,
         cas_backend=args.cas_backend,
         manifest_shards=args.manifest_shards,
         feed_format=args.feed_format,
@@ -82,7 +80,6 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="qwatch_apply", master=args.master)
     SnapshotTable.create(
         args.table, n_buckets=cfg.n_buckets,
-        commit_protocol=cfg.commit_protocol,
         manifest_shards=cfg.manifest_shards,
         cas_backend=cfg.cas_backend,
     )  # no-op if exists

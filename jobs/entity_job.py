@@ -37,7 +37,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--config", help="PipelineConfig file (.json/.yml/.yaml)")
     p.add_argument("--n-buckets", type=int, default=None)
     p.add_argument("--write-mode", choices=WRITE_MODES, default=None)
-    p.add_argument("--commit-protocol", choices=("localfs", "cas"), default=None)
     p.add_argument("--cas-backend", choices=CAS_BACKENDS, default=None)
     p.add_argument("--manifest-shards", type=int, default=None)
     p.add_argument("--once", action="store_true", help="drain and exit")
@@ -57,7 +56,6 @@ def main(argv: list[str] | None = None) -> int:
     cfg = cfg.with_overrides(
         n_buckets=args.n_buckets,
         write_mode=args.write_mode,
-        commit_protocol=args.commit_protocol,
         cas_backend=args.cas_backend,
         manifest_shards=args.manifest_shards,
     )

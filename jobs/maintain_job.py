@@ -1,7 +1,7 @@
 """Cluster entrypoint: standalone compaction/vacuum maintenance for a
-SnapshotTable, safe to run beside a live delta-mode applier (CAS commit
-protocol recommended — a lost commit race aborts cleanly and retries
-next cycle; see qwatch_spark/plans/maintenance.py).
+SnapshotTable, safe to run beside a live delta-mode applier: every table
+commits through its CAS log, so a lost commit race aborts cleanly and
+retries next cycle (see qwatch_spark/plans/maintenance.py).
 
 Usage (cluster):
     spark-submit --py-files dist/qwatch_spark.zip jobs/maintain_job.py \

@@ -78,12 +78,8 @@ class PipelineConfig:
     # auto/delta: compact any bucket once it carries more than this many
     # delta versions (read amplification bound)
     compact_every: int = 8
-    # manifest commit protocol for tables THIS pipeline creates:
-    #   localfs — atomic rename + mutation-counter guard (single writer)
-    #   cas     — put-if-absent commit log: safe under concurrent
-    #             writers on any store with a conditional put
-    commit_protocol: str = "localfs"
-    # where the CAS commit log of tables this pipeline creates lives
+    # where the CAS commit log (put-if-absent commit slots, safe under
+    # concurrent writers) of tables this pipeline creates lives
     # (plans/objectstore.py):
     #   localfs — the table dir, os.link put-if-absent (default)
     #   s3      — an S3 bucket, conditional put (If-None-Match: *)
@@ -131,11 +127,6 @@ class PipelineConfig:
         if self.fp_index not in (False, True, "auto"):
             raise ValueError(
                 f"fp_index must be False, True, or 'auto' (got {self.fp_index!r})"
-            )
-        if self.commit_protocol not in ("localfs", "cas"):
-            raise ValueError(
-                f"unknown commit_protocol {self.commit_protocol!r} "
-                "(expected 'localfs' or 'cas')"
             )
         from qwatch_spark.plans.objectstore import CAS_BACKENDS
 

@@ -29,8 +29,6 @@ from __future__ import annotations
 
 import datetime as dt
 import logging
-import os
-import shutil
 import time
 from dataclasses import dataclass
 
@@ -435,11 +433,18 @@ def apply_changes(
         # touched bucket
         F.col("_b").alias("b"),
     )
-    snap.write.mode("overwrite").partitionBy("b").parquet(out)
-    touched = sorted(int(d[2:]) for d in os.listdir(out) if d.startswith("b="))
+    spark_out = table.store.spark_path(out)
+    snap.write.mode("overwrite").partitionBy("b").parquet(spark_out)
+    touched = sorted(
+        {
+            int(rel.partition("/")[0][2:])
+            for rel, _size, _mt in table.store.list_tree(out)
+            if rel.startswith("b=")
+        }
+    )
     phases["write"] = time.time() - t
     if not touched:  # fully-gated batch: manifest-only commit
-        shutil.rmtree(out, ignore_errors=True)
+        table.store.delete_tree(out)
         table.commit_epoch(epoch_id)
         return ApplyStats(
             int(epoch_id), False, 0, 0, 0, 0, int((time.time() - t0) * 1000)
@@ -454,7 +459,7 @@ def apply_changes(
     fstats = _delta_footer_stats(out, touched)
     if fstats is None:
         per_b = (
-            spark.read.parquet(out)
+            spark.read.parquet(spark_out)
             .groupBy("b")
             .agg(
                 F.count("*").alias("n"),
@@ -504,7 +509,7 @@ def apply_changes(
     phases["commit_stats"] = time.time() - t
     t2 = time.time()
     _maybe_append_fp_segment(
-        table, cfg, lambda: spark.read.parquet(out), epoch_id, n_events,
+        table, cfg, lambda: spark.read.parquet(spark_out), epoch_id, n_events,
         has_fp=FP_COL in {f.name for f in evolved_payload.fields},
     )
     phases["commit_fp"] = time.time() - t2

@@ -212,7 +212,6 @@ def create_entity_tables(
     links: list[LinkSpec] | None = None,
     n_buckets: int = 16,
     overwrite: bool = False,
-    commit_protocol: str = "localfs",
     manifest_shards: int | None = None,
     cas_backend: str = "localfs",
 ) -> dict[str, SnapshotTable]:
@@ -225,7 +224,6 @@ def create_entity_tables(
             n_buckets=n_buckets,
             key_col=s.key_col,
             overwrite=overwrite,
-            commit_protocol=commit_protocol,
             manifest_shards=manifest_shards,
             cas_backend=cas_backend,
         )
@@ -236,7 +234,6 @@ def create_entity_tables(
             n_buckets=n_buckets,
             key_col="link_id",
             overwrite=overwrite,
-            commit_protocol=commit_protocol,
             manifest_shards=manifest_shards,
             cas_backend=cas_backend,
         )

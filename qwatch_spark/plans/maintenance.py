@@ -3,8 +3,8 @@
 The default `write_mode="auto"` compacts INLINE after each apply: simple, but at
 minute-epochs the fold's tail latency lands on the apply path. The scale
 deployment runs applies in `delta` mode (pure O(batch)) and this
-maintenance loop as a SEPARATE writer on its own cadence — which the CAS
-commit protocol makes safe: compaction commits through the same
+maintenance loop as a SEPARATE writer on its own cadence — which the
+table's CAS commit protocol makes safe: compaction commits through the same
 put-if-absent linearization as applies, a lost race aborts cleanly
 (loser's staged files self-cleaned, state untouched) and simply retries
 next cycle, and vacuum's retention window keeps it from collecting a

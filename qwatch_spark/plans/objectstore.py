@@ -99,6 +99,15 @@ def _local(p: str) -> str:
     return p[len("file://"):] if p.startswith("file://") else p
 
 
+def _hidden_tmp(p: str) -> str:
+    """The in-flight name of a put to `p`: `.<name>.<hex>.tmp` beside it.
+    The leading dot puts a killed put under Spark's hidden-file filter,
+    so a directory Spark scans never shows it a torn file; listings skip
+    the `.tmp` suffix."""
+    d, name = os.path.split(p)
+    return os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+
+
 def iter_keys(client, bucket: str, prefix: str):
     """Paginated `list_objects_v2` as a generator of Contents entries
     (1000 keys per round-trip on real S3; the fake pages at 2 so every
@@ -194,7 +203,7 @@ class LocalStore:
         # a key's parent "directories" never need creating on an object
         # store, so the local side makes them on demand
         os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = f"{p}.{uuid.uuid4().hex}.tmp"
+        tmp = _hidden_tmp(p)
         with open(tmp, "wb") as fh:
             fh.write(data)
         return tmp
@@ -624,7 +633,7 @@ class DirBackedFakeS3Client:
         data = bytes(Body) if isinstance(Body, (bytes, bytearray)) else str(Body).encode()
         dst = self._path(Bucket, Key)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
-        tmp = f"{dst}.{uuid.uuid4().hex}.tmp"
+        tmp = _hidden_tmp(dst)
         with open(tmp, "wb") as fh:
             fh.write(data)
         try:

@@ -10,9 +10,14 @@ but at-most-once and one network round-trip per event):
   no-op (idempotence, the contract of outputs/neo4j.go:259-262, made
   transactional);
 - **atomicity**: data files are written to a new immutable version
-  directory first, then a single ``manifest.json`` is swapped via
-  write-tmp + ``os.replace`` (atomic on POSIX). A crash mid-write
-  leaves orphan data files and an unchanged manifest — state intact.
+  directory first, then the commit linearizes on a put-if-absent of the
+  next `CasLog` slot and the ``manifest.json`` pointer is swapped (an
+  atomic object put). A crash mid-write leaves orphan data files and an
+  unchanged log — state intact.
+
+Every byte of durable table state goes through the table's object store
+(`plans/objectstore.py`: a local path or ``s3://``); Spark reads and
+writes the same objects through ``store.spark_path``.
 
 Physical layout (scale design):
 
@@ -33,6 +38,9 @@ Layout on disk::
     table/
       manifest.json                 # {version, n_buckets, schema,
                                     #  applied_epochs, buckets: {b: v}}
+                                    # — pointer cache of the log's top
+      _commits/m=<mutation>.json    # the CAS commit log (CasLog)
+      manifests/v=<version>.json    # version history (time travel)
       data/v=<version>-<nonce>/b=<bucket>/  # parquet via partitionBy("b");
                                     # the nonce makes each writer's dir
                                     # unique (loser of a commit race never
@@ -43,9 +51,9 @@ Layout on disk::
 
 from __future__ import annotations
 
+import copy
 import json
 import os
-import shutil
 import time
 import uuid
 
@@ -63,7 +71,24 @@ from qwatch_spark.schema import PAGE_SCHEMA, schema_from_json
 
 MANIFEST = "manifest.json"
 COMMITS_DIR = "_commits"  # CAS protocol: put-if-absent commit log
+HISTORY_DIR = "manifests"  # per-version manifest history
 SHARDS_DIR = "manifest_shards"  # sharded-manifest bucket-entry files
+
+
+def _store(path: str):
+    store = store_for(path)
+    if store is None:
+        raise ValueError(f"no object store client for {path!r}")
+    return store
+
+
+def _publish(path: str, body: bytes, version: int) -> None:
+    """Swap the manifest.json pointer to a committed manifest and record
+    it as the version's history entry (time travel reads it until vacuum
+    drops the data files it points to). Both are atomic object puts."""
+    store = _store(path)
+    store.put(os.path.join(path, MANIFEST), body)
+    store.put(os.path.join(path, HISTORY_DIR, f"v={int(version)}.json"), body)
 
 
 class CasLog:
@@ -95,10 +120,7 @@ class CasLog:
         root = table_path
         if kind == "s3" and not table_path.startswith("s3://"):
             root = f"s3://cas/{os.path.realpath(table_path).lstrip('/')}"
-        store = store_for(root)
-        if store is None:
-            raise ValueError(f"no object store client for {root!r}")
-        return cls(store, root)
+        return cls(_store(root), root)
 
     def _slot(self, n: int) -> str:
         return f"{self.dir}/m={int(n)}.json"
@@ -121,6 +143,16 @@ class CasLog:
     def delete(self, n: int) -> None:
         self.store.delete(self._slot(n))
 
+    def prune_below(self, top: int) -> list[str]:
+        """Delete every slot below `top`: loads heal forward to the top
+        slot only, so older slots are dead weight."""
+        removed = []
+        for n in self.slots():
+            if n < top:
+                self.delete(n)
+                removed.append(f"m={n}.json")
+        return removed
+
 # engine bookkeeping columns stored alongside the payload in every file
 BOOKKEEPING_FIELDS = [
     T.StructField("seq", T.LongType(), True),
@@ -138,10 +170,10 @@ def _vtoken(new_version: int) -> str:
     """Writer-unique data-dir token for a version (``v=<N>-<nonce>``).
 
     Concurrent writers racing toward the same version each write their
-    OWN directory, so the loser of the manifest swap can abort without
-    ever having clobbered the winner's files — the swap (plus mutation
-    guard) stays the only commit point, and loser data is just an orphan
-    dir for vacuum. Legacy plain-int tokens remain readable."""
+    OWN directory, so the loser of the commit race can abort without
+    ever having clobbered the winner's files — the CAS put stays the
+    only commit point, and loser data is just an orphan dir for vacuum.
+    Legacy plain-int tokens remain readable."""
     return f"{int(new_version)}-{uuid.uuid4().hex[:8]}"
 
 
@@ -167,6 +199,7 @@ def _zmerge(*ranges):
 class SnapshotTable:
     def __init__(self, path: str):
         self.path = path
+        self.store = _store(path)
         self._shard_cache: dict = {}  # (sid, filename) -> entries
         self._manifest = self._load_manifest()
 
@@ -180,7 +213,6 @@ class SnapshotTable:
         n_buckets: int = 64,
         overwrite: bool = False,
         key_col: str = "url",
-        commit_protocol: str = "localfs",
         manifest_shards: int | None = None,
         cas_backend: str = "localfs",
     ) -> "SnapshotTable":
@@ -197,15 +229,12 @@ class SnapshotTable:
         entries (each dirty shard is rewritten whole), so pick k ≥
         n_buckets / 32 once n_buckets is large. Measured at 100k buckets
         / 500 touched: k=256 → 2.5 s, k=1024 → 1.1 s, k=4096 → 0.27 s
-        per epoch, reload < 1 ms at any k."""
+        per epoch, reload < 1 ms at any k.
+
+        `cas_backend` says where the commit log lives (`CasLog.for_table`)."""
         payload_schema = payload_schema or PAGE_SCHEMA
         if key_col not in {f.name for f in payload_schema.fields}:
             raise ValueError(f"key_col {key_col!r} not in payload schema")
-        if commit_protocol not in ("localfs", "cas"):
-            raise ValueError(
-                f"unknown commit_protocol {commit_protocol!r} "
-                "(expected 'localfs' or 'cas')"
-            )
         if cas_backend not in CAS_BACKENDS:
             raise ValueError(
                 f"unknown cas_backend {cas_backend!r} "
@@ -217,11 +246,18 @@ class SnapshotTable:
             raise ValueError(
                 f"manifest_shards must be in [1, n_buckets]; got {manifest_shards}"
             )
-        if os.path.exists(os.path.join(path, MANIFEST)):
+        store = _store(path)
+        old = store.get(os.path.join(path, MANIFEST))
+        if old is not None:
             if not overwrite:
                 return cls(path)
-            shutil.rmtree(path)
-        os.makedirs(os.path.join(path, "data"), exist_ok=True)
+            # the log may live outside the table dir (cas_backend="s3"):
+            # left behind, the new slot 0 would land on the old log and
+            # the first load would heal forward to the old table's top
+            for kind in {json.loads(old).get("cas_backend", "localfs"), cas_backend}:
+                log = CasLog.for_table(path, kind)
+                log.store.delete_tree(log.dir)
+            store.delete_tree(path)
         manifest = {
             "version": 0,
             "n_buckets": n_buckets,
@@ -232,51 +268,50 @@ class SnapshotTable:
         if manifest_shards is not None:
             manifest["n_shards"] = manifest_shards
             manifest["shard_files"] = {}
-            os.makedirs(os.path.join(path, SHARDS_DIR), exist_ok=True)
         else:
             manifest["buckets"] = {}
-        if commit_protocol == "cas":
-            manifest["commit_protocol"] = "cas"
-            if cas_backend != "localfs":
-                manifest["cas_backend"] = cas_backend
+        if cas_backend != "localfs":
+            manifest["cas_backend"] = cas_backend
         cls._write_manifest(path, manifest)
         return cls(path)
 
+    def _get_json(self, *parts: str) -> dict:
+        """A JSON object of the table (pointer, history entry, shard);
+        FileNotFoundError when it is missing."""
+        p = os.path.join(self.path, *parts)
+        data = self.store.get(p)
+        if data is None:
+            raise FileNotFoundError(p)
+        return json.loads(data)
+
     def _load_manifest(self) -> dict:
-        with open(os.path.join(self.path, MANIFEST)) as fh:
-            manifest = json.load(fh)
-        if manifest.get("commit_protocol") != "cas":
-            return manifest
-        # CAS tables: the commit log is authoritative, manifest.json is
-        # only a pointer cache. A writer that crashed after its CAS
-        # linearization (commit slot created) but before the pointer swap
-        # leaves the pointer stale — heal forward to the newest commit.
-        backend = CasLog.for_table(self.path, manifest.get("cas_backend", "localfs"))
-        slots = backend.slots()
-        top = max(slots) if slots else -1
-        if top > manifest.get("mutation", 0):
-            manifest = json.loads(backend.read(top))
-            tmp = os.path.join(self.path, f".{uuid.uuid4().hex}.tmp")
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh, indent=1, sort_keys=True)
-            os.replace(tmp, os.path.join(self.path, MANIFEST))
+        # the commit log is authoritative, manifest.json is only a
+        # pointer cache. A writer that crashed after its linearization
+        # (commit slot created) but before the pointer swap leaves the
+        # pointer stale — heal forward to the newest commit.
+        manifest = self._get_json(MANIFEST)
+        log = CasLog.for_table(self.path, manifest.get("cas_backend", "localfs"))
+        while True:
+            slots = log.slots()
+            if not slots or slots[-1] <= manifest.get("mutation", 0):
+                return manifest
+            body = log.read(slots[-1])
+            if body is not None:
+                break
+            # gone between LIST and GET: only a commit above it prunes
+            # a slot, so a newer top exists — list again
+        manifest = json.loads(body)
+        _publish(self.path, body.encode(), manifest["version"])
         return manifest
 
     @staticmethod
     def _write_manifest(
         path: str, manifest: dict, expected_mutation: int | None = None
     ) -> None:
-        """Swap the manifest atomically, under the table's commit protocol.
-
-        ``localfs`` (default): check-then-replace guarded by a mutation
-        counter — a small TOCTOU window remains, so the design assumes a
-        single writer per table (the streaming runner); the guard turns
-        the realistic stale-writer mistake (two jobs pointed at one
-        table) into a loud error instead of silent committed-data loss.
-
-        ``cas``: true compare-and-swap. The linearization point is an
+        """Commit `manifest` as mutation `expected_mutation + 1` (0 at
+        create), by compare-and-swap. The linearization point is an
         atomic put-if-absent of commit slot n in the table's `CasLog`,
-        through its object store (objectstore.py — localfs: ``os.link``
+        through its object store (objectstore.py — local: ``os.link``
         into ``_commits/m=<n>.json``, failing EEXIST; s3: a conditional
         put, ``If-None-Match: *``; same protocol as Delta Lake's HDFS
         LogStore). There is NO check-then-act window: a racing writer
@@ -284,57 +319,44 @@ class SnapshotTable:
         ``manifest.json`` is just a pointer cache healed forward by
         ``_load_manifest``. The CAS tests run through both stores (s3
         over the dir-backed fake), so the protocol provably depends on
-        nothing but the store's primitives."""
-        target = os.path.join(path, MANIFEST)
-        if manifest.get("commit_protocol") == "cas":
-            backend = CasLog.for_table(path, manifest.get("cas_backend", "localfs"))
-            n = 0 if expected_mutation is None else expected_mutation + 1
-            manifest["mutation"] = n
-            if expected_mutation is not None:
-                # rebase check (one LIST, same as Delta's LogStore): a
-                # writer whose base is behind the log's top must lose
-                # LOUDLY here — required because vacuum prunes commit
-                # slots below top, so a long-stale writer's put-if-absent
-                # target slot may be free again. Writers passing this
-                # check target top+1, which vacuum never prunes, so the
-                # put below stays the true linearization point for the
-                # remaining check→put window.
-                slots = backend.slots()
-                top = max(slots) if slots else -1
-                if top != expected_mutation:
-                    raise CommitConflictError(
-                        f"concurrent writer detected on {path}: commit log "
-                        f"top m={top} != expected {expected_mutation}; "
-                        "aborting commit (no state was overwritten)"
-                    )
-            if not backend.put_if_absent(
-                n, json.dumps(manifest, indent=1, sort_keys=True)
-            ):
+        nothing but the store's primitives.
+
+        A table written before the log existed has a pointer but an
+        empty `_commits/`; its first commit adopts it by putting the
+        on-disk pointer bytes as slot M (the pointer's mutation). Two
+        adopters of one pointer put identical bytes, which both win
+        (the stores' read-back rule), and the rebase check decides."""
+        log = CasLog.for_table(path, manifest.get("cas_backend", "localfs"))
+        n = 0 if expected_mutation is None else expected_mutation + 1
+        manifest["mutation"] = n
+        if expected_mutation is not None:
+            slots = log.slots()
+            if not slots:
+                cur = _store(path).get(os.path.join(path, MANIFEST))
+                log.put_if_absent(json.loads(cur).get("mutation", 0), cur.decode())
+                slots = log.slots()
+            # rebase check (one LIST, same as Delta's LogStore): a
+            # writer whose base is behind the log's top must lose
+            # LOUDLY here — required because compaction and vacuum
+            # prune commit slots below top, so a long-stale writer's
+            # put-if-absent target slot may be free again. Writers
+            # passing this check target top+1, which nothing prunes, so
+            # the put below stays the true linearization point for the
+            # remaining check→put window.
+            if slots[-1] != expected_mutation:
                 raise CommitConflictError(
-                    f"concurrent writer detected on {path}: commit m={n} "
-                    "already exists (lost the CAS put-if-absent); "
+                    f"concurrent writer detected on {path}: commit log "
+                    f"top m={slots[-1]} != expected {expected_mutation}; "
                     "aborting commit (no state was overwritten)"
                 )
-        elif expected_mutation is not None and os.path.exists(target):
-            with open(target) as fh:
-                cur = json.load(fh)
-            if cur.get("mutation", 0) != expected_mutation:
-                raise CommitConflictError(
-                    f"concurrent writer detected on {path}: manifest mutation "
-                    f"{cur.get('mutation', 0)} != expected {expected_mutation}; "
-                    "aborting commit (no state was overwritten)"
-                )
-            manifest["mutation"] = expected_mutation + 1
-        tmp = os.path.join(path, f".{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(tmp, target)  # atomic commit point (pointer, for cas)
-        # manifest history → time travel (readable until vacuum drops the
-        # data files an old manifest points to)
-        hist = os.path.join(path, "manifests")
-        os.makedirs(hist, exist_ok=True)
-        with open(os.path.join(hist, f"v={manifest['version']}.json"), "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
+        body = json.dumps(manifest, indent=1, sort_keys=True)
+        if not log.put_if_absent(n, body):
+            raise CommitConflictError(
+                f"concurrent writer detected on {path}: commit m={n} "
+                "already exists (lost the CAS put-if-absent); "
+                "aborting commit (no state was overwritten)"
+            )
+        _publish(path, body.encode(), manifest["version"])
 
     # ---------- properties ----------
 
@@ -474,9 +496,7 @@ class SnapshotTable:
         else:
             sids = sorted({int(b) % n_shards for b in only})
         out: dict = {}
-        cache = getattr(self, "_shard_cache", None)
-        if cache is None:
-            cache = self._shard_cache = {}
+        cache = self._shard_cache
 
         def load(sid: int):
             fname = pointers.get(str(sid))
@@ -484,8 +504,7 @@ class SnapshotTable:
                 return sid, None, None
             got = cache.get((sid, fname))
             if got is None:
-                with open(os.path.join(self.path, SHARDS_DIR, fname)) as fh:
-                    got = json.load(fh)
+                got = self._get_json(SHARDS_DIR, fname)
             return sid, fname, got
 
         misses = [s for s in sids if (s, pointers.get(str(s))) not in cache]
@@ -531,20 +550,15 @@ class SnapshotTable:
             by_sid.setdefault(int(b) % n_shards, {})[b] = raw
         pointers = dict(manifest["shard_files"])
         written: list[str] = []
-        sdir = os.path.join(self.path, SHARDS_DIR)
-        os.makedirs(sdir, exist_ok=True)
         for sid, ups in sorted(by_sid.items()):
-            cur = {}
             fname = pointers.get(str(sid))
-            if fname is not None:
-                with open(os.path.join(sdir, fname)) as fh:
-                    cur = json.load(fh)
+            cur = {} if fname is None else self._get_json(SHARDS_DIR, fname)
             cur.update(ups)
             new_name = f"s={sid}-{uuid.uuid4().hex[:8]}.json"
-            with open(os.path.join(sdir, new_name), "w") as fh:
-                json.dump(cur, fh, sort_keys=True)
+            p = os.path.join(self.path, SHARDS_DIR, new_name)
+            self.store.put(p, json.dumps(cur, sort_keys=True).encode())
             pointers[str(sid)] = new_name
-            written.append(os.path.join(sdir, new_name))
+            written.append(p)
         manifest["shard_files"] = pointers
         return written
 
@@ -589,7 +603,9 @@ class SnapshotTable:
             (multi-file buckets: the pruning step after dir-level z).
             zf entries are written complete, so the key set IS the
             dir's file listing; a null range means always-read."""
-            d = os.path.join(self.path, "data", f"v={tok}", f"b={b}")
+            d = self.store.spark_path(
+                os.path.join(self.path, "data", f"v={tok}", f"b={b}")
+            )
             zf = e["zf"].get(str(tok)) if min_warc_ts is not None else None
             if not zf:
                 return [d]
@@ -727,12 +743,8 @@ class SnapshotTable:
         version dirs + per-version manifest history; valid until vacuum
         removes unreferenced data). Raises FileNotFoundError for unknown
         or pre-history versions."""
-        hist = os.path.join(self.path, "manifests", f"v={int(version)}.json")
-        with open(hist) as fh:
-            manifest = json.load(fh)
-        snap = SnapshotTable.__new__(SnapshotTable)
-        snap.path = self.path
-        snap._manifest = manifest
+        snap = copy.copy(self)  # same store and shard cache
+        snap._manifest = self._get_json(HISTORY_DIR, f"v={int(version)}.json")
         return snap.read(spark, include_deleted=include_deleted)
 
     def read_changes(
@@ -746,9 +758,7 @@ class SnapshotTable:
         `min_warc_ts` additionally zone-map-prunes whole files whose
         recorded warc_ts range predates the predicate (manifest-only —
         cold history costs zero file opens)."""
-        hist = os.path.join(self.path, "manifests", f"v={int(since_version)}.json")
-        with open(hist) as fh:
-            old = json.load(fh)
+        old = self._get_json(HISTORY_DIR, f"v={int(since_version)}.json")
         old_wm = int(old.get("epoch_watermark", -1))
         old_sparse = [int(e) for e in old.get("applied_epochs", [])]
         # bucket-diff pruning: a bucket whose (base, deltas) pointers are
@@ -775,11 +785,12 @@ class SnapshotTable:
         return cur.filter(cond)
 
     def versions(self) -> list[int]:
-        hist = os.path.join(self.path, "manifests")
-        if not os.path.isdir(hist):
-            return []
         return sorted(
-            int(f[2:-5]) for f in os.listdir(hist) if f.startswith("v=")
+            int(rel[2:-5])
+            for rel, _size, _mt in self.store.list_tree(
+                os.path.join(self.path, HISTORY_DIR)
+            )
+            if rel.startswith("v=") and rel.endswith(".json") and "/" not in rel
         )
 
     # ---------- commit ----------
@@ -787,7 +798,7 @@ class SnapshotTable:
     def _swap_or_cleanup(
         self, manifest: dict, written_dir: str, extra_paths: list[str] = ()
     ) -> None:
-        """Mutation-guarded manifest swap; on a concurrent-writer abort,
+        """CAS manifest commit; on a concurrent-writer abort,
         delete this writer's own (never-shared) version dir and any
         shard files it wrote, so the loser leaves no junk — the winner's
         files were never at risk."""
@@ -797,19 +808,17 @@ class SnapshotTable:
                 expected_mutation=self._manifest.get("mutation", 0),
             )
         except RuntimeError:
-            shutil.rmtree(written_dir, ignore_errors=True)
+            self.store.delete_tree(written_dir)
             for p in extra_paths:
-                try:
-                    os.unlink(p)
-                except FileNotFoundError:
-                    pass
+                self.store.delete(p)
             raise
         self._manifest = manifest
 
     def stage_version_dir(self) -> tuple[int, str, str]:
-        """(new_version, token, absolute dir) for a caller-prewritten
-        commit: a writer-unique staging dir under data/. Two racing
-        writers get different dirs; whoever loses the manifest swap
+        """(new_version, token, store path of the dir) for a
+        caller-prewritten commit: a writer-unique staging dir under
+        data/ (Spark writes it at `store.spark_path(dir)`). Two racing
+        writers get different dirs; whoever loses the commit race
         aborts without having touched the winner's files."""
         v = self.version + 1
         token = _vtoken(v)
@@ -843,14 +852,14 @@ class SnapshotTable:
         batch streams straight into its final delta files). The
         caller must have written partitionBy("b") dirs for exactly
         `touched_buckets`. Crash before this call leaves an orphan
-        version dir (vacuum cleans it); the mutation guard rejects stale
-        writers at the swap, and the staging dir is writer-unique so a
+        version dir (vacuum cleans it); the CAS commit rejects stale
+        writers, and the staging dir is writer-unique so a
         loser never clobbered the winner's files."""
         if self.has_epoch(epoch_id):
             return self.version
         out = os.path.join(self.path, "data", f"v={token}")
         if new_version != self.version + 1:
-            shutil.rmtree(out, ignore_errors=True)
+            self.store.delete_tree(out)
             raise StaleBaseError(
                 f"prewritten version {new_version} is stale (current "
                 f"{self.version}); another writer committed first"
@@ -962,19 +971,20 @@ class SnapshotTable:
             res[k][path.rsplit("/", 1)[-1]] = r
         return res
 
-    def _delta_bytes(self, b: str, entry: dict) -> int:
-        """On-disk bytes of a bucket's delta chain (driver-side listing;
-        an object-store deployment would track this in the manifest at
-        commit time instead)."""
-        total = 0
-        for dv in entry["deltas"]:
-            d = os.path.join(self.path, "data", f"v={dv}", f"b={b}")
-            if os.path.isdir(d):
-                total += sum(
-                    os.path.getsize(os.path.join(d, f))
-                    for f in os.listdir(d)
-                    if not f.startswith(("_", "."))
-                )
+    def _delta_bytes(self, entries: list) -> dict[str, int]:
+        """Stored bytes of every bucket's delta chain, from one listing
+        of data/ (driver-side; a deployment with huge tables would track
+        this in the manifest at commit time instead)."""
+        deltas = {
+            (f"v={dv}", f"b={b}") for b, e in entries for dv in e["deltas"]
+        }
+        total: dict[str, int] = {}
+        data = os.path.join(self.path, "data")
+        for rel, size, _mt in self.store.list_tree(data):
+            vdir, _, rest = rel.partition("/")
+            bdir, _, name = rest.partition("/")
+            if (vdir, bdir) in deltas and not name.startswith(("_", ".")):
+                total[bdir[2:]] = total.get(bdir[2:], 0) + size
         return total
 
     def compact(
@@ -1015,14 +1025,16 @@ class SnapshotTable:
         coarse semantics (n_insert=0) — documented in
         schema.METRICS_SCHEMA; consumers wanting exact I/U splits read
         the table's last_op."""
+        entries = self._entries(None)
+        dbytes = self._delta_bytes(entries) if max_delta_bytes is not None else {}
         victims = [
             int(b)
-            for b, e in self._entries(None)
+            for b, e in entries
             if len(e["deltas"]) > max_deltas
             or (
                 max_delta_bytes is not None
                 and e["deltas"]
-                and self._delta_bytes(b, e) > max_delta_bytes
+                and dbytes.get(b, 0) > max_delta_bytes
             )
         ]
         if not victims:
@@ -1051,7 +1063,7 @@ class SnapshotTable:
             # maps below keep time-predicate reads from opening every
             # split
             writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-        writer.parquet(out)
+        writer.parquet(self.store.spark_path(out))
         manifest = dict(self._manifest)
         manifest["version"] = new_version
         cur = self._buckets_of(self._manifest, only=[int(b) for b in victims])
@@ -1098,6 +1110,10 @@ class SnapshotTable:
             }
         written = self._apply_bucket_updates(manifest, updates)
         self._swap_or_cleanup(manifest, out, extra_paths=written)
+        # keep the log short without vacuum: every slot below this
+        # commit is superseded (a streaming writer reloads each epoch,
+        # and a load LISTs the whole log)
+        self.commit_log_backend().prune_below(manifest["mutation"])
         return victims
 
     def _resolve_with_lineage_repair(
@@ -1190,19 +1206,21 @@ class SnapshotTable:
         hundred bytes, and a full Spark write job per table per epoch
         (plan + schedule + task + commit protocol) was a measurable part
         of the per-epoch fixed cost. Spark reads the directory exactly as
-        before; files are uniquely named so appends never collide."""
+        before; files are uniquely named so appends never collide, and
+        each is one atomic object put, so a killed append leaves no torn
+        file where Spark scans."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        d = os.path.join(self.path, subdir)
-        os.makedirs(d, exist_ok=True)
         schema = pa.schema(
             [(f.name, self._pa_type(f.dataType)) for f in spark_schema.fields]
         )
         cols = {f.name: [r.get(f.name) for r in rows] for f in spark_schema.fields}
-        pq.write_table(
-            pa.Table.from_pydict(cols, schema=schema),
-            os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"),
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.Table.from_pydict(cols, schema=schema), buf)
+        self.store.put(
+            os.path.join(self.path, subdir, f"part-{uuid.uuid4().hex}.parquet"),
+            buf.getvalue().to_pybytes(),
         )
 
     def append_metrics(self, metrics_rows: list[dict]) -> None:
@@ -1227,16 +1245,14 @@ class SnapshotTable:
         written (dedupable by epoch_id regardless)."""
         import datetime as dt
 
-        p = os.path.join(self.path, "commit_log")
-        if os.path.exists(p):
-            present = (
-                spark.read.parquet(p)
-                .filter(F.col("epoch_id") == int(epoch_id))
-                .limit(1)
-                .count()
-            )
-            if present:
-                return False
+        present = (
+            self.read_commit_log(spark)
+            .filter(F.col("epoch_id") == int(epoch_id))
+            .limit(1)
+            .count()
+        )
+        if present:
+            return False
         self.append_commit_log(
             spark,
             {
@@ -1252,28 +1268,29 @@ class SnapshotTable:
         )
         return True
 
+    def _read_rows(self, spark: SparkSession, subdir: str, schema) -> DataFrame:
+        d = os.path.join(self.path, subdir)
+        files = self.store.list_tree(d)
+        if not any(rel.endswith(".parquet") for rel, _size, _mt in files):
+            return spark.createDataFrame([], schema)
+        return spark.read.parquet(self.store.spark_path(d))
+
     def read_metrics(self, spark: SparkSession) -> DataFrame:
         from qwatch_spark.schema import METRICS_SCHEMA
 
-        p = os.path.join(self.path, "metrics")
-        if not os.path.exists(p):
-            return spark.createDataFrame([], METRICS_SCHEMA)
-        return spark.read.parquet(p)
+        return self._read_rows(spark, "metrics", METRICS_SCHEMA)
 
     def read_commit_log(self, spark: SparkSession) -> DataFrame:
         from qwatch_spark.schema import COMMIT_LOG_SCHEMA
 
-        p = os.path.join(self.path, "commit_log")
-        if not os.path.exists(p):
-            return spark.createDataFrame([], COMMIT_LOG_SCHEMA)
-        return spark.read.parquet(p)
+        return self._read_rows(spark, "commit_log", COMMIT_LOG_SCHEMA)
 
     # ---------- maintenance ----------
 
     def vacuum(self, retention_s: float = 600.0) -> list[str]:
         """Delete version dirs no longer referenced by any bucket pointer
         (base or delta) — including aborted concurrent writers' orphan
-        staging dirs. Safe because the manifest swap is the only commit
+        staging dirs. Safe because the CAS put is the only commit
         point. Tokens are compared as directory names (legacy plain-int
         and writer-unique `N-<nonce>` forms alike).
 
@@ -1283,66 +1300,42 @@ class SnapshotTable:
         commit in flight. Unreferenced paths younger than the retention
         window are skipped (Delta Lake's retention-check policy); pass
         retention_s=0 only when the caller holds exclusive access."""
-
-        def expired(p: str) -> bool:
-            # retention is keyed off the NEWEST mtime in the whole tree,
-            # not the top-level dir: writing parquet inside b=<n> subdirs
-            # does not bump the parent v=<token> dir's mtime, so a
-            # concurrent writer whose staging phase outlives retention_s
-            # after dir creation would otherwise lose still-being-written
-            # files mid-flight. The walk is per-UNREFERENCED-dir only
-            # (orphans are rare) and file-count-bounded by the staged
-            # epoch, so this stays metadata-cheap.
-            try:
-                newest = os.path.getmtime(p)
-                if os.path.isdir(p):
-                    for root, _dirs, files in os.walk(p):
-                        for name in files:
-                            try:
-                                newest = max(
-                                    newest,
-                                    os.path.getmtime(os.path.join(root, name)),
-                                )
-                            except OSError:
-                                return False  # vanished → someone owns it
-                return (time.time() - newest) >= retention_s
-            except OSError:
-                return False  # disappeared underneath us → someone owns it
-
-        live: set[str] = set()
-        for _b, e in self._entries(None):
-            if e["base"] is not None:
-                live.add(f"v={e['base']}")
-            live.update(f"v={d}" for d in e["deltas"])
-        removed = []
-        data = os.path.join(self.path, "data")
-        for entry in os.listdir(data):
-            if not entry.startswith("v="):
-                continue
-            if entry not in live and expired(os.path.join(data, entry)):
-                shutil.rmtree(os.path.join(data, entry))
-                removed.append(entry)
+        live = {
+            f"data/v={tok}"
+            for _b, e in self._entries(None)
+            for tok in [e["base"], *e["deltas"]]
+            if tok is not None
+        }
         # sharded manifests: shard files not referenced by the CURRENT
         # root are dead (historical roots lose time travel on vacuum,
         # same policy as their data dirs)
-        sdir = os.path.join(self.path, SHARDS_DIR)
-        if os.path.isdir(sdir):
-            live_shards = set(self._manifest.get("shard_files", {}).values())
-            for f in os.listdir(sdir):
-                if (
-                    f.startswith("s=")
-                    and f not in live_shards
-                    and expired(os.path.join(sdir, f))
-                ):
-                    os.unlink(os.path.join(sdir, f))
-                    removed.append(f)
-        # CAS commit log: only the highest mutation is authoritative
-        # (loads recover forward to max); older slots are dead weight
-        if self._manifest.get("commit_protocol") == "cas":
-            backend = self.commit_log_backend()
-            top = self._manifest.get("mutation", 0)
-            for n in backend.slots():
-                if n < top:
-                    backend.delete(n)
-                    removed.append(f"m={n}.json")
+        live.update(
+            f"{SHARDS_DIR}/{f}"
+            for f in self._manifest.get("shard_files", {}).values()
+        )
+        # one listing of the table: every version dir and shard file
+        # with the NEWEST mtime under it — writing parquet inside b=<n>
+        # subdirs does not bump the v=<token> dir's own mtime, so a
+        # concurrent writer whose staging outlives retention_s after
+        # dir creation would otherwise lose files mid-flight
+        newest: dict[str, float] = {}
+        for rel, _size, mtime in self.store.list_tree(self.path):
+            top, _, rest = rel.partition("/")
+            if top == "data" and rest.startswith("v="):
+                key = f"data/{rest.partition('/')[0]}"
+            elif top == SHARDS_DIR and rest.startswith("s=") and "/" not in rest:
+                key = rel
+            else:
+                continue
+            newest[key] = max(newest.get(key, mtime), mtime)
+        removed = []
+        now = time.time()
+        for key, mtime in sorted(newest.items()):
+            if key not in live and now - mtime >= retention_s:
+                self.store.delete_tree(os.path.join(self.path, key))
+                removed.append(key.partition("/")[2])
+        # the commit log: only the top slot is authoritative
+        removed += self.commit_log_backend().prune_below(
+            self._manifest.get("mutation", 0)
+        )
         return removed

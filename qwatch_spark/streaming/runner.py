@@ -197,7 +197,6 @@ def run_entity_stream(
     cfg = cfg or PipelineConfig(rules=())
     tables = create_entity_tables(
         base_path, list(specs), list(links or []), n_buckets=cfg.n_buckets,
-        commit_protocol=cfg.commit_protocol,
         manifest_shards=cfg.manifest_shards,
         cas_backend=cfg.cas_backend,
     )

@@ -702,10 +702,10 @@ def test_fp_auto_bootstrap_races_live_applier(spark, tmp_path):
 
     c = PipelineConfig(
         n_buckets=4, rules=RULES, fp_index="auto", fp_auto_rows=2,
-        write_mode="delta", commit_protocol="cas",
+        write_mode="delta",
     )
     path = str(tmp_path / "t")
-    SnapshotTable.create(path, n_buckets=4, commit_protocol="cas")
+    SnapshotTable.create(path, n_buckets=4)
 
     def apply_retry(rows, epoch, attempts=50):
         for _ in range(attempts):

@@ -44,9 +44,9 @@ def _apply_with_retry(spark, batch, path, epoch, cfg, attempts=50):
 
 
 def test_maintenance_interleaved_with_applies_sequential(spark, tmp_path):
-    cfg = PipelineConfig(n_buckets=8, write_mode="delta", commit_protocol="cas")
+    cfg = PipelineConfig(n_buckets=8, write_mode="delta")
     path = str(tmp_path / "t")
-    SnapshotTable.create(path, n_buckets=8, commit_protocol="cas")
+    SnapshotTable.create(path, n_buckets=8)
     feed = gen_feed_df(spark, N, epoch_size=N // N_EPOCHS)
     epochs = sorted(
         r[0] for r in feed.select("epoch_hint").distinct().collect()
@@ -76,9 +76,9 @@ def test_maintenance_races_live_applier_threads(spark, tmp_path):
     """True concurrency: an applier thread (reload-retry loop) races a
     maintenance thread cycling compact+vacuum on the same CAS table.
     Nothing is lost, nothing deadlocks, final state == oracle."""
-    cfg = PipelineConfig(n_buckets=8, write_mode="delta", commit_protocol="cas")
+    cfg = PipelineConfig(n_buckets=8, write_mode="delta")
     path = str(tmp_path / "t")
-    SnapshotTable.create(path, n_buckets=8, commit_protocol="cas")
+    SnapshotTable.create(path, n_buckets=8)
     feed = gen_feed_df(spark, N, epoch_size=N // N_EPOCHS)
     epochs = sorted(
         r[0] for r in feed.select("epoch_hint").distinct().collect()
@@ -211,8 +211,7 @@ def test_cas_backend_config_plumbing(tmp_path, monkeypatch):
     )
     specs, links = entity_graph_specs()
     tables = create_entity_tables(
-        str(tmp_path / "g"), specs, links, n_buckets=4,
-        commit_protocol="cas", cas_backend="s3",
+        str(tmp_path / "g"), specs, links, n_buckets=4, cas_backend="s3",
     )
     for t in tables.values():
         assert t._manifest["cas_backend"] == "s3"
@@ -275,20 +274,19 @@ def test_run_stream_survives_racing_maintenance(spark, tmp_path):
     from qwatch_spark.streaming import run_stream
 
     cfg = PipelineConfig(
-        n_buckets=8, write_mode="delta", commit_protocol="cas",
+        n_buckets=8, write_mode="delta",
         max_files_per_trigger=1,
     )
     feed_dir = str(tmp_path / "feed")
     write_feed_files(spark, feed_dir, 2400, files=6)
 
     # control: same feed, no maintenance
-    ctl = SnapshotTable.create(str(tmp_path / "ctl"), n_buckets=8,
-                               commit_protocol="cas")
+    ctl = SnapshotTable.create(str(tmp_path / "ctl"), n_buckets=8)
     run_stream(spark, feed_dir, ctl.path, str(tmp_path / "ck0"), cfg)
     want = _engine_state(spark, SnapshotTable(ctl.path))
 
     path = str(tmp_path / "t")
-    SnapshotTable.create(path, n_buckets=8, commit_protocol="cas")
+    SnapshotTable.create(path, n_buckets=8)
     stop = threading.Event()
     errors: list[Exception] = []
 

@@ -297,7 +297,7 @@ def test_cas_protocol_commits_and_heals_forward(tmp_path, backend):
     forward from the commit log and heals the pointer on disk."""
     path = str(tmp_path / "t")
     t = SnapshotTable.create(
-        path, SCHEMA, n_buckets=4, commit_protocol="cas", cas_backend=backend
+        path, SCHEMA, n_buckets=4, cas_backend=backend
     )
     t.commit_epoch(0)
     t.commit_epoch(1)
@@ -316,22 +316,22 @@ def test_cas_protocol_commits_and_heals_forward(tmp_path, backend):
 
 @pytest.mark.parametrize("backend", CAS_BACKENDS)
 def test_cas_rejects_racer_at_linearization_point(tmp_path, backend):
-    """The race localfs mode can only detect (check-then-replace TOCTOU)
-    is PREVENTED under cas: a stale writer loses at the put-if-absent
-    itself, even when the pointer check would have passed because the
+    """A stale writer loses at the put-if-absent itself, even when a
+    check of the manifest.json pointer would have passed because the
     winner never got to update the pointer."""
     path = str(tmp_path / "t")
     a = SnapshotTable.create(
-        path, SCHEMA, n_buckets=4, commit_protocol="cas", cas_backend=backend
+        path, SCHEMA, n_buckets=4, cas_backend=backend
     )
     b = SnapshotTable(path)  # second writer, same base mutation
     a.commit_epoch(0)
     with pytest.raises(RuntimeError, match="concurrent writer"):
         b.commit_epoch(1)
     # stronger: winner's commit slot exists but its pointer update never
-    # landed (crashed mid-commit). The localfs pointer check would PASS
-    # here and silently bury the winner's commit; cas still rejects —
-    # first via the rebase check (log top moved past the base)...
+    # landed (crashed mid-commit). A check-then-replace guard on the
+    # pointer would PASS here and silently bury the winner's commit; the
+    # CAS commit still rejects — first via the rebase check (log top
+    # moved past the base)...
     c = SnapshotTable(path)
     base = dict(c._manifest)
     crash = dict(base)
@@ -366,7 +366,7 @@ def test_cas_vacuum_prunes_log_but_stale_writer_stays_rejected(tmp_path, backend
     base against the log top before the put."""
     path = str(tmp_path / "t")
     t = SnapshotTable.create(
-        path, SCHEMA, n_buckets=4, commit_protocol="cas", cas_backend=backend
+        path, SCHEMA, n_buckets=4, cas_backend=backend
     )
     stale = SnapshotTable(path)  # base mutation 0
     for e in range(5):
@@ -381,16 +381,15 @@ def test_cas_vacuum_prunes_log_but_stale_writer_stays_rejected(tmp_path, backend
 
 
 def test_cas_table_full_apply_path(spark, tmp_path):
-    """End-to-end apply_changes (delta write mode) over a cas-protocol
-    table: commits, duplicate-delivery idempotence, and reopen all behave
-    exactly as under localfs."""
+    """End-to-end apply_changes (delta write mode): commits,
+    duplicate-delivery idempotence, and reopen."""
     from qwatch_spark.config import PipelineConfig
     from qwatch_spark.datagen import gen_feed_df
     from qwatch_spark.operators.apply import apply_changes
 
     path = str(tmp_path / "t")
     cfg = PipelineConfig(n_buckets=4, write_mode="delta")
-    t = SnapshotTable.create(path, n_buckets=4, commit_protocol="cas")
+    t = SnapshotTable.create(path, n_buckets=4)
     feed = gen_feed_df(spark, 400).drop("epoch_hint")
     apply_changes(spark, feed, t, 0, cfg)
     rows = t.read(spark).count()
@@ -403,29 +402,29 @@ def test_cas_table_full_apply_path(spark, tmp_path):
 
 
 def test_commit_protocol_config_plumbing(tmp_path):
-    """PipelineConfig validates commit_protocol and create_entity_tables
-    propagates it to every entity and link table manifest."""
+    """There is one commit protocol: `commit_protocol` is an unknown
+    config key, and every entity and link table create_entity_tables
+    makes commits through its CAS log, with manifest_shards
+    propagated."""
     import pytest
 
     from qwatch_spark.config import PipelineConfig
     from qwatch_spark.operators.entities import create_entity_tables
     from qwatch_spark.queries import entity_graph_specs
 
-    with pytest.raises(ValueError, match="commit_protocol"):
-        PipelineConfig(commit_protocol="s3")
-    assert PipelineConfig(commit_protocol="cas").commit_protocol == "cas"
+    with pytest.raises(ValueError, match="unknown config key"):
+        PipelineConfig.from_dict({"commit_protocol": "cas"})
 
     with pytest.raises(ValueError, match="manifest_shards"):
         PipelineConfig(n_buckets=8, manifest_shards=9)
 
     specs, links = entity_graph_specs()
     tables = create_entity_tables(
-        str(tmp_path / "g"), specs, links, n_buckets=4, commit_protocol="cas",
+        str(tmp_path / "g"), specs, links, n_buckets=4,
         manifest_shards=2,
     )
     assert set(tables) == {"page", "domain", "page_domain"}
     for t in tables.values():
-        assert t._manifest.get("commit_protocol") == "cas"
         assert t._manifest.get("n_shards") == 2
         assert "buckets" not in t._manifest
         assert os.path.isdir(os.path.join(t.path, "_commits"))
@@ -443,7 +442,7 @@ def test_cas_threads_race_with_retry_no_lost_commits(tmp_path, backend):
 
     path = str(tmp_path / "t")
     SnapshotTable.create(
-        path, SCHEMA, n_buckets=4, commit_protocol="cas", cas_backend=backend
+        path, SCHEMA, n_buckets=4, cas_backend=backend
     )
     epochs = list(range(24))
     errors: list[Exception] = []
@@ -644,7 +643,7 @@ def test_sharded_manifest_with_cas_protocol(spark, tmp_path):
     cfg = PipelineConfig(n_buckets=8, write_mode="delta")
     path = str(tmp_path / "t")
     a = SnapshotTable.create(
-        path, n_buckets=8, manifest_shards=4, commit_protocol="cas"
+        path, n_buckets=8, manifest_shards=4
     )
     feed = gen_feed_df(spark, 300).drop("epoch_hint")
     apply_changes(spark, feed, a, 0, cfg)
@@ -685,7 +684,7 @@ def test_vacuum_retention_protects_inflight_staged_files(tmp_path):
     window must NOT delete young unreferenced paths (they may belong to
     a commit in flight); retention_s=0 (exclusive access) removes them."""
     t = SnapshotTable.create(
-        str(tmp_path / "t"), SCHEMA, n_buckets=4, commit_protocol="cas"
+        str(tmp_path / "t"), SCHEMA, n_buckets=4
     )
     t.commit_epoch(0)
     staged = os.path.join(t.path, "data", "v=99-deadbeef")
@@ -842,3 +841,183 @@ def test_per_file_zone_map_prunes_within_multi_file_bucket(spark, tmp_path):
         r["url"] for r in t2.read_buckets(spark, min_warc_ts=cut).collect()
     }
     assert len(got2) == 130 and "https://ex.com/m7-3" in got2
+
+
+def test_overwrite_deletes_an_s3_commit_log(tmp_path):
+    """create(overwrite=True) deletes the table's commit log wherever it
+    lives. An S3 log sits outside the table dir; left behind, the
+    recreated slot 0 (byte-identical to the old one) would "win" its
+    put and the first load would heal forward to the old top — fresh
+    epochs would then be skipped as duplicates."""
+    path = str(tmp_path / "t")
+    t = SnapshotTable.create(path, SCHEMA, n_buckets=4, cas_backend="s3")
+    t.commit_epoch(0)
+    t.commit_epoch(1)
+    fresh = SnapshotTable.create(
+        path, SCHEMA, n_buckets=4, cas_backend="s3", overwrite=True
+    )
+    assert fresh._manifest["mutation"] == 0
+    assert not fresh.has_epoch(0) and not fresh.has_epoch(1)
+    assert fresh.commit_log_backend().slots() == [0]
+    fresh.commit_epoch(0)
+    reopened = SnapshotTable(path)
+    assert reopened.has_epoch(0) and not reopened.has_epoch(1)
+    assert reopened._manifest["mutation"] == 1
+
+
+def test_killed_append_is_hidden_from_redelivery(spark, tmp_path, monkeypatch):
+    """A commit-log append killed mid-put leaves only its in-flight temp
+    file, named `.<name>.<hex>.tmp` beside the target, which Spark's
+    hidden-file filter skips. Redelivering the committed epoch must
+    still skip (backfilling the lost row), not fail reading a torn
+    parquet file on every retry."""
+    import pytest
+
+    from qwatch_spark.config import PipelineConfig
+    from qwatch_spark.datagen import gen_feed_df
+    from qwatch_spark.operators.apply import apply_changes
+    from qwatch_spark.plans.objectstore import LocalStore
+
+    cfg = PipelineConfig(n_buckets=4)
+    feed = gen_feed_df(spark, 400, epoch_size=200)
+    batches = [
+        feed.filter(f"epoch_hint = {e}").drop("epoch_hint") for e in (0, 1)
+    ]
+    path = str(tmp_path / "t")
+    apply_changes(spark, batches[0], SnapshotTable.create(path, n_buckets=4), 0, cfg)
+
+    class Killed(Exception):
+        pass
+
+    real_put = LocalStore.put
+
+    def killed_put(self, p, data):
+        if "/commit_log/" not in p:
+            return real_put(self, p, data)
+        self._tmp_beside(p, data[: len(data) // 2])  # no cleanup: killed
+        raise Killed(p)
+
+    monkeypatch.setattr(LocalStore, "put", killed_put)
+    with pytest.raises(Killed):
+        apply_changes(spark, batches[1], SnapshotTable(path), 1, cfg)
+    monkeypatch.undo()
+    leftovers = [
+        f for f in os.listdir(os.path.join(path, "commit_log"))
+        if f.endswith(".tmp")
+    ]
+    assert len(leftovers) == 1 and leftovers[0].startswith(".part-")
+
+    for e in (1, 0, 1):  # the second redelivery of 1 must not backfill again
+        assert apply_changes(spark, batches[e], SnapshotTable(path), e, cfg).skipped
+    log = sorted(
+        (r["epoch_id"], r["batch_fingerprint"])
+        for r in SnapshotTable(path).read_commit_log(spark).collect()
+    )
+    assert [e for e, _fp in log] == [0, 1] and log[1][1] == "backfill"
+
+
+def test_legacy_manifest_adopted_on_first_commit(spark, tmp_path):
+    """A table written before the commit log existed (manifest.json with
+    `mutation: 3`, no `_commits/`) is adopted on its first commit: two
+    reopened writers race one commit, exactly one wins, the log becomes
+    [3, 4] and the table's rows are unchanged."""
+    import shutil
+    import threading
+
+    from qwatch_spark.config import PipelineConfig
+    from qwatch_spark.datagen import gen_feed_df
+    from qwatch_spark.operators.apply import apply_changes
+    from qwatch_spark.plans.objectstore import CommitConflictError
+
+    path = str(tmp_path / "t")
+    t = SnapshotTable.create(path, n_buckets=4)
+    apply_changes(
+        spark, gen_feed_df(spark, 300).drop("epoch_hint"), t, 0,
+        PipelineConfig(n_buckets=4),
+    )
+    want = sorted(tuple(r) for r in t.read(spark).collect())
+    legacy = {k: v for k, v in t._manifest.items() if k != "mutation"}
+    legacy["mutation"] = 3
+    shutil.rmtree(os.path.join(path, "_commits"))
+    with open(os.path.join(path, "manifest.json"), "w") as fh:
+        json.dump(legacy, fh)
+
+    writers = [SnapshotTable(path) for _ in range(2)]
+    go = threading.Barrier(2)
+    won, lost = [], []
+
+    def commit(w, epoch):
+        go.wait()
+        try:
+            w.commit_epoch(epoch)
+            won.append(epoch)
+        except CommitConflictError as exc:
+            lost.append(str(exc))
+
+    threads = [
+        threading.Thread(target=commit, args=(w, 10 + i))
+        for i, w in enumerate(writers)
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert len(won) == 1 and len(lost) == 1, (won, lost)
+    assert "concurrent writer" in lost[0]
+    final = SnapshotTable(path)
+    assert final.commit_log_backend().slots() == [3, 4]
+    (loser,) = {10, 11} - set(won)
+    assert final.has_epoch(won[0]) and not final.has_epoch(loser)
+    assert sorted(tuple(r) for r in final.read(spark).collect()) == want
+
+
+def test_s3_table_replay_compact_vacuum(spark, tmp_path, monkeypatch):
+    """A whole table at an s3:// path over the dir-backed fake (Spark
+    addresses the same bytes through `S3Store.spark_path_for`): replay
+    with inline compaction, an explicit compaction, vacuum, time travel
+    and the commit log all run through the object store, and the state
+    equals the same replay on a local path."""
+    import glob
+
+    from qwatch_spark.config import PipelineConfig
+    from qwatch_spark.datagen import gen_feed_df
+    from qwatch_spark.operators.apply import replay_feed
+    from qwatch_spark.plans.objectstore import S3Store
+
+    root = tmp_path / "s3"  # the autouse fake's root
+    monkeypatch.setattr(
+        S3Store, "spark_path_for", lambda bucket, key: str(root / bucket / key)
+    )
+    cfg = PipelineConfig(n_buckets=4, write_mode="auto", compact_every=1)
+    feed = gen_feed_df(spark, 900, epoch_size=300)
+    remote = SnapshotTable.create("s3://lake/t", n_buckets=4)
+    local = SnapshotTable.create(str(tmp_path / "local"), n_buckets=4)
+    stats = replay_feed(spark, feed, remote, cfg)
+    replay_feed(spark, feed, local, cfg)
+    assert len(stats) == 3 and any("compact" in s.phases for s in stats)
+
+    def rows(t):
+        return sorted(
+            (r["url"], r["warc_ts"], r["seq"], r["is_deleted"], r["text"])
+            for r in SnapshotTable(t.path).read_buckets(spark).collect()
+        )
+
+    want = rows(local)
+    assert rows(remote) == want
+    t = SnapshotTable("s3://lake/t")
+    assert t.read_version(spark, 1).count() == local.read_version(spark, 1).count()
+    assert sorted(r["epoch_id"] for r in t.read_commit_log(spark).collect()) == [
+        0, 1, 2,
+    ]
+    # a compaction commit prunes the log below its own mutation
+    assert t.compact(spark, max_deltas=0)
+    assert t.commit_log_backend().slots() == [t._manifest["mutation"]]
+    removed = SnapshotTable("s3://lake/t").vacuum(retention_s=0)
+    assert any(r.startswith("v=") for r in removed)
+    assert rows(t) == want
+    # every manifest.json written is the local twin's or inside the fake
+    assert sorted(glob.glob(str(tmp_path / "**" / "manifest.json"), recursive=True)) == [
+        str(tmp_path / "local" / "manifest.json"),
+        str(root / "lake" / "t" / "manifest.json"),
+    ]
+    assert not os.path.exists("s3:")

@@ -212,6 +212,28 @@ def test_write_modes_default_auto_and_reject_cow(monkeypatch):
         assert exc.value.code == 2  # argparse usage error
 
 
+def test_jobs_reject_retired_commit_protocol_flag(monkeypatch):
+    """Every table commits through its CAS log: both jobs' parsers
+    reject the retired --commit-protocol flag."""
+    from jobs.apply_job import main as apply_main
+    from jobs.entity_job import main as entity_main
+    from qwatch_spark import session
+
+    def no_spark(*a, **kw):
+        raise AssertionError("--commit-protocol got past the parser")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    common = ["--feed-dir", "f", "--checkpoint", "c", "--once",
+              "--commit-protocol", "cas"]
+    for main, extra in (
+        (apply_main, ["--table", "t"]),
+        (entity_main, ["--base", "b", "--entities", "e.yml"]),
+    ):
+        with pytest.raises(SystemExit) as exc:
+            main(common + extra)
+        assert exc.value.code == 2  # argparse usage error
+
+
 def test_apply_job_cli_end_to_end(spark, tmp_path):
     """jobs/apply_job.py drives the whole engine from flags (the
     spark-submit surface), with a yml config layered under CLI flags."""

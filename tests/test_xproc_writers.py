@@ -35,7 +35,7 @@ def test_two_process_writers_match_single_writer_oracle(spark, tmp_path):
     from scripts.xproc_apply_worker import FEED, epoch_rows
 
     path = str(tmp_path / "t")
-    SnapshotTable.create(path, n_buckets=4, commit_protocol="cas")
+    SnapshotTable.create(path, n_buckets=4)
     barrier = str(tmp_path / "go")
 
     env = dict(os.environ, PYTHONPATH=REPO)
