@@ -25,7 +25,6 @@ import sys
 
 def main(argv: list[str] | None = None) -> int:
     from qwatch_spark.config import WRITE_MODES
-    from qwatch_spark.plans.objectstore import CAS_BACKENDS
 
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--feed-dir", required=True)
@@ -39,7 +38,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--n-salt", type=int, default=None)
     p.add_argument("--compact-every", type=int, default=None)
     p.add_argument("--min-quality", type=float, default=None)
-    p.add_argument("--cas-backend", choices=CAS_BACKENDS, default=None)
     p.add_argument("--manifest-shards", type=int, default=None)
     p.add_argument("--feed-format", choices=("parquet", "json"), default=None)
     p.add_argument(
@@ -68,7 +66,6 @@ def main(argv: list[str] | None = None) -> int:
         n_salt=args.n_salt,
         compact_every=args.compact_every,
         min_quality=args.min_quality,
-        cas_backend=args.cas_backend,
         manifest_shards=args.manifest_shards,
         feed_format=args.feed_format,
         fp_index=args.fp_index,
@@ -81,7 +78,6 @@ def main(argv: list[str] | None = None) -> int:
     SnapshotTable.create(
         args.table, n_buckets=cfg.n_buckets,
         manifest_shards=cfg.manifest_shards,
-        cas_backend=cfg.cas_backend,
     )  # no-op if exists
     stats = run_stream(
         spark,

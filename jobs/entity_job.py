@@ -27,7 +27,6 @@ import sys
 
 def main(argv: list[str] | None = None) -> int:
     from qwatch_spark.config import WRITE_MODES
-    from qwatch_spark.plans.objectstore import CAS_BACKENDS
 
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--feed-dir", required=True)
@@ -37,7 +36,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--config", help="PipelineConfig file (.json/.yml/.yaml)")
     p.add_argument("--n-buckets", type=int, default=None)
     p.add_argument("--write-mode", choices=WRITE_MODES, default=None)
-    p.add_argument("--cas-backend", choices=CAS_BACKENDS, default=None)
     p.add_argument("--manifest-shards", type=int, default=None)
     p.add_argument("--once", action="store_true", help="drain and exit")
     p.add_argument("--interval", default=None, help="e.g. '30 seconds'")
@@ -56,7 +54,6 @@ def main(argv: list[str] | None = None) -> int:
     cfg = cfg.with_overrides(
         n_buckets=args.n_buckets,
         write_mode=args.write_mode,
-        cas_backend=args.cas_backend,
         manifest_shards=args.manifest_shards,
     )
 

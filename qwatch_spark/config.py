@@ -78,12 +78,6 @@ class PipelineConfig:
     # auto/delta: compact any bucket once it carries more than this many
     # delta versions (read amplification bound)
     compact_every: int = 8
-    # where the CAS commit log (put-if-absent commit slots, safe under
-    # concurrent writers) of tables this pipeline creates lives
-    # (plans/objectstore.py):
-    #   localfs — the table dir, os.link put-if-absent (default)
-    #   s3      — an S3 bucket, conditional put (If-None-Match: *)
-    cas_backend: str = "localfs"
     # shard the manifest's bucket entries into this many side files
     # (None = inline). Size ≥ n_buckets/32 once n_buckets is large:
     # per-epoch manifest cost becomes O(touched buckets)
@@ -127,13 +121,6 @@ class PipelineConfig:
         if self.fp_index not in (False, True, "auto"):
             raise ValueError(
                 f"fp_index must be False, True, or 'auto' (got {self.fp_index!r})"
-            )
-        from qwatch_spark.plans.objectstore import CAS_BACKENDS
-
-        if self.cas_backend not in CAS_BACKENDS:
-            raise ValueError(
-                f"unknown cas_backend {self.cas_backend!r} "
-                f"(expected one of {CAS_BACKENDS})"
             )
         from qwatch_spark.sources.feed import FEED_FORMATS
 

@@ -114,13 +114,28 @@ def _maybe_append_fp_segment(
     idx.merge_small_segments(committed, max_files=cfg.fp_merge_segments)
 
 
+def _bucket_files(out: str, listing) -> dict[int, list[str]]:
+    """{bucket: [parquet paths]} of an epoch dir's `b=<k>` subdirs, from
+    ONE tree listing of it (~1000 keys per object-store LIST round-trip
+    — per-bucket LISTs would pay one round-trip per touched bucket).
+    Its keys are the epoch's touched buckets, and the same mapping feeds
+    `_delta_footer_stats`, so a commit LISTs its epoch dir once."""
+    files: dict[int, list[str]] = {}
+    for rel, _size, _mt in listing:
+        bdir, _, name = rel.rpartition("/")
+        if bdir.startswith("b=") and name.endswith(".parquet"):
+            files.setdefault(int(bdir[2:]), []).append(f"{out.rstrip('/')}/{rel}")
+    return files
+
+
 def _delta_footer_stats(
-    out: str, touched: list[int], max_workers: int | None = None
+    out: str, files: dict[int, list[str]], max_workers: int | None = None
 ) -> dict | None:
     """Per-bucket commit stats from parquet FOOTERS alone — the zero-job
     replacement for the per-epoch aggregate scan of the just-written
-    delta files. Per bucket: row count (metadata), delete count (the
-    `_del` marker's null_count: deletes are 1, upserts null), seq
+    delta files `files` (`_bucket_files` of the epoch dir `out`). Per
+    bucket: row count (metadata), delete count (the `_del` marker's
+    null_count: deletes are 1, upserts null), seq
     min/max and warc_ts range (chunk statistics). Returns
     {b: {n, nd, min_seq, max_seq, lo, hi}} or None when any required
     statistic is absent (INT96 timestamps, stats disabled, a writer
@@ -145,19 +160,11 @@ def _delta_footer_stats(
     round-trip per table per epoch, which under concurrent multi-table
     applies queued behind other tables' write jobs (measured: 2.4 s of
     a 5.5 s entity-stream wall was this job × 6 table-epochs)."""
-    import datetime as dt
-
     from qwatch_spark.plans.objectstore import store_for
+    from qwatch_spark.plans.snapshot_table import utc_naive
 
     store = store_for(out)
     if store is None:
-        return None
-
-    def norm_ts(v):
-        if isinstance(v, dt.datetime):
-            if v.tzinfo is not None:  # session TZ is UTC everywhere
-                v = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
-            return v
         return None
 
     def file_stats(md) -> dict | None:
@@ -194,7 +201,7 @@ def _delta_footer_stats(
             seq_lo.append(seq_st.min)
             seq_hi.append(seq_st.max)
             if ts_st is not None and ts_st.has_min_max:
-                lo, hi = norm_ts(ts_st.min), norm_ts(ts_st.max)
+                lo, hi = utc_naive(ts_st.min), utc_naive(ts_st.max)
                 if lo is None or hi is None:
                     return None  # non-datetime stats (INT96 etc.)
                 ts_lo.append(lo)
@@ -214,22 +221,9 @@ def _delta_footer_stats(
             "ts_hi": max(ts_hi) if ts_hi else None,
         }
 
-    # phase 1: ONE tree listing of the epoch dir covers every touched
-    # bucket (~1000 keys per object-store LIST round-trip — per-bucket
-    # LISTs would pay one round-trip per touched bucket)
-    tree: dict[str, list[str]] = {}
-    for rel, _size, _mt in store.list_tree(out):
-        rel_dir, _, name = rel.rpartition("/")
-        if name.endswith(".parquet"):
-            tree.setdefault(rel_dir, []).append(f"{out.rstrip('/')}/{rel}")
-    pairs: list[tuple[int, str]] = []
-    for b in touched:
-        files = tree.get(f"b={b}")
-        if not files:
-            return None
-        pairs.extend((int(b), f) for f in files)
-    # phase 2: every touched FILE's footer — the store overlaps the
-    # byte fetches and parses serially (see S3Store.parquet_metadata_many)
+    pairs = [(b, f) for b in sorted(files) for f in files[b]]
+    # every touched FILE's footer — the store overlaps the byte
+    # fetches and parses serially (see S3Store.parquet_metadata_many)
     mds = store.parquet_metadata_many([f for _b, f in pairs], max_workers)
     per_file = [file_stats(md) for md in mds]
     res: dict[int, dict] = {}
@@ -435,13 +429,8 @@ def apply_changes(
     )
     spark_out = table.store.spark_path(out)
     snap.write.mode("overwrite").partitionBy("b").parquet(spark_out)
-    touched = sorted(
-        {
-            int(rel.partition("/")[0][2:])
-            for rel, _size, _mt in table.store.list_tree(out)
-            if rel.startswith("b=")
-        }
-    )
+    files = _bucket_files(out, table.store.list_tree(out))
+    touched = sorted(files)
     phases["write"] = time.time() - t
     if not touched:  # fully-gated batch: manifest-only commit
         table.store.delete_tree(out)
@@ -456,7 +445,7 @@ def apply_changes(
     # job queued behind other tables' writes was the dominant commit
     # cost). Falls back to ONE narrow aggregate job over the
     # (page-cached) files when a required statistic is missing.
-    fstats = _delta_footer_stats(out, touched)
+    fstats = _delta_footer_stats(out, files)
     if fstats is None:
         per_b = (
             spark.read.parquet(spark_out)

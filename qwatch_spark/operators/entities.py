@@ -213,7 +213,6 @@ def create_entity_tables(
     n_buckets: int = 16,
     overwrite: bool = False,
     manifest_shards: int | None = None,
-    cas_backend: str = "localfs",
 ) -> dict[str, SnapshotTable]:
     """One SnapshotTable per entity (and per link table) under base_path."""
     tables = {}
@@ -225,7 +224,6 @@ def create_entity_tables(
             key_col=s.key_col,
             overwrite=overwrite,
             manifest_shards=manifest_shards,
-            cas_backend=cas_backend,
         )
     for lk in links or []:
         tables[lk.name] = SnapshotTable.create(
@@ -235,7 +233,6 @@ def create_entity_tables(
             key_col="link_id",
             overwrite=overwrite,
             manifest_shards=manifest_shards,
-            cas_backend=cas_backend,
         )
     return tables
 

@@ -2,7 +2,9 @@
 same small set of object primitives.
 
 Everything the engine does to storage outside Spark goes through here:
-the CAS commit log (`snapshot_table.CasLog`), the delta commit's
+a table's pointer, history, shards, bookkeeping appends and CAS commit
+log (`snapshot_table.CasLog`, under the table path, so the table's
+path picks the one store all of it lives in), the delta commit's
 parquet-footer stats (`operators/apply._delta_footer_stats`,
 `SnapshotTable._file_ts_ranges_many`), the ANN serving indexes'
 pointer/claim/fold/vacuum protocol (`operators/similarity`) and the
@@ -45,10 +47,6 @@ import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
-
-# cas_backend values a table manifest may name: where its CAS commit
-# log lives (`snapshot_table.CasLog.for_table`)
-CAS_BACKENDS = ("localfs", "s3")
 
 # ---- the S3 error-code table ----
 # missing: GET/DELETE bodies carry "NoSuchKey"; HEAD responses have no

@@ -52,6 +52,7 @@ Layout on disk::
 from __future__ import annotations
 
 import copy
+import datetime as dt
 import json
 import os
 import time
@@ -62,7 +63,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from qwatch_spark.plans.objectstore import (
-    CAS_BACKENDS,
     CommitConflictError,
     StaleBaseError,
     store_for,
@@ -82,21 +82,23 @@ def _store(path: str):
     return store
 
 
-def _publish(path: str, body: bytes, version: int) -> None:
+def _publish(store, path: str, body: bytes, version: int) -> None:
     """Swap the manifest.json pointer to a committed manifest and record
     it as the version's history entry (time travel reads it until vacuum
     drops the data files it points to). Both are atomic object puts."""
-    store = _store(path)
     store.put(os.path.join(path, MANIFEST), body)
     store.put(os.path.join(path, HISTORY_DIR, f"v={int(version)}.json"), body)
 
 
 class CasLog:
-    """The CAS commit log: slot n is the object `<root>/_commits/m=<n>.json`
-    holding mutation n's manifest JSON. The CAS protocol needs exactly
-    four operations — put-if-absent of a slot (the linearization point
-    of the whole protocol), list, read, delete — and runs them through
-    the table's object store, so the same protocol commits on a local
+    """The CAS commit log: slot n is the object
+    `<table>/_commits/m=<n>.json` holding mutation n's manifest JSON. It
+    lives under the table path in the table's own store (as Delta Lake's
+    `_delta_log/` does), so the path alone says where every byte of a
+    table is. The CAS protocol needs exactly four operations —
+    put-if-absent of a slot (the linearization point of the whole
+    protocol), list, read, delete — and runs them through the table's
+    object store, so the same protocol commits on a local
     filesystem (`os.link`, failing EEXIST) and on S3 (`If-None-Match:
     *`). A slot body is the writer's whole manifest, and data commits
     carry nonce version tokens, so the stores' read-back on an existing
@@ -106,21 +108,8 @@ class CasLog:
 
     def __init__(self, store, root: str):
         self.store = store
-        self.dir = f"{root.rstrip('/')}/{COMMITS_DIR}"
-
-    @classmethod
-    def for_table(cls, table_path: str, kind: str) -> "CasLog":
-        """`kind` is the manifest's `cas_backend`. "s3" on a plain
-        table path keeps the log in bucket `cas` under the table's real
-        path, so one table directory can commit through either store."""
-        if kind not in CAS_BACKENDS:
-            raise ValueError(
-                f"unknown cas_backend {kind!r} (expected one of {CAS_BACKENDS})"
-            )
-        root = table_path
-        if kind == "s3" and not table_path.startswith("s3://"):
-            root = f"s3://cas/{os.path.realpath(table_path).lstrip('/')}"
-        return cls(_store(root), root)
+        self.root = root.rstrip("/")
+        self.dir = f"{self.root}/{COMMITS_DIR}"
 
     def _slot(self, n: int) -> str:
         return f"{self.dir}/m={int(n)}.json"
@@ -181,6 +170,17 @@ def full_schema(payload: T.StructType) -> T.StructType:
     return T.StructType(list(payload.fields) + BOOKKEEPING_FIELDS)
 
 
+def utc_naive(v) -> dt.datetime | None:
+    """A parquet timestamp statistic as a naive UTC datetime (the
+    session TZ is UTC everywhere); None when it is not a datetime
+    (INT96 and other non-timestamp stats)."""
+    if not isinstance(v, dt.datetime):
+        return None
+    if v.tzinfo is not None:
+        v = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    return v
+
+
 def _ziso(v) -> str | None:
     return v.isoformat() if v is not None else None
 
@@ -200,6 +200,7 @@ class SnapshotTable:
     def __init__(self, path: str):
         self.path = path
         self.store = _store(path)
+        self.log = CasLog(self.store, path)
         self._shard_cache: dict = {}  # (sid, filename) -> entries
         self._manifest = self._load_manifest()
 
@@ -214,7 +215,6 @@ class SnapshotTable:
         overwrite: bool = False,
         key_col: str = "url",
         manifest_shards: int | None = None,
-        cas_backend: str = "localfs",
     ) -> "SnapshotTable":
         """`manifest_shards=k` shards the per-bucket manifest entries
         into k immutable side files (bucket b lives in shard b % k), so
@@ -229,17 +229,10 @@ class SnapshotTable:
         entries (each dirty shard is rewritten whole), so pick k ≥
         n_buckets / 32 once n_buckets is large. Measured at 100k buckets
         / 500 touched: k=256 → 2.5 s, k=1024 → 1.1 s, k=4096 → 0.27 s
-        per epoch, reload < 1 ms at any k.
-
-        `cas_backend` says where the commit log lives (`CasLog.for_table`)."""
+        per epoch, reload < 1 ms at any k."""
         payload_schema = payload_schema or PAGE_SCHEMA
         if key_col not in {f.name for f in payload_schema.fields}:
             raise ValueError(f"key_col {key_col!r} not in payload schema")
-        if cas_backend not in CAS_BACKENDS:
-            raise ValueError(
-                f"unknown cas_backend {cas_backend!r} "
-                f"(expected one of {CAS_BACKENDS})"
-            )
         if manifest_shards is not None and not (
             1 <= manifest_shards <= n_buckets
         ):
@@ -247,17 +240,10 @@ class SnapshotTable:
                 f"manifest_shards must be in [1, n_buckets]; got {manifest_shards}"
             )
         store = _store(path)
-        old = store.get(os.path.join(path, MANIFEST))
-        if old is not None:
+        if store.exists(os.path.join(path, MANIFEST)):
             if not overwrite:
                 return cls(path)
-            # the log may live outside the table dir (cas_backend="s3"):
-            # left behind, the new slot 0 would land on the old log and
-            # the first load would heal forward to the old table's top
-            for kind in {json.loads(old).get("cas_backend", "localfs"), cas_backend}:
-                log = CasLog.for_table(path, kind)
-                log.store.delete_tree(log.dir)
-            store.delete_tree(path)
+            store.delete_tree(path)  # the commit log with it
         manifest = {
             "version": 0,
             "n_buckets": n_buckets,
@@ -270,9 +256,7 @@ class SnapshotTable:
             manifest["shard_files"] = {}
         else:
             manifest["buckets"] = {}
-        if cas_backend != "localfs":
-            manifest["cas_backend"] = cas_backend
-        cls._write_manifest(path, manifest)
+        cls._write_manifest(CasLog(store, path), manifest)
         return cls(path)
 
     def _get_json(self, *parts: str) -> dict:
@@ -290,23 +274,33 @@ class SnapshotTable:
         # (commit slot created) but before the pointer swap leaves the
         # pointer stale — heal forward to the newest commit.
         manifest = self._get_json(MANIFEST)
-        log = CasLog.for_table(self.path, manifest.get("cas_backend", "localfs"))
+        if manifest.get("cas_backend", "localfs") != "localfs" and not (
+            self.path.startswith("s3://")
+        ):
+            # written when a local table could keep its log in a second
+            # store: that log is invisible here, so this pointer may be
+            # stale and must not be adopted as the table's state
+            raise ValueError(
+                f"{self.path}: manifest names cas_backend="
+                f"{manifest['cas_backend']!r}, a commit log outside the "
+                "table path; this table can no longer be opened"
+            )
         while True:
-            slots = log.slots()
+            slots = self.log.slots()
             if not slots or slots[-1] <= manifest.get("mutation", 0):
                 return manifest
-            body = log.read(slots[-1])
+            body = self.log.read(slots[-1])
             if body is not None:
                 break
             # gone between LIST and GET: only a commit above it prunes
             # a slot, so a newer top exists — list again
         manifest = json.loads(body)
-        _publish(self.path, body.encode(), manifest["version"])
+        _publish(self.store, self.path, body.encode(), manifest["version"])
         return manifest
 
     @staticmethod
     def _write_manifest(
-        path: str, manifest: dict, expected_mutation: int | None = None
+        log: CasLog, manifest: dict, expected_mutation: int | None = None
     ) -> None:
         """Commit `manifest` as mutation `expected_mutation + 1` (0 at
         create), by compare-and-swap. The linearization point is an
@@ -326,13 +320,13 @@ class SnapshotTable:
         on-disk pointer bytes as slot M (the pointer's mutation). Two
         adopters of one pointer put identical bytes, which both win
         (the stores' read-back rule), and the rebase check decides."""
-        log = CasLog.for_table(path, manifest.get("cas_backend", "localfs"))
+        path = log.root
         n = 0 if expected_mutation is None else expected_mutation + 1
         manifest["mutation"] = n
         if expected_mutation is not None:
             slots = log.slots()
             if not slots:
-                cur = _store(path).get(os.path.join(path, MANIFEST))
+                cur = log.store.get(os.path.join(path, MANIFEST))
                 log.put_if_absent(json.loads(cur).get("mutation", 0), cur.decode())
                 slots = log.slots()
             # rebase check (one LIST, same as Delta's LogStore): a
@@ -356,7 +350,7 @@ class SnapshotTable:
                 "already exists (lost the CAS put-if-absent); "
                 "aborting commit (no state was overwritten)"
             )
-        _publish(path, body.encode(), manifest["version"])
+        _publish(log.store, path, body.encode(), manifest["version"])
 
     # ---------- properties ----------
 
@@ -377,13 +371,6 @@ class SnapshotTable:
     @property
     def version(self) -> int:
         return self._manifest["version"]
-
-    def commit_log_backend(self) -> CasLog:
-        """The table's CAS commit log — the conditional-put slots the
-        CAS protocol linearizes through."""
-        return CasLog.for_table(
-            self.path, self._manifest.get("cas_backend", "localfs")
-        )
 
     def has_epoch(self, epoch_id: int) -> bool:
         e = int(epoch_id)
@@ -446,7 +433,7 @@ class SnapshotTable:
         manifest["version"] = self.version + 1
         manifest["rows_est"] = n
         self._write_manifest(
-            self.path, manifest,
+            self.log, manifest,
             expected_mutation=self._manifest.get("mutation", 0),
         )
         self._manifest = manifest
@@ -585,8 +572,6 @@ class SnapshotTable:
         if any row of the key passes the predicate, so does the winner,
         and the winner's file can't be pruned. Tokens without a recorded
         range are conservatively kept."""
-
-        import datetime as dt
 
         def keep(e: dict, tok) -> bool:
             if min_warc_ts is None:
@@ -804,7 +789,7 @@ class SnapshotTable:
         files were never at risk."""
         try:
             self._write_manifest(
-                self.path, manifest,
+                self.log, manifest,
                 expected_mutation=self._manifest.get("mutation", 0),
             )
         except RuntimeError:
@@ -832,7 +817,7 @@ class SnapshotTable:
         manifest = dict(self._manifest)
         self._record_epoch(manifest, epoch_id)
         self._write_manifest(
-            self.path, manifest,
+            self.log, manifest,
             expected_mutation=self._manifest.get("mutation", 0),
         )
         self._manifest = manifest
@@ -893,15 +878,6 @@ class SnapshotTable:
         """One footer's warc_ts range: [lo_iso, hi_iso], None (all rows
         null — no range, read always), or the sentinel "missing" (a
         statistic is absent — the caller's whole fast path falls back)."""
-        import datetime as dt
-
-        def norm(v):
-            if not isinstance(v, dt.datetime):
-                return None
-            if v.tzinfo is not None:
-                v = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
-            return v
-
         lo = hi = None
         for rg in range(md.num_row_groups):
             rgm = md.row_group(rg)
@@ -915,7 +891,7 @@ class SnapshotTable:
                 return "missing"
             st = col.statistics
             if st is not None and st.has_min_max:
-                mn, mx = norm(st.min), norm(st.max)
+                mn, mx = utc_naive(st.min), utc_naive(st.max)
                 if mn is None or mx is None:
                     return "missing"
                 lo = mn if lo is None or mn < lo else lo
@@ -1113,7 +1089,7 @@ class SnapshotTable:
         # keep the log short without vacuum: every slot below this
         # commit is superseded (a streaming writer reloads each epoch,
         # and a load LISTs the whole log)
-        self.commit_log_backend().prune_below(manifest["mutation"])
+        self.log.prune_below(manifest["mutation"])
         return victims
 
     def _resolve_with_lineage_repair(
@@ -1243,8 +1219,6 @@ class SnapshotTable:
         counters — per-bucket lineage for the epoch remains recoverable
         from the data files' last_epoch column. Returns True if a row was
         written (dedupable by epoch_id regardless)."""
-        import datetime as dt
-
         present = (
             self.read_commit_log(spark)
             .filter(F.col("epoch_id") == int(epoch_id))
@@ -1335,7 +1309,7 @@ class SnapshotTable:
                 self.store.delete_tree(os.path.join(self.path, key))
                 removed.append(key.partition("/")[2])
         # the commit log: only the top slot is authoritative
-        removed += self.commit_log_backend().prune_below(
+        removed += self.log.prune_below(
             self._manifest.get("mutation", 0)
         )
         return removed

@@ -30,6 +30,8 @@ from typing import Protocol, runtime_checkable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from qwatch_spark.plans.objectstore import store_for
+
 
 @runtime_checkable
 class Sink(Protocol):
@@ -50,30 +52,34 @@ class Sink(Protocol):
 
 class ParquetSink:
     """Epoch-keyed parquet append directory. `append` writes
-    epoch=<id>/ with mode=overwrite → exactly-once under replay."""
+    epoch=<id>/ with mode=overwrite → exactly-once under replay. The
+    directory lives in the object store its path names (a local path or
+    ``s3://``), like the table it sits in."""
 
     def __init__(self, path: str):
         self.path = path
+        self.store = store_for(path)
+        if self.store is None:
+            raise ValueError(f"no object store client for {path!r}")
         self._schema: T.StructType | None = None
 
     def ddl(self, spark: SparkSession, schema: T.StructType) -> None:
-        os.makedirs(self.path, exist_ok=True)
         self._schema = schema
-        with open(os.path.join(self.path, "_schema.json"), "w") as fh:
-            fh.write(schema.json())
+        self.store.put(os.path.join(self.path, "_schema.json"), schema.json().encode())
 
     def append(self, df: DataFrame, epoch_id: int) -> None:
         df.write.mode("overwrite").parquet(
-            os.path.join(self.path, f"epoch={int(epoch_id)}")
+            self.store.spark_path(os.path.join(self.path, f"epoch={int(epoch_id)}"))
         )
 
     def read(self, spark: SparkSession) -> DataFrame:
         schema = self._schema
-        if schema is None and os.path.exists(os.path.join(self.path, "_schema.json")):
-            from qwatch_spark.schema import schema_from_json
+        if schema is None:
+            raw = self.store.get(os.path.join(self.path, "_schema.json"))
+            if raw is not None:
+                from qwatch_spark.schema import schema_from_json
 
-            with open(os.path.join(self.path, "_schema.json")) as fh:
-                schema = schema_from_json(fh.read())
+                schema = schema_from_json(raw.decode())
         reader = spark.read
         if schema is not None:
             # partition column `epoch` is appended by discovery
@@ -83,7 +89,7 @@ class ParquetSink:
                     + [T.StructField("epoch", T.IntegerType(), True)]
                 )
             )
-        return reader.parquet(self.path)
+        return reader.parquet(self.store.spark_path(self.path))
 
 
 _DUCK_TYPES = {

@@ -198,7 +198,6 @@ def run_entity_stream(
     tables = create_entity_tables(
         base_path, list(specs), list(links or []), n_buckets=cfg.n_buckets,
         manifest_shards=cfg.manifest_shards,
-        cas_backend=cfg.cas_backend,
     )
     sink = dead_letter_sink or ParquetSink(os.path.join(base_path, "dead_letter"))
     if feed_schema is None:

@@ -42,6 +42,7 @@ from qwatch_spark.config import PipelineConfig  # noqa: E402
 from qwatch_spark.datagen import gen_feed_df  # noqa: E402
 import qwatch_spark.operators.apply as apply_mod  # noqa: E402
 from qwatch_spark.operators.apply import (  # noqa: E402
+    _bucket_files,
     _delta_footer_stats,
     apply_changes,
 )
@@ -49,6 +50,7 @@ from qwatch_spark.plans.objectstore import (  # noqa: E402
     DirBackedFakeS3Client,
     S3Store,
     pmap,
+    store_for,
 )
 from qwatch_spark.plans.snapshot_table import SnapshotTable  # noqa: E402
 from qwatch_spark.session import get_spark  # noqa: E402
@@ -96,6 +98,13 @@ def build(spark, path: str, n_buckets: int) -> tuple[str, list[int]]:
     return out, touched
 
 
+def footer_stats(out: str, max_workers: int | None = None):
+    """The commit's stats read as a commit pays it: one tree LIST of
+    the epoch dir, then the footer pass over the files it found."""
+    files = _bucket_files(out, store_for(out).list_tree(out))
+    return _delta_footer_stats(out, files, max_workers)
+
+
 def timed(fn) -> float:
     t0 = time.monotonic()
     got = fn()
@@ -131,13 +140,12 @@ def main() -> None:
                             Key=f"t{nb}/b={b}/{f}",
                             Body=fh.read(),
                         )
-        arms[nb] = {"out": out, "touched": touched, "n_files": n_files,
+        arms[nb] = {"out": out, "n_files": n_files,
                     "s3_out": f"s3://bench/t{nb}", "local": [], "remote": []}
 
     # correctness of the remote path before timing it
     for a in arms.values():
-        assert _delta_footer_stats(a["s3_out"], a["touched"]) == \
-            _delta_footer_stats(a["out"], a["touched"])
+        assert footer_stats(a["s3_out"]) == footer_stats(a["out"])
 
     # ---- whole-epoch arm: the footer stats read vs the aggregate-job
     # fallback it replaces, measured as full apply epochs on fresh tables
@@ -155,7 +163,7 @@ def main() -> None:
                 p = os.path.join(work, f"ep_{mode}{nb}_{i}")
                 t = SnapshotTable.create(p, n_buckets=nb)
                 if mode == "job":
-                    apply_mod._delta_footer_stats = lambda out, touched: None
+                    apply_mod._delta_footer_stats = lambda out, files: None
                 try:
                     stats = apply_changes(spark, feed, t, 0, cfg)
                 finally:
@@ -191,11 +199,11 @@ def main() -> None:
     for _ in range(TRIALS):  # interleave all arms in the same window
         for nb, a in arms.items():
             a["local"].append(
-                timed(lambda: _delta_footer_stats(a["out"], a["touched"]))
+                timed(lambda: footer_stats(a["out"]))
             )
         for nb, a in arms.items():
             a["remote"].append(
-                timed(lambda: _delta_footer_stats(a["s3_out"], a["touched"]))
+                timed(lambda: footer_stats(a["s3_out"]))
             )
             # +2: one LIST round-trip, and the GETs span ceil(n/width)
             # waves exactly like the engine's fetch phase
@@ -207,7 +215,7 @@ def main() -> None:
     if not os.environ.get("SKIP_SEQ"):
         for nb, a in arms.items():
             t0 = time.monotonic()
-            got = _delta_footer_stats(a["s3_out"], a["touched"], max_workers=1)
+            got = footer_stats(a["s3_out"], max_workers=1)
             assert got is not None
             seq_model[nb] = round(time.monotonic() - t0, 3)
 

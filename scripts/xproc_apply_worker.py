@@ -3,11 +3,14 @@ verdict #4): a REAL OS process (own JVM, own Python) applying feed
 epochs to a shared CAS-committed SnapshotTable with the optimistic
 rebase-and-retry loop a production writer runs. The pytest driver
 (tests/test_xproc_writers.py) launches two of these simultaneously
-against one localfs-backend table and diffs the result against a
+against one local table and diffs the result against a
 single-writer oracle.
 
 Usage: python scripts/xproc_apply_worker.py TABLE_PATH WRITER_ID
        N_EPOCHS BARRIER_FILE
+
+Touches BARRIER_FILE.<WRITER_ID> once its JVM is up, then waits for
+BARRIER_FILE before its first epoch.
 
 Prints ONE json line: {"writer", "applied", "conflicts"}.
 Exit 0 on success.
@@ -90,7 +93,9 @@ def main() -> int:
         write_mode="delta",
         rules=("valid_url", "lang_gate", "extract_text"),
     )
-    # start line: both workers burn their JVM startup BEFORE the race
+    # start line: both workers burn their JVM startup BEFORE the race;
+    # `BARRIER.<writer>` tells the driver this JVM is warm
+    open(f"{barrier}.{w}", "w").close()
     while not os.path.exists(barrier):
         time.sleep(0.05)
     conflicts = applied = 0

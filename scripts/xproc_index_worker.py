@@ -6,6 +6,10 @@ threads inside one process. This worker runs one side of that race as
 a REAL OS process (own JVM, own interpreter) against one shared LSH
 serving index.
 
+Each worker touches `BARRIER.<role>` once its JVM is up and then waits
+for BARRIER, so the driver starts the race only when both JVMs are warm
+(under load a JVM can take many seconds longer to start than its rival).
+
 Roles:
   append INDEX_PATH N_BATCHES BARRIER DONE_FILE ARM_BATCH
     Appends N_BATCHES × 40 vectors with the production retry loop
@@ -15,14 +19,19 @@ Roles:
     check BLOCKS until the maintainer process publishes a swap — the
     deterministic cross-process form of the interleaving the in-process
     monkeypatch tests pin (write lands in the old version → maintainer
-    pins it → swap → check fires typed). Touches DONE_FILE when done.
+    pins it → swap → check fires typed). Touches `DONE_FILE.armed` when
+    that check starts waiting, and DONE_FILE when done.
 
   maintain INDEX_PATH MAX_CYCLES BARRIER DONE_FILE
     Runs lsh_maintain cycles (small-file compaction behind the
     versioned pointer) at a spaced cadence until the appender's
-    DONE_FILE appears or MAX_CYCLES land.
+    DONE_FILE appears or MAX_CYCLES land. If the armed check has not
+    started waiting by then, it idles until it does and runs one more
+    successful cycle: the armed batch blocks on a swap, and a maintainer
+    that cycled ahead alone would leave it none to observe.
 
-Prints ONE json line: {"role", "applied"|"maintains", "conflicts"}.
+Prints ONE json line: {"role", "applied"|"maintains", "conflicts"}; the
+appender adds "armed_swap_seen" (its armed check observed a swap).
 """
 
 import json
@@ -70,6 +79,7 @@ def main() -> int:
             "spark.driver.memory": "1g",
         },
     )
+    open(f"{sys.argv[4]}.{role}", "w").close()  # this JVM is warm
 
     if role == "append":
         n_batches, barrier, done_file, arm_batch = (
@@ -77,7 +87,7 @@ def main() -> int:
         )
         _wait_for(barrier)
         real = sim._idx_current
-        hook_state = {"armed": False, "calls": 0}
+        hook_state = {"armed": False, "calls": 0, "swap_seen": False}
 
         def hooked(p):
             out = real(p)
@@ -89,11 +99,13 @@ def main() -> int:
                     # swap publishes, so the check observes a stale v0
                     # — the exact interleaving the retry contract is
                     # specified against, across real process boundaries
+                    open(f"{done_file}.armed", "w").close()
                     deadline = time.monotonic() + 120.0
                     while real(p)[1] == out[1]:
                         if time.monotonic() >= deadline:
-                            break  # no swap: fall through, test fails
+                            return out  # no swap: the test fails
                         time.sleep(0.1)
+                    hook_state["swap_seen"] = True
                     return real(p)
             return out
 
@@ -123,9 +135,10 @@ def main() -> int:
         finally:
             sim._idx_current = real
             open(done_file, "w").close()
-        print(json.dumps(
-            {"role": role, "applied": applied, "conflicts": conflicts}
-        ))
+        print(json.dumps({
+            "role": role, "applied": applied, "conflicts": conflicts,
+            "armed_swap_seen": hook_state["swap_seen"],
+        }))
         return 0
 
     if role == "maintain":
@@ -133,13 +146,23 @@ def main() -> int:
             int(sys.argv[3]), sys.argv[4], sys.argv[5],
         )
         _wait_for(barrier)
-        maintains = conflicts = 0
-        for _ in range(max_cycles):
+        maintains = conflicts = cycles = 0
+        armed_served = False  # a swap landed after the armed check began
+        while not os.path.exists(done_file):
+            armed = os.path.exists(f"{done_file}.armed")
+            if cycles >= max_cycles:
+                if armed_served:
+                    break
+                if not armed:
+                    time.sleep(0.1)
+                    continue
             try:
                 sim.lsh_maintain(spark, idx_path)
                 maintains += 1
+                armed_served = armed_served or armed
             except sim.IndexConflictError:
                 conflicts += 1  # rival claim — rebase next cycle
+            cycles += 1
             if os.path.exists(done_file):
                 break
             time.sleep(1.5)

@@ -87,7 +87,7 @@ def test_task_footer_job_stats_equivalence(spark, tmp_path, monkeypatch):
     assert all(r is not None for r in footer_reads)
 
     monkeypatch.setattr(
-        apply_mod, "_delta_footer_stats", lambda out, touched: None
+        apply_mod, "_delta_footer_stats", lambda out, files: None
     )
     t_job = _apply_all(spark, tmp_path, "job", feed, epochs)
 
@@ -105,10 +105,26 @@ def test_task_footer_job_stats_equivalence(spark, tmp_path, monkeypatch):
 
 def test_auto_mode_is_footer_never_task(spark, tmp_path, monkeypatch):
     """The default write_mode ("auto") commits its delta epoch with
-    stats harvested from footers — exactly one footer read, and no
-    fallback to the aggregate job."""
+    stats harvested from footers — exactly one footer read, no
+    fallback to the aggregate job, and ONE listing of the epoch dir
+    (the touched buckets and the footer files come from the same
+    LIST)."""
+    import os
+
+    from qwatch_spark.plans.objectstore import LocalStore
+
+    listed = []
+    real_list = LocalStore.list_tree
+
+    def counting_list(self, d):
+        listed.append(d)
+        return real_list(self, d)
+
+    monkeypatch.setattr(LocalStore, "list_tree", counting_list)
     feed = gen_feed_df(spark, 400, epoch_size=400)
     footer_reads = _count_footer_reads(monkeypatch)
-    _apply_all(spark, tmp_path, "auto", feed, [0], PipelineConfig(n_buckets=8))
+    t = _apply_all(spark, tmp_path, "auto", feed, [0], PipelineConfig(n_buckets=8))
     assert len(footer_reads) == 1, "auto must harvest from footers"
     assert footer_reads[0] is not None, "auto fell back to the stats job"
+    (tok,) = {d for _b, e in t._entries(None) for d in e["deltas"]}
+    assert listed.count(os.path.join(t.path, "data", f"v={tok}")) == 1

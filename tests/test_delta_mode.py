@@ -203,7 +203,7 @@ def test_footer_stats_match_spark_job(spark, tmp_path):
     delete counts, seq ranges, warc_ts zone maps — and it must actually
     be exercised under the engine session (TIMESTAMP_MICROS stats
     present), not silently falling back."""
-    from qwatch_spark.operators.apply import _delta_footer_stats
+    from qwatch_spark.operators.apply import _bucket_files, _delta_footer_stats
 
     cfg = PipelineConfig(n_buckets=8, write_mode="delta")
     table = SnapshotTable.create(str(tmp_path / "t"), n_buckets=8)
@@ -218,10 +218,7 @@ def test_footer_stats_match_spark_job(spark, tmp_path):
         if e["base"] is not None and tok is None:
             tok = e["base"]
     out = os.path.join(table.path, "data", f"v={tok}")
-    touched = sorted(
-        int(d[2:]) for d in os.listdir(out) if d.startswith("b=")
-    )
-    got = _delta_footer_stats(out, touched)
+    got = _delta_footer_stats(out, _bucket_files(out, table.store.list_tree(out)))
     assert got is not None, "footer stats unavailable under engine session"
     want = {
         int(r["b"]): r
@@ -258,7 +255,7 @@ def test_footer_stats_over_fake_s3_match_local(spark, tmp_path):
     must return IDENTICAL results through s3:// (ranged GETs against
     the fake) as through the local path. Unknown schemes still return
     None (the Spark-job fallback contract)."""
-    from qwatch_spark.operators.apply import _delta_footer_stats
+    from qwatch_spark.operators.apply import _bucket_files, _delta_footer_stats
     from qwatch_spark.plans.objectstore import DirBackedFakeS3Client, S3Store
 
     cfg = PipelineConfig(n_buckets=8, write_mode="delta")
@@ -273,7 +270,7 @@ def test_footer_stats_over_fake_s3_match_local(spark, tmp_path):
     touched = sorted(
         int(d[2:]) for d in os.listdir(out) if d.startswith("b=")
     )
-    local = _delta_footer_stats(out, touched)
+    local = _delta_footer_stats(out, _bucket_files(out, table.store.list_tree(out)))
     assert local is not None
 
     store = str(tmp_path / "s3")
@@ -291,7 +288,10 @@ def test_footer_stats_over_fake_s3_match_local(spark, tmp_path):
                             Key=f"tbl/data/v={tok}/b={b}/{f}",
                             Body=fh.read(),
                         )
-        remote = _delta_footer_stats(f"s3://bkt/tbl/data/v={tok}", touched)
+        s3_out = f"s3://bkt/tbl/data/v={tok}"
+        remote = _delta_footer_stats(
+            s3_out, _bucket_files(s3_out, S3Store(client).list_tree(s3_out))
+        )
         assert remote == local
         # the zone-map harvest (one tree LIST + one pooled footer pass)
         # agrees per bucket and file over BOTH stores
@@ -306,7 +306,8 @@ def test_footer_stats_over_fake_s3_match_local(spark, tmp_path):
     finally:
         S3Store.client_factory = old_factory
     # scheme nobody serves driver-side -> None -> Spark-job fallback
-    assert _delta_footer_stats("hdfs://nn/tbl/data/v=1", [0]) is None
+    hdfs_out = "hdfs://nn/tbl/data/v=1"
+    assert _delta_footer_stats(hdfs_out, {0: [f"{hdfs_out}/b=0/p.parquet"]}) is None
     assert SnapshotTable._file_ts_ranges_many("hdfs://nn/tbl/d", [0]) == {
         "0": None
     }
@@ -320,7 +321,7 @@ def test_footer_stats_reads_are_pooled_not_sequential(spark, tmp_path, monkeypat
     sequential sum (sequential would be >= n_files * 25 ms)."""
     import time
 
-    from qwatch_spark.operators.apply import _delta_footer_stats
+    from qwatch_spark.operators.apply import _bucket_files, _delta_footer_stats
     from qwatch_spark.plans.objectstore import LocalStore
 
     cfg = PipelineConfig(n_buckets=16, write_mode="delta")
@@ -332,15 +333,8 @@ def test_footer_stats_reads_are_pooled_not_sequential(spark, tmp_path, monkeypat
         for d in e["deltas"]:
             tok = d
     out = os.path.join(table.path, "data", f"v={tok}")
-    touched = sorted(
-        int(d[2:]) for d in os.listdir(out) if d.startswith("b=")
-    )
-    n_files = sum(
-        1
-        for b in touched
-        for f in os.listdir(os.path.join(out, f"b={b}"))
-        if f.endswith(".parquet")
-    )
+    files = _bucket_files(out, table.store.list_tree(out))
+    n_files = sum(len(fs) for fs in files.values())
     assert n_files >= 12, f"fixture too small ({n_files} files)"
     delay = 0.025
     orig_md = LocalStore.parquet_metadata
@@ -351,7 +345,7 @@ def test_footer_stats_reads_are_pooled_not_sequential(spark, tmp_path, monkeypat
 
     monkeypatch.setattr(LocalStore, "parquet_metadata", slow_md)
     t0 = time.monotonic()
-    got = _delta_footer_stats(out, touched, max_workers=64)
+    got = _delta_footer_stats(out, files, max_workers=64)
     wall = time.monotonic() - t0
     assert got is not None
     sequential = n_files * delay
@@ -371,7 +365,7 @@ def test_footer_stats_fallback_commits_identically(spark, tmp_path, monkeypatch)
     cfg = PipelineConfig(n_buckets=8, write_mode="delta")
     t_fast = SnapshotTable.create(str(tmp_path / "fast"), n_buckets=8)
     replay_feed(spark, feed, t_fast, cfg)
-    monkeypatch.setattr(A, "_delta_footer_stats", lambda out, touched: None)
+    monkeypatch.setattr(A, "_delta_footer_stats", lambda out, files: None)
     t_slow = SnapshotTable.create(str(tmp_path / "slow"), n_buckets=8)
     replay_feed(spark, feed, t_slow, cfg)
     t_fast, t_slow = SnapshotTable(t_fast.path), SnapshotTable(t_slow.path)

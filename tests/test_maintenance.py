@@ -193,31 +193,34 @@ def test_index_maintain_job_cli_once(spark, tmp_path):
 
 
 def test_cas_backend_config_plumbing(tmp_path, monkeypatch):
-    """PipelineConfig validates cas_backend and create_entity_tables
-    propagates it into every entity/link manifest."""
+    """`cas_backend` is an unknown config key: the table path alone says
+    where the commit log lives. create_entity_tables on an s3:// base
+    puts each entity and link table's log under that table's own
+    prefix."""
     import pytest
 
     from qwatch_spark.operators.entities import create_entity_tables
     from qwatch_spark.plans.objectstore import DirBackedFakeS3Client, S3Store
     from qwatch_spark.queries import entity_graph_specs
 
-    with pytest.raises(ValueError, match="cas_backend"):
-        PipelineConfig(cas_backend="not_a_backend")
-    with pytest.raises(ValueError, match="cas_backend"):
-        PipelineConfig(cas_backend="memory")  # a log that died with its process
+    with pytest.raises(ValueError, match="unknown config key"):
+        PipelineConfig.from_dict({"cas_backend": "s3"})
     store = tmp_path / "s3"
     monkeypatch.setattr(
         S3Store, "client_factory", lambda: DirBackedFakeS3Client(str(store))
     )
     specs, links = entity_graph_specs()
-    tables = create_entity_tables(
-        str(tmp_path / "g"), specs, links, n_buckets=4, cas_backend="s3",
-    )
-    for t in tables.values():
-        assert t._manifest["cas_backend"] == "s3"
-        t.commit_epoch(0)  # commits land in the s3 store
-        assert t.commit_log_backend().slots() == [0, 1]
-        assert not os.path.exists(os.path.join(t.path, "_commits"))
+    tables = create_entity_tables("s3://lake/g", specs, links, n_buckets=4)
+    assert set(tables) == {"page", "domain", "page_domain"}
+    for name, t in tables.items():
+        assert "cas_backend" not in t._manifest
+        t.commit_epoch(0)
+        assert t.log.dir == f"s3://lake/g/{name}/_commits"
+        assert t.log.slots() == [0, 1]
+        log_dir = store / "lake" / "g" / name / "_commits"
+        assert sorted(f for f in os.listdir(log_dir) if f.endswith(".json")) == [
+            "m=0.json", "m=1.json",
+        ]
 
 
 def test_retry_lost_race_unit():

@@ -267,12 +267,22 @@ def test_dead_letter_exactly_once_on_redelivery(spark, tmp_path):
 
 import pytest
 
-# Every CAS-protocol test runs through BOTH object stores — localfs
-# os.link, and S3's conditional-put surface against the in-repo
-# dir-backed fake client — proving the protocol depends on nothing but
-# the store's primitives, so the production S3 port is "swap the
-# client object", not a protocol change.
+# Every CAS-protocol test runs through BOTH object stores — a table in
+# a local dir (os.link), and a table at an s3:// path (S3's
+# conditional-put surface against the in-repo dir-backed fake client) —
+# proving the protocol depends on nothing but the store's primitives,
+# so the production S3 port is "swap the client object", not a
+# protocol change. The table path alone picks the store.
 CAS_BACKENDS = ["localfs", "s3"]
+
+
+def _table_path(tmp_path, backend: str) -> str:
+    return str(tmp_path / "t") if backend == "localfs" else "s3://lake/t"
+
+
+def _pointer(table) -> dict:
+    """The table's manifest.json pointer, read through its store."""
+    return json.loads(table.store.get(os.path.join(table.path, "manifest.json")))
 
 
 @pytest.fixture(autouse=True)
@@ -295,10 +305,8 @@ def test_cas_protocol_commits_and_heals_forward(tmp_path, backend):
     pointer cache. A writer crashing AFTER the put-if-absent but BEFORE
     the pointer swap must not lose its commit: the next load recovers
     forward from the commit log and heals the pointer on disk."""
-    path = str(tmp_path / "t")
-    t = SnapshotTable.create(
-        path, SCHEMA, n_buckets=4, cas_backend=backend
-    )
+    path = _table_path(tmp_path, backend)
+    t = SnapshotTable.create(path, SCHEMA, n_buckets=4)
     t.commit_epoch(0)
     t.commit_epoch(1)
     t2 = SnapshotTable(path)
@@ -307,11 +315,10 @@ def test_cas_protocol_commits_and_heals_forward(tmp_path, backend):
     m = dict(t2._manifest)
     m["mutation"] += 1
     m["epoch_watermark"] = 5
-    assert t2.commit_log_backend().put_if_absent(m["mutation"], json.dumps(m))
+    assert t2.log.put_if_absent(m["mutation"], json.dumps(m))
     t3 = SnapshotTable(path)  # recovers forward
     assert t3.has_epoch(5) and t3._manifest["mutation"] == m["mutation"]
-    with open(os.path.join(path, "manifest.json")) as fh:
-        assert json.load(fh)["mutation"] == m["mutation"]  # pointer healed
+    assert _pointer(t3)["mutation"] == m["mutation"]  # pointer healed
 
 
 @pytest.mark.parametrize("backend", CAS_BACKENDS)
@@ -319,10 +326,8 @@ def test_cas_rejects_racer_at_linearization_point(tmp_path, backend):
     """A stale writer loses at the put-if-absent itself, even when a
     check of the manifest.json pointer would have passed because the
     winner never got to update the pointer."""
-    path = str(tmp_path / "t")
-    a = SnapshotTable.create(
-        path, SCHEMA, n_buckets=4, cas_backend=backend
-    )
+    path = _table_path(tmp_path, backend)
+    a = SnapshotTable.create(path, SCHEMA, n_buckets=4)
     b = SnapshotTable(path)  # second writer, same base mutation
     a.commit_epoch(0)
     with pytest.raises(RuntimeError, match="concurrent writer"):
@@ -336,7 +341,7 @@ def test_cas_rejects_racer_at_linearization_point(tmp_path, backend):
     base = dict(c._manifest)
     crash = dict(base)
     crash["mutation"] = base["mutation"] + 1
-    assert c.commit_log_backend().put_if_absent(crash["mutation"], json.dumps(crash))
+    assert c.log.put_if_absent(crash["mutation"], json.dumps(crash))
     with pytest.raises(RuntimeError, match="concurrent writer"):
         c.commit_epoch(2)
     # ...and, in the race window where the winner's put lands BETWEEN
@@ -364,15 +369,13 @@ def test_cas_vacuum_prunes_log_but_stale_writer_stays_rejected(tmp_path, backend
     authoritative). A long-stale writer whose put-if-absent slot was
     freed by that prune must STILL lose — the rebase check compares its
     base against the log top before the put."""
-    path = str(tmp_path / "t")
-    t = SnapshotTable.create(
-        path, SCHEMA, n_buckets=4, cas_backend=backend
-    )
+    path = _table_path(tmp_path, backend)
+    t = SnapshotTable.create(path, SCHEMA, n_buckets=4)
     stale = SnapshotTable(path)  # base mutation 0
     for e in range(5):
         t.commit_epoch(e)
     removed = t.vacuum(retention_s=0)
-    assert t.commit_log_backend().slots() == [t._manifest["mutation"]]
+    assert t.log.slots() == [t._manifest["mutation"]]
     assert any(f.startswith("m=") for f in removed)
     # stale writer's slot m=1 is free again, but it is rejected loudly
     with pytest.raises(RuntimeError, match="concurrent writer"):
@@ -440,10 +443,8 @@ def test_cas_threads_race_with_retry_no_lost_commits(tmp_path, backend):
     thread interleaving."""
     import threading
 
-    path = str(tmp_path / "t")
-    SnapshotTable.create(
-        path, SCHEMA, n_buckets=4, cas_backend=backend
-    )
+    path = _table_path(tmp_path, backend)
+    SnapshotTable.create(path, SCHEMA, n_buckets=4)
     epochs = list(range(24))
     errors: list[Exception] = []
 
@@ -472,7 +473,7 @@ def test_cas_threads_race_with_retry_no_lost_commits(tmp_path, backend):
     final = SnapshotTable(path)
     assert all(final.has_epoch(e) for e in epochs)
     # gap-free mutation history: m=0 (create) .. m=top all exist
-    logged = final.commit_log_backend().slots()
+    logged = final.log.slots()
     assert logged == list(range(final._manifest["mutation"] + 1))
 
 
@@ -710,7 +711,7 @@ def test_shard_cache_evicts_superseded_snapshots(tmp_path):
         m = dict(t._manifest)
         m["version"] = t.version + 1
         t._apply_bucket_updates(m, {"0": {"base": str(e), "deltas": [], "z": {}}})
-        t._write_manifest(t.path, m, expected_mutation=t._manifest.get("mutation", 0))
+        t._write_manifest(t.log, m, expected_mutation=t._manifest.get("mutation", 0))
         t._manifest = m
         t._buckets_of(t._manifest)  # reader load populates the cache
     sids = [k[0] for k in t._shard_cache]
@@ -844,25 +845,51 @@ def test_per_file_zone_map_prunes_within_multi_file_bucket(spark, tmp_path):
 
 
 def test_overwrite_deletes_an_s3_commit_log(tmp_path):
-    """create(overwrite=True) deletes the table's commit log wherever it
-    lives. An S3 log sits outside the table dir; left behind, the
-    recreated slot 0 (byte-identical to the old one) would "win" its
-    put and the first load would heal forward to the old top — fresh
-    epochs would then be skipped as duplicates."""
-    path = str(tmp_path / "t")
-    t = SnapshotTable.create(path, SCHEMA, n_buckets=4, cas_backend="s3")
+    """create(overwrite=True) on an s3:// table deletes its commit log
+    with the rest of the table prefix. Left behind, the recreated slot
+    0 (byte-identical to the old one) would "win" its put and the first
+    load would heal forward to the old top — fresh epochs would then be
+    skipped as duplicates."""
+    path = "s3://lake/t"
+    t = SnapshotTable.create(path, SCHEMA, n_buckets=4)
     t.commit_epoch(0)
     t.commit_epoch(1)
-    fresh = SnapshotTable.create(
-        path, SCHEMA, n_buckets=4, cas_backend="s3", overwrite=True
-    )
+    fresh = SnapshotTable.create(path, SCHEMA, n_buckets=4, overwrite=True)
     assert fresh._manifest["mutation"] == 0
     assert not fresh.has_epoch(0) and not fresh.has_epoch(1)
-    assert fresh.commit_log_backend().slots() == [0]
+    assert fresh.log.slots() == [0]
     fresh.commit_epoch(0)
     reopened = SnapshotTable(path)
     assert reopened.has_epoch(0) and not reopened.has_epoch(1)
     assert reopened._manifest["mutation"] == 1
+
+
+def test_remote_log_manifest_on_local_path_rejected(tmp_path):
+    """A manifest naming `"cas_backend": "s3"` on a local path kept its
+    commit log in a second store the table can no longer see, so its
+    pointer may be stale: loading refuses it instead of adopting it. On
+    an s3:// path that log was already under the table, so the key is
+    ignored and the table keeps committing."""
+    import pytest
+
+    path = str(tmp_path / "t")
+    t = SnapshotTable.create(path, SCHEMA, n_buckets=4)
+    t.commit_epoch(0)
+    legacy = dict(_pointer(t), cas_backend="s3")
+    t.store.put(os.path.join(path, "manifest.json"), json.dumps(legacy).encode())
+    with pytest.raises(ValueError, match="cas_backend"):
+        SnapshotTable(path)
+    with pytest.raises(ValueError, match="cas_backend"):
+        SnapshotTable.create(path, SCHEMA, n_buckets=4)
+
+    remote = SnapshotTable.create("s3://lake/t", SCHEMA, n_buckets=4)
+    remote.commit_epoch(0)
+    legacy = dict(_pointer(remote), cas_backend="s3")
+    remote.store.put("s3://lake/t/manifest.json", json.dumps(legacy).encode())
+    reopened = SnapshotTable("s3://lake/t")
+    assert reopened.has_epoch(0)
+    reopened.commit_epoch(1)
+    assert SnapshotTable("s3://lake/t").has_epoch(1)
 
 
 def test_killed_append_is_hidden_from_redelivery(spark, tmp_path, monkeypatch):
@@ -965,7 +992,7 @@ def test_legacy_manifest_adopted_on_first_commit(spark, tmp_path):
     assert len(won) == 1 and len(lost) == 1, (won, lost)
     assert "concurrent writer" in lost[0]
     final = SnapshotTable(path)
-    assert final.commit_log_backend().slots() == [3, 4]
+    assert final.log.slots() == [3, 4]
     (loser,) = {10, 11} - set(won)
     assert final.has_epoch(won[0]) and not final.has_epoch(loser)
     assert sorted(tuple(r) for r in final.read(spark).collect()) == want
@@ -1011,7 +1038,8 @@ def test_s3_table_replay_compact_vacuum(spark, tmp_path, monkeypatch):
     ]
     # a compaction commit prunes the log below its own mutation
     assert t.compact(spark, max_deltas=0)
-    assert t.commit_log_backend().slots() == [t._manifest["mutation"]]
+    assert t.log.slots() == [t._manifest["mutation"]]
+    assert t.log.dir == "s3://lake/t/_commits"
     removed = SnapshotTable("s3://lake/t").vacuum(retention_s=0)
     assert any(r.startswith("v=") for r in removed)
     assert rows(t) == want

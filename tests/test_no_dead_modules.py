@@ -61,3 +61,34 @@ def test_every_package_module_is_imported():
         if p.name != "__init__.py" and name not in used
     )
     assert not dead, f"modules nothing imports: {dead}"
+
+
+def _config_fields() -> list[str]:
+    tree = ast.parse((ROOT / PKG / "config.py").read_text())
+    (cls,) = [
+        n for n in tree.body
+        if isinstance(n, ast.ClassDef) and n.name == "PipelineConfig"
+    ]
+    return [
+        n.target.id for n in cls.body
+        if isinstance(n, ast.AnnAssign) and isinstance(n.target, ast.Name)
+    ]
+
+
+def test_every_config_field_is_read():
+    """Every PipelineConfig field must be read as an attribute somewhere
+    in the package or the jobs outside config.py itself: a field the
+    engine never reads is an option that changes nothing."""
+    read: set[str] = set()
+    for p in [*(ROOT / PKG).rglob("*.py"), *(ROOT / "jobs").rglob("*.py")]:
+        if p == ROOT / PKG / "config.py":
+            continue
+        read.update(
+            node.attr
+            for node in ast.walk(ast.parse(p.read_text(), str(p)))
+            if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load)
+        )
+    fields = _config_fields()
+    assert "n_buckets" in fields, fields  # the class body was parsed
+    unread = [f for f in fields if f not in read]
+    assert not unread, f"PipelineConfig fields nothing reads: {unread}"

@@ -213,25 +213,26 @@ def test_write_modes_default_auto_and_reject_cow(monkeypatch):
 
 
 def test_jobs_reject_retired_commit_protocol_flag(monkeypatch):
-    """Every table commits through its CAS log: both jobs' parsers
-    reject the retired --commit-protocol flag."""
+    """Every table commits through the CAS log under its own path: both
+    jobs' parsers reject the retired --commit-protocol and --cas-backend
+    flags."""
     from jobs.apply_job import main as apply_main
     from jobs.entity_job import main as entity_main
     from qwatch_spark import session
 
     def no_spark(*a, **kw):
-        raise AssertionError("--commit-protocol got past the parser")
+        raise AssertionError("a retired flag got past the parser")
 
     monkeypatch.setattr(session, "get_spark", no_spark)
-    common = ["--feed-dir", "f", "--checkpoint", "c", "--once",
-              "--commit-protocol", "cas"]
-    for main, extra in (
-        (apply_main, ["--table", "t"]),
-        (entity_main, ["--base", "b", "--entities", "e.yml"]),
-    ):
-        with pytest.raises(SystemExit) as exc:
-            main(common + extra)
-        assert exc.value.code == 2  # argparse usage error
+    common = ["--feed-dir", "f", "--checkpoint", "c", "--once"]
+    for retired in (["--commit-protocol", "cas"], ["--cas-backend", "s3"]):
+        for main, extra in (
+            (apply_main, ["--table", "t"]),
+            (entity_main, ["--base", "b", "--entities", "e.yml"]),
+        ):
+            with pytest.raises(SystemExit) as exc:
+                main(common + retired + extra)
+            assert exc.value.code == 2  # argparse usage error
 
 
 def test_apply_job_cli_end_to_end(spark, tmp_path):

@@ -31,6 +31,38 @@ def test_parquet_sink_roundtrip_and_idempotence(spark, tmp_path):
     assert sink2.read(spark).count() == 2
 
 
+def test_parquet_sink_on_s3_path(spark, tmp_path, monkeypatch):
+    """A dead-letter sink under an `s3://` table goes through the
+    table's object store: `_schema.json` is an object put, Spark
+    writes and reads at `store.spark_path`, and nothing lands in a
+    local relative `s3:/...` directory."""
+    from qwatch_spark.plans.objectstore import DirBackedFakeS3Client, S3Store
+
+    root = tmp_path / "s3"
+    root.mkdir()
+    monkeypatch.setattr(
+        S3Store, "client_factory", lambda: DirBackedFakeS3Client(str(root))
+    )
+    monkeypatch.setattr(
+        S3Store, "spark_path_for", lambda bucket, key: str(root / bucket / key)
+    )
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    sink = ParquetSink("s3://lake/t/dead_letter")
+    sink.ddl(spark, SCHEMA)
+    batch = spark.createDataFrame([("a", 1), ("b", 2)], SCHEMA)
+    sink.append(batch, 0)
+    sink.append(batch, 0)  # redelivery overwrites its own epoch
+    got = sorted(
+        (r["k"], r["n"], r["epoch"])
+        for r in ParquetSink("s3://lake/t/dead_letter").read(spark).collect()
+    )
+    assert got == [("a", 1, 0), ("b", 2, 0)]
+    assert (root / "lake" / "t" / "dead_letter" / "_schema.json").exists()
+    assert not os.path.exists(cwd / "s3:")
+
+
 def test_memory_sink_same_contract(spark):
     sink = MemorySink()
     assert isinstance(sink, Sink)

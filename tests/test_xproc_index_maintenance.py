@@ -14,6 +14,7 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 from pyspark.sql import functions as F
 
@@ -50,7 +51,15 @@ def test_two_process_append_vs_maintain_exactly_once(spark, tmp_path):
             stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, env=env,
         ),
     ]
-    open(barrier, "w").close()  # both JVMs warm: start the race
+    # start the race only once both JVMs are warm: under load one can
+    # come up many seconds after the other, and a maintainer that ran
+    # its cycles alone leaves the armed batch nothing to observe
+    deadline = time.monotonic() + 300
+    while not all(os.path.exists(f"{barrier}.{r}") for r in ("append", "maintain")):
+        assert all(p.poll() is None for p in procs), "a worker died at startup"
+        assert time.monotonic() < deadline, "workers never came up"
+        time.sleep(0.1)
+    open(barrier, "w").close()
     results = {}
     for p in procs:
         out, _ = p.communicate(timeout=420)
@@ -59,6 +68,9 @@ def test_two_process_append_vs_maintain_exactly_once(spark, tmp_path):
         assert p.returncode == 0, r
         results[r["role"]] = r
     assert results["append"]["applied"] == N_BATCHES, results
+    assert results["append"]["armed_swap_seen"], (
+        f"the armed batch's check never saw a swap ({results})"
+    )
     assert results["maintain"]["maintains"] >= 1, results
     total_conflicts = (
         results["append"]["conflicts"] + results["maintain"]["conflicts"]

@@ -2,7 +2,7 @@
 race test drove the protocol with threads or fakes inside one process;
 this one launches two real OS processes (separate JVMs, separate Python
 interpreters — no shared locks, no shared Spark session) applying
-interleaved epochs to ONE localfs-backend CAS table, with the
+interleaved epochs to ONE local CAS-committed table, with the
 rebase-and-retry loop a production writer runs. Gates: the final table
 state equals the single-writer oracle (no lost commits, no duplicated
 rows), the commit log is a gap-free mutation sequence, and at least one
@@ -13,6 +13,7 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 from qwatch_spark.config import PipelineConfig
 from qwatch_spark.operators.apply import apply_changes
@@ -48,7 +49,14 @@ def test_two_process_writers_match_single_writer_oracle(spark, tmp_path):
         )
         for w in (0, 1)
     ]
-    open(barrier, "w").close()  # both JVMs warm: start the race
+    # start the race only once both JVMs are warm: under load one can
+    # come up many seconds after the other and finish unopposed
+    deadline = time.monotonic() + 300
+    while not all(os.path.exists(f"{barrier}.{w}") for w in (0, 1)):
+        assert all(p.poll() is None for p in procs), "a worker died at startup"
+        assert time.monotonic() < deadline, "workers never came up"
+        time.sleep(0.1)
+    open(barrier, "w").close()
     results = []
     for p in procs:
         out, _ = p.communicate(timeout=420)
@@ -84,5 +92,5 @@ def test_two_process_writers_match_single_writer_oracle(spark, tmp_path):
     assert state(spark, racy) == state(spark, SnapshotTable(oracle_path))
     # every epoch landed exactly once; the commit log is gap-free
     assert all(racy.has_epoch(e) for e in range(2 * N_EPOCHS))
-    logged = racy.commit_log_backend().slots()
+    logged = racy.log.slots()
     assert logged == list(range(racy._manifest["mutation"] + 1))
