@@ -2,6 +2,7 @@
 SnapshotTable with exactly-once semantics.
 
 Usage (cluster):
+    python scripts/make_pyfiles.py  # builds dist/qwatch_spark.zip from the tree
     spark-submit --py-files dist/qwatch_spark.zip jobs/apply_job.py \
         --feed-dir s3://bucket/feed --table s3://bucket/table \
         --checkpoint s3://bucket/ckpt [--config pipeline.json] \

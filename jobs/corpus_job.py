@@ -15,6 +15,7 @@ operators, end to end:
                 corpus/stats.json (per-stage survival counts)
 
 Usage (cluster):
+    python scripts/make_pyfiles.py  # builds dist/qwatch_spark.zip from the tree
     spark-submit --py-files dist/qwatch_spark.zip jobs/corpus_job.py \
         --documents s3://bucket/documents.parquet --out s3://bucket/corpus \
         --seq-len 2048 --rates en=0.5,de=0.25 --default-rate 0.1
@@ -75,8 +76,14 @@ def main(argv: list[str] | None = None) -> int:
         stratified_sample,
     )
     from qwatch_spark.operators.textstats import lang_pred_expr, quality_exprs
+    from qwatch_spark.plans.objectstore import store_for
     from qwatch_spark.session import get_spark
 
+    # every output byte goes through --out's object store: the stats
+    # object is a put, Spark writes at store.spark_path
+    store = store_for(args.out)
+    if store is None:
+        raise ValueError(f"no object store client for {args.out!r}")
     spark = get_spark(master=args.master) if args.master else get_spark()
     stats: dict[str, int] = {}
 
@@ -141,14 +148,14 @@ def main(argv: list[str] | None = None) -> int:
     out_docs = docs.join(placed, "doc_id")
     spans = pack_chunk_spans(placed, seq_len=args.seq_len)
 
-    os.makedirs(args.out, exist_ok=True)
-    out_docs.write.mode("overwrite").parquet(os.path.join(args.out, "docs.parquet"))
-    spans.write.mode("overwrite").parquet(os.path.join(args.out, "spans.parquet"))
+    out_docs.write.mode("overwrite").parquet(
+        store.spark_path(os.path.join(args.out, "docs.parquet")))
+    spans.write.mode("overwrite").parquet(
+        store.spark_path(os.path.join(args.out, "spans.parquet")))
     total_tok = placed.agg(F.sum("n_tok").cast("long").alias("t")).first()["t"] or 0
     stats["total_tokens"] = int(total_tok)
     stats["n_chunks"] = int((total_tok + args.seq_len - 1) // args.seq_len)
-    with open(os.path.join(args.out, "stats.json"), "w") as fh:
-        json.dump(stats, fh, indent=2)
+    store.put(os.path.join(args.out, "stats.json"), json.dumps(stats, indent=2).encode())
     print(json.dumps(stats))
     return 0
 

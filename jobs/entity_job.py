@@ -2,6 +2,7 @@
 apply it to per-entity SnapshotTables with exactly-once semantics.
 
 Usage:
+    python scripts/make_pyfiles.py  # builds dist/qwatch_spark.zip from the tree
     spark-submit --py-files dist/qwatch_spark.zip jobs/entity_job.py \
         --feed-dir s3://bucket/feed --base s3://bucket/tables \
         --checkpoint s3://bucket/ckpt --entities graph.yml \

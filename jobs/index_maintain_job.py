@@ -18,6 +18,7 @@ but the single-owner deployment is the supported shape (same contract
 as the table maintenance loop).
 
 Usage (cluster):
+    python scripts/make_pyfiles.py  # builds dist/qwatch_spark.zip from the tree
     spark-submit --py-files dist/qwatch_spark.zip \
         jobs/index_maintain_job.py --ivf s3://bucket/ivf_idx \
         [--lsh s3://bucket/lsh_idx] [--target-cell-rows N] \

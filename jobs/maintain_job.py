@@ -4,6 +4,7 @@ commits through its CAS log, so a lost commit race aborts cleanly and
 retries next cycle (see qwatch_spark/plans/maintenance.py).
 
 Usage (cluster):
+    python scripts/make_pyfiles.py  # builds dist/qwatch_spark.zip from the tree
     spark-submit --py-files dist/qwatch_spark.zip jobs/maintain_job.py \
         --table s3://bucket/table [--max-deltas 8] [--max-delta-bytes N] \
         [--vacuum-retention 600] [--once | --interval 300]

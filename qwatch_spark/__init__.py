@@ -16,6 +16,10 @@ SURVEY.md), re-expressed Spark-first:
 
 __version__ = "0.2.0"
 
+# first: inside a Spark Python worker, stops every task from re-reading
+# each zip archive on the worker's path (see zipimport_gate)
+from qwatch_spark import zipimport_gate  # noqa: F401
+
 from qwatch_spark.config import PipelineConfig  # noqa: F401
 from qwatch_spark.operators.apply import apply_changes, replay_feed  # noqa: F401
 from qwatch_spark.operators.dedup import latest_wins  # noqa: F401

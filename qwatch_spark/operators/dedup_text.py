@@ -518,24 +518,30 @@ def connected_components(
     storage every executor can read (the table's filesystem, an
     object-store prefix). The default — a driver-local tempdir — is
     only correct on local[*]; a multi-node run that leaves it unset
-    would scatter round files across executor-local disks. Cleanup is
-    best-effort (POSIX rmtree); an object-store work_dir should carry
-    a lifecycle/TTL rule for the `cc-*` prefixes.
+    would scatter round files across executor-local disks. The rounds
+    live in `work_dir`'s object store (`objectstore.store_for`): Spark
+    writes them at `store.spark_path`, and `store.delete_tree` removes
+    them. A run that dies between rounds leaves its `cc-*` prefix
+    behind: an object-store work_dir should carry a lifecycle/TTL rule
+    for those prefixes.
 
     Returns (node, component) with component = min node id reachable.
     """
-    import shutil
     import tempfile
     import uuid
 
+    from qwatch_spark.plans.objectstore import store_for
+
     spark = pairs.sparkSession
-    own_dir = work_dir is None
-    ckdir = tempfile.mkdtemp(prefix="qwatch_cc_") if own_dir else (
+    ckdir = tempfile.mkdtemp(prefix="qwatch_cc_") if work_dir is None else (
         f"{work_dir.rstrip('/')}/cc-{uuid.uuid4().hex}"
     )
+    store = store_for(ckdir)
+    if store is None:
+        raise ValueError(f"no object store client for {work_dir!r}")
 
     def materialize(df: DataFrame) -> DataFrame:
-        p = f"{ckdir}/{uuid.uuid4().hex}"
+        p = store.spark_path(f"{ckdir}/{uuid.uuid4().hex}")
         df.write.parquet(p)
         return spark.read.parquet(p)
 
@@ -623,9 +629,9 @@ def connected_components(
         if changed == 0:
             # final result must survive the temp-dir cleanup below
             out = labels.localCheckpoint(eager=True)
-            shutil.rmtree(ckdir, ignore_errors=True)
+            store.delete_tree(ckdir)
             return out
-    shutil.rmtree(ckdir, ignore_errors=True)
+    store.delete_tree(ckdir)
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
         "raise max_iter (component diameter exceeds it)"

@@ -4,6 +4,7 @@ per-language subset, packing covers every surviving token, and a
 re-run reproduces the corpus bit-for-bit."""
 
 import json
+import os
 import random
 
 from qwatch_spark.session import get_spark  # noqa: F401 (session fixture owns it)
@@ -90,3 +91,37 @@ def test_corpus_job_end_to_end(spark, tmp_path):
     a = sorted(map(tuple, out_docs.collect()))
     b = sorted(map(tuple, out_docs2.collect()))
     assert a == b
+
+
+def test_corpus_job_on_s3_out(spark, tmp_path, monkeypatch):
+    """`--out s3://...` goes through the output's object store: stats.json
+    is an object put, Spark writes the corpus (and the components
+    rounds) at `store.spark_path`, and nothing lands in a local relative
+    `s3:/...` directory."""
+    from jobs.corpus_job import main
+    from qwatch_spark.plans.objectstore import DirBackedFakeS3Client, S3Store, store_for
+
+    root = tmp_path / "s3"
+    root.mkdir()
+    monkeypatch.setattr(
+        S3Store, "client_factory", lambda: DirBackedFakeS3Client(str(root))
+    )
+    monkeypatch.setattr(
+        S3Store, "spark_path_for", lambda bucket, key: str(root / bucket / key)
+    )
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    src = str(tmp_path / "docs.parquet")
+    make_docs(spark).write.parquet(src)
+    assert main([
+        "--documents", src, "--out", "s3://lake/corpus", "--seq-len", "128",
+        "--jaccard", "0.8",
+    ]) == 0
+    store = store_for("s3://lake/corpus")
+    stats = json.loads(store.get("s3://lake/corpus/stats.json"))
+    docs = spark.read.parquet(store.spark_path("s3://lake/corpus/docs.parquet"))
+    assert docs.count() == stats["after_mix"] > 0
+    assert not os.path.exists(cwd / "s3:")
+    # the components rounds were deleted through the store
+    assert store.list_tree("s3://lake/corpus/_cc_work") == []

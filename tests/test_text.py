@@ -16,6 +16,16 @@ GOLDEN = [
     (b"  \n\t spaced \n ", "spaced"),
     (b"<html>\xff\xfe bad utf8</html>", "�� bad utf8"),
     (b"", ""),
+    # unicode whitespace: NBSP, ideographic space, file separator
+    ("a\xa0b\u3000c\x1cd\xa0".encode(), "a b c d"),
+    (b"x<ScRiPt>hidden()</sCrIpT>y", "x y"),
+    # `\b`: <scripts> is an ordinary tag, its body stays
+    (b"<scripts>kept</scripts>", "kept"),
+    (b"a<script>hidden()</script >b", "a b"),
+    # an unclosed script is no script block: only its tag goes
+    (b"a<script>var x = 1", "a var x = 1"),
+    # the script block ends at its own close tag, not the style's
+    (b"a<script>s<style>p{}</style>t</script>b", "a b"),
     (None, None),
 ]
 
@@ -45,6 +55,15 @@ def test_spark_udf_byte_identical_per_url(spark):
         want = extract_text_bytes(row["html"])
         assert got[row["seq"]] == want
         assert got[row["seq"]].encode("utf-8") == want.encode("utf-8")
+
+
+def test_spark_udf_matches_golden(spark):
+    df = spark.createDataFrame(
+        [(i, g[0]) for i, g in enumerate(GOLDEN)], "i int, html binary"
+    )
+    rows = df.select("i", extract_text_udf("html").alias("t")).collect()
+    got = {r["i"]: r["t"] for r in rows}
+    assert [got[i] for i in range(len(GOLDEN))] == [g[1] for g in GOLDEN]
 
 
 def test_winnowing_match_guarantee(spark):
