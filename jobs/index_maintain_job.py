@@ -70,32 +70,32 @@ def main(argv: list[str] | None = None) -> int:
     preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark(app_name="qwatch_index_maintain", master=args.master)
 
+    def recluster(path: str) -> dict:
+        return ivf_maintain(
+            spark, path,
+            target_cell_rows=args.target_cell_rows,
+            lloyd_iters=args.lloyd_iters,
+        )
+
+    kinds = (
+        ("ivf", args.ivf, recluster, ivf_vacuum),
+        ("lsh", args.lsh, lambda path: lsh_maintain(spark, path), lsh_vacuum),
+    )
+
     def cycle() -> dict:
-        out: dict = {"ivf": {}, "lsh": {}}
-        for path in args.ivf:
-            try:
-                res = ivf_maintain(
-                    spark, path,
-                    target_cell_rows=args.target_cell_rows,
-                    lloyd_iters=args.lloyd_iters,
-                )
-            except IndexConflictError:
-                res = {"lost_race": True}  # rebase next cycle
-            if not args.no_vacuum:
-                res["vacuumed"] = len(
-                    ivf_vacuum(path, retention_s=args.vacuum_retention)
-                )
-            out["ivf"][path] = res
-        for path in args.lsh:
-            try:
-                res = lsh_maintain(spark, path)
-            except IndexConflictError:
-                res = {"lost_race": True}
-            if not args.no_vacuum:
-                res["vacuumed"] = len(
-                    lsh_vacuum(path, retention_s=args.vacuum_retention)
-                )
-            out["lsh"][path] = res
+        out: dict = {}
+        for kind, paths, maintain, vacuum in kinds:
+            out[kind] = {}
+            for path in paths:
+                try:
+                    res = maintain(path)
+                except IndexConflictError:
+                    res = {"lost_race": True}  # rebase next cycle
+                if not args.no_vacuum:
+                    res["vacuumed"] = len(
+                        vacuum(path, retention_s=args.vacuum_retention)
+                    )
+                out[kind][path] = res
         return out
 
     results = []

@@ -38,7 +38,12 @@ from pyspark.sql import functions as F
 from qwatch_spark.config import PipelineConfig
 from qwatch_spark.operators.evolution import resolve_schema
 from qwatch_spark.operators.rules import FP_COL, apply_rules
-from qwatch_spark.plans.snapshot_table import SnapshotTable, _ziso, bucket_expr
+from qwatch_spark.plans.snapshot_table import (
+    SnapshotTable,
+    _bucket_files,
+    _ziso,
+    bucket_expr,
+)
 
 log = logging.getLogger(__name__)
 
@@ -112,20 +117,6 @@ def _maybe_append_fp_segment(
         [man.get("epoch_watermark", -1), *man.get("applied_epochs", [-1])]
     )
     idx.merge_small_segments(committed, max_files=cfg.fp_merge_segments)
-
-
-def _bucket_files(out: str, listing) -> dict[int, list[str]]:
-    """{bucket: [parquet paths]} of an epoch dir's `b=<k>` subdirs, from
-    ONE tree listing of it (~1000 keys per object-store LIST round-trip
-    — per-bucket LISTs would pay one round-trip per touched bucket).
-    Its keys are the epoch's touched buckets, and the same mapping feeds
-    `_delta_footer_stats`, so a commit LISTs its epoch dir once."""
-    files: dict[int, list[str]] = {}
-    for rel, _size, _mt in listing:
-        bdir, _, name = rel.rpartition("/")
-        if bdir.startswith("b=") and name.endswith(".parquet"):
-            files.setdefault(int(bdir[2:]), []).append(f"{out.rstrip('/')}/{rel}")
-    return files
 
 
 def _delta_footer_stats(

@@ -32,7 +32,6 @@ from __future__ import annotations
 import fnmatch
 import hashlib
 import json
-import os
 import uuid
 
 import numpy as np
@@ -436,7 +435,7 @@ def _ivf_codebook(
             "(expected 'first_ids' or 'uniform')"
         )
     dim = len(seeds[0][1])
-    assign = _assign_literal if n_cells * dim <= max_literals else _assign_pandas
+    assign = _assigner(seeds, max_literals)
 
     for _ in range(lloyd_iters):
         assigned = assign(vectors, seeds, id_col, vec_col)
@@ -508,98 +507,83 @@ def ivf_topk(
     return scored.orderBy(F.desc("cosine"), id_col).limit(k)
 
 
-def _local_index_dir(path: str) -> str | None:
-    """The plain-filesystem path for `path` when the index lives on the
-    local store, else None (remote stores keep the Spark paths)."""
-    from qwatch_spark.plans.objectstore import LocalStore
-
-    return path if isinstance(_idx_fs(path), LocalStore) else None
+# `_seeds` (IVF) and `_params` (LSH) are bounded metadata tables, one
+# parquet object each at this fixed key under their dir
+_META_KEY = "part-00000.parquet"
 
 
-def _read_seed_rows(spark, data: str, vec_col: str) -> list[tuple[int, list[float]]]:
-    """The `_seeds` snapshot as [(cell, vector), ...] in cell order.
-    Bounded metadata (n_cells rows), read driver-side with pyarrow when
-    the index is local — every probe was paying a whole Spark job for a
-    45-row file (r9 optimization: probe fixed cost, guide §1/§5); remote
-    stores keep the Spark read (the same bytes through `_sp`)."""
-    local = _local_index_dir(data)
-    if local is not None:
-        import glob
-
-        import pyarrow.parquet as pq
-
-        files = sorted(glob.glob(os.path.join(local, "_seeds", "*.parquet")))
-        if files:
-            rows: list[tuple[int, list[float]]] = []
-            for f in files:
-                t = pq.read_table(f, columns=["cell", vec_col])
-                cells = t.column("cell").to_pylist()
-                vecs = t.column(vec_col).to_pylist()
-                rows.extend(
-                    (int(c), [float(x) for x in v])
-                    for c, v in zip(cells, vecs)
-                )
-            return sorted(rows)
-    rows_df = spark.read.parquet(_sp(f"{data}/_seeds")).collect()
-    return sorted(
-        (int(r["cell"]), [float(x) for x in r[vec_col]]) for r in rows_df
-    )
-
-
-def _write_seed_rows(
-    spark, seeds: list[tuple[int, list]], data: str, vec_col: str
-) -> None:
-    """Persist the codebook snapshot to `data/_seeds`. Local indexes
-    write the (bounded, n_cells-row) file driver-side with pyarrow —
-    the Spark `createDataFrame().coalesce(1).write` it replaces was a
-    whole job per build/maintain; remote stores keep the Spark write.
-    Byte compatibility: int64 `cell` + list<double> vector, the exact
-    logical types the Spark write produced, so every reader (Spark scan
-    or the pyarrow fast path above) sees identical values."""
-    local = _local_index_dir(data)
-    if local is not None:
-        import shutil as _shutil
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        d = os.path.join(local, "_seeds")
-        _shutil.rmtree(d, ignore_errors=True)  # mode("overwrite") parity
-        os.makedirs(d, exist_ok=True)
-        t = pa.table(
-            {
-                "cell": pa.array([int(c) for c, _ in seeds], pa.int64()),
-                vec_col: pa.array(
-                    [[float(x) for x in v] for _, v in seeds],
-                    pa.list_(pa.float64()),
-                ),
-            }
-        )
-        pq.write_table(t, os.path.join(d, "part-00000.parquet"))
-        return
-    seed_df = spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in seeds],
-        f"cell bigint, {vec_col} array<double>",
-    )
-    seed_df.coalesce(1).write.mode("overwrite").parquet(_sp(f"{data}/_seeds"))
-
-
-def _local_parquet_rows(paths: list[str]) -> int | None:
-    """Exact row count from parquet FOOTERS for local files — replaces a
-    full Spark count job over the index (metadata only, microseconds per
-    file); None when any path is not locally readable (remote fakes),
-    which sends the caller back to the Spark count."""
+def _put_meta(d: str, columns: dict) -> None:
+    """Write the metadata table `columns` ({name: pyarrow array}) as ONE
+    parquet object at `d/part-00000.parquet` — one store put, no Spark
+    job; the put is atomic, so a reader sees the old table or the new
+    one."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    total = 0
-    for p in paths:
-        if not os.path.isfile(p):
-            return None
-        try:
-            total += pq.ParquetFile(p).metadata.num_rows
-        except Exception:  # noqa: BLE001 - any unreadable footer → Spark
-            return None
-    return total
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.table(columns), buf)
+    _idx_fs(d).put(f"{d}/{_META_KEY}", buf.getvalue().to_pybytes())
+
+
+def _get_meta(d: str, columns: list[str]) -> list[dict]:
+    """Rows of the metadata table at `d`: ONE GET of the fixed key. An
+    index the old Spark writer built holds `part-<uuid>` names there
+    instead, so only a missing key lists the dir (Spark's hidden-file
+    rule: no `_`/`.` names). [] when the dir holds no table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = _idx_fs(d)
+    blobs = [store.get(f"{d}/{_META_KEY}")]
+    if blobs[0] is None:
+        blobs = [
+            store.get(f"{d}/{rel}")
+            for rel, _size, _mt in store.list_tree(d)
+            if "/" not in rel
+            and rel.endswith(".parquet")
+            and not rel.startswith(("_", "."))
+        ]
+    rows: list[dict] = []
+    for b in blobs:
+        if b is not None:
+            # ParquetFile, not pq.read_table: the dataset reader's
+            # thread pool aborts the interpreter at exit (pyarrow 16)
+            rows += pq.ParquetFile(pa.BufferReader(b)).read(columns).to_pylist()
+    return rows
+
+
+def _read_seed_rows(data: str, vec_col: str) -> list[tuple[int, list[float]]]:
+    """The `_seeds` snapshot as [(cell, vector), ...] in cell order."""
+    return sorted(
+        (r["cell"], r[vec_col])
+        for r in _get_meta(f"{data.rstrip('/')}/_seeds", ["cell", vec_col])
+    )
+
+
+def _write_seed_rows(seeds: list[tuple[int, list]], data: str, vec_col: str) -> None:
+    """Persist the codebook snapshot to `data/_seeds`: int64 `cell` +
+    list<double> vector, the logical types the Spark writer of older
+    indexes produced, so both generations read back identically."""
+    import pyarrow as pa
+
+    _put_meta(
+        f"{data.rstrip('/')}/_seeds",
+        {
+            "cell": pa.array([int(c) for c, _ in seeds], pa.int64()),
+            vec_col: pa.array(
+                [[float(x) for x in v] for _, v in seeds], pa.list_(pa.float64())
+            ),
+        },
+    )
+
+
+def _assigner(seeds: list[tuple[int, list]], max_literals: int):
+    """The cell-assign function for codebook `seeds`: literal argmax
+    while n_cells × dim ≤ `max_literals` (decimal-exact, SQL-oracle
+    reproducible), the pandas-UDF argmax above it (see `ivf_assign`)."""
+    if len(seeds) * len(seeds[0][1]) <= max_literals:
+        return _assign_literal
+    return _assign_pandas
 
 
 def _guard_fresh_build(path: str, fn: str, maintain_fn: str) -> None:
@@ -635,13 +619,14 @@ def ivf_build_index(
     the physical form that makes probes partition-pruned reads instead
     of full scans (SCALING.md's 10⁹-vector path). Layout:
 
-        path/cell=<c>/part-*.parquet   (id, embedding)
-        path/_seeds/part-*.parquet     (cell, embedding)
+        path/cell=<c>/part-*.parquet     (id, embedding)
+        path/_seeds/part-00000.parquet   (cell, embedding)
 
     The seed snapshot makes probe-cell selection a driver-side numpy
-    argmax over n_cells rows — zero jobs over the corpus at query time.
-    `_seeds` is underscore-prefixed, so Spark's directory listing hides
-    it from index reads automatically."""
+    argmax over n_cells rows — zero jobs at query time: `_seeds` is one
+    store object, written with one put and read with one GET. It is
+    underscore-prefixed, so Spark's directory listing hides it from
+    index reads automatically."""
     _guard_fresh_build(path, "ivf_build_index", "ivf_maintain")
     seeds, assign = _ivf_codebook(
         vectors, n_cells, id_col, vec_col, max_literals, lloyd_iters,
@@ -659,7 +644,7 @@ def ivf_build_index(
     # those, not the original seed vectors: probe cell selection and
     # incremental appends quantize against `_seeds`, and a mismatched
     # quantizer silently degrades recall
-    _write_seed_rows(vectors.sparkSession, seeds, path, vec_col)
+    _write_seed_rows(seeds, path, vec_col)
 
 
 def ivf_params_for(
@@ -714,7 +699,7 @@ def ivf_probe_topk(
     `exclude_id` to drop a known corpus row (self-match)."""
     q = np.asarray(query_vec, dtype=np.float64)
     data, _v = _idx_current(path)
-    seed_rows = _read_seed_rows(spark, data, vec_col)
+    seed_rows = _read_seed_rows(data, vec_col)
     if not seed_rows:
         raise ValueError(f"IVF index at {path} has no seeds")
     cells = np.asarray([c for c, _ in seed_rows], dtype=np.int64)
@@ -818,7 +803,7 @@ def ivf_probe_topk_batch(
     empty = _batch_probe_guard(spark, data, queries, max_batch, id_col)
     if empty is not None:
         return empty
-    seed_rows = _read_seed_rows(spark, data, vec_col)
+    seed_rows = _read_seed_rows(data, vec_col)
     if not seed_rows:
         raise ValueError(f"IVF index at {path} has no seeds")
     cells = np.asarray([c for c, _ in seed_rows], dtype=np.int64)
@@ -874,6 +859,9 @@ def ivf_probe_topk_batch(
     )
 
 
+_LSH_PARAMS = ("n_planes", "n_bands", "dim", "seed")  # the `_params` columns
+
+
 def lsh_build_index(
     vectors: DataFrame,
     path: str,
@@ -893,7 +881,7 @@ def lsh_build_index(
     lands in. Layout:
 
         path/band=<b>/bucket=<k>/part-*.parquet   (id, embedding)
-        path/_params/part-*.parquet   (n_planes, n_bands, dim, seed)
+        path/_params/part-00000.parquet   (n_planes, n_bands, dim, seed)
 
     One row per (vector, band) — the L hash tables of classic LSH, so
     the index footprint is n_bands × the corpus: the standard LSH
@@ -905,7 +893,9 @@ def lsh_build_index(
     before reaching for write-side salting. `_params` persists the
     hyperplane parameters; probes and appends MUST hash with them (a
     re-derived quantizer silently degrades recall — same invariant as
-    the IVF `_seeds` snapshot)."""
+    the IVF `_seeds` snapshot); like `_seeds` it is one store object."""
+    import pyarrow as pa
+
     _guard_fresh_build(path, "lsh_build_index", "lsh_maintain")
     bucketed = lsh_rand_buckets(
         vectors, n_planes, n_bands, dim, seed, id_col, vec_col
@@ -916,46 +906,24 @@ def lsh_build_index(
         .partitionBy("band", "bucket")
         .parquet(_sp(path))
     )
-    params = vectors.sparkSession.createDataFrame(
-        [(n_planes, n_bands, dim, seed)],
-        "n_planes int, n_bands int, dim int, seed int",
+    _put_meta(
+        f"{path.rstrip('/')}/_params",
+        {
+            k: pa.array([int(v)], pa.int32())
+            for k, v in zip(_LSH_PARAMS, (n_planes, n_bands, dim, seed))
+        },
     )
-    params.coalesce(1).write.mode("overwrite").parquet(_sp(f"{path}/_params"))
-    _LSH_PARAMS_CACHE[path] = (_params_stamp(path), (n_planes, n_bands, dim, seed))
-
-
-# _params is write-once per index build (appends never change it), so
-# probes cache it per path instead of paying a read job per query. The
-# entry is validated against the _params directory's mtime stamp before
-# every use: a rebuild at the same path by ANOTHER process (or a reused
-# path) rewrites the directory and bumps the stamp, so a stale cache
-# can never hash with dead hyperplane params — the silent-recall-loss
-# mode the module docstrings warn about. Remote paths (no os.stat)
-# stamp as -1 and fall back to trusting a present entry: there the
-# single-driver-ownership assumption of lsh_build_index applies.
-_LSH_PARAMS_CACHE: dict[str, tuple[int, tuple]] = {}
-
-
-def _params_stamp(path: str) -> int:
-    try:
-        return os.stat(os.path.join(path, "_params")).st_mtime_ns
-    except OSError:  # remote URI or params not yet written
-        return -1
 
 
 def _lsh_index_params(spark, path: str) -> tuple:
-    """(n_planes, n_bands, dim, seed) for the index at `path`."""
-    stamp = _params_stamp(path)
-    cached = _LSH_PARAMS_CACHE.get(path)
-    if cached is not None and (stamp == -1 or cached[0] == stamp):
-        return cached[1]
-    rows = spark.read.parquet(_sp(f"{path}/_params")).collect()
+    """(n_planes, n_bands, dim, seed) for the index at `path`: one GET of
+    `_params` per call, uncached — a rebuild at the same path by any
+    process is seen by the next probe. `spark` is unused (the read is
+    driver-side)."""
+    rows = _get_meta(f"{path.rstrip('/')}/_params", list(_LSH_PARAMS))
     if not rows:
         raise ValueError(f"LSH index at {path} has no _params")
-    r = rows[0]
-    out = (int(r["n_planes"]), int(r["n_bands"]), int(r["dim"]), int(r["seed"]))
-    _LSH_PARAMS_CACHE[path] = (stamp, out)
-    return out
+    return tuple(rows[0][k] for k in _LSH_PARAMS)
 
 
 def lsh_index_append(
@@ -977,43 +945,21 @@ def lsh_index_append(
     against the current index on (id, band) — id alone would be wrong:
     a torn append can land HALF its band files inside the maintainer's
     pinned snapshot, and an id-level dedup would then permanently drop
-    the missing bands (silent recall loss)."""
-    spark = new_vectors.sparkSession
-    n_planes, n_bands, dim, seed = _lsh_index_params(spark, path)
-    # dedup retries serialize behind an in-progress fold (write-skew
-    # guard, same as ivf_index_append — see _wait_no_fold)
-    data, v0 = (
-        _wait_no_fold(path, fold_wait_timeout_s)
-        if dedup_against_index
-        else _idx_current(path)
+    the missing bands (silent recall loss). The sequence is
+    `_append_current`'s."""
+    n_planes, n_bands, dim, seed = _lsh_index_params(new_vectors.sparkSession, path)
+    return _append_current(
+        path,
+        "lsh_index_append",
+        "compaction",
+        [id_col, "band"],
+        ["band", "bucket"],
+        lambda _data: lsh_rand_buckets(
+            new_vectors, n_planes, n_bands, dim, seed, id_col, vec_col
+        ),
+        dedup_against_index,
+        fold_wait_timeout_s,
     )
-    bucketed = lsh_rand_buckets(
-        new_vectors, n_planes, n_bands, dim, seed, id_col, vec_col
-    )
-    if dedup_against_index:
-        bucketed = bucketed.join(
-            spark.read.parquet(_sp(data)).select(id_col, "band"),
-            [id_col, "band"],
-            "left_anti",
-        )
-    n = bucketed.count()
-    if n:
-        (
-            bucketed.repartition("band", "bucket")
-            .write.mode("append")
-            .partitionBy("band", "bucket")
-            .parquet(_sp(data))
-        )
-    if n and _idx_current(path)[1] != v0:
-        # zero-row appends (a dedup retry fully covered by the fold)
-        # wrote nothing and cannot lose anything — see ivf_index_append
-        raise IndexConflictError(
-            f"lsh_index_append({path}): a compaction swap superseded "
-            f"version {v0} mid-append — retry with "
-            "dedup_against_index=True (the maintainer may have carried "
-            "part of this batch forward already)"
-        )
-    return int(n)
 
 
 def _lsh_query_buckets(
@@ -1455,6 +1401,73 @@ def _wait_no_fold(path: str, timeout_s: float = 600.0) -> tuple[str, int]:
         _time.sleep(0.05)
 
 
+def _append_current(
+    path: str,
+    fn: str,
+    swap: str,
+    keys: list[str],
+    partition_cols: list[str],
+    rows_for,
+    dedup_against_index: bool,
+    fold_wait_timeout_s: float,
+) -> int:
+    """The append half of the versioned-pointer protocol, shared by
+    `ivf_index_append` and `lsh_index_append`; `fn` (the caller) and
+    `swap` (the maintenance that can supersede it) name them in the
+    conflict message.
+
+      - resolve the CURRENT version dir — a dedup retry first waits out
+        any in-progress post-swap fold (`_wait_no_fold`): its anti-join
+        and the fold's would otherwise race (write skew — both read
+        before either writes, both insert the same rows);
+      - `rows_for(data)` turns the batch into index rows against that
+        version (IVF: assign against its `_seeds`; LSH: hash with the
+        root `_params`); a dedup retry anti-joins them on the index
+        keys `keys` ([id] for IVF, [id, band] for LSH — see
+        `lsh_index_append` for why band);
+      - append them `partitionBy(partition_cols)` into that dir;
+      - post-write version check: if a maintenance swap landed
+        meanwhile, the rows went into the superseded version, so raise
+        the typed `IndexConflictError` — retry with
+        `dedup_against_index=True`. Zero rows written cannot lose
+        anything — the common shape of a dedup retry whose rows the
+        maintainer's fold already carried; returning cleanly is what
+        makes retry-under-repeated-swaps terminate (each retry only
+        rewrites the still-missing rows, monotonically shrinking).
+
+    `_idx_current` is called through the module global at entry (by
+    `_wait_no_fold`'s polls on a retry) and once post-write. Returns
+    the number of rows written."""
+    data, v0 = (
+        _wait_no_fold(path, fold_wait_timeout_s)
+        if dedup_against_index
+        else _idx_current(path)
+    )
+    rows = rows_for(data)
+    if dedup_against_index:
+        rows = rows.join(
+            rows.sparkSession.read.parquet(_sp(data)).select(*keys),
+            keys,
+            "left_anti",
+        )
+    n = rows.count()
+    if n:
+        (
+            rows.repartition(*partition_cols)
+            .write.mode("append")
+            .partitionBy(*partition_cols)
+            .parquet(_sp(data))
+        )
+    if n and _idx_current(path)[1] != v0:
+        raise IndexConflictError(
+            f"{fn}({path}): a {swap} swap superseded version {v0} "
+            "mid-append — retry with dedup_against_index=True (the "
+            "maintainer may have carried part of this batch forward "
+            "already)"
+        )
+    return int(n)
+
+
 def ivf_index_append(
     vectors: DataFrame,
     path: str,
@@ -1485,50 +1498,25 @@ def ivf_index_append(
     version (its pinned snapshot or its post-swap delta fold), so a
     blind re-append could duplicate; the flag anti-joins the batch
     against the current index's ids first (one id-column scan — paid
-    only on the rare conflict path, keeping the normal append O(batch))."""
-    spark = vectors.sparkSession
-    # a dedup retry must serialize behind any in-progress post-swap
-    # fold: its anti-join and the fold's anti-join would otherwise race
-    # (write skew — both read before either writes, both insert the
-    # same ids); see _wait_no_fold
-    data, v0 = (
-        _wait_no_fold(path, fold_wait_timeout_s)
-        if dedup_against_index
-        else _idx_current(path)
+    only on the rare conflict path, keeping the normal append O(batch)).
+    The sequence is `_append_current`'s."""
+
+    def assigned(data: str) -> DataFrame:
+        seeds = _read_seed_rows(data, vec_col)
+        if not seeds:
+            raise ValueError(f"IVF index at {path} has no seeds")
+        return _assigner(seeds, max_literals)(vectors, seeds, id_col, vec_col)
+
+    return _append_current(
+        path,
+        "ivf_index_append",
+        "maintenance",
+        [id_col],
+        ["cell"],
+        assigned,
+        dedup_against_index,
+        fold_wait_timeout_s,
     )
-    seeds = _read_seed_rows(spark, data, vec_col)
-    if not seeds:
-        raise ValueError(f"IVF index at {path} has no seeds")
-    dim = len(seeds[0][1])
-    assign = (
-        _assign_literal if len(seeds) * dim <= max_literals else _assign_pandas
-    )
-    if dedup_against_index:
-        vectors = vectors.join(
-            spark.read.parquet(_sp(data)).select(id_col), id_col, "left_anti"
-        )
-    assigned = assign(vectors, seeds, id_col, vec_col)
-    n = assigned.count()
-    if n:
-        (
-            assigned.repartition(len(seeds), "cell")
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(_sp(data))
-        )
-    if n and _idx_current(path)[1] != v0:
-        # n == 0 wrote nothing, so a concurrent swap cannot have lost
-        # anything — the common shape of a dedup retry whose rows the
-        # maintainer's fold already carried; returning cleanly is what
-        # makes retry-under-repeated-swaps terminate (each retry only
-        # rewrites the still-missing rows, monotonically shrinking)
-        raise IndexConflictError(
-            f"ivf_index_append({path}): a maintenance swap superseded "
-            f"version {v0} mid-append — retry with "
-            "dedup_against_index=True (the maintainer may have carried "
-            "part of this batch forward already)"
-        )
-    return int(n)
 
 
 def _append_via_move(df, vdir: str, partition_cols: list[str]) -> None:
@@ -1569,6 +1557,128 @@ def _append_via_move(df, vdir: str, partition_cols: list[str]) -> None:
         store.delete_tree(scratch)
 
 
+def _maintain_version(
+    spark,
+    path: str,
+    fn: str,
+    label: str,
+    work: str,
+    keys: list[str],
+    partition_cols: list[str],
+    prepare,
+    to_rows=None,
+) -> tuple[int, int, int, int]:
+    """The maintenance half of the versioned-pointer protocol, shared by
+    `ivf_maintain` (recluster) and `lsh_maintain` (compaction) — `fn`
+    names the caller, `label` the index kind and `work` the rebuild in
+    messages. The fp_bloom rebuild discipline, adapted:
+
+      - pin: the rebuild's input is a FILE SNAPSHOT of the current
+        version (`_list_parts`, an explicit part-file list, not a dir
+        read), so the rebuild and the fold below reason about exactly
+        what was read; `prepare(data, pinned)` does the pre-claim work
+        (reads, sizing) and returns `write(vdir)`, the rebuild;
+      - claim: a rival maintainer is excluded by the `_vK.claim`
+        put-if-absent (`_claim_version`: a link of a complete file
+        locally, a conditional put on S3) — a lost claim raises the
+        typed `IndexConflictError`; rebase and retry next cycle;
+      - recheck: the window between resolving the current version
+        (before the pinned read — a LONG window) and claiming is wide
+        enough for a rival to claim, publish, and have vacuum retire
+        its now-published claim; without the post-claim `_idx_current`
+        recheck a stale maintainer could RE-claim the current version
+        number and overwrite the live dir. The claim left behind on
+        raising targets a published (or superseded) version, which
+        vacuum clears as junk;
+      - write: the new version dir `path/_vK` is written COMPLETELY
+        before the `_current` pointer swaps to it (`_idx_swap_current`,
+        an atomic store put) — a reader that resolved the old version
+        keeps a fully intact dir;
+      - fold: appends that COMMITTED into the old version during the
+        rebuild (wrote + passed their version check before the swap)
+        are not lost: after the swap, the old version's part files NOT
+        in the pinned snapshot — the delta — are anti-joined on the
+        index keys `keys` against what the new version already holds,
+        turned into new-version rows by `to_rows(rows, vdir)` (IVF:
+        assign against the new codebook; LSH: as they are) and moved in
+        committer-free (`_append_via_move` — a live appender may be
+        writing the same dir). The anti-join alone is NOT a
+        synchronization point (it is a read): a conflicted append
+        retrying with `dedup_against_index=True` could anti-join
+        concurrently with the fold and both could insert the same rows
+        (write skew). The `_folding` marker closes that: it is put into
+        the new version dir BEFORE the swap and deleted when the fold
+        lands, and dedup retries wait for it (`_wait_no_fold`) — so a
+        retry's anti-join always sees the fold's output, and the fold
+        never races a retry's writes (a retry starts only after
+        observing the swap, hence after the marker exists);
+      - after the swap no append can succeed into the old version (its
+        post-write check necessarily runs after the swap), so ONE fold
+        round suffices;
+      - VISIBILITY BOUND: an append that committed into the old version
+        mid-rebuild becomes probe-visible again when the fold lands —
+        i.e. before this returns. Between the swap and the fold's
+        completion, probes against the new version may transiently miss
+        those rows (bounded by the fold duration — the documented
+        eventual-visibility contract of a serving index; the stress
+        test asserts post-maintain completeness);
+      - if the fold itself fails (or the owner crashes mid-fold) this
+        raises with the marker left in place, so dedup retries fail
+        typed instead of silently duplicating; the delta rows still
+        exist in the superseded version dir — protected by vacuum
+        retention (which also skips data dirs while the marker stands)
+        — and recovery is re-running maintenance before the retention
+        window retires them (the single-maintenance-owner contract);
+      - superseded version dirs are retired by `ivf_vacuum` /
+        `lsh_vacuum` under a retention window, never here — a long
+        probe may still be reading them.
+
+    Every primitive goes through the object store (`plans/objectstore`):
+    plain file ops locally; on `s3://` conditional puts, paginated LISTs
+    and server-side copies. Returns (old_version, new_version, number of
+    pinned files, rows folded)."""
+    store = _idx_fs(path)
+    patterns = tuple(f"{c}=*" for c in partition_cols)
+    data, v0 = _idx_current(path)
+    pinned = _list_parts(store, data, patterns)
+    if not pinned:
+        raise ValueError(f"{label} index at {path} has no data files")
+    write = prepare(data, pinned)
+    new_v = v0 + 1
+    vdir = f"{path.rstrip('/')}/_v{new_v}"
+    if not _claim_version(store, path, new_v):
+        raise IndexConflictError(
+            f"{fn}({path}): version {new_v} already claimed by "
+            "a rival maintainer; rebase on the new current and retry"
+        )
+    if _idx_current(path)[1] != v0:
+        raise IndexConflictError(
+            f"{fn}({path}): the current version moved past "
+            f"{v0} while preparing the {work}; rebase and retry"
+        )
+    write(vdir)
+    store.put(
+        _fold_marker(vdir),
+        b"fold in progress; cleared when the delta fold lands",
+    )
+    _idx_swap_current(path, new_v)  # publish: probes/appends flip here
+    folded = 0
+    delta = _list_parts(store, data, patterns) - pinned
+    if delta:
+        rows = (
+            spark.read.option("basePath", store.spark_path(data))
+            .parquet(*[store.spark_path(f) for f in sorted(delta)])
+            .join(spark.read.parquet(_sp(vdir)).select(*keys), keys, "left_anti")
+        )
+        if to_rows is not None:
+            rows = to_rows(rows, vdir)
+        folded = rows.count()
+        if folded:
+            _append_via_move(rows, vdir, partition_cols)
+    store.delete(_fold_marker(vdir))  # fold landed: release retries
+    return v0, new_v, len(pinned), int(folded)
+
+
 def ivf_maintain(
     spark,
     path: str,
@@ -1592,8 +1702,10 @@ def ivf_maintain(
     Sizing: `n_cells` wins if given; else `n / target_cell_rows`
     (restore a chosen per-cell row count — pass the build-time cell
     size to bring per-probe cost back to build-time levels exactly);
-    else the √n rule (`ivf_params_for`). The codebook re-derives over
-    the CURRENT corpus with `seed_strategy="uniform"` by default — a
+    else the √n rule (`ivf_params_for`). `n` comes from the pinned
+    files' parquet footers on a local index (exact, job-free) and from
+    a Spark count on a remote one. The codebook re-derives over the
+    CURRENT corpus with `seed_strategy="uniform"` by default — a
     deterministic hash-ordered uniform sample — NOT the build's
     id-ordered medoids: in an append-grown corpus the smallest ids are
     the oldest rows, so id-seeding a drifted corpus would plant every
@@ -1602,163 +1714,60 @@ def ivf_maintain(
     for queries from the newly-appended regime). `lloyd_iters`
     refinement then runs exactly as at build time.
 
-    Visibility/concurrency (the fp_bloom discipline, adapted):
-      - the rebuild's input is a pinned FILE SNAPSHOT of the old
-        version (explicit part-file list, not a dir read), so the
-        rebuild and the fold below reason about exactly what was read;
-      - the new version dir `path/_vK` is written COMPLETELY (cells,
-        `_seeds`) before the `_current` pointer swaps to it atomically
-        (`os.replace` locally; an atomic-visibility object put on S3)
-        — a reader that resolved the old version keeps a fully intact
-        dir;
-      - a rival maintainer is excluded by the `_vK.claim`
-        create-exclusive claim (O_CREAT|O_EXCL locally, a conditional
-        put on S3: lost claim → typed `IndexConflictError`, rebase and
-        retry next cycle);
-      - appends that COMMITTED into the old version during the rebuild
-        (wrote + passed their version check before the swap) are not
-        lost: after the swap, the old version's part files NOT in the
-        pinned snapshot — the delta — are folded into the new version,
-        anti-joined on `id_col` against what the new version already
-        holds. The anti-join alone is NOT a synchronization point (it
-        is a read): a conflicted append retrying with
-        `dedup_against_index=True` could anti-join concurrently with
-        the fold and both could insert the same ids (write skew). The
-        `_folding` marker closes that: it is written into the new
-        version dir BEFORE the swap and cleared when the fold lands,
-        and dedup retries wait for it (`_wait_no_fold`) — so a retry's
-        anti-join always sees the fold's output, and the fold never
-        races a retry's writes (a retry starts only after observing
-        the swap, hence after the marker exists);
-      - after the swap no append can succeed into the old version (its
-        post-write check necessarily runs after the swap), so ONE fold
-        round suffices;
-      - VISIBILITY BOUND: an append that committed into the old version
-        mid-rebuild becomes probe-visible again when the fold lands —
-        i.e. before this function returns. Between the swap and the
-        fold's completion, probes against the new version may
-        transiently miss those rows (bounded by the fold duration —
-        the documented eventual-visibility contract of a serving
-        index; the stress test asserts post-maintain completeness);
-      - if the fold itself fails (or the owner crashes mid-fold) this
-        function raises with the marker left in place, so dedup
-        retries fail typed instead of silently duplicating; the delta
-        rows still exist in the superseded version dir — protected by
-        `ivf_vacuum` retention — and recovery is re-running
-        maintenance before the retention window retires them (the
-        single-maintenance-owner contract);
-      - superseded version dirs are retired by `ivf_vacuum` under a
-        retention window, never here — a long probe may still be
-        reading them.
-
+    The rebuild is `ivf_build_index` (cells + `_seeds`) into the new
+    version dir; the fold assigns the delta against the NEW codebook.
+    Visibility, concurrency and crash semantics are `_maintain_version`'s.
     Returns {"old_version", "new_version", "n", "n_cells_old",
-    "n_cells_new", "folded"}. Every protocol primitive — the pointer,
-    the rival claim, the file-snapshot listings, the fold move — goes
-    through the object store (`plans/objectstore`): local paths keep
-    plain file ops; `s3://` paths run the SAME protocol over
-    conditional puts + paginated LISTs + server-side copies, so
-    maintenance is no longer cluster-inert on object storage (r7
-    verdict #1)."""
+    "n_cells_new", "folded"}."""
     import math
 
+    from qwatch_spark.plans.objectstore import LocalStore
+
     store = _idx_fs(path)
-    data, v0 = _idx_current(path)
+    sized: dict = {}
 
-    def cell_files() -> set[str]:
-        return _list_parts(store, data, ("cell=*",))
+    def prepare(data: str, pinned: set[str]):
+        files = sorted(pinned)
+        # partition dirs carry `cell`; reading explicit part files yields
+        # just (id, embedding) — the rebuild re-derives cells anyway
+        corpus = spark.read.parquet(
+            *[store.spark_path(f) for f in files]
+        ).select(id_col, vec_col)
+        n = (
+            sum(md.num_rows for md in store.parquet_metadata_many(files))
+            if isinstance(store, LocalStore)
+            else corpus.count()
+        )
+        k = n_cells
+        if k is None:
+            if target_cell_rows is not None:
+                k = max(1, round(n / max(1, int(target_cell_rows))))
+            else:
+                k = max(1, int(round(math.sqrt(n))))
+        sized.update(n=n, old=len(_read_seed_rows(data, vec_col)), new=k)
+        return lambda vdir: ivf_build_index(
+            corpus, vdir, n_cells=k, id_col=id_col, vec_col=vec_col,
+            max_literals=max_literals, lloyd_iters=lloyd_iters,
+            seed_strategy=seed_strategy,
+        )
 
-    old_seeds = _read_seed_rows(spark, data, vec_col)
-    files0 = cell_files()
-    if not files0:
-        raise ValueError(f"IVF index at {path} has no data files")
-    # partition dirs carry `cell`; reading explicit part files yields
-    # just (id, embedding) — the rebuild re-derives cells anyway
-    corpus = spark.read.parquet(
-        *[store.spark_path(f) for f in sorted(files0)]
-    ).select(id_col, vec_col)
-    # sizing count from the snapshot's parquet FOOTERS when local —
-    # exact and job-free (r9: the count was a full Spark scan job on
-    # the maintenance path); remote stores keep the Spark count
-    n = _local_parquet_rows(sorted(files0))
-    if n is None:
-        n = corpus.count()
-    if n_cells is None:
-        if target_cell_rows is not None:
-            n_cells = max(1, round(n / max(1, int(target_cell_rows))))
-        else:
-            n_cells = max(1, int(round(math.sqrt(n))))
-    new_v = v0 + 1
-    vdir = f"{path.rstrip('/')}/_v{new_v}"
-    # the rival-maintainer CAS: a create-exclusive claim FILE beside the
-    # version dir (not mkdir on the dir itself — the build's overwrite
-    # write would momentarily delete a mkdir-claim, opening a window
-    # where a rival's mkdir succeeds; a separate claim object has no
-    # such window, and on S3 it is the same conditional put the table
-    # commit log linearizes on)
-    if not _claim_version(store, path, new_v):
-        raise IndexConflictError(
-            f"ivf_maintain({path}): version {new_v} already claimed by "
-            "a rival maintainer; rebase on the new current and retry"
+    def assigned(rows: DataFrame, vdir: str) -> DataFrame:
+        seeds = _read_seed_rows(vdir, vec_col)
+        return _assigner(seeds, max_literals)(
+            rows.select(id_col, vec_col), seeds, id_col, vec_col
         )
-    # post-claim pointer recheck: the window between reading v0 (before
-    # the corpus scan — a LONG window) and claiming is wide enough for
-    # a rival to claim, publish, and have vacuum retire its
-    # now-published claim; without this check a stale maintainer could
-    # then RE-claim the current version number and overwrite the live
-    # dir. The claim we leave behind on raising targets a published
-    # (or superseded) version, which vacuum clears as junk.
-    if _idx_current(path)[1] != v0:
-        raise IndexConflictError(
-            f"ivf_maintain({path}): the current version moved past "
-            f"{v0} while preparing the rebuild; rebase and retry"
-        )
-    ivf_build_index(
-        corpus, vdir, n_cells=n_cells, id_col=id_col, vec_col=vec_col,
-        max_literals=max_literals, lloyd_iters=lloyd_iters,
-        seed_strategy=seed_strategy,
+
+    v0, new_v, _pinned, folded = _maintain_version(
+        spark, path, "ivf_maintain", "IVF", "rebuild", [id_col], ["cell"],
+        prepare, assigned,
     )
-    # fold-in-progress marker BEFORE the swap: dedup retries (which by
-    # definition start after observing the swap) wait on it, closing
-    # the fold-vs-retry write skew; cleared only when the fold LANDS,
-    # so a crashed fold fails retries typed instead of duplicating
-    store.put(
-        _fold_marker(vdir),
-        b"fold in progress; cleared when the delta fold lands",
-    )
-    _idx_swap_current(path, new_v)  # publish: probes/appends flip here
-    folded = 0
-    delta = cell_files() - files0  # appends that landed mid-rebuild
-    if delta:
-        new_rows = (
-            spark.read.parquet(*[store.spark_path(f) for f in sorted(delta)])
-            .select(id_col, vec_col)
-            .join(
-                spark.read.parquet(_sp(vdir)).select(id_col),
-                id_col,
-                "left_anti",
-            )
-        )
-        # quantize against the NEW codebook and fold via the
-        # committer-free move path — a live appender may be writing
-        # this same dir right now (see _append_via_move)
-        seeds2 = _read_seed_rows(spark, vdir, vec_col)
-        assign2 = (
-            _assign_literal
-            if len(seeds2) * len(seeds2[0][1]) <= max_literals
-            else _assign_pandas
-        )
-        assigned2 = assign2(new_rows, seeds2, id_col, vec_col)
-        folded = assigned2.count()
-        if folded:
-            _append_via_move(assigned2, vdir, ["cell"])
-    store.delete(_fold_marker(vdir))  # fold landed: release retries
     return {
         "old_version": v0,
         "new_version": new_v,
-        "n": int(n),
-        "n_cells_old": len(old_seeds),
-        "n_cells_new": int(n_cells),
-        "folded": int(folded),
+        "n": int(sized["n"]),
+        "n_cells_old": sized["old"],
+        "n_cells_new": int(sized["new"]),
+        "folded": folded,
     }
 
 
@@ -1855,90 +1864,36 @@ def lsh_maintain(spark, path: str, id_col: str = "vec_id") -> dict:
     pruned directory (footer opens are round-trips on object storage —
     the classic lake small-file disease). This rewrites the CURRENT
     version to one file per (band, bucket) behind the SAME
-    versioned-pointer protocol as `ivf_maintain`:
-
-      - pinned file-snapshot input (explicit part list, read with
-        basePath so the partition columns survive);
-      - complete `_vK` rewrite, then atomic `_current` swap (mkdir on
-        the version dir is the rival-maintainer CAS);
-      - post-swap fold of delta files (appends that committed
-        mid-compaction), anti-joined on (id, band) — the band-complete
-        key, see `lsh_index_append`'s dedup note — behind the same
-        `_folding` marker, write-skew guard, visibility bound
-        (delta rows probe-visible again before this returns) and
-        crash semantics as `ivf_maintain`;
-      - superseded versions retired later by `lsh_vacuum` under
-        retention. `_params` stays at the root, untouched — planes
-        never change, so probes keep their mtime-stamped cache.
+    versioned-pointer protocol as `ivf_maintain` (`_maintain_version`):
+    the pinned files are read with basePath so the partition columns
+    survive, the delta fold anti-joins on (id, band) — the band-complete
+    key, see `lsh_index_append`'s dedup note — and `_params` stays at
+    the root, untouched: planes never change across versions.
 
     Returns {"old_version", "new_version", "n_files_before",
-    "n_files_after", "folded"}. All protocol primitives go through the
-    object store (`plans/objectstore`) — see `ivf_maintain`."""
+    "n_files_after", "folded"}."""
     store = _idx_fs(path)
-    data, v0 = _idx_current(path)
 
-    def part_files() -> set[str]:
-        return _list_parts(store, data, ("band=*", "bucket=*"))
+    def prepare(data: str, pinned: set[str]):
+        rows = spark.read.option("basePath", store.spark_path(data)).parquet(
+            *[store.spark_path(f) for f in sorted(pinned)]
+        )
+        return lambda vdir: (
+            rows.repartition("band", "bucket")
+            .write.mode("overwrite")
+            .partitionBy("band", "bucket")
+            .parquet(_sp(vdir))
+        )
 
-    pinned = part_files()
-    if not pinned:
-        raise ValueError(f"LSH index at {path} has no data files")
-    rows = spark.read.option("basePath", store.spark_path(data)).parquet(
-        *[store.spark_path(f) for f in sorted(pinned)]
+    v0, new_v, n_before, folded = _maintain_version(
+        spark, path, "lsh_maintain", "LSH", "compaction", [id_col, "band"],
+        ["band", "bucket"], prepare,
     )
-    new_v = v0 + 1
     vdir = f"{path.rstrip('/')}/_v{new_v}"
-    # create-exclusive claim file — see ivf_maintain's CAS note
-    if not _claim_version(store, path, new_v):
-        raise IndexConflictError(
-            f"lsh_maintain({path}): version {new_v} already claimed by "
-            "a rival maintainer; rebase on the new current and retry"
-        )
-    # post-claim pointer recheck — see ivf_maintain: a rival may have
-    # claimed, published, and had its claim vacuumed inside our
-    # read-to-claim window; never overwrite a version dir whose number
-    # was published out from under us
-    if _idx_current(path)[1] != v0:
-        raise IndexConflictError(
-            f"lsh_maintain({path}): the current version moved past "
-            f"{v0} while preparing the compaction; rebase and retry"
-        )
-    (
-        rows.repartition("band", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("band", "bucket")
-        .parquet(_sp(vdir))
-    )
-    # fold-in-progress marker BEFORE the swap (write-skew guard for
-    # dedup retries; same protocol + crash semantics as ivf_maintain)
-    store.put(
-        _fold_marker(vdir),
-        b"fold in progress; cleared when the delta fold lands",
-    )
-    _idx_swap_current(path, new_v)  # publish: probes/appends flip here
-    folded = 0
-    delta = part_files() - pinned
-    if delta:
-        new_rows = (
-            spark.read.option("basePath", store.spark_path(data))
-            .parquet(*[store.spark_path(f) for f in sorted(delta)])
-            .join(
-                spark.read.parquet(_sp(vdir)).select(id_col, "band"),
-                [id_col, "band"],
-                "left_anti",
-            )
-        )
-        folded = new_rows.count()
-        if folded:
-            # committer-free move: a live appender may be writing this
-            # same dir (see _append_via_move)
-            _append_via_move(new_rows, vdir, ["band", "bucket"])
-    store.delete(_fold_marker(vdir))  # fold landed: release retries
-    n_after = len(_list_parts(store, vdir, ("band=*", "bucket=*")))
     return {
         "old_version": v0,
         "new_version": new_v,
-        "n_files_before": len(pinned),
-        "n_files_after": n_after,
-        "folded": int(folded),
+        "n_files_before": n_before,
+        "n_files_after": len(_list_parts(store, vdir, ("band=*", "bucket=*"))),
+        "folded": folded,
     }

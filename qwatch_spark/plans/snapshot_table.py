@@ -196,6 +196,22 @@ def _zmerge(*ranges):
     return [min(los), max(his)]
 
 
+def _bucket_files(out: str, listing) -> dict[int, list[str]]:
+    """{bucket: [parquet paths]} of a data dir's `b=<k>` subdirs, from
+    ONE tree listing of it (~1000 keys per object-store LIST round-trip
+    — per-bucket LISTs would pay one round-trip per touched bucket).
+    The one parser of that layout: a delta commit maps its epoch dir
+    (the keys are the touched buckets, and the same mapping feeds
+    `apply._delta_footer_stats`, so a commit LISTs its epoch dir once)
+    and a compaction maps its output (`_file_ts_ranges_many`)."""
+    files: dict[int, list[str]] = {}
+    for rel, _size, _mt in listing:
+        bdir, _, name = rel.rpartition("/")
+        if bdir.startswith("b=") and name.endswith(".parquet"):
+            files.setdefault(int(bdir[2:]), []).append(f"{out.rstrip('/')}/{rel}")
+    return files
+
+
 class SnapshotTable:
     def __init__(self, path: str):
         self.path = path
@@ -925,13 +941,8 @@ class SnapshotTable:
         store = store_for(out)
         if store is None:
             return {k: None for k in keys}
-        per_bucket: dict[str, list[str]] = {k: [] for k in keys}
-        for rel, _size, _mt in store.list_tree(out):
-            bdir, _, name = rel.rpartition("/")
-            if bdir.startswith("b=") and name.endswith(".parquet"):
-                files = per_bucket.get(bdir[2:])
-                if files is not None:
-                    files.append(f"{out.rstrip('/')}/{rel}")
+        found = _bucket_files(out, store.list_tree(out))
+        per_bucket = {k: found.get(int(k), []) for k in keys}
         flat = [(k, p) for k in keys for p in per_bucket[k]]
         mds = store.parquet_metadata_many([p for _k, p in flat], max_workers)
         res: dict[str, dict | None] = {

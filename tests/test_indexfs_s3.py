@@ -470,6 +470,90 @@ def test_probe_and_append_round_trip_budget(spark, tmp_path, monkeypatch):
     assert Client.calls.get("get", 0) <= 8, Client.calls
 
 
+# --------------------------------------- index metadata as store objects
+
+
+def test_index_metadata_launches_no_spark_jobs(spark, s3idx, monkeypatch):
+    """`_seeds` and `_params` are single store objects: building and
+    probing an `s3://` IVF and LSH index reads and writes them with no
+    Spark job. Every call of the three metadata functions runs under
+    one job group, which must end up with no jobs."""
+    sc = spark.sparkContext
+    group = "qwatch:test:index-metadata"
+    calls: dict[str, int] = {}
+
+    def in_group(name, fn):
+        def wrapped(*a, **kw):
+            calls[name] = calls.get(name, 0) + 1
+            prev = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setLocalProperty("spark.jobGroup.id", group)
+            try:
+                return fn(*a, **kw)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", prev)
+
+        return wrapped
+
+    for name in ("_read_seed_rows", "_write_seed_rows", "_lsh_index_params"):
+        monkeypatch.setattr(sim, name, in_group(name, getattr(sim, name)))
+    rows, df = _clustered_corpus(spark, 120)
+    vecs = dict(rows)
+    ivf, lsh = s3idx("ivf"), s3idx("lsh")
+    sim.ivf_build_index(df, ivf, n_cells=8)
+    top = sim.ivf_probe_topk(spark, ivf, vecs[7], k=1, n_probe=8).collect()
+    assert int(top[0]["vec_id"]) == 7
+    sim.lsh_build_index(df, lsh, n_planes=16, n_bands=8, dim=16)
+    top = sim.lsh_probe_topk(spark, lsh, vecs[7], k=1).collect()
+    assert int(top[0]["vec_id"]) == 7
+    assert set(calls) == {
+        "_read_seed_rows", "_write_seed_rows", "_lsh_index_params"
+    }, calls
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("where", ["local", "s3"])
+def test_spark_written_metadata_probes_identically(
+    spark, s3idx, tmp_path, where
+):
+    """Indexes built before `_seeds`/`_params` became single store
+    objects hold Spark part files there (`part-<uuid>-c000...parquet`
+    plus `_SUCCESS`, no `part-00000.parquet`). Probes read them through
+    the listing fallback with row-identical results, locally and on
+    `s3://`."""
+    rows, df = _clustered_corpus(spark, 120)
+    vecs = dict(rows)
+    name = s3idx if where == "s3" else (lambda n: str(tmp_path / n))
+    ivf, lsh = name("ivf"), name("lsh")
+    sim.ivf_build_index(df, ivf, n_cells=8)
+    sim.lsh_build_index(df, lsh, n_planes=16, n_bands=8, dim=16)
+
+    def probes():
+        return [
+            [tuple(r) for r in probe.collect()]
+            for q in (3, 50, 101)
+            for probe in (
+                sim.ivf_probe_topk(spark, ivf, vecs[q], k=5, n_probe=3),
+                sim.lsh_probe_topk(spark, lsh, vecs[q], k=5),
+            )
+        ]
+
+    before = probes()
+    seeds = sim._read_seed_rows(ivf, "embedding")
+    spark.createDataFrame(
+        seeds, "cell bigint, embedding array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(sim._sp(f"{ivf}/_seeds"))
+    spark.createDataFrame(
+        [(16, 8, 16, 7)], "n_planes int, n_bands int, dim int, seed int"
+    ).coalesce(1).write.mode("overwrite").parquet(sim._sp(f"{lsh}/_params"))
+    store = sim._idx_fs(ivf)
+    for d in (f"{ivf}/_seeds", f"{lsh}/_params"):
+        assert store.get(f"{d}/part-00000.parquet") is None
+        (part,) = sim._list_parts(store, d, ())
+        assert part.rsplit("/", 1)[1].startswith("part-00000-"), part
+    assert sim._read_seed_rows(ivf, "embedding") == seeds
+    assert probes() == before
+
+
 # ---------------------------------------------------- fp bloom over s3
 
 

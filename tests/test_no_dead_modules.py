@@ -2,7 +2,9 @@
 the jobs, the scripts, bench.py, the driver entry point or the tests.
 Library operators that only the tests drive (reconcile, multimodal,
 streaming windows, ...) are public API; a module that nothing imports
-and no test covers is dead code. Pure AST scan — no Spark."""
+and no test covers is dead code. Also pins that operators and plans do
+their filesystem I/O through the object store. Pure AST scans — no
+Spark."""
 
 import ast
 import pathlib
@@ -92,3 +94,56 @@ def test_every_config_field_is_read():
     assert "n_buckets" in fields, fields  # the class body was parsed
     unread = [f for f in fields if f not in read]
     assert not unread, f"PipelineConfig fields nothing reads: {unread}"
+
+
+# filesystem calls that bypass the object store: the engine's operators
+# and plans do their driver-side I/O through `plans/objectstore.py`, so
+# the same code runs on a local path and on `s3://`
+_FS_CALLS = {"os.stat", "os.makedirs", "os.listdir", "os.replace", "os.path.isfile"}
+_FS_MODULES = {"shutil", "glob"}
+
+
+def _dotted(node) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        base = _dotted(node.value)
+        return None if base is None else f"{base}.{node.attr}"
+    return None
+
+
+def _fs_calls(path: pathlib.Path) -> list[str]:
+    """`path:line name` of every call in `path` to `_FS_CALLS` or into
+    `_FS_MODULES`, seeing through `import x as y` and `from x import y`."""
+    tree = ast.parse(path.read_text(), str(path))
+    alias: dict[str, str] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                top = a.name.split(".")[0]
+                alias[a.asname or top] = a.name if a.asname else top
+        elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            for a in node.names:
+                alias[a.asname or a.name] = f"{node.module}.{a.name}"
+    out = []
+    for node in ast.walk(tree):
+        name = _dotted(node.func) if isinstance(node, ast.Call) else None
+        if name is None:
+            continue
+        head, _, rest = name.partition(".")
+        full = alias.get(head, head) + (f".{rest}" if rest else "")
+        if full in _FS_CALLS or full.split(".")[0] in _FS_MODULES:
+            out.append(f"{path.relative_to(ROOT)}:{node.lineno} {full}")
+    return out
+
+
+def test_operators_and_plans_do_io_through_the_object_store():
+    mods = [
+        p
+        for d in ("operators", "plans")
+        for p in sorted((ROOT / PKG / d).rglob("*.py"))
+        if p != ROOT / PKG / "plans" / "objectstore.py"
+    ]
+    assert len(mods) > 10, mods  # the scan found the package
+    bad = [hit for p in mods for hit in _fs_calls(p)]
+    assert not bad, f"filesystem calls outside the object store: {bad}"

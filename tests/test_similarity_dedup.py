@@ -683,7 +683,6 @@ def test_lsh_probe_missing_params_raises(spark, emb, tmp_path):
     import shutil
 
     from qwatch_spark.operators.similarity import (
-        _LSH_PARAMS_CACHE,
         lsh_build_index,
         lsh_probe_topk,
     )
@@ -691,7 +690,6 @@ def test_lsh_probe_missing_params_raises(spark, emb, tmp_path):
     path = str(tmp_path / "lsh")
     lsh_build_index(emb, path)
     shutil.rmtree(f"{path}/_params")
-    _LSH_PARAMS_CACHE.pop(path, None)  # simulate a fresh process
     with pytest.raises(Exception):
         lsh_probe_topk(spark, path, [0.0] * 64, k=5)
 
@@ -790,10 +788,9 @@ def test_lsh_batch_probe_wrong_dim_raises(spark, emb, tmp_path):
 
 
 def test_lsh_params_cache_invalidated_by_external_rebuild(spark, emb, tmp_path):
-    """A rebuild at the same path with DIFFERENT params (as another
-    process — the cache entry is left in place) must not be probed with
-    the stale cached hyperplanes: _lsh_index_params revalidates against
-    the _params directory stamp."""
+    """A rebuild at the same path with DIFFERENT params must not be
+    probed with the old hyperplanes: _lsh_index_params reads _params on
+    every call."""
     from qwatch_spark.operators.similarity import (
         _lsh_index_params,
         lsh_build_index,
@@ -802,17 +799,7 @@ def test_lsh_params_cache_invalidated_by_external_rebuild(spark, emb, tmp_path):
     path = str(tmp_path / "lsh")
     lsh_build_index(emb, path, n_planes=16, n_bands=8, seed=7)
     assert _lsh_index_params(spark, path) == (16, 8, 64, 7)
-    # out-of-process rebuild: different geometry, cache NOT popped
-    import time as _time
-
-    _time.sleep(0.05)  # ensure a distinguishable mtime stamp
     lsh_build_index(emb, path, n_planes=8, n_bands=4, seed=11)
-    # simulate the other process having done the build: poison our
-    # process's entry back to the OLD params but keep the new stamp
-    # unknowable — i.e. restore the pre-build cache state
-    from qwatch_spark.operators import similarity as S
-
-    S._LSH_PARAMS_CACHE[path] = (1, (16, 8, 64, 7))  # stale stamp+params
     assert _lsh_index_params(spark, path) == (8, 4, 64, 11), (
         "stale cached params survived an external rebuild"
     )
