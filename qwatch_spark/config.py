@@ -14,15 +14,6 @@ import dataclasses
 import json
 from typing import Any
 
-KNOWN_FILTER_RULES = (
-    "lang_gate",
-    "extract_text",
-    "valid_url",
-    "min_html_bytes",
-    "lang_fallback",
-    "quality_gate",
-    "exact_dup_gate",
-)
 # apply strategies (see PipelineConfig.write_mode)
 WRITE_MODES = ("delta", "auto")
 
@@ -109,11 +100,12 @@ class PipelineConfig:
     fp_merge_segments: int = 64
 
     def __post_init__(self) -> None:
-        unknown = [r for r in self.rules if r not in KNOWN_FILTER_RULES]
+        from qwatch_spark.operators.rules import RULES
+
+        unknown = [r for r in self.rules if r not in RULES]
         if unknown:
-            raise ValueError(
-                f"unknown filter rule(s) {unknown}; known: {list(KNOWN_FILTER_RULES)}"
-            )
+            # strict, unlike the reference's nil-interface panic
+            raise ValueError(f"unknown filter rule(s) {unknown}; known: {list(RULES)}")
         if self.n_buckets < 1:
             raise ValueError("n_buckets must be >= 1")
         if self.n_salt < 0:

@@ -316,7 +316,6 @@ def apply_entity_changes(
     links: list[LinkSpec] | None = None,
     cfg: PipelineConfig | None = None,
     type_col: str = "entity_type",
-    parallel: bool = True,
     cache_batch: bool = True,
 ) -> dict[str, ApplyStats]:
     """Route one discriminated batch to every entity (and link) table —
@@ -329,8 +328,7 @@ def apply_entity_changes(
     table's executor work instead of serializing — measured +0.07
     scaling efficiency at N→4N. Exactly-once is per table either way
     (each table records its own epochs; a crash between per-table
-    commits replays into a converged state — tested). `parallel=False`
-    restores strictly sequential applies for debugging."""
+    commits replays into a converged state — tested)."""
     cfg = cfg or PipelineConfig(rules=())
     by_name = {s.name: s for s in specs}
     claimed = {
@@ -371,7 +369,7 @@ def apply_entity_changes(
         )
 
     try:
-        if not parallel or len(jobs) == 1:
+        if len(jobs) == 1:
             return {
                 name: apply_changes(spark, df, tables[name], epoch_id, cfg)
                 for name, df in jobs

@@ -246,32 +246,24 @@ def _bloom_pruned_owner_check(
     return _owner_anti_join(kept, F.broadcast(existing), key)
 
 
-RULE_REGISTRY: dict[str, Rule] = {
-    "valid_url": rule_valid_url,
-    "lang_gate": rule_lang_gate,
-    "min_html_bytes": rule_min_html_bytes,
-    "extract_text": rule_extract_text,
-    "lang_fallback": rule_lang_fallback,
-    "quality_gate": rule_quality_gate,
-    "exact_dup_gate": rule_exact_dup_gate,
-}
-
-# Rule classification drives a plan rewrite in apply_changes: gates
-# (row-dropping filters) run BEFORE dedup so losers are cheap to discard;
-# projections (column-producing transforms like HTML→text) are DEFERRED
-# to after dedup, so expensive extraction runs once per surviving key
-# instead of once per raw event — the same final state, ~(batch/keys)×
-# less UDF work. post_gates are content gates that NEED the projected
-# columns (extracted text), so they run after the project phase, still
-# once per surviving key. Relative order within each kind is preserved.
-RULE_KIND: dict[str, str] = {
-    "valid_url": "gate",
-    "lang_gate": "gate",
-    "min_html_bytes": "gate",
-    "extract_text": "project",
-    "lang_fallback": "project",
-    "quality_gate": "post_gate",
-    "exact_dup_gate": "post_gate",
+# Every filter rule by name, with its kind. The kind drives a plan
+# rewrite in apply_changes: gates (row-dropping filters) run BEFORE dedup
+# so losers are cheap to discard; projections (column-producing
+# transforms like HTML→text) are DEFERRED to after dedup, so expensive
+# extraction runs once per surviving key instead of once per raw event —
+# the same final state, ~(batch/keys)× less UDF work. post_gates are
+# content gates that NEED the projected columns (extracted text), so they
+# run after the project phase, still once per surviving key. Relative
+# order within each kind is preserved. PipelineConfig validates
+# `rules` against this table.
+RULES: dict[str, tuple[str, Rule]] = {
+    "valid_url": ("gate", rule_valid_url),
+    "lang_gate": ("gate", rule_lang_gate),
+    "min_html_bytes": ("gate", rule_min_html_bytes),
+    "extract_text": ("project", rule_extract_text),
+    "lang_fallback": ("project", rule_lang_fallback),
+    "quality_gate": ("post_gate", rule_quality_gate),
+    "exact_dup_gate": ("post_gate", rule_exact_dup_gate),
 }
 
 
@@ -286,11 +278,7 @@ def apply_rules(
     `ctx` ({"spark", "table"}) lets table-aware gates see the apply
     target; rules degrade to batch-local behavior without it."""
     for name in cfg.rules:
-        try:
-            rule = RULE_REGISTRY[name]
-        except KeyError:  # strict, unlike the reference's nil-interface panic
-            raise ValueError(f"unknown filter rule {name!r}") from None
-        if kind is not None and RULE_KIND[name] != kind:
-            continue
-        df = rule(df, cfg, ctx)
+        rule_kind, rule = RULES[name]  # validated by PipelineConfig
+        if kind is None or rule_kind == kind:
+            df = rule(df, cfg, ctx)
     return df

@@ -577,6 +577,34 @@ def _write_seed_rows(seeds: list[tuple[int, list]], data: str, vec_col: str) -> 
     )
 
 
+def _ivf_seeds(data: str, path: str, vec_col: str):
+    """The IVF front door: the `_seeds` snapshot of the index at `path`
+    (current data dir `data`) as (rows, cells, matrix), where rows is
+    [(cell, vector), ...] in cell order. Raises if there are none."""
+    rows = _read_seed_rows(data, vec_col)
+    if not rows:
+        raise ValueError(f"IVF index at {path} has no seeds")
+    cells = np.asarray([c for c, _ in rows], dtype=np.int64)
+    return rows, cells, np.asarray([v for _, v in rows], dtype=np.float64)
+
+
+def _probe_cells(
+    cells, mat, vec: list[float], n_probe: int, path: str, qid=None
+) -> list[int]:
+    """The `n_probe` seed cells nearest `vec` by cosine, ties toward the
+    lower cell id (like ivf_assign). A query of the wrong length raises."""
+    if len(vec) != mat.shape[1]:
+        name = "query" if qid is None else f"query {qid}"
+        raise ValueError(
+            f"{name} has length {len(vec)}, but the index at "
+            f"{path} was built with dim={mat.shape[1]}"
+        )
+    q = np.asarray([float(x) for x in vec], dtype=np.float64)
+    sims = (mat @ q) / (np.sqrt((mat * mat).sum(axis=1)) * np.sqrt((q * q).sum()))
+    order = np.lexsort((cells, -np.round(sims, 9)))
+    return [int(c) for c in cells[order][:n_probe]]
+
+
 def _assigner(seeds: list[tuple[int, list]], max_literals: int):
     """The cell-assign function for codebook `seeds`: literal argmax
     while n_cells × dim ≤ `max_literals` (decimal-exact, SQL-oracle
@@ -697,19 +725,9 @@ def ivf_probe_topk(
     n_probe/n_cells of the index (assert via df.inputFiles()). The
     query arrives as a VECTOR (the ANN-serving shape); pass
     `exclude_id` to drop a known corpus row (self-match)."""
-    q = np.asarray(query_vec, dtype=np.float64)
     data, _v = _idx_current(path)
-    seed_rows = _read_seed_rows(data, vec_col)
-    if not seed_rows:
-        raise ValueError(f"IVF index at {path} has no seeds")
-    cells = np.asarray([c for c, _ in seed_rows], dtype=np.int64)
-    mat = np.asarray([v for _, v in seed_rows], dtype=np.float64)
-    sims = (mat @ q) / (
-        np.sqrt((mat * mat).sum(axis=1)) * np.sqrt((q * q).sum())
-    )
-    # stable tie-break toward the lower cell id, like ivf_assign
-    order = np.lexsort((cells, -np.round(sims, 9)))
-    probe = [int(c) for c in cells[order][:n_probe]]
+    _rows, cells, mat = _ivf_seeds(data, path, vec_col)
+    probe = _probe_cells(cells, mat, query_vec, n_probe, path)
     idx = spark.read.parquet(_sp(data)).filter(F.col("cell").isin(probe))
     if exclude_id is not None:
         idx = idx.filter(F.col(id_col) != exclude_id)
@@ -778,10 +796,10 @@ def ivf_probe_topk_batch(
     probe's floor is per-query plan analysis/codegen on fresh query
     literals, so a serving batch compiles the plan once instead.
 
-      - the bounded `_seeds` snapshot is read ONCE (one small job) and
-        every query's `n_probe` nearest cells are picked driver-side in
-        numpy, with the same round-then-lexsort tie-break as the single
-        probe — probe-cell choice is bit-identical per query;
+      - the bounded `_seeds` snapshot is read ONCE (one GET) and
+        every query's `n_probe` nearest cells are picked driver-side by
+        `_probe_cells`, the single probe's own pick — probe-cell choice
+        is bit-identical per query;
       - ONE scan reads the union of all queries' cells (`cell IN`
         lands in PartitionFilters — the single probe's pruning
         guarantee, kept);
@@ -803,27 +821,14 @@ def ivf_probe_topk_batch(
     empty = _batch_probe_guard(spark, data, queries, max_batch, id_col)
     if empty is not None:
         return empty
-    seed_rows = _read_seed_rows(data, vec_col)
-    if not seed_rows:
-        raise ValueError(f"IVF index at {path} has no seeds")
-    cells = np.asarray([c for c, _ in seed_rows], dtype=np.int64)
-    mat = np.asarray([v for _, v in seed_rows], dtype=np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    dim = mat.shape[1]
+    _rows, cells, mat = _ivf_seeds(data, path, vec_col)
     rows = []
     for qid, vec in queries:
-        if len(vec) != dim:
-            raise ValueError(
-                f"query {qid} has length {len(vec)}, but the index at "
-                f"{path} was built with dim={dim}"
-            )
-        q = np.asarray([float(x) for x in vec], dtype=np.float64)
-        sims = (mat @ q) / (norms * np.sqrt((q * q).sum()))
-        order = np.lexsort((cells, -np.round(sims, 9)))
+        probe = _probe_cells(cells, mat, vec, n_probe, path, qid)
         qv = [float(x) for x in vec]
         qn = _py_norm(qv)
-        for c in cells[order][:n_probe]:
-            rows.append((int(qid), int(c), qv, qn))
+        for c in probe:
+            rows.append((int(qid), c, qv, qn))
     qdf = spark.createDataFrame(
         rows, "query_id long, cell int, qvec array<double>, qnorm double"
     )
@@ -1502,9 +1507,7 @@ def ivf_index_append(
     The sequence is `_append_current`'s."""
 
     def assigned(data: str) -> DataFrame:
-        seeds = _read_seed_rows(data, vec_col)
-        if not seeds:
-            raise ValueError(f"IVF index at {path} has no seeds")
+        seeds, _cells, _mat = _ivf_seeds(data, path, vec_col)
         return _assigner(seeds, max_literals)(vectors, seeds, id_col, vec_col)
 
     return _append_current(

@@ -15,7 +15,7 @@ dead-letter DataFrame rather than dropped silently.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -26,24 +26,29 @@ CORRUPT_COL = "_corrupt"  # raw line of a JSON record that failed decode
 FEED_FORMATS = ("parquet", "json")
 
 
-def _feed_schema(schema: T.StructType | None, fmt: str) -> T.StructType:
-    """JSON feeds carry a corrupt-record column: PERMISSIVE decode puts
-    a malformed line's raw text there (all data fields null) — the
+def _load(reader, path: str, schema: T.StructType | None, fmt: str) -> DataFrame:
+    """Load `path` with `reader` (batch or streaming) under an explicit
+    schema. JSON feeds carry a corrupt-record column: PERMISSIVE decode
+    puts a malformed line's raw text there (all data fields null) — the
     reference turns decode errors into events the same way
-    (/root/reference/inputs/docker-events.go:49-55); split_dead_letter
+    (inputs/docker-events.go:49-55); split_dead_letter
     routes them to the dead-letter sink instead of dropping them.
     Binary columns (html) ride as base64, Spark's JSON codec both ways."""
+    if fmt not in FEED_FORMATS:
+        raise ValueError(f"unknown feed format {fmt!r}; known: {FEED_FORMATS}")
     schema = schema or EVENT_SCHEMA
-    if fmt == "json" and CORRUPT_COL not in {f.name for f in schema.fields}:
+    if fmt == "parquet":
+        return reader.schema(schema).parquet(path)
+    if CORRUPT_COL not in schema.fieldNames():
         schema = T.StructType(
             list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
         )
-    return schema
-
-
-def _check_fmt(fmt: str) -> None:
-    if fmt not in FEED_FORMATS:
-        raise ValueError(f"unknown feed format {fmt!r}; known: {FEED_FORMATS}")
+    return (
+        reader.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .json(path)
+    )
 
 
 def read_feed(
@@ -52,15 +57,7 @@ def read_feed(
     schema: T.StructType | None = None,
     fmt: str = "parquet",
 ) -> DataFrame:
-    _check_fmt(fmt)
-    reader = spark.read.schema(_feed_schema(schema, fmt))
-    if fmt == "json":
-        return (
-            reader.option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", CORRUPT_COL)
-            .json(path)
-        )
-    return reader.parquet(path)
+    return _load(spark.read, path, schema, fmt)
 
 
 def read_feed_stream(
@@ -70,32 +67,27 @@ def read_feed_stream(
     max_files_per_trigger: int | None = None,
     fmt: str = "parquet",
 ) -> DataFrame:
-    _check_fmt(fmt)
-    reader = spark.readStream.schema(_feed_schema(schema, fmt))
+    reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if fmt == "json":
-        return (
-            reader.option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", CORRUPT_COL)
-            .json(path)
-        )
-    return reader.parquet(path)
+    return _load(reader, path, schema, fmt)
 
 
-def split_dead_letter(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(valid, dead_letter): rows with a null key or unknown opcode go to
-    the dead-letter side instead of silently vanishing.
+def split_dead_letter(
+    df: DataFrame, bad_key: Column | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """(valid, dead_letter): rows with an invalid key or unknown opcode go
+    to the dead-letter side instead of silently vanishing. `bad_key`
+    marks a row whose key is invalid; it defaults to `url IS NULL` (the
+    page feed) and must never evaluate to NULL.
 
     op IS NULL is listed explicitly: `~op.isin(...)` evaluates to NULL
     for a null op, which would fail BOTH filters and drop the row — the
     exact silent loss dead-lettering exists to prevent (parquet reads do
     not enforce schema nullability)."""
-    bad = (
-        F.col("url").isNull()
-        | F.col("op").isNull()
-        | ~F.col("op").isin(*VALID_OPS)
-    )
+    if bad_key is None:
+        bad_key = F.col("url").isNull()
+    bad = bad_key | F.col("op").isNull() | ~F.col("op").isin(*VALID_OPS)
     if CORRUPT_COL in df.columns:
         # JSON decode failures: all data fields null, raw line preserved.
         # The dead side keeps the raw line; the valid side must NOT carry

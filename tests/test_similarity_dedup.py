@@ -694,6 +694,32 @@ def test_lsh_probe_missing_params_raises(spark, emb, tmp_path):
         lsh_probe_topk(spark, path, [0.0] * 64, k=5)
 
 
+@pytest.mark.parametrize("op", ["probe", "batch", "append"])
+def test_ivf_missing_seeds_raises(spark, emb, tmp_path, op):
+    """An IVF index whose _seeds snapshot is gone must fail loudly with
+    one clear error on every path that quantizes against it; probing or
+    appending with no codebook would silently lose vectors."""
+    import shutil
+
+    from qwatch_spark.operators.similarity import (
+        ivf_build_index,
+        ivf_index_append,
+        ivf_probe_topk,
+        ivf_probe_topk_batch,
+    )
+
+    path = str(tmp_path / "ivf")
+    ivf_build_index(emb, path, n_cells=8)
+    shutil.rmtree(f"{path}/_seeds")
+    call = {
+        "probe": lambda: ivf_probe_topk(spark, path, [0.0] * 64, k=5),
+        "batch": lambda: ivf_probe_topk_batch(spark, path, [(1, [0.0] * 64)], k=5),
+        "append": lambda: ivf_index_append(emb.limit(3), path),
+    }[op]
+    with pytest.raises(ValueError, match="has no seeds"):
+        call()
+
+
 def test_lsh_probe_wrong_dim_raises(spark, emb, tmp_path):
     """A query vector shorter than the indexed dim must fail loudly
     (zip_with would silently truncate the projection otherwise)."""
