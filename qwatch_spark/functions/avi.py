@@ -16,7 +16,7 @@ import struct
 
 import numpy as np
 
-from qwatch_spark.functions.jpeg import decode_jpeg, encode_jpeg
+from qwatch_spark.functions.jpeg import encode_jpeg
 from qwatch_spark.functions.wav import _walk_riff
 
 
@@ -85,7 +85,3 @@ def iter_mjpeg_frames(payload: bytes):
                 if c.endswith(b"dc"):
                     yield body[pos + 8 : pos + 8 + ln]
                 pos += 8 + ln + (ln & 1)
-
-
-def decode_frame(jpeg_bytes: bytes) -> np.ndarray:
-    return decode_jpeg(jpeg_bytes)

@@ -1,11 +1,8 @@
-"""URL column functions — the ParseImageName analog.
-
-The reference splits ``registry/repo/name:tag@sha256:x`` into parts with
-a default tag (/root/reference/utils/utils.go:32-56, tested at
-utils/utils_test.go:11-33). Our key space is urls, so the analog is
-url → (scheme, domain, path) parsing, used for hot-domain skew salting
-(north_rule) and metrics roll-ups. All pure Column expressions —
-JVM-side, whole-stage-codegen'd, zero Python.
+"""URL column functions: the url-validity check of the `valid_url`
+ingest gate and the deterministic salt of the two-phase skew-safe
+dedup. All pure Column expressions — JVM-side, whole-stage-codegen'd,
+zero Python. (The ParseImageName analog, splitting a url into its
+parts, is q08's split/element_at in `queries.py`.)
 """
 
 from __future__ import annotations
@@ -14,21 +11,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 URL_RE = r"^(https?)://([^/]+)(/.*)?$"
-
-
-def url_scheme(url: Column | str) -> Column:
-    return F.regexp_extract(url, URL_RE, 1)
-
-
-def url_domain(url: Column | str) -> Column:
-    return F.regexp_extract(url, URL_RE, 2)
-
-
-def url_path(url: Column | str) -> Column:
-    # default "/" mirrors ParseImageName's default tag=latest
-    # (utils/utils.go:48-52): absent part gets a canonical value.
-    p = F.regexp_extract(url, URL_RE, 3)
-    return F.when(p == "", F.lit("/")).otherwise(p)
 
 
 def is_valid_url(url: Column | str) -> Column:

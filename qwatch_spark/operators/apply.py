@@ -39,8 +39,10 @@ from qwatch_spark.config import PipelineConfig
 from qwatch_spark.operators.evolution import resolve_schema
 from qwatch_spark.operators.rules import FP_COL, apply_rules
 from qwatch_spark.plans.snapshot_table import (
+    DEL_COL,
     SnapshotTable,
     _bucket_files,
+    _footer_stats_many,
     _ziso,
     bucket_expr,
 )
@@ -112,11 +114,10 @@ def _maybe_append_fp_segment(
     # same-size segments once they pile up — pure numpy over the filter
     # files (no Spark job, no table scan), so it is cheap enough to run
     # inline on the apply path
-    man = table._load_manifest()
-    committed = max(
-        [man.get("epoch_watermark", -1), *man.get("applied_epochs", [-1])]
-    )
-    idx.merge_small_segments(committed, max_files=cfg.fp_merge_segments)
+    # the base manifest's highest epoch, not a reload: the merge folds
+    # only segments at or below it and writes the merged file before
+    # deleting a member, so an older threshold only merges fewer
+    idx.merge_small_segments(table.max_epoch, max_files=cfg.fp_merge_segments)
 
 
 def _delta_footer_stats(
@@ -124,127 +125,35 @@ def _delta_footer_stats(
 ) -> dict | None:
     """Per-bucket commit stats from parquet FOOTERS alone — the zero-job
     replacement for the per-epoch aggregate scan of the just-written
-    delta files `files` (`_bucket_files` of the epoch dir `out`). Per
-    bucket: row count (metadata), delete count (the `_del` marker's
-    null_count: deletes are 1, upserts null), seq
-    min/max and warc_ts range (chunk statistics). Returns
-    {b: {n, nd, min_seq, max_seq, lo, hi}} or None when any required
-    statistic is absent (INT96 timestamps, stats disabled, a writer
-    that predates `_del`) — the caller then falls back to the Spark
-    aggregate job, so correctness NEVER depends on footers.
-
-    Scale shape: O(touched files) metadata reads through the object
-    store (`plans/objectstore`), at the store's OWN parallelism
-    (`io_workers`): local footers are ~75 µs of native CPU where a pool
-    measured 8× slower, so local runs the plain loop; object-store
-    footers are a round-trip each, so `s3://` overlaps a wide thread
-    pool — which is what keeps the commit's stats phase ~flat as
-    touched-file count grows instead of re-serializing at thousands of
-    touched buckets (measured in scripts/bench_commit_stats.py,
-    recorded in BENCH/BASELINE.md). `store_for` serves local paths
-    directly and `s3://` through the same client the CAS commit log
-    uses; unknown schemes return None here → the Spark-job fallback.
-    This is how lake
-    formats collect per-file stats at commit time, minus write-task
-    harvesting (Spark owns the data write, so the driver pool is the
-    seam we own). The Spark job it replaces cost a scheduler
-    round-trip per table per epoch, which under concurrent multi-table
-    applies queued behind other tables' write jobs (measured: 2.4 s of
-    a 5.5 s entity-stream wall was this job × 6 table-epochs)."""
-    from qwatch_spark.plans.objectstore import store_for
-    from qwatch_spark.plans.snapshot_table import utc_naive
-
-    store = store_for(out)
-    if store is None:
+    delta files `files` (`_bucket_files` of the epoch dir `out`): a fold
+    of `snapshot_table._footer_stats_many`. Per bucket: rows, deletes
+    (the `DEL_COL` marker's null_count), seq min/max and warc_ts range.
+    Returns {b: {n, nd, min_seq, max_seq, lo, hi}} or None when any
+    required statistic is absent (INT96 timestamps, stats disabled, a
+    writer that predates the marker) or no driver-side store serves
+    `out` — the caller then falls back to the Spark aggregate job, so
+    correctness NEVER depends on footers. The job it replaces cost a
+    scheduler round-trip per table per epoch, which under concurrent
+    multi-table applies queued behind other tables' write jobs
+    (measured: 2.4 s of a 5.5 s entity-stream wall was this job × 6
+    table-epochs)."""
+    per_b = _footer_stats_many(out, files, max_workers)
+    if per_b is None:
         return None
-
-    def file_stats(md) -> dict | None:
-        """One footer's FileMetaData folded to partial stats; None = a
-        required statistic is absent (whole fast path then falls back)."""
-        n = nd = 0
-        seq_lo: list = []
-        seq_hi: list = []
-        ts_lo: list = []
-        ts_hi: list = []
-        for rg in range(md.num_row_groups):
-            rgm = md.row_group(rg)
-            cols = {
-                rgm.column(i).path_in_schema: rgm.column(i)
-                for i in range(rgm.num_columns)
-            }
-            seq_c, del_c, ts_c = (
-                cols.get("seq"), cols.get("_del"), cols.get("warc_ts")
-            )
-            if seq_c is None or del_c is None or ts_c is None:
-                return None
-            seq_st, del_st, ts_st = (
-                seq_c.statistics, del_c.statistics, ts_c.statistics
-            )
-            if (
-                seq_st is None
-                or not seq_st.has_min_max
-                or del_st is None
-                or not del_st.has_null_count
-            ):
-                return None
-            n += rgm.num_rows
-            nd += rgm.num_rows - del_st.null_count
-            seq_lo.append(seq_st.min)
-            seq_hi.append(seq_st.max)
-            if ts_st is not None and ts_st.has_min_max:
-                lo, hi = utc_naive(ts_st.min), utc_naive(ts_st.max)
-                if lo is None or hi is None:
-                    return None  # non-datetime stats (INT96 etc.)
-                ts_lo.append(lo)
-                ts_hi.append(hi)
-            elif (
-                ts_st is not None
-                and ts_st.has_null_count
-                and ts_st.null_count == rgm.num_rows
-            ):
-                pass  # all-null chunk: no range, same as F.min/F.max
-            else:
-                return None
-        return {
-            "n": n, "nd": nd,
-            "seq_lo": min(seq_lo), "seq_hi": max(seq_hi),
-            "ts_lo": min(ts_lo) if ts_lo else None,
-            "ts_hi": max(ts_hi) if ts_hi else None,
-        }
-
-    pairs = [(b, f) for b in sorted(files) for f in files[b]]
-    # every touched FILE's footer — the store overlaps the byte
-    # fetches and parses serially (see S3Store.parquet_metadata_many)
-    mds = store.parquet_metadata_many([f for _b, f in pairs], max_workers)
-    per_file = [file_stats(md) for md in mds]
     res: dict[int, dict] = {}
-    for (b, _f), st in zip(pairs, per_file):
-        if st is None:
+    for b, by_file in per_b.items():
+        sts = list(by_file.values())
+        if any(st is None or st["nd"] is None or st["seq"] is None for st in sts):
             return None
-        acc = res.setdefault(
-            b,
-            {"n": 0, "nd": 0, "min_seq": None, "max_seq": None,
-             "lo": None, "hi": None},
-        )
-        acc["n"] += st["n"]
-        acc["nd"] += st["nd"]
-        acc["min_seq"] = (
-            st["seq_lo"] if acc["min_seq"] is None
-            else min(acc["min_seq"], st["seq_lo"])
-        )
-        acc["max_seq"] = (
-            st["seq_hi"] if acc["max_seq"] is None
-            else max(acc["max_seq"], st["seq_hi"])
-        )
-        if st["ts_lo"] is not None:
-            acc["lo"] = (
-                st["ts_lo"] if acc["lo"] is None
-                else min(acc["lo"], st["ts_lo"])
-            )
-            acc["hi"] = (
-                st["ts_hi"] if acc["hi"] is None
-                else max(acc["hi"], st["ts_hi"])
-            )
+        ts = [st["ts"] for st in sts if st["ts"]]
+        res[b] = {
+            "n": sum(st["n"] for st in sts),
+            "nd": sum(st["nd"] for st in sts),
+            "min_seq": min(st["seq"][0] for st in sts),
+            "max_seq": max(st["seq"][1] for st in sts),
+            "lo": min((t[0] for t in ts), default=None),
+            "hi": max((t[1] for t in ts), default=None),
+        }
     return res
 
 
@@ -411,7 +320,7 @@ def apply_changes(
         # (_delta_footer_stats). ~1 bit/row on disk (RLE); every reader
         # projects through an explicit schema, so the extra column is
         # invisible outside this commit path.
-        F.when(F.col("op") == "D", F.lit(1)).cast("tinyint").alias("_del"),
+        F.when(F.col("op") == "D", F.lit(1)).cast("tinyint").alias(DEL_COL),
         # the dedup already placed every row on its bucket partition
         # (one task per bucket), so the write below needs no exchange of
         # its own and partitionBy still yields exactly one file per

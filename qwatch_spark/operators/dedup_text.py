@@ -157,49 +157,6 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 4) -> DataFrame:
     )
 
 
-def lsh_buckets(docs: DataFrame, n_hashes: int = 16, band_size: int = 4) -> DataFrame:
-    """Band the signature: bucket id = md5(concat of band's hashes).
-    Docs sharing any band bucket are near-dup candidates.
-
-    One explode over an inline (band, bucket) struct array — NOT a
-    union of per-band selects: Catalyst does not deduplicate common
-    subtrees across union branches, so the union form re-executed the
-    ENTIRE minhash pipeline (explode → distinct shuffle → per-band
-    groupBy over the corpus) once per band — measured as 8 full
-    document scans in q28's physical plan (4 bands × the pair join's
-    two sides); this form leaves exactly the join's unavoidable 2.
-
-    Measured trade, recorded honestly: on THIS sandbox (one idle
-    32-core node, sf0.1, interleaved best-of-3) the union form is ~11%
-    FASTER (8.6 s vs 9.6 s) — its 8 independent branches schedule as
-    concurrent stages and the idle cores absorb the redundant work for
-    free. That win does not survive a real cluster: the redundancy is
-    4× the corpus-wide (doc_id, word) distinct SHUFFLE — resource
-    consumption that grows with the data and is paid in shared cluster
-    capacity, while the extra stage-parallelism it buys does not. The
-    2-scan form is the 100 TB plan; the single-node delta is window
-    noise against it."""
-    sig = minhash_signatures(docs, n_hashes)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"mh{b * band_size + j}")
-                        for j in range(band_size)
-                    ],
-                )
-            ).alias("bucket"),
-        )
-        for b in range(n_hashes // band_size)
-    ]
-    return sig.select(
-        "doc_id", F.explode(F.array(*bands)).alias("_bb")
-    ).select("doc_id", F.col("_bb.band").alias("band"), F.col("_bb.bucket").alias("bucket"))
-
-
 def lsh_candidate_pairs(docs: DataFrame, n_hashes: int = 16, band_size: int = 4) -> DataFrame:
     """Per-bucket candidate pairs (a < b), each emitted EXACTLY ONCE.
     The scale path: pair generation is per-bucket, never global.
@@ -549,7 +506,7 @@ def connected_components(
     # `pairs` — Catalyst does not dedupe common subtrees across union
     # branches, and `pairs` is typically the FULL near-dup pipeline
     # (LSH banding + Jaccard refine), which the union form executed
-    # twice (same disease as lsh_buckets' old per-band union)
+    # twice (same disease as a per-band union of LSH bands)
     edges = (
         pairs.select(
             F.explode(

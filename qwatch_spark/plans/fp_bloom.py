@@ -358,8 +358,8 @@ class FpBloomIndex:
         filter files whose epoch was already committed at the read
         snapshot — an in-flight concurrent writer stages its segment
         before its commit, and that segment has a higher epoch, so it
-        survives. The deletion watermark comes from ``table._manifest``
-        — the SAME snapshot ``read_buckets`` keys its scan off — not a
+        survives. The deletion watermark is ``table.max_epoch``, from
+        ``table._manifest`` — the SAME snapshot ``read_buckets`` keys its scan off — not a
         fresh ``_load_manifest()``: an epoch committed between the
         table's construction and this call would otherwise have its
         segment deleted (epoch <= fresh watermark) while its rows are
@@ -373,10 +373,7 @@ class FpBloomIndex:
         from qwatch_spark.operators.rules import FP_COL
 
         old = self.segment_paths()
-        man = table._manifest
-        committed = max(
-            [man.get("epoch_watermark", -1), *man.get("applied_epochs", [-1])]
-        )
+        committed = table.max_epoch
         if FP_COL in {f.name for f in table.payload_schema.fields}:
             live = (
                 table.read_buckets(spark, include_deleted=False, columns=[FP_COL])

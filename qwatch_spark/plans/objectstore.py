@@ -4,9 +4,9 @@ same small set of object primitives.
 Everything the engine does to storage outside Spark goes through here:
 a table's pointer, history, shards, bookkeeping appends and CAS commit
 log (`snapshot_table.CasLog`, under the table path, so the table's
-path picks the one store all of it lives in), the delta commit's
-parquet-footer stats (`operators/apply._delta_footer_stats`,
-`SnapshotTable._file_ts_ranges_many`), the ANN serving indexes'
+path picks the one store all of it lives in), the parquet-footer
+stats of the delta commit and compaction
+(`snapshot_table._footer_stats_many`), the ANN serving indexes'
 pointer/claim/fold/vacuum protocol (`operators/similarity`) and the
 fingerprint bloom index (`plans/fp_bloom`). Two stores implement the
 primitives:

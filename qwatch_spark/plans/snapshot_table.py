@@ -73,6 +73,9 @@ MANIFEST = "manifest.json"
 COMMITS_DIR = "_commits"  # CAS protocol: put-if-absent commit log
 HISTORY_DIR = "manifests"  # per-version manifest history
 SHARDS_DIR = "manifest_shards"  # sharded-manifest bucket-entry files
+# commit-stats marker a delta write adds (1 for deletes, null for
+# upserts): rows minus its footer null_count is the exact delete count
+DEL_COL = "_del"
 
 
 def _store(path: str):
@@ -210,6 +213,66 @@ def _bucket_files(out: str, listing) -> dict[int, list[str]]:
         if bdir.startswith("b=") and name.endswith(".parquet"):
             files.setdefault(int(bdir[2:]), []).append(f"{out.rstrip('/')}/{rel}")
     return files
+
+
+def _footer_stats(md) -> dict | None:
+    """The one parquet-footer parser: a file's FileMetaData folded to
+    {n: rows, nd: deletes, seq: (lo, hi), ts: (lo, hi)} from row-group
+    statistics alone. `nd` is None without a usable `DEL_COL` marker
+    (compaction output has none), `seq` None without seq min/max, `ts`
+    (naive UTC) None when every warc_ts value is null, as F.min/F.max
+    would give. The whole file is None when a warc_ts chunk has no
+    usable statistics (INT96 history, stats disabled) — callers then
+    take their slower exact path, so correctness never rests on
+    footers."""
+    n, nd, seq, ts = 0, 0, [], []
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        st = {
+            rg.column(j).path_in_schema: rg.column(j).statistics
+            for j in range(rg.num_columns)
+        }
+        n += rg.num_rows
+        d, s, t = st.get(DEL_COL), st.get("seq"), st.get("warc_ts")
+        ok = nd is not None and d is not None and d.has_null_count
+        nd = nd + rg.num_rows - d.null_count if ok else None
+        ok = seq is not None and s is not None and s.has_min_max
+        seq = [*seq, s.min, s.max] if ok else None
+        if t is not None and t.has_min_max:
+            lo, hi = utc_naive(t.min), utc_naive(t.max)
+            if lo is None or hi is None:
+                return None
+            ts += [lo, hi]
+        elif t is None or not t.has_null_count or t.null_count != rg.num_rows:
+            return None  # all-null chunks alone contribute no range
+    return {
+        "n": n,
+        "nd": nd,
+        "seq": (min(seq), max(seq)) if seq else None,
+        "ts": (min(ts), max(ts)) if ts else None,
+    }
+
+
+def _footer_stats_many(
+    out: str, files: dict[int, list[str]], max_workers: int | None = None
+) -> dict[int, dict[str, dict | None]] | None:
+    """{bucket: {path: `_footer_stats`}} for a `_bucket_files` map of
+    the data dir `out` (buckets without files are left out), from ONE
+    `parquet_metadata_many` pass through the store, at the store's own
+    parallelism: a plain loop locally (a footer is ~75 µs of native
+    CPU, where a pool measured 8× slower), a wide pool of round-trips
+    on `s3://`, which keeps the commit's stats phase ~flat as touched
+    files grow (scripts/bench_commit_stats.py). None when no
+    driver-side store serves `out`'s scheme."""
+    store = store_for(out)
+    if store is None:
+        return None
+    paths = [(b, p) for b in sorted(files) for p in files[b]]
+    mds = store.parquet_metadata_many([p for _b, p in paths], max_workers)
+    res: dict[int, dict] = {}
+    for (b, p), md in zip(paths, mds):
+        res.setdefault(b, {})[p] = _footer_stats(md)
+    return res
 
 
 class SnapshotTable:
@@ -388,6 +451,13 @@ class SnapshotTable:
     def version(self) -> int:
         return self._manifest["version"]
 
+    @property
+    def max_epoch(self) -> int:
+        """Highest epoch this table's manifest records as applied (-1
+        when none) — from the table's own manifest, never a reload."""
+        m = self._manifest
+        return max([m.get("epoch_watermark", -1), *m.get("applied_epochs", [-1])])
+
     def has_epoch(self, epoch_id: int) -> bool:
         e = int(epoch_id)
         return (0 <= e <= self._manifest.get("epoch_watermark", -1)) or (
@@ -448,11 +518,7 @@ class SnapshotTable:
         manifest = dict(self._manifest)
         manifest["version"] = self.version + 1
         manifest["rows_est"] = n
-        self._write_manifest(
-            self.log, manifest,
-            expected_mutation=self._manifest.get("mutation", 0),
-        )
-        self._manifest = manifest
+        self._swap_or_cleanup(manifest)
         return n
 
     @staticmethod
@@ -797,19 +863,25 @@ class SnapshotTable:
     # ---------- commit ----------
 
     def _swap_or_cleanup(
-        self, manifest: dict, written_dir: str, extra_paths: list[str] = ()
+        self,
+        manifest: dict,
+        written_dir: str | None = None,
+        extra_paths: list[str] = (),
     ) -> None:
-        """CAS manifest commit; on a concurrent-writer abort,
-        delete this writer's own (never-shared) version dir and any
-        shard files it wrote, so the loser leaves no junk — the winner's
-        files were never at risk."""
+        """The one CAS commit of a new manifest over this table's own:
+        every manifest change after `create` linearizes here. On a
+        concurrent-writer abort, delete this writer's own (never-shared)
+        version dir, if it staged one, and any shard files it wrote, so
+        the loser leaves no junk — the winner's files were never at
+        risk."""
         try:
             self._write_manifest(
                 self.log, manifest,
                 expected_mutation=self._manifest.get("mutation", 0),
             )
         except RuntimeError:
-            self.store.delete_tree(written_dir)
+            if written_dir is not None:
+                self.store.delete_tree(written_dir)
             for p in extra_paths:
                 self.store.delete(p)
             raise
@@ -832,11 +904,7 @@ class SnapshotTable:
             return
         manifest = dict(self._manifest)
         self._record_epoch(manifest, epoch_id)
-        self._write_manifest(
-            self.log, manifest,
-            expected_mutation=self._manifest.get("mutation", 0),
-        )
-        self._manifest = manifest
+        self._swap_or_cleanup(manifest)
 
     def commit_prewritten_delta(
         self,
@@ -890,39 +958,6 @@ class SnapshotTable:
         return new_version
 
     @staticmethod
-    def _ts_range_of_md(md):
-        """One footer's warc_ts range: [lo_iso, hi_iso], None (all rows
-        null — no range, read always), or the sentinel "missing" (a
-        statistic is absent — the caller's whole fast path falls back)."""
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            rgm = md.row_group(rg)
-            col = None
-            for i in range(rgm.num_columns):
-                c = rgm.column(i)
-                if c.path_in_schema == "warc_ts":
-                    col = c
-                    break
-            if col is None:
-                return "missing"
-            st = col.statistics
-            if st is not None and st.has_min_max:
-                mn, mx = utc_naive(st.min), utc_naive(st.max)
-                if mn is None or mx is None:
-                    return "missing"
-                lo = mn if lo is None or mn < lo else lo
-                hi = mx if hi is None or mx > hi else hi
-            elif (
-                st is not None
-                and st.has_null_count
-                and st.null_count == rgm.num_rows
-            ):
-                continue  # all-null chunk contributes no range
-            else:
-                return "missing"
-        return [_ziso(lo), _ziso(hi)] if lo is not None else None
-
-    @staticmethod
     def _file_ts_ranges_many(
         out: str, buckets, max_workers: int | None = None
     ) -> dict:
@@ -930,32 +965,30 @@ class SnapshotTable:
         dirs `b=<k>` of one compaction output: {str(k): {fname:
         [lo_iso, hi_iso] | None} | None} (a file range None = rows but
         no usable range, read it always). A bucket maps to None when
-        it has no parquet files or any footer lacks the statistics
-        (INT96 history, stats disabled) — callers then fold prior
-        token ranges instead, conservative and never wrong. Two
-        batched passes through the object store at its own width: ONE
-        tree listing of `out` (one LIST round-trip per ~1000 keys on
-        object storage, not one per bucket) and ONE footer pass over
-        every file. Unknown schemes → every bucket None."""
-        keys = [str(b) for b in buckets]
+        it has no parquet files or any footer lacks the statistics —
+        callers then fold prior token ranges instead, conservative and
+        never wrong. ONE tree listing of `out` (one LIST round-trip per
+        ~1000 keys on object storage, not one per bucket) and ONE
+        footer pass (`_footer_stats_many`). Unknown schemes → every
+        bucket None."""
+        bs = [int(b) for b in buckets]
         store = store_for(out)
         if store is None:
-            return {k: None for k in keys}
+            return {str(b): None for b in bs}
         found = _bucket_files(out, store.list_tree(out))
-        per_bucket = {k: found.get(int(k), []) for k in keys}
-        flat = [(k, p) for k in keys for p in per_bucket[k]]
-        mds = store.parquet_metadata_many([p for _k, p in flat], max_workers)
-        res: dict[str, dict | None] = {
-            k: ({} if per_bucket[k] else None) for k in keys
-        }
-        for (k, path), md in zip(flat, mds):
-            if res[k] is None:
-                continue
-            r = SnapshotTable._ts_range_of_md(md)
-            if r == "missing":
-                res[k] = None
-                continue
-            res[k][path.rsplit("/", 1)[-1]] = r
+        per_b = _footer_stats_many(
+            out, {b: found[b] for b in bs if b in found}, max_workers
+        )
+        res: dict[str, dict | None] = {}
+        for b in bs:
+            sts = per_b.get(b, {})
+            ok = sts and all(st is not None for st in sts.values())
+            res[str(b)] = {
+                p.rsplit("/", 1)[-1]: (
+                    [_ziso(v) for v in st["ts"]] if st["ts"] else None
+                )
+                for p, st in sts.items()
+            } if ok else None
         return res
 
     def _delta_bytes(self, entries: list) -> dict[str, int]:

@@ -88,10 +88,6 @@ COMMIT_LOG_SCHEMA = T.StructType(
 )
 
 
-def schema_to_json(schema: T.StructType) -> str:
-    return schema.json()
-
-
 def schema_from_json(payload: str) -> T.StructType:
     schema = T.StructType.fromJson(__import__("json").loads(payload))
     return schema

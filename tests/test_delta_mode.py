@@ -392,6 +392,92 @@ def test_footer_stats_fallback_commits_identically(spark, tmp_path, monkeypatch)
     assert zmaps(t_fast) == zmaps(t_slow)
 
 
+def test_footer_readers_edge_files(tmp_path):
+    """The delta commit's `_delta_footer_stats` and compaction's
+    `_file_ts_ranges_many` read one footer parser; pin both on
+    hand-written edge files, one `b=<k>` dir per case: a plain bucket,
+    a two-file bucket, an all-null warc_ts file, a file whose first row
+    group is all-null, an INT96 file (no usable timestamp statistics:
+    both readers give up), a file without the `_del` marker (compaction
+    output: the delta reader gives up, compaction does not) and a
+    requested bucket with no files. Pure pyarrow — no Spark session."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from qwatch_spark.operators.apply import _delta_footer_stats
+
+    out = str(tmp_path / "v")
+
+    def write(b, name, seq, dels, hours, int96=False, rg=None, marker=True):
+        os.makedirs(os.path.join(out, f"b={b}"), exist_ok=True)
+        cols = {
+            "seq": pa.array(seq, pa.int64()),
+            "warc_ts": pa.array(
+                [None if h is None else dt.datetime(2024, 1, 1, h) for h in hours],
+                pa.timestamp("us", tz="UTC"),
+            ),
+        }
+        if marker:
+            cols["_del"] = pa.array([1 if d else None for d in dels], pa.int8())
+        path = os.path.join(out, f"b={b}", name)
+        pq.write_table(
+            pa.table(cols), path,
+            use_deprecated_int96_timestamps=int96, row_group_size=rg,
+        )
+        return path
+
+    files = {
+        0: [write(0, "a.parquet", [5, 3, 9], [0, 1, 0], [4, 2, 7])],
+        1: [
+            write(1, "a.parquet", [1, 2], [0, 0], [10, 11]),
+            write(1, "b.parquet", [7, 8, 0], [1, 1, 0], [1, None, 23]),
+        ],
+        2: [write(2, "a.parquet", [4, 6], [1, 0], [None, None])],
+        3: [write(3, "a.parquet", [1, 2, 3, 4], [0, 0, 1, 0], [None, None, 5, 6], rg=2)],
+        4: [write(4, "a.parquet", [1, 2], [0, 1], [3, 4], int96=True)],
+        5: [write(5, "a.parquet", [1, 2], [0, 0], [3, 8], marker=False)],
+        6: [],
+    }
+    assert pq.ParquetFile(files[3][0]).metadata.num_row_groups == 2
+
+    def at(h):
+        return dt.datetime(2024, 1, 1, h)
+
+    def st(n, nd, min_seq, max_seq, lo, hi):
+        return {"n": n, "nd": nd, "min_seq": min_seq, "max_seq": max_seq,
+                "lo": lo, "hi": hi}
+
+    want = {
+        0: {0: st(3, 1, 3, 9, at(2), at(7))},
+        1: {1: st(5, 2, 0, 8, at(1), at(23))},
+        2: {2: st(2, 1, 4, 6, None, None)},
+        3: {3: st(4, 1, 1, 4, at(5), at(6))},
+        4: None,
+        5: None,
+        6: {},
+    }
+    for b, fs in files.items():
+        assert _delta_footer_stats(out, {b: fs}) == want[b], b
+    # several buckets in one pass fold independently
+    good = {b: files[b] for b in (0, 1, 2, 3)}
+    assert _delta_footer_stats(out, good) == {b: want[b][b] for b in good}
+
+    def iso(h):
+        return at(h).isoformat()
+
+    assert SnapshotTable._file_ts_ranges_many(out, sorted(files)) == {
+        "0": {"a.parquet": [iso(2), iso(7)]},
+        "1": {"a.parquet": [iso(10), iso(11)], "b.parquet": [iso(1), iso(23)]},
+        "2": {"a.parquet": None},
+        "3": {"a.parquet": [iso(5), iso(6)]},
+        "4": None,
+        "5": {"a.parquet": [iso(3), iso(8)]},
+        "6": None,
+    }
+
+
 def test_datafs_size_cache_bounded_and_stale_size_recovery(tmp_path):
     """r7 verdict #7 + ADVICE: `S3Store._sizes` must stay bounded (a
     long-lived driver listing millions of files must not leak one dict
