@@ -9,8 +9,9 @@ cycle per index:
     (band, bucket), then `lsh_vacuum` — planes never change, so this is
     purely the small-file story.
 
-Both run behind a versioned `_current`-pointer swap, so they are safe
-beside live appenders (which get a typed IndexConflictError and retry
+Both publish the next `_vK` version dir behind the index's `_current`
+pointer — the same swap every `*_build_index` publishes through — so
+they are safe beside live appenders (which get a typed IndexConflictError and retry
 with the dedup flag) and live probes (which keep a fully intact old
 version until vacuum's retention window passes). Run ONE maintenance
 owner per index — rival maintainers lose the version-dir claim cleanly,

@@ -526,30 +526,17 @@ def _put_meta(d: str, columns: dict) -> None:
 
 
 def _get_meta(d: str, columns: list[str]) -> list[dict]:
-    """Rows of the metadata table at `d`: ONE GET of the fixed key. An
-    index the old Spark writer built holds `part-<uuid>` names there
-    instead, so only a missing key lists the dir (Spark's hidden-file
-    rule: no `_`/`.` names). [] when the dir holds no table."""
+    """Rows of the metadata table at `d`: ONE GET of the fixed key; []
+    when there is none."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    store = _idx_fs(d)
-    blobs = [store.get(f"{d}/{_META_KEY}")]
-    if blobs[0] is None:
-        blobs = [
-            store.get(f"{d}/{rel}")
-            for rel, _size, _mt in store.list_tree(d)
-            if "/" not in rel
-            and rel.endswith(".parquet")
-            and not rel.startswith(("_", "."))
-        ]
-    rows: list[dict] = []
-    for b in blobs:
-        if b is not None:
-            # ParquetFile, not pq.read_table: the dataset reader's
-            # thread pool aborts the interpreter at exit (pyarrow 16)
-            rows += pq.ParquetFile(pa.BufferReader(b)).read(columns).to_pylist()
-    return rows
+    blob = _idx_fs(d).get(f"{d}/{_META_KEY}")
+    if blob is None:
+        return []
+    # ParquetFile, not pq.read_table: the dataset reader's thread pool
+    # aborts the interpreter at exit (pyarrow 16)
+    return pq.ParquetFile(pa.BufferReader(blob)).read(columns).to_pylist()
 
 
 def _read_seed_rows(data: str, vec_col: str) -> list[tuple[int, list[float]]]:
@@ -562,8 +549,7 @@ def _read_seed_rows(data: str, vec_col: str) -> list[tuple[int, list[float]]]:
 
 def _write_seed_rows(seeds: list[tuple[int, list]], data: str, vec_col: str) -> None:
     """Persist the codebook snapshot to `data/_seeds`: int64 `cell` +
-    list<double> vector, the logical types the Spark writer of older
-    indexes produced, so both generations read back identically."""
+    list<double> vector."""
     import pyarrow as pa
 
     _put_meta(
@@ -614,25 +600,6 @@ def _assigner(seeds: list[tuple[int, list]], max_literals: int):
     return _assign_pandas
 
 
-def _guard_fresh_build(path: str, fn: str, maintain_fn: str) -> None:
-    """Refuse a FRESH `.mode('overwrite')` build at a path that holds a
-    VERSIONED index (a `_current` pointer exists): the root overwrite
-    would delete the `_vK` dirs and the pointer out from under any live
-    probe that already resolved the old version — violating the
-    retention guarantee the vacuum exists to uphold. Rebuilding a
-    versioned index IS maintenance: `*_maintain` writes the new
-    generation behind the pointer protocol instead. A genuinely fresh
-    start means vacuuming and deleting the index directory first."""
-    if _idx_current(path)[1] >= 0:
-        raise ValueError(
-            f"{fn}({path}): path holds a VERSIONED index (_current "
-            f"pointer present) — a fresh overwrite build would delete "
-            f"version dirs still visible to live probes. Use "
-            f"{maintain_fn} to rebuild behind the pointer protocol, or "
-            "delete the index directory explicitly for a fresh start."
-        )
-
-
 def ivf_build_index(
     vectors: DataFrame,
     path: str,
@@ -643,36 +610,62 @@ def ivf_build_index(
     lloyd_iters: int = 0,
     seed_strategy: str = "first_ids",
 ) -> None:
-    """Materialize the IVF index as a CELL-PARTITIONED parquet layout —
-    the physical form that makes probes partition-pruned reads instead
-    of full scans (SCALING.md's 10⁹-vector path). Layout:
+    """Build the IVF index at `path` as its next version (`_v0` on an
+    empty path): a CELL-PARTITIONED parquet layout — the physical form
+    that makes probes partition-pruned reads instead of full scans
+    (SCALING.md's 10⁹-vector path). Layout:
 
-        path/cell=<c>/part-*.parquet     (id, embedding)
-        path/_seeds/part-00000.parquet   (cell, embedding)
+        path/_current                          {"version": K}
+        path/_vK/cell=<c>/part-*.parquet       (id, embedding)
+        path/_vK/_seeds/part-00000.parquet     (cell, embedding)
 
-    The seed snapshot makes probe-cell selection a driver-side numpy
-    argmax over n_cells rows — zero jobs at query time: `_seeds` is one
-    store object, written with one put and read with one GET. It is
-    underscore-prefixed, so Spark's directory listing hides it from
-    index reads automatically."""
-    _guard_fresh_build(path, "ivf_build_index", "ivf_maintain")
+    The version is published like a maintain's (`_publish_version`),
+    so a rebuild at a live path leaves the version a probe already
+    resolved intact until `ivf_vacuum` retires it. The seed snapshot
+    makes probe-cell selection a driver-side numpy argmax over n_cells
+    rows — zero jobs at query time: `_seeds` is one store object,
+    written with one put and read with one GET."""
+    store = _idx_fs(path)
+    v0 = _pointer_read(store, path)
+    write = _ivf_writer(
+        vectors, n_cells, id_col, vec_col, max_literals, lloyd_iters,
+        seed_strategy,
+    )
+    _publish_version(store, path, "ivf_build_index", "build", v0, write)
+
+
+def _ivf_writer(
+    vectors: DataFrame,
+    n_cells: int,
+    id_col: str,
+    vec_col: str,
+    max_literals: int,
+    lloyd_iters: int,
+    seed_strategy: str,
+):
+    """Derive the codebook of `vectors` now and return `write(vdir)`,
+    which writes one IVF index version (cells + `_seeds`) into `vdir`."""
     seeds, assign = _ivf_codebook(
         vectors, n_cells, id_col, vec_col, max_literals, lloyd_iters,
         seed_strategy=seed_strategy,
     )
-    assigned = assign(vectors, seeds, id_col, vec_col)
-    (
-        assigned.repartition(n_cells, "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(_sp(path))
-    )
-    # persist the FINAL codebook — with lloyd_iters > 0 the partition
-    # assignment above used the refined centroids, so `_seeds` must hold
-    # those, not the original seed vectors: probe cell selection and
-    # incremental appends quantize against `_seeds`, and a mismatched
-    # quantizer silently degrades recall
-    _write_seed_rows(seeds, path, vec_col)
+
+    def write(vdir: str) -> None:
+        (
+            assign(vectors, seeds, id_col, vec_col)
+            .repartition(n_cells, "cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(_sp(vdir))
+        )
+        # persist the FINAL codebook — with lloyd_iters > 0 the
+        # partition assignment above used the refined centroids, so
+        # `_seeds` must hold those, not the original seed vectors:
+        # probe cell selection and incremental appends quantize against
+        # `_seeds`, and a mismatched quantizer silently degrades recall
+        _write_seed_rows(seeds, vdir, vec_col)
+
+    return write
 
 
 def ivf_params_for(
@@ -770,10 +763,9 @@ def _batch_probe_guard(
     if queries:
         return None
     # `path` is the CURRENT version's data dir — both batch probes
-    # resolve `_idx_current` before calling (the r7 fix: on a
-    # maintained-and-vacuumed index the ROOT holds only underscore
-    # dirs, which Spark's listing hides, so reading the root raised
-    # "unable to infer schema" instead of the documented empty frame)
+    # resolve `_idx_current` before calling: the index root holds only
+    # underscore names, which Spark's listing hides, so reading it
+    # raises "unable to infer schema"
     id_type = dict(spark.read.parquet(_sp(path)).dtypes)[id_col]
     return spark.createDataFrame(
         [], f"query_id long, {id_col} {id_type}, cosine double"
@@ -877,17 +869,19 @@ def lsh_build_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Materialize the sign-LSH index as a (band, bucket)-PARTITIONED
-    parquet layout — the serving form of `ann_topk_lsh`. The ad-hoc
-    query recomputes corpus signatures per query (fine for one-off
-    sweeps, measured ~12× an IVF probe per query in the recall study);
-    this pays the hashing once and turns every probe into a
-    partition-pruned read of exactly the n_bands directories the query
-    lands in. Layout:
+    """Build the sign-LSH index at `path` as its next version (`_v0` on
+    an empty path): a (band, bucket)-PARTITIONED parquet layout — the
+    serving form of `ann_topk_lsh`. The ad-hoc query recomputes corpus
+    signatures per query (fine for one-off sweeps, measured ~12× an IVF
+    probe per query in the recall study); this pays the hashing once
+    and turns every probe into a partition-pruned read of exactly the
+    n_bands directories the query lands in. Layout:
 
-        path/band=<b>/bucket=<k>/part-*.parquet   (id, embedding)
-        path/_params/part-00000.parquet   (n_planes, n_bands, dim, seed)
+        path/_current                                 {"version": K}
+        path/_vK/band=<b>/bucket=<k>/part-*.parquet   (id, embedding)
+        path/_vK/_params/part-00000.parquet   (n_planes, n_bands, dim, seed)
 
+    The version is published like a maintain's (`_publish_version`).
     One row per (vector, band) — the L hash tables of classic LSH, so
     the index footprint is n_bands × the corpus: the standard LSH
     space-for-recall trade, stated rather than hidden. The write
@@ -896,38 +890,45 @@ def lsh_build_index(
     hot bucket at corpus scale means the bands are too short for the
     corpus — raise bits per band (see ann_topk_lsh's tuning note)
     before reaching for write-side salting. `_params` persists the
-    hyperplane parameters; probes and appends MUST hash with them (a
-    re-derived quantizer silently degrades recall — same invariant as
-    the IVF `_seeds` snapshot); like `_seeds` it is one store object."""
-    import pyarrow as pa
-
-    _guard_fresh_build(path, "lsh_build_index", "lsh_maintain")
+    hyperplane parameters of its version; probes and appends MUST hash
+    with them (a re-derived quantizer silently degrades recall — same
+    invariant as the IVF `_seeds` snapshot); like `_seeds` it is one
+    store object."""
+    store = _idx_fs(path)
+    v0 = _pointer_read(store, path)
     bucketed = lsh_rand_buckets(
         vectors, n_planes, n_bands, dim, seed, id_col, vec_col
     )
+    _publish_version(
+        store, path, "lsh_build_index", "build", v0,
+        lambda vdir: _lsh_write(bucketed, vdir, (n_planes, n_bands, dim, seed)),
+    )
+
+
+def _lsh_write(rows: DataFrame, vdir: str, params: tuple) -> None:
+    """Write one LSH index version into `vdir`: `rows` partitioned by
+    (band, bucket), one file per bucket, and `params` (n_planes,
+    n_bands, dim, seed) as its `_params`."""
+    import pyarrow as pa
+
     (
-        bucketed.repartition("band", "bucket")
+        rows.repartition("band", "bucket")
         .write.mode("overwrite")
         .partitionBy("band", "bucket")
-        .parquet(_sp(path))
+        .parquet(_sp(vdir))
     )
     _put_meta(
-        f"{path.rstrip('/')}/_params",
-        {
-            k: pa.array([int(v)], pa.int32())
-            for k, v in zip(_LSH_PARAMS, (n_planes, n_bands, dim, seed))
-        },
+        f"{vdir}/_params",
+        {k: pa.array([int(v)], pa.int32()) for k, v in zip(_LSH_PARAMS, params)},
     )
 
 
-def _lsh_index_params(spark, path: str) -> tuple:
-    """(n_planes, n_bands, dim, seed) for the index at `path`: one GET of
-    `_params` per call, uncached — a rebuild at the same path by any
-    process is seen by the next probe. `spark` is unused (the read is
-    driver-side)."""
-    rows = _get_meta(f"{path.rstrip('/')}/_params", list(_LSH_PARAMS))
+def _lsh_index_params(data: str) -> tuple:
+    """(n_planes, n_bands, dim, seed) of the index version at `data`:
+    one GET of its `_params` per call, uncached."""
+    rows = _get_meta(f"{data.rstrip('/')}/_params", list(_LSH_PARAMS))
     if not rows:
-        raise ValueError(f"LSH index at {path} has no _params")
+        raise ValueError(f"LSH index version at {data} has no _params")
     return tuple(rows[0][k] for k in _LSH_PARAMS)
 
 
@@ -952,16 +953,20 @@ def lsh_index_append(
     pinned snapshot, and an id-level dedup would then permanently drop
     the missing bands (silent recall loss). The sequence is
     `_append_current`'s."""
-    n_planes, n_bands, dim, seed = _lsh_index_params(new_vectors.sparkSession, path)
+
+    def hashed(data: str) -> DataFrame:
+        n_planes, n_bands, dim, seed = _lsh_index_params(data)
+        return lsh_rand_buckets(
+            new_vectors, n_planes, n_bands, dim, seed, id_col, vec_col
+        )
+
     return _append_current(
         path,
         "lsh_index_append",
         "compaction",
         [id_col, "band"],
         ["band", "bucket"],
-        lambda _data: lsh_rand_buckets(
-            new_vectors, n_planes, n_bands, dim, seed, id_col, vec_col
-        ),
+        hashed,
         dedup_against_index,
         fold_wait_timeout_s,
     )
@@ -1039,7 +1044,8 @@ def lsh_probe_topk(
     bands are deduplicated before scoring, so each is scored once.
     Results are identical to `ann_topk_lsh` at the same parameters
     (pytest-pinned)."""
-    n_planes, n_bands, dim, seed = _lsh_index_params(spark, path)
+    data, _v = _idx_current(path)
+    n_planes, n_bands, dim, seed = _lsh_index_params(data)
     if len(query_vec) != dim:
         raise ValueError(
             f"query vector has length {len(query_vec)}, but the index at "
@@ -1050,7 +1056,6 @@ def lsh_probe_topk(
     for band, bucket in qb:
         c = (F.col("band") == band) & (F.col("bucket") == bucket)
         pred = c if pred is None else pred | c
-    data, _v = _idx_current(path)
     idx = spark.read.parquet(_sp(data)).filter(pred)
     if exclude_id is not None:
         idx = idx.filter(F.col(id_col) != exclude_id)
@@ -1122,7 +1127,7 @@ def lsh_probe_topk_batch(
     empty = _batch_probe_guard(spark, data, queries, max_batch, id_col)
     if empty is not None:
         return empty
-    n_planes, n_bands, dim, seed = _lsh_index_params(spark, path)
+    n_planes, n_bands, dim, seed = _lsh_index_params(data)
     rows = []
     for qid, vec in queries:
         if len(vec) != dim:
@@ -1277,32 +1282,33 @@ def _idx_fs(path: str):
     return store
 
 
-def _pointer_read(store, path: str) -> int:
-    """Current version from `path/_current`, or -1 (no pointer: the
-    legacy flat layout; a corrupt pointer reads the same). Any other
-    I/O error PROPAGATES: reading a transient error as "legacy layout"
-    would send an append's delta files into the index ROOT of a
-    versioned index — invisible to every probe and to the next fold."""
+def _pointer_read(store, path: str) -> int | None:
+    """Current version from `path/_current`; None when there is no
+    pointer (no index at `path`). A pointer that does not parse raises
+    ValueError and any other I/O error propagates: reading either as
+    "no index" would let a build re-publish `_v0` over a live index."""
     raw = store.get(f"{path.rstrip('/')}/_current")
     if raw is None:
-        return -1
+        return None
     try:
         return int(json.loads(raw)["version"])
-    except (ValueError, KeyError):
-        return -1
+    except (ValueError, KeyError, TypeError) as e:
+        raise ValueError(
+            f"index at {path}: corrupt _current pointer {raw[:64]!r}"
+        ) from e
 
 
 def _claim_version(store, path: str, version: int) -> bool:
     """Create-exclusive claim of `path/_v<version>.claim` — the
-    rival-maintainer CAS; False = a rival holds it. The claim lives
+    rival-writer CAS of builds and maintains; False = a rival holds it. The claim lives
     OUTSIDE the version dir so the version write's overwrite mode can
     never erase it mid-protocol. Its body is a nonce: the store's
     read-back after an ambiguous 412 must not take a rival's claim for
     ours.
 
-    Crash residual: a maintainer that claims and dies before the swap
-    leaves the claim in place, and the next maintainer at that version
-    number fails typed until an operator removes it — the
+    Crash residual: a writer that claims and dies before the swap
+    leaves the claim in place, and the next build or maintain at that
+    version number fails typed until an operator removes it — the
     single-maintenance-owner contract's recovery step. Claims of
     published versions (K <= current) are junk that vacuum removes."""
     return store.put_if_absent(
@@ -1336,20 +1342,19 @@ def _sp(p: str) -> str:
 
 
 def _idx_current(path: str) -> tuple[str, int]:
-    """Resolve an IVF index's CURRENT data dir: `path/_current` (json
-    `{"version": K}`) points at `path/_vK` (UNDERSCORE-prefixed — that
-    prefix is what hides version dirs from Spark's directory listings,
-    so a legacy flat read never sees them as a rival partition column);
-    no pointer = the legacy
-    flat layout (data directly under `path`, version -1). The pointer
-    is the index's visibility linearization point — `ivf_maintain`
-    writes a complete new version dir BEFORE atomically swapping the
-    pointer (write-before-publish, the fp_bloom rebuild discipline), so
-    a probe or append that resolved the old version keeps a fully
-    intact dir under it until `ivf_vacuum` retires it. Returns the
+    """Resolve an index's CURRENT data dir: `path/_current` (json
+    `{"version": K}`) points at `path/_vK` (UNDERSCORE-prefixed, so
+    Spark's directory listings hide it). The pointer is the index's
+    visibility linearization point — every build and maintain writes a
+    complete version dir BEFORE swapping the pointer to it
+    (`_publish_version`), so a probe or append that resolved a version
+    keeps a fully intact dir under it until `*_vacuum` retires it.
+    Raises ValueError when `path` holds no index. Returns the
     INDEX-namespace dir — map through `_sp` at Spark boundaries."""
     v = _pointer_read(_idx_fs(path), path)
-    return (path if v < 0 else f"{path.rstrip('/')}/_v{v}"), v
+    if v is None:
+        raise ValueError(f"no index at {path} (no _current pointer)")
+    return f"{path.rstrip('/')}/_v{v}", v
 
 
 def _idx_swap_current(path: str, version: int) -> None:
@@ -1394,7 +1399,7 @@ def _wait_no_fold(path: str, timeout_s: float = 600.0) -> tuple[str, int]:
     store = _idx_fs(path)
     while True:
         data, v = _idx_current(path)
-        if v < 0 or not store.exists(_fold_marker(data)):
+        if not store.exists(_fold_marker(data)):
             return data, v
         if _time.monotonic() >= deadline:
             raise IndexConflictError(
@@ -1426,8 +1431,8 @@ def _append_current(
         and the fold's would otherwise race (write skew — both read
         before either writes, both insert the same rows);
       - `rows_for(data)` turns the batch into index rows against that
-        version (IVF: assign against its `_seeds`; LSH: hash with the
-        root `_params`); a dedup retry anti-joins them on the index
+        version (IVF: assign against its `_seeds`; LSH: hash with its
+        `_params`); a dedup retry anti-joins them on the index
         keys `keys` ([id] for IVF, [id, band] for LSH — see
         `lsh_index_append` for why band);
       - append them `partitionBy(partition_cols)` into that dir;
@@ -1530,8 +1535,8 @@ def _append_via_move(df, vdir: str, partition_cols: list[str]) -> None:
     commit cleanup deletes the other's in-flight attempt dirs —
     observed as 'Mkdirs failed to create .../_temporary/...' task
     failures in the stress test). The fold instead writes to a hidden
-    scratch sibling (`.fold-*`, invisible to Spark's listings) and
-    hard-renames the part files into their partition dirs — per-file
+    scratch dir inside the version (`.fold-*`, invisible to Spark's
+    listings and to `_list_parts`) and hard-renames the part files into their partition dirs — per-file
     atomic, no shared staging, same visibility semantics as any append
     (files appear one by one). Part filenames carry job UUIDs, so
     renames cannot collide with the appender's files. The move is the
@@ -1542,7 +1547,7 @@ def _append_via_move(df, vdir: str, partition_cols: list[str]) -> None:
 
     store = _idx_fs(vdir)
     vdir = vdir.rstrip("/")
-    scratch = f"{vdir.rsplit('/', 1)[0]}/.fold-{uuid.uuid4().hex}"
+    scratch = f"{vdir}/.fold-{uuid.uuid4().hex}"
     try:
         (
             df.repartition(*partition_cols)
@@ -1558,6 +1563,53 @@ def _append_via_move(df, vdir: str, partition_cols: list[str]) -> None:
         )
     finally:
         store.delete_tree(scratch)
+
+
+def _publish_version(store, path: str, fn: str, work: str, v0, write) -> int:
+    """Publish the next version of the index at `path` — the one write
+    sequence of every build and every maintain. `v0` is the version the
+    caller resolved before its reads (None: no index yet), `write(vdir)`
+    writes the complete new version dir, and `fn` / `work` name the
+    caller in messages:
+
+      - claim: a rival writer is excluded by the `_vK.claim`
+        put-if-absent (`_claim_version`: a link of a complete file
+        locally, a conditional put on S3) — a lost claim raises the
+        typed `IndexConflictError`; rebase and retry;
+      - recheck: the window between resolving `v0` and claiming is
+        wide enough for a rival to claim, publish, and have vacuum
+        retire its now-published claim; without the post-claim pointer
+        recheck a stale writer could RE-claim the current version
+        number and overwrite the live dir. The claim left behind on
+        raising targets a published (or superseded) version, which
+        vacuum clears as junk;
+      - write: `path/_vK` is written COMPLETELY before the `_current`
+        pointer swaps to it (`_idx_swap_current`, an atomic store put),
+        so a reader that resolved an older version keeps a fully intact
+        dir. A write that raises deletes its unpublished `_vK` and
+        releases the claim, so the next writer can take K.
+
+    Returns K."""
+    new_v = 0 if v0 is None else v0 + 1
+    if not _claim_version(store, path, new_v):
+        raise IndexConflictError(
+            f"{fn}({path}): version {new_v} already claimed by a rival; "
+            "rebase on the new current and retry"
+        )
+    if _pointer_read(store, path) != v0:
+        raise IndexConflictError(
+            f"{fn}({path}): the current version moved past the one read "
+            f"before the {work}; rebase and retry"
+        )
+    vdir = f"{path.rstrip('/')}/_v{new_v}"
+    try:
+        write(vdir)
+    except BaseException:
+        store.delete_tree(vdir)
+        store.delete(f"{vdir}.claim")
+        raise
+    _idx_swap_current(path, new_v)
+    return new_v
 
 
 def _maintain_version(
@@ -1581,22 +1633,9 @@ def _maintain_version(
         read), so the rebuild and the fold below reason about exactly
         what was read; `prepare(data, pinned)` does the pre-claim work
         (reads, sizing) and returns `write(vdir)`, the rebuild;
-      - claim: a rival maintainer is excluded by the `_vK.claim`
-        put-if-absent (`_claim_version`: a link of a complete file
-        locally, a conditional put on S3) — a lost claim raises the
-        typed `IndexConflictError`; rebase and retry next cycle;
-      - recheck: the window between resolving the current version
-        (before the pinned read — a LONG window) and claiming is wide
-        enough for a rival to claim, publish, and have vacuum retire
-        its now-published claim; without the post-claim `_idx_current`
-        recheck a stale maintainer could RE-claim the current version
-        number and overwrite the live dir. The claim left behind on
-        raising targets a published (or superseded) version, which
-        vacuum clears as junk;
-      - write: the new version dir `path/_vK` is written COMPLETELY
-        before the `_current` pointer swaps to it (`_idx_swap_current`,
-        an atomic store put) — a reader that resolved the old version
-        keeps a fully intact dir;
+      - publish: claim → recheck → write → swap (`_publish_version`,
+        the build's sequence too); the recheck matters most here, where
+        the window since resolving the version spans the pinned read;
       - fold: appends that COMMITTED into the old version during the
         rebuild (wrote + passed their version check before the swap)
         are not lost: after the swap, the old version's part files NOT
@@ -1647,24 +1686,17 @@ def _maintain_version(
     if not pinned:
         raise ValueError(f"{label} index at {path} has no data files")
     write = prepare(data, pinned)
-    new_v = v0 + 1
+
+    def write_marked(vdir: str) -> None:
+        write(vdir)
+        store.put(
+            _fold_marker(vdir),
+            b"fold in progress; cleared when the delta fold lands",
+        )
+
+    # publish: probes/appends flip to the new version here
+    new_v = _publish_version(store, path, fn, work, v0, write_marked)
     vdir = f"{path.rstrip('/')}/_v{new_v}"
-    if not _claim_version(store, path, new_v):
-        raise IndexConflictError(
-            f"{fn}({path}): version {new_v} already claimed by "
-            "a rival maintainer; rebase on the new current and retry"
-        )
-    if _idx_current(path)[1] != v0:
-        raise IndexConflictError(
-            f"{fn}({path}): the current version moved past "
-            f"{v0} while preparing the {work}; rebase and retry"
-        )
-    write(vdir)
-    store.put(
-        _fold_marker(vdir),
-        b"fold in progress; cleared when the delta fold lands",
-    )
-    _idx_swap_current(path, new_v)  # publish: probes/appends flip here
     folded = 0
     delta = _list_parts(store, data, patterns) - pinned
     if delta:
@@ -1717,8 +1749,9 @@ def ivf_maintain(
     for queries from the newly-appended regime). `lloyd_iters`
     refinement then runs exactly as at build time.
 
-    The rebuild is `ivf_build_index` (cells + `_seeds`) into the new
-    version dir; the fold assigns the delta against the NEW codebook.
+    The rebuild is the build's writer (`_ivf_writer`: cells + `_seeds`)
+    into the new version dir; the fold assigns the delta against the NEW
+    codebook.
     Visibility, concurrency and crash semantics are `_maintain_version`'s.
     Returns {"old_version", "new_version", "n", "n_cells_old",
     "n_cells_new", "folded"}."""
@@ -1748,10 +1781,9 @@ def ivf_maintain(
             else:
                 k = max(1, int(round(math.sqrt(n))))
         sized.update(n=n, old=len(_read_seed_rows(data, vec_col)), new=k)
-        return lambda vdir: ivf_build_index(
-            corpus, vdir, n_cells=k, id_col=id_col, vec_col=vec_col,
-            max_literals=max_literals, lloyd_iters=lloyd_iters,
-            seed_strategy=seed_strategy,
+        return _ivf_writer(
+            corpus, k, id_col, vec_col, max_literals, lloyd_iters,
+            seed_strategy,
         )
 
     def assigned(rows: DataFrame, vdir: str) -> DataFrame:
@@ -1774,31 +1806,24 @@ def ivf_maintain(
     }
 
 
-def _index_vacuum(
-    path: str, retention_s: float, legacy_prefixes: tuple[str, ...],
-    legacy_names: tuple[str, ...] = (),
-) -> list[str]:
-    """Delete SUPERSEDED index version dirs (and the legacy flat
-    layout's root data dirs once a versioned current exists) whose tree
-    has been quiet for `retention_s` — the retention window is what
-    keeps a probe that resolved the old version mid-swap safe, exactly
-    like the table vacuum. Root metadata that stays live across
-    versions (the LSH `_params`) is simply not in the legacy lists.
-    Claim files of PUBLISHED versions (`_vK.claim`, K <= current) are
-    protocol junk — their version either swapped in or lost — and are
-    removed immediately (no retention: nothing reads a claim after its
-    version is decided); a claim for a version ABOVE current is an
-    in-flight (or crashed) maintainer and is left alone — removing a
-    crashed one is the operator-recovery step the module docstring
-    states. Runs entirely on the storage seam, so vacuum works on
-    object storage too. Returns the removed paths."""
+def ivf_vacuum(path: str, retention_s: float = 600.0) -> list[str]:
+    """Delete SUPERSEDED version dirs (`_vK`, K < current) of the index
+    at `path` whose tree has been quiet for `retention_s` — the
+    retention window is what keeps a probe that resolved the old
+    version mid-swap safe, exactly like the table vacuum. Claim files of
+    PUBLISHED versions (`_vK.claim`, K <= current) are protocol junk —
+    their version either swapped in or lost — and are removed
+    immediately (no retention: nothing reads a claim after its version
+    is decided); a claim for a version ABOVE current is an in-flight
+    (or crashed) writer and is left alone — removing a crashed one is
+    the operator-recovery step `_claim_version` states. Runs entirely
+    on the storage seam, so vacuum works on object storage too. Returns
+    the removed paths."""
     import re
     import time as _time
 
     store = _idx_fs(path)
-    _data, cur = _idx_current(path)
-    if cur < 0:
-        return []  # nothing versioned yet — nothing is superseded
+    data, cur = _idx_current(path)
     # crashed-fold guard (r8 verdict #1): while the CURRENT version still
     # carries its `_folding` marker, appends committed mid-rebuild exist
     # ONLY in the superseded dirs the fold was reading — retiring those
@@ -1806,7 +1831,7 @@ def _index_vacuum(
     # with no error anywhere. Skip every data-dir deletion until a
     # re-run of maintenance lands the fold and clears the marker;
     # published-claim junk is still cleaned (claims carry no data).
-    fold_pending = store.exists(_fold_marker(_data))
+    fold_pending = store.exists(_fold_marker(data))
     removed = []
     now = _time.time()
     root = path.rstrip("/")
@@ -1826,36 +1851,16 @@ def _index_vacuum(
                 removed.append(full)
             continue
         m = re.fullmatch(r"_v(\d+)", name)
-        legacy = (
-            name.startswith(legacy_prefixes)
-            or name in legacy_names
-            or name.startswith(".fold-")  # crashed fold scratch
-        )
-        if m and int(m.group(1)) >= cur:
-            continue
-        if not (m or legacy):
-            continue
-        if fold_pending:
-            continue  # un-folded delta may live here — see guard above
-        if now - newest < retention_s:
-            continue
-        store.delete_tree(full)
-        removed.append(full)
+        if m and int(m.group(1)) < cur and not fold_pending and (
+            now - newest >= retention_s
+        ):
+            store.delete_tree(full)
+            removed.append(full)
     return removed
 
 
-def ivf_vacuum(path: str, retention_s: float = 600.0) -> list[str]:
-    """`_index_vacuum` for an IVF index: superseded `_vK` dirs plus the
-    legacy flat layout's `cell=*` dirs and root `_seeds` (each version
-    carries its own seeds)."""
-    return _index_vacuum(path, retention_s, ("cell=",), ("_seeds",))
-
-
-def lsh_vacuum(path: str, retention_s: float = 600.0) -> list[str]:
-    """`_index_vacuum` for an LSH index: superseded `_vK` dirs plus the
-    legacy flat layout's `band=*` dirs. `_params` (the immutable
-    hyperplanes, live across every version) is never touched."""
-    return _index_vacuum(path, retention_s, ("band=",))
+# one layout for both kinds: an LSH index vacuums exactly like an IVF one
+lsh_vacuum = ivf_vacuum
 
 
 def lsh_maintain(spark, path: str, id_col: str = "vec_id") -> dict:
@@ -1870,23 +1875,20 @@ def lsh_maintain(spark, path: str, id_col: str = "vec_id") -> dict:
     versioned-pointer protocol as `ivf_maintain` (`_maintain_version`):
     the pinned files are read with basePath so the partition columns
     survive, the delta fold anti-joins on (id, band) — the band-complete
-    key, see `lsh_index_append`'s dedup note — and `_params` stays at
-    the root, untouched: planes never change across versions.
+    key, see `lsh_index_append`'s dedup note — and `_params` is carried
+    into the new version unchanged: planes never change across
+    maintenance.
 
     Returns {"old_version", "new_version", "n_files_before",
     "n_files_after", "folded"}."""
     store = _idx_fs(path)
 
     def prepare(data: str, pinned: set[str]):
+        params = _lsh_index_params(data)
         rows = spark.read.option("basePath", store.spark_path(data)).parquet(
             *[store.spark_path(f) for f in sorted(pinned)]
         )
-        return lambda vdir: (
-            rows.repartition("band", "bucket")
-            .write.mode("overwrite")
-            .partitionBy("band", "bucket")
-            .parquet(_sp(vdir))
-        )
+        return lambda vdir: _lsh_write(rows, vdir, params)
 
     v0, new_v, n_before, folded = _maintain_version(
         spark, path, "lsh_maintain", "LSH", "compaction", [id_col, "band"],

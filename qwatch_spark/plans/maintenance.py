@@ -56,16 +56,6 @@ def maintain_once(
         # matching — unrelated RuntimeErrors must surface
         out["lost_race"] = True
         table = SnapshotTable(table_path)  # rebase before vacuum
-    try:
-        # legacy-table migration: manifests from before rows_est carry
-        # no estimate (reads 0, so fp_index="auto" would never flip);
-        # the one-time live count belongs here, not on the apply path
-        seeded = table.seed_rows_est(spark)
-        if seeded is not None:
-            out["rows_est_seeded"] = seeded
-    except CommitConflictError:
-        out["lost_race"] = True
-        table = SnapshotTable(table_path)
     if vacuum_enabled:
         out["vacuumed"] = len(table.vacuum(retention_s=retention_s))
     from qwatch_spark.plans.fp_bloom import FpBloomIndex

@@ -329,6 +329,7 @@ class SnapshotTable:
             "key_col": key_col,
             "schema": payload_schema.json(),
             "applied_epochs": [],
+            "rows_est": 0,
         }
         if manifest_shards is not None:
             manifest["n_shards"] = manifest_shards
@@ -353,17 +354,6 @@ class SnapshotTable:
         # (commit slot created) but before the pointer swap leaves the
         # pointer stale — heal forward to the newest commit.
         manifest = self._get_json(MANIFEST)
-        if manifest.get("cas_backend", "localfs") != "localfs" and not (
-            self.path.startswith("s3://")
-        ):
-            # written when a local table could keep its log in a second
-            # store: that log is invisible here, so this pointer may be
-            # stale and must not be adopted as the table's state
-            raise ValueError(
-                f"{self.path}: manifest names cas_backend="
-                f"{manifest['cas_backend']!r}, a commit log outside the "
-                "table path; this table can no longer be opened"
-            )
         while True:
             slots = self.log.slots()
             if not slots or slots[-1] <= manifest.get("mutation", 0):
@@ -392,22 +382,16 @@ class SnapshotTable:
         ``manifest.json`` is just a pointer cache healed forward by
         ``_load_manifest``. The CAS tests run through both stores (s3
         over the dir-backed fake), so the protocol provably depends on
-        nothing but the store's primitives.
-
-        A table written before the log existed has a pointer but an
-        empty `_commits/`; its first commit adopts it by putting the
-        on-disk pointer bytes as slot M (the pointer's mutation). Two
-        adopters of one pointer put identical bytes, which both win
-        (the stores' read-back rule), and the rebase check decides."""
+        nothing but the store's primitives. A commit to a table whose
+        log is empty raises ValueError: `create` writes slot 0, so an
+        empty log means the table's history is gone."""
         path = log.root
         n = 0 if expected_mutation is None else expected_mutation + 1
         manifest["mutation"] = n
         if expected_mutation is not None:
             slots = log.slots()
             if not slots:
-                cur = log.store.get(os.path.join(path, MANIFEST))
-                log.put_if_absent(json.loads(cur).get("mutation", 0), cur.decode())
-                slots = log.slots()
+                raise ValueError(f"{path}: commit log {log.dir} is empty")
             # rebase check (one LIST, same as Delta's LogStore): a
             # writer whose base is behind the log's top must lose
             # LOUDLY here — required because compaction and vacuum
@@ -439,9 +423,9 @@ class SnapshotTable:
 
     @property
     def key_col(self) -> str:
-        """Upsert key column (entity tables key on their own id column;
-        'url' for legacy/page manifests that predate the field)."""
-        return self._manifest.get("key_col", "url")
+        """Upsert key column (entity tables key on their own id column,
+        page tables on 'url')."""
+        return self._manifest["key_col"]
 
     @property
     def payload_schema(self) -> T.StructType:
@@ -490,48 +474,21 @@ class SnapshotTable:
         verify drive: 1421 est vs 1440 live with 10% deletes), and
         updates cannot be told from inserts without the table lookup the
         delta path avoids. Every live row has at least one committed
-        non-delete upsert, so est >= live always — EXCEPT on a table
-        committed before this key existed, where the absent key reads 0
-        (far BELOW live) until `seed_rows_est` (run by maintain_once)
-        migrates it from a one-time live-row count; until then
-        fp_index="auto" simply stays on the correct full-scan gate
-        (perf-only lag, never a correctness hazard). Consumers
-        (fp_index="auto") use it as a crossed-threshold trigger, where
-        over-counting merely flips the switch early — the safe side."""
-        return int(self._manifest.get("rows_est", 0))
-
-    def seed_rows_est(self, spark: SparkSession) -> int | None:
-        """One-time migration for tables committed before `rows_est`
-        existed: count live rows (narrow key-only scan) and commit the
-        seed as a metadata-only manifest swap through the table's
-        normal commit protocol (CAS-safe beside a live applier; a lost
-        race just retries next maintenance cycle). Returns the seeded
-        count, or None if the manifest already carries the key — the
-        apply path never calls this, so it never pays the O(table)
-        scan. Post-seed the upper-bound invariant holds: future deletes
-        are never subtracted and updates tally as inserts."""
-        if "rows_est" in self._manifest:
-            return None
-        n = int(
-            self.read_buckets(spark, include_deleted=False, columns=[]).count()
-        )
-        manifest = dict(self._manifest)
-        manifest["version"] = self.version + 1
-        manifest["rows_est"] = n
-        self._swap_or_cleanup(manifest)
-        return n
+        non-delete upsert, so est >= live always (`create` writes 0).
+        Consumers (fp_index="auto") use it as a crossed-threshold
+        trigger, where over-counting merely flips the switch early — the
+        safe side."""
+        return int(self._manifest["rows_est"])
 
     @staticmethod
     def _bump_rows_est(manifest: dict, rows_delta: int) -> None:
-        manifest["rows_est"] = max(
-            0, int(manifest.get("rows_est", 0)) + int(rows_delta)
-        )
+        manifest["rows_est"] = max(0, int(manifest["rows_est"]) + int(rows_delta))
 
     # ---------- reads ----------
 
     @staticmethod
     def _bucket_entry(raw) -> dict:
-        """Manifest bucket entry; accepts the legacy plain-int form.
+        """Manifest bucket entry, with `zf` defaulted to {}.
         `z` maps version token → [min_warc_ts, max_warc_ts] (ISO strings)
         over that token's files for this bucket — the zone map readers
         use to skip whole files on a time predicate. `zf` (optional,
@@ -540,14 +497,7 @@ class SnapshotTable:
         — null means "range unknown, always read". A zf entry is only
         ever written COMPLETE (every file of the dir listed), so readers
         may treat its key set as the dir's file listing."""
-        if isinstance(raw, dict):
-            return {
-                "base": raw["base"],
-                "deltas": raw["deltas"],
-                "z": raw.get("z", {}),
-                "zf": raw.get("zf", {}),
-            }
-        return {"base": raw, "deltas": [], "z": {}, "zf": {}}
+        return {"zf": {}, **raw}
 
     # ---------- sharded-manifest plumbing ----------
 
@@ -941,7 +891,9 @@ class SnapshotTable:
         cur = self._buckets_of(self._manifest, only=touched_buckets)
         updates: dict = {}
         for b in touched_buckets:
-            e = self._bucket_entry(cur.get(str(int(b)), {"base": None, "deltas": []}))
+            e = self._bucket_entry(
+                cur.get(str(int(b)), {"base": None, "deltas": [], "z": {}})
+            )
             z = dict(e["z"])
             rng = (zmaps or {}).get(int(b))
             if rng:
@@ -1309,8 +1261,8 @@ class SnapshotTable:
         """Delete version dirs no longer referenced by any bucket pointer
         (base or delta) — including aborted concurrent writers' orphan
         staging dirs. Safe because the CAS put is the only commit
-        point. Tokens are compared as directory names (legacy plain-int
-        and writer-unique `N-<nonce>` forms alike).
+        point. Tokens are compared as directory names
+        (writer-unique `N-<nonce>`).
 
         `retention_s` guards the CAS concurrent-writer window: a writer
         stages its version dir and shard files BEFORE its put-if-absent

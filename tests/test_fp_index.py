@@ -640,43 +640,6 @@ def test_fp_auto_never_rebuilds_on_apply_path(spark, tmp_path, write_mode,
     assert "https://a.ex/dupC3" not in urls
 
 
-def test_rows_est_seeded_on_legacy_manifest(spark, tmp_path):
-    """A table committed before rows_est existed reads 0 (auto never
-    flips) until maintenance seeds the estimate from a one-time live
-    count — the documented legacy migration."""
-    import json
-
-    c = cfg(False, "delta")
-    t = SnapshotTable.create(str(tmp_path / "t"), n_buckets=4)
-    apply(spark, t, EPOCHS[0], 0, c)
-    apply(spark, t, EPOCHS[2], 1, c)  # tombstone one of the two rows
-    # simulate a legacy manifest: strip the key (direct file surgery —
-    # this is exactly the on-disk state an old table presents)
-    man_path = os.path.join(t.path, "manifest.json")
-    with open(man_path) as fh:
-        man = json.load(fh)
-    assert man.pop("rows_est", None) is not None
-    with open(man_path, "w") as fh:
-        json.dump(man, fh)
-    legacy = SnapshotTable(t.path)
-    assert legacy.rows_est == 0  # the under-count ADVICE flagged
-    from qwatch_spark.plans.maintenance import maintain_once
-
-    res = maintain_once(spark, t.path, vacuum_enabled=False)
-    live = SnapshotTable(t.path).read(spark).count()
-    assert res.get("rows_est_seeded") == live == 1
-    reloaded = SnapshotTable(t.path)
-    assert reloaded.rows_est == live
-    # idempotent: second cycle is a no-op
-    res2 = maintain_once(spark, t.path, vacuum_enabled=False)
-    assert "rows_est_seeded" not in res2
-    # invariant restored: est >= live from here on (reload: the seed
-    # commit advanced the mutation counter past our stale handle)
-    t2 = SnapshotTable(t.path)
-    apply(spark, t2, EPOCHS[1], 2, c)
-    assert t2.rows_est >= t2.read(spark).count()
-
-
 def test_fp_auto_bootstrap_races_live_applier(spark, tmp_path):
     """The race the deferred bootstrap introduced: maintain_once rebuilds
     the index WHILE an applier thread keeps committing epochs (CAS

@@ -183,7 +183,7 @@ def test_indexfs_dispatch_and_primitive_parity(tmp_path, monkeypatch):
         assert fs.list_tree(path) == []
 
         # the index protocol over those primitives
-        assert sim._pointer_read(fs, path) == -1  # no pointer yet
+        assert sim._pointer_read(fs, path) is None  # no index yet
         assert sim._claim_version(fs, path, 0) is True
         assert sim._claim_version(fs, path, 0) is False  # rival loses
         sim._idx_swap_current(path, 0)
@@ -253,15 +253,15 @@ def test_ivf_protocol_over_s3(spark, s3idx):
         assert got == sorted((int(r["vec_id"]), r["cosine"]) for r in single)
 
     out = sim.ivf_maintain(spark, path, n_cells=15, lloyd_iters=1)
-    assert out["old_version"] == -1 and out["new_version"] == 0
+    assert out["old_version"] == 0 and out["new_version"] == 1
     cur, v = _read_cur(spark, path)
-    assert v == 0
+    assert v == 1
     got = cur.groupBy("vec_id").count()
     assert got.filter(F.col("count") > 1).count() == 0, "duplicates"
     assert got.count() == 240, "maintain lost vectors"
 
     removed = sim.ivf_vacuum(path, retention_s=0)
-    assert removed, "legacy flat layout must be vacuumed"
+    assert removed, "superseded _v0 must be vacuumed"
     client = S3Store.client_factory()
     root_keys = [
         o["Key"]
@@ -269,7 +269,7 @@ def test_ivf_protocol_over_s3(spark, s3idx):
             Bucket="idx", Prefix="ivf/", MaxKeys=10_000
         )["Contents"]
     ]
-    assert not any(k.startswith("ivf/cell=") for k in root_keys)
+    assert not any(k.startswith("ivf/_v0/") for k in root_keys)
     assert not any(k.endswith(".claim") for k in root_keys)
     top = sim.ivf_probe_topk(spark, path, vecs[222], k=1, n_probe=15).collect()
     assert int(top[0]["vec_id"]) == 222, "vacuumed index must still serve"
@@ -295,10 +295,10 @@ def test_ivf_rival_claim_and_conflict_retry_over_s3(
     sim.ivf_build_index(df.filter(F.col("vec_id") < 100), path, n_cells=8)
 
     fs = sim._idx_fs(path)
-    assert sim._claim_version(fs, path, 0) is True  # rival claims v0
+    assert sim._claim_version(fs, path, 1) is True  # rival claims v1
     with pytest.raises(sim.IndexConflictError, match="rival"):
         sim.ivf_maintain(spark, path, n_cells=8, lloyd_iters=0)
-    fs.delete(f"{path}/_v0.claim")
+    fs.delete(f"{path}/_v1.claim")
 
     batch = df.filter(F.col("vec_id") >= 100)
     real = sim._idx_current
@@ -316,7 +316,7 @@ def test_ivf_rival_claim_and_conflict_retry_over_s3(
     monkeypatch.undo()
     assert sim.ivf_index_append(batch, path, dedup_against_index=True) == 0
     cur, v = _read_cur(spark, path)
-    assert v == 0
+    assert v == 1
     got = cur.groupBy("vec_id").count()
     assert got.filter(F.col("count") > 1).count() == 0, "duplicate ids"
     assert got.count() == 140, "batch lost"
@@ -328,7 +328,7 @@ def test_ivf_rival_claim_and_conflict_retry_over_s3(
 def test_lsh_protocol_over_s3(spark, s3idx):
     """LSH life cycle at an `s3://` path: append-sprayed small files →
     `lsh_maintain` compaction (the copy-based fold) → probe-identical
-    results → vacuum keeps `_params` live."""
+    results → the new version carries `_params` through vacuum."""
     rows, df = _clustered_corpus(spark, 160)
     vecs = {i: v for i, v in rows}
     path = s3idx("lsh")
@@ -354,7 +354,7 @@ def test_lsh_protocol_over_s3(spark, s3idx):
         for q in qids
     }
     out = sim.lsh_maintain(spark, path)
-    assert out["new_version"] == 0 and out["folded"] == 0
+    assert out["new_version"] == 1 and out["folded"] == 0
     data1, _ = sim._idx_current(path)
     n_after = len(sim._list_parts(fs, data1, ("band=*", "bucket=*")))
     assert n_after < n_before / 2, (n_before, n_after)
@@ -367,9 +367,7 @@ def test_lsh_protocol_over_s3(spark, s3idx):
     }
     assert after == before, "compaction changed probe results"
     assert sim.lsh_vacuum(path, retention_s=0)
-    assert fs.exists(f"{path}/_params/_SUCCESS") or sim._list_parts(
-        fs, f"{path}/_params", ()
-    ), "_params must survive vacuum"
+    assert sim._lsh_index_params(data1) == (16, 8, 16, 7)
     again = {
         q: [
             (int(r["vec_id"]), r["cosine"])
@@ -511,47 +509,132 @@ def test_index_metadata_launches_no_spark_jobs(spark, s3idx, monkeypatch):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+# ------------------------------------------------- one on-disk layout
+
+
+def _index_paths(where, s3idx, tmp_path):
+    name = s3idx if where == "s3" else (lambda n: str(tmp_path / n))
+    return name("ivf"), name("lsh")
+
+
+def _objects(path):
+    """{key relative to `path`: (size, mtime)} of every object under it."""
+    return {
+        rel: (size, mt) for rel, size, mt in sim._idx_fs(path).list_tree(path)
+    }
+
+
 @pytest.mark.parametrize("where", ["local", "s3"])
-def test_spark_written_metadata_probes_identically(
-    spark, s3idx, tmp_path, where
+def test_every_index_write_is_versioned(spark, s3idx, tmp_path, where):
+    """A build, an append and a maintain write nothing at an index's
+    root but `_current` and `_v<K>.claim`; every other object lands
+    under a `_v<K>/` version dir."""
+    import re
+
+    _rows, df = _clustered_corpus(spark, 160)
+    ivf, lsh = _index_paths(where, s3idx, tmp_path)
+    first, rest = df.filter(F.col("vec_id") < 120), df.filter(F.col("vec_id") >= 120)
+    sim.ivf_build_index(first, ivf, n_cells=6)
+    assert sim.ivf_index_append(rest, ivf) == 40
+    sim.ivf_maintain(spark, ivf, n_cells=8, lloyd_iters=0)
+    sim.lsh_build_index(first, lsh, n_planes=16, n_bands=8, dim=16)
+    assert sim.lsh_index_append(rest, lsh) == 40 * 8
+    sim.lsh_maintain(spark, lsh)
+    layout = re.compile(r"_current|_v\d+\.claim|_v\d+/.+")
+    for path in (ivf, lsh):
+        keys = sorted(_objects(path))
+        assert [k for k in keys if not layout.fullmatch(k)] == [], keys
+        assert {k.split("/", 1)[0] for k in keys} == {
+            "_current", "_v0", "_v0.claim", "_v1", "_v1.claim"
+        }
+        assert sim._idx_current(path)[1] == 1
+
+
+@pytest.mark.parametrize("where", ["local", "s3"])
+def test_rebuild_keeps_the_resolved_version(
+    spark, s3idx, tmp_path, where, monkeypatch
 ):
-    """Indexes built before `_seeds`/`_params` became single store
-    objects hold Spark part files there (`part-<uuid>-c000...parquet`
-    plus `_SUCCESS`, no `part-00000.parquet`). Probes read them through
-    the listing fallback with row-identical results, locally and on
-    `s3://`."""
+    """A rebuild at a live index path publishes the next version and
+    leaves every file of the version a probe already resolved unchanged,
+    so that probe still answers — the retention guarantee `*_vacuum`
+    upholds, met by the build itself rather than by refusing it."""
     rows, df = _clustered_corpus(spark, 120)
     vecs = dict(rows)
-    name = s3idx if where == "s3" else (lambda n: str(tmp_path / n))
-    ivf, lsh = name("ivf"), name("lsh")
+    ivf, lsh = _index_paths(where, s3idx, tmp_path)
     sim.ivf_build_index(df, ivf, n_cells=8)
     sim.lsh_build_index(df, lsh, n_planes=16, n_bands=8, dim=16)
+    probes = {
+        ivf: lambda: sim.ivf_probe_topk(
+            spark, ivf, vecs[7], k=3, n_probe=8
+        ).collect(),
+        lsh: lambda: sim.lsh_probe_topk(spark, lsh, vecs[7], k=3).collect(),
+    }
+    resolved = {path: sim._idx_current(path) for path in probes}
+    before = {
+        path: (_objects(resolved[path][0]), probe())
+        for path, probe in probes.items()
+    }
+    # rebuild both with different parameters
+    sim.ivf_build_index(df, ivf, n_cells=4)
+    sim.lsh_build_index(df, lsh, n_planes=8, n_bands=4, dim=16, seed=11)
+    for path, probe in probes.items():
+        assert sim._idx_current(path)[1] == 1
+        assert int(probe()[0]["vec_id"]) == 7  # the new version serves
+        files, answer = before[path]
+        assert _objects(resolved[path][0]) == files
+        # a probe that resolved the old version before the rebuild
+        monkeypatch.setattr(
+            sim, "_idx_current", lambda _p, r=resolved[path]: r
+        )
+        assert probe() == answer
+        monkeypatch.undo()
 
-    def probes():
-        return [
-            [tuple(r) for r in probe.collect()]
-            for q in (3, 50, 101)
-            for probe in (
-                sim.ivf_probe_topk(spark, ivf, vecs[q], k=5, n_probe=3),
-                sim.lsh_probe_topk(spark, lsh, vecs[q], k=5),
-            )
-        ]
 
-    before = probes()
-    seeds = sim._read_seed_rows(ivf, "embedding")
-    spark.createDataFrame(
-        seeds, "cell bigint, embedding array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(sim._sp(f"{ivf}/_seeds"))
-    spark.createDataFrame(
-        [(16, 8, 16, 7)], "n_planes int, n_bands int, dim int, seed int"
-    ).coalesce(1).write.mode("overwrite").parquet(sim._sp(f"{lsh}/_params"))
-    store = sim._idx_fs(ivf)
-    for d in (f"{ivf}/_seeds", f"{lsh}/_params"):
-        assert store.get(f"{d}/part-00000.parquet") is None
-        (part,) = sim._list_parts(store, d, ())
-        assert part.rsplit("/", 1)[1].startswith("part-00000-"), part
-    assert sim._read_seed_rows(ivf, "embedding") == seeds
-    assert probes() == before
+@pytest.mark.parametrize("where", ["local", "s3"])
+def test_corrupt_pointer_raises_and_writes_nothing(
+    spark, s3idx, tmp_path, where
+):
+    """A `_current` that does not parse makes every probe, append,
+    maintain, build and vacuum raise before anything is written under
+    the index root: read as "no pointer", an append's files would land
+    where no probe or fold looks."""
+    rows, df = _clustered_corpus(spark, 100)
+    vecs = dict(rows)
+    ivf, lsh = _index_paths(where, s3idx, tmp_path)
+    first, batch = df.filter(F.col("vec_id") < 80), df.filter(F.col("vec_id") >= 80)
+    sim.ivf_build_index(first, ivf, n_cells=4)
+    sim.lsh_build_index(first, lsh, n_planes=16, n_bands=8, dim=16)
+    ops = {
+        ivf: [
+            lambda: sim.ivf_probe_topk(spark, ivf, vecs[3], k=3).collect(),
+            lambda: sim.ivf_probe_topk_batch(
+                spark, ivf, [(3, vecs[3])], k=3
+            ).collect(),
+            lambda: sim.ivf_index_append(batch, ivf),
+            lambda: sim.ivf_maintain(spark, ivf, n_cells=4, lloyd_iters=0),
+            lambda: sim.ivf_build_index(batch, ivf, n_cells=4),
+            lambda: sim.ivf_vacuum(ivf, retention_s=0),
+        ],
+        lsh: [
+            lambda: sim.lsh_probe_topk(spark, lsh, vecs[3], k=3).collect(),
+            lambda: sim.lsh_probe_topk_batch(
+                spark, lsh, [(3, vecs[3])], k=3
+            ).collect(),
+            lambda: sim.lsh_index_append(batch, lsh),
+            lambda: sim.lsh_maintain(spark, lsh),
+            lambda: sim.lsh_build_index(
+                batch, lsh, n_planes=16, n_bands=8, dim=16
+            ),
+            lambda: sim.lsh_vacuum(lsh, retention_s=0),
+        ],
+    }
+    for path, calls in ops.items():
+        sim._idx_fs(path).put(f"{path}/_current", b"{not json")
+        before = _objects(path)
+        for call in calls:
+            with pytest.raises(ValueError, match="corrupt _current"):
+                call()
+        assert _objects(path) == before
 
 
 # ---------------------------------------------------- fp bloom over s3

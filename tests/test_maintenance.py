@@ -182,14 +182,33 @@ def test_index_maintain_job_cli_once(spark, tmp_path):
         "--lloyd-iters", "0", "--vacuum-retention", "0",
     ])
     assert rc == 0
-    assert _idx_current(ivf_path)[1] == 0
-    assert _idx_current(lsh_path)[1] == 0
+    assert _idx_current(ivf_path)[1] == 1
+    assert _idx_current(lsh_path)[1] == 1
     n = emb.count()
     data, _ = _idx_current(ivf_path)
     assert spark.read.parquet(data).count() == n
     q = [float(x) for x in emb.filter(F.col("vec_id") == 5).first()["embedding"]]
     top = lsh_probe_topk(spark, lsh_path, q, k=1).collect()
     assert int(top[0]["vec_id"]) == 5
+
+
+def test_maintain_once_on_fresh_table_commits_nothing(spark, tmp_path):
+    """`create` writes `rows_est`, so a maintenance cycle on a table
+    that was only created, or has committed only empty epochs, commits
+    nothing: a version bump there would make a live applier lose its
+    commit race for no change."""
+    path = str(tmp_path / "t")
+    t = SnapshotTable.create(path, n_buckets=4)
+    for epoch in (None, 0, 1):
+        if epoch is not None:
+            t.commit_epoch(epoch)  # an empty epoch: manifest-only commit
+        before = SnapshotTable(path)._manifest
+        out = maintain_once(spark, path)
+        after = SnapshotTable(path)._manifest
+        assert out["version"] == before["version"] and not out["lost_race"]
+        assert (after["version"], after["mutation"]) == (
+            before["version"], before["mutation"]
+        ), out
 
 
 def test_cas_backend_config_plumbing(tmp_path, monkeypatch):

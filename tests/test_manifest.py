@@ -864,34 +864,6 @@ def test_overwrite_deletes_an_s3_commit_log(tmp_path):
     assert reopened._manifest["mutation"] == 1
 
 
-def test_remote_log_manifest_on_local_path_rejected(tmp_path):
-    """A manifest naming `"cas_backend": "s3"` on a local path kept its
-    commit log in a second store the table can no longer see, so its
-    pointer may be stale: loading refuses it instead of adopting it. On
-    an s3:// path that log was already under the table, so the key is
-    ignored and the table keeps committing."""
-    import pytest
-
-    path = str(tmp_path / "t")
-    t = SnapshotTable.create(path, SCHEMA, n_buckets=4)
-    t.commit_epoch(0)
-    legacy = dict(_pointer(t), cas_backend="s3")
-    t.store.put(os.path.join(path, "manifest.json"), json.dumps(legacy).encode())
-    with pytest.raises(ValueError, match="cas_backend"):
-        SnapshotTable(path)
-    with pytest.raises(ValueError, match="cas_backend"):
-        SnapshotTable.create(path, SCHEMA, n_buckets=4)
-
-    remote = SnapshotTable.create("s3://lake/t", SCHEMA, n_buckets=4)
-    remote.commit_epoch(0)
-    legacy = dict(_pointer(remote), cas_backend="s3")
-    remote.store.put("s3://lake/t/manifest.json", json.dumps(legacy).encode())
-    reopened = SnapshotTable("s3://lake/t")
-    assert reopened.has_epoch(0)
-    reopened.commit_epoch(1)
-    assert SnapshotTable("s3://lake/t").has_epoch(1)
-
-
 def test_killed_append_is_hidden_from_redelivery(spark, tmp_path, monkeypatch):
     """A commit-log append killed mid-put leaves only its in-flight temp
     file, named `.<name>.<hex>.tmp` beside the target, which Spark's
@@ -941,61 +913,6 @@ def test_killed_append_is_hidden_from_redelivery(spark, tmp_path, monkeypatch):
         for r in SnapshotTable(path).read_commit_log(spark).collect()
     )
     assert [e for e, _fp in log] == [0, 1] and log[1][1] == "backfill"
-
-
-def test_legacy_manifest_adopted_on_first_commit(spark, tmp_path):
-    """A table written before the commit log existed (manifest.json with
-    `mutation: 3`, no `_commits/`) is adopted on its first commit: two
-    reopened writers race one commit, exactly one wins, the log becomes
-    [3, 4] and the table's rows are unchanged."""
-    import shutil
-    import threading
-
-    from qwatch_spark.config import PipelineConfig
-    from qwatch_spark.datagen import gen_feed_df
-    from qwatch_spark.operators.apply import apply_changes
-    from qwatch_spark.plans.objectstore import CommitConflictError
-
-    path = str(tmp_path / "t")
-    t = SnapshotTable.create(path, n_buckets=4)
-    apply_changes(
-        spark, gen_feed_df(spark, 300).drop("epoch_hint"), t, 0,
-        PipelineConfig(n_buckets=4),
-    )
-    want = sorted(tuple(r) for r in t.read(spark).collect())
-    legacy = {k: v for k, v in t._manifest.items() if k != "mutation"}
-    legacy["mutation"] = 3
-    shutil.rmtree(os.path.join(path, "_commits"))
-    with open(os.path.join(path, "manifest.json"), "w") as fh:
-        json.dump(legacy, fh)
-
-    writers = [SnapshotTable(path) for _ in range(2)]
-    go = threading.Barrier(2)
-    won, lost = [], []
-
-    def commit(w, epoch):
-        go.wait()
-        try:
-            w.commit_epoch(epoch)
-            won.append(epoch)
-        except CommitConflictError as exc:
-            lost.append(str(exc))
-
-    threads = [
-        threading.Thread(target=commit, args=(w, 10 + i))
-        for i, w in enumerate(writers)
-    ]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert len(won) == 1 and len(lost) == 1, (won, lost)
-    assert "concurrent writer" in lost[0]
-    final = SnapshotTable(path)
-    assert final.log.slots() == [3, 4]
-    (loser,) = {10, 11} - set(won)
-    assert final.has_epoch(won[0]) and not final.has_epoch(loser)
-    assert sorted(tuple(r) for r in final.read(spark).collect()) == want
 
 
 def test_s3_table_replay_compact_vacuum(spark, tmp_path, monkeypatch):

@@ -387,11 +387,11 @@ def test_batch_probe_empty_guard_and_chunking(spark, emb, tmp_path):
 
 def test_batch_probe_empty_on_maintained_vacuumed_index(spark, emb, tmp_path):
     """r7 verdict #1: the empty-batch guard must resolve the CURRENT
-    version dir like every other probe path. On a maintained index whose
-    legacy flat layout has been vacuumed, the ROOT holds only underscore
-    dirs (`_current`, `_vK`) — invisible to Spark's listing — so the old
-    root read raised AnalysisException ('unable to infer schema') on an
-    EMPTY batch, the exact API contract the guard exists to keep."""
+    version dir like every other probe path. The index ROOT holds only
+    underscore names (`_current`, `_vK`) — invisible to Spark's listing
+    — so a root read raised AnalysisException ('unable to infer
+    schema') on an EMPTY batch, the exact API contract the guard exists
+    to keep."""
     from qwatch_spark.operators.similarity import (
         ivf_build_index,
         ivf_maintain,
@@ -409,7 +409,7 @@ def test_batch_probe_empty_on_maintained_vacuumed_index(spark, emb, tmp_path):
     lsh_build_index(emb, lsh_path, n_planes=16, n_bands=8)
     ivf_maintain(spark, ivf_path)
     lsh_maintain(spark, lsh_path)
-    assert ivf_vacuum(ivf_path, retention_s=0.0)  # flat layout retired
+    assert ivf_vacuum(ivf_path, retention_s=0.0)  # _v0 retired
     assert lsh_vacuum(lsh_path, retention_s=0.0)
     qid = 0
     qvec = [
@@ -445,10 +445,10 @@ def test_ivf_probe_empty_index_raises(spark, tmp_path, emb):
     ivf_build_index(emb, path, n_cells=8)
     import shutil
 
-    shutil.rmtree(f"{path}/_seeds")
-    emb.limit(0).select(
-        F.lit(0).alias("cell"), "embedding"
-    ).write.parquet(f"{path}/_seeds")
+    from qwatch_spark.operators.similarity import _write_seed_rows
+
+    shutil.rmtree(f"{path}/_v0/_seeds")
+    _write_seed_rows([], f"{path}/_v0", "embedding")  # an empty codebook
     with pytest.raises(ValueError, match="no seeds"):
         ivf_probe_topk(spark, path, [0.0] * 64, k=5)
 
@@ -547,7 +547,7 @@ def test_ivf_index_append_is_probe_visible(spark, tmp_path):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     path = str(tmp_path / "ivf")
     ivf_build_index(emb, path, n_cells=8)
-    base_files = set(spark.read.parquet(path).inputFiles())
+    base_files = set(spark.read.parquet(f"{path}/_v0").inputFiles())
 
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 3).first()["embedding"]]
     new_id = 1_000_003
@@ -559,7 +559,7 @@ def test_ivf_index_append_is_probe_visible(spark, tmp_path):
         path,
     )
     assert added == 1
-    assert set(spark.read.parquet(path).inputFiles()) > base_files
+    assert set(spark.read.parquet(f"{path}/_v0").inputFiles()) > base_files
 
     top = ivf_probe_topk(spark, path, qvec, k=3, n_probe=2, exclude_id=3).collect()
     assert top[0]["vec_id"] == new_id  # identical direction => cosine 1.0
@@ -593,7 +593,7 @@ def test_ivf_build_persists_lloyd_refined_codebook(spark, tmp_path):
     refined = {c: np.asarray(v, dtype=np.float64) for c, v in seeds}
     stored = {
         int(r["cell"]): np.asarray(r["embedding"], dtype=np.float64)
-        for r in spark.read.parquet(f"{path}/_seeds").collect()
+        for r in spark.read.parquet(f"{path}/_v0/_seeds").collect()
     }
     assert set(stored) == set(refined)
     for c in refined:
@@ -608,7 +608,7 @@ def test_ivf_build_persists_lloyd_refined_codebook(spark, tmp_path):
     # quantizer consistency: stored cell == argmax cosine vs _seeds
     mat = np.stack([stored[c] for c in sorted(stored)])
     mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    for r in spark.read.parquet(path).collect():
+    for r in spark.read.parquet(f"{path}/_v0").collect():
         v = np.asarray(r["embedding"], dtype=np.float64)
         v = v / np.linalg.norm(v)
         assert int(r["cell"]) == int(np.argmax(mat @ v)), r["vec_id"]
@@ -657,9 +657,9 @@ def test_lsh_index_append_is_probe_visible(spark, emb, tmp_path):
     split = emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0]
     path = str(tmp_path / "lsh")
     lsh_build_index(emb.filter(F.col("vec_id") <= split), path)
-    base_files = set(spark.read.parquet(path).inputFiles())
+    base_files = set(spark.read.parquet(f"{path}/_v0").inputFiles())
     lsh_index_append(emb.filter(F.col("vec_id") > split), path)
-    assert set(spark.read.parquet(path).inputFiles()) > base_files
+    assert set(spark.read.parquet(f"{path}/_v0").inputFiles()) > base_files
     qvec = [
         float(x)
         for x in emb.filter(F.col("vec_id") == 3).first()["embedding"]
@@ -689,7 +689,7 @@ def test_lsh_probe_missing_params_raises(spark, emb, tmp_path):
 
     path = str(tmp_path / "lsh")
     lsh_build_index(emb, path)
-    shutil.rmtree(f"{path}/_params")
+    shutil.rmtree(f"{path}/_v0/_params")
     with pytest.raises(Exception):
         lsh_probe_topk(spark, path, [0.0] * 64, k=5)
 
@@ -710,7 +710,7 @@ def test_ivf_missing_seeds_raises(spark, emb, tmp_path, op):
 
     path = str(tmp_path / "ivf")
     ivf_build_index(emb, path, n_cells=8)
-    shutil.rmtree(f"{path}/_seeds")
+    shutil.rmtree(f"{path}/_v0/_seeds")
     call = {
         "probe": lambda: ivf_probe_topk(spark, path, [0.0] * 64, k=5),
         "batch": lambda: ivf_probe_topk_batch(spark, path, [(1, [0.0] * 64)], k=5),
@@ -815,18 +815,19 @@ def test_lsh_batch_probe_wrong_dim_raises(spark, emb, tmp_path):
 
 def test_lsh_params_cache_invalidated_by_external_rebuild(spark, emb, tmp_path):
     """A rebuild at the same path with DIFFERENT params must not be
-    probed with the old hyperplanes: _lsh_index_params reads _params on
-    every call."""
+    probed with the old hyperplanes: _lsh_index_params reads the
+    resolved version's _params on every call."""
     from qwatch_spark.operators.similarity import (
+        _idx_current,
         _lsh_index_params,
         lsh_build_index,
     )
 
     path = str(tmp_path / "lsh")
     lsh_build_index(emb, path, n_planes=16, n_bands=8, seed=7)
-    assert _lsh_index_params(spark, path) == (16, 8, 64, 7)
+    assert _lsh_index_params(_idx_current(path)[0]) == (16, 8, 64, 7)
     lsh_build_index(emb, path, n_planes=8, n_bands=4, seed=11)
-    assert _lsh_index_params(spark, path) == (8, 4, 64, 11), (
+    assert _lsh_index_params(_idx_current(path)[0]) == (8, 4, 64, 11), (
         "stale cached params survived an external rebuild"
     )
 
@@ -950,7 +951,7 @@ def test_ivf_maintain_restores_probe_cost_and_recall(spark, tmp_path):
     out = ivf_maintain(
         spark, path, target_cell_rows=round(n0 / build_cells)
     )
-    assert out["old_version"] == -1 and out["new_version"] == 0
+    assert out["old_version"] == 0 and out["new_version"] == 1
     assert out["n"] == n1 and out["folded"] == 0
     n_a, cells_a = _ivf_state(spark, path)
     assert n_a == n1, "maintain must preserve every vector"
@@ -1006,7 +1007,7 @@ def test_ivf_append_conflict_is_typed_and_retry_dedups(
     n = ivf.ivf_index_append(batch, path, dedup_against_index=True)
     assert n == 0, "maintainer had carried the batch; retry must no-op"
     data, v = sim._idx_current(path)
-    assert v == 0
+    assert v == 1
     got = spark.read.parquet(data).groupBy("vec_id").count()
     assert got.filter(F.col("count") > 1).count() == 0, "duplicate ids"
     assert got.count() == 140, "batch lost"
@@ -1017,9 +1018,8 @@ def test_ivf_maintain_rival_claim_and_vacuum(spark, tmp_path):
     CAS — the loser gets the typed conflict and nothing is corrupted.
     (A claim FILE, not mkdir on the version dir: the build's overwrite
     write would momentarily delete a mkdir-claim.) ivf_vacuum retires
-    superseded versions (and the legacy flat layout) only past the
-    retention window, and clears the now-junk claims of published
-    versions."""
+    superseded versions only past the retention window, and clears the
+    now-junk claims of published versions."""
     import os as _os
 
     from qwatch_spark.operators.similarity import (
@@ -1032,25 +1032,28 @@ def test_ivf_maintain_rival_claim_and_vacuum(spark, tmp_path):
 
     rows, df = _clustered_corpus(spark, 150)
     path = str(tmp_path / "ivf")
-    ivf_build_index(df, path, n_cells=8)
-    # rival already claimed version 0 (what _claim_version creates)
-    open(_os.path.join(path, "_v0.claim"), "w").close()
+    ivf_build_index(df, path, n_cells=8)  # publishes _v0
+    # rival already claimed version 1 (what _claim_version creates)
+    open(_os.path.join(path, "_v1.claim"), "w").close()
     with pytest.raises(IndexConflictError, match="rival"):
         ivf_maintain(spark, path, n_cells=12)
-    _os.remove(_os.path.join(path, "_v0.claim"))
+    _os.remove(_os.path.join(path, "_v1.claim"))
     out = ivf_maintain(spark, path, n_cells=12)
-    assert out["new_version"] == 0
-    # the winner's own claim is junk once v0 published; vacuum removes
-    # it even inside retention (claims carry no reader guarantees)
-    assert _os.path.exists(_os.path.join(path, "_v0.claim"))
-    # legacy layout still on disk (a mid-swap reader may hold it) ...
-    assert any(d.startswith("cell=") for d in _os.listdir(path))
+    assert out["new_version"] == 1
+    # the winners' own claims are junk once their versions published;
+    # vacuum removes them even inside retention (claims carry no reader
+    # guarantees)
+    claims = [_os.path.join(path, f"_v{k}.claim") for k in (0, 1)]
+    assert all(_os.path.exists(c) for c in claims)
+    # the superseded version is still on disk (a mid-swap reader may
+    # hold it) ...
+    assert _os.path.isdir(_os.path.join(path, "_v0"))
     inside = ivf_vacuum(path, retention_s=3600)  # inside retention:
-    assert inside == [_os.path.join(path, "_v0.claim")]  # claim only
-    assert not _os.path.exists(_os.path.join(path, "_v0.claim"))
+    assert inside == claims  # claims only
+    assert not any(_os.path.exists(c) for c in claims)
     removed = ivf_vacuum(path, retention_s=0)
-    assert removed, "superseded legacy dirs must be vacuumed"
-    assert not any(d.startswith("cell=") for d in _os.listdir(path))
+    assert removed == [_os.path.join(path, "_v0")]
+    assert sorted(_os.listdir(path)) == ["_current", "_v1"]
     # ... and the current version still serves
     q = rows[3][1]
     got = ivf_probe_topk(spark, path, q, k=3, n_probe=12).collect()
@@ -1075,22 +1078,22 @@ def test_maintain_rejects_stale_claimant_after_claim_vacuumed(
 
     rows, df = _clustered_corpus(spark, 120)
     path = str(tmp_path / "ivf")
-    sim.ivf_build_index(df, path, n_cells=8)
-    sim.ivf_maintain(spark, path, n_cells=10, lloyd_iters=0)  # cur = 0
-    removed = sim.ivf_vacuum(path, retention_s=3600)  # retires _v0.claim
-    assert removed == [_os.path.join(path, "_v0.claim")]
+    sim.ivf_build_index(df, path, n_cells=8)  # cur = 0
+    sim.ivf_maintain(spark, path, n_cells=10, lloyd_iters=0)  # cur = 1
+    removed = sim.ivf_vacuum(path, retention_s=3600)  # retires the claims
+    assert removed == [_os.path.join(path, f"_v{k}.claim") for k in (0, 1)]
 
     live_files = sorted(
-        _glob.glob(_os.path.join(path, "_v0", "cell=*", "*.parquet"))
+        _glob.glob(_os.path.join(path, "_v1", "cell=*", "*.parquet"))
     )
     real = sim._idx_current
     calls = {"n": 0}
 
     def stale_first(p):
         # what a maintainer that read the pointer BEFORE the rival's
-        # whole cycle saw: the legacy, pointerless layout
+        # whole cycle saw: the version the rival superseded
         calls["n"] += 1
-        return (p, -1) if calls["n"] == 1 else real(p)
+        return (_os.path.join(p, "_v0"), 0) if calls["n"] == 1 else real(p)
 
     monkeypatch.setattr(sim, "_idx_current", stale_first)
     with pytest.raises(sim.IndexConflictError, match="moved past"):
@@ -1099,13 +1102,13 @@ def test_maintain_rejects_stale_claimant_after_claim_vacuumed(
 
     # the live version dir was never touched, probes still serve ...
     assert sorted(
-        _glob.glob(_os.path.join(path, "_v0", "cell=*", "*.parquet"))
+        _glob.glob(_os.path.join(path, "_v1", "cell=*", "*.parquet"))
     ) == live_files
     got = sim.ivf_probe_topk(spark, path, rows[5][1], k=1, n_probe=10).collect()
     assert int(got[0]["vec_id"]) == 5
     # ... and the stale claimant's junk claim is vacuum-clearable
     assert sim.ivf_vacuum(path, retention_s=3600) == [
-        _os.path.join(path, "_v0.claim")
+        _os.path.join(path, "_v1.claim")
     ]
 
 
@@ -1294,8 +1297,8 @@ def test_lsh_maintain_compacts_small_files_probe_identical(
     lake small-file disease). `lsh_maintain` compacts the CURRENT
     version to ~one file per bucket behind the same versioned-pointer
     swap the IVF maintenance uses; probe results must be row-identical
-    before/after, and `_params` (immutable planes) stays live at the
-    root across versions."""
+    before/after, and `_params` (immutable planes) is carried into the
+    new version."""
     from qwatch_spark.operators.similarity import (
         lsh_build_index,
         lsh_index_append,
@@ -1325,7 +1328,7 @@ def test_lsh_maintain_compacts_small_files_probe_identical(
         for q in qids
     }
     out = lsh_maintain(spark, path)
-    assert out["new_version"] == 0 and out["folded"] == 0
+    assert out["new_version"] == 1 and out["folded"] == 0
     n_after, per_bucket_after = _lsh_files_per_bucket(path)
     assert per_bucket_after <= 1.01, (n_before, n_after)
     assert n_after < n_before / 2
@@ -1335,12 +1338,12 @@ def test_lsh_maintain_compacts_small_files_probe_identical(
         for q in qids
     }
     assert after == before, "compaction changed probe results"
-    # vacuum retires the legacy flat layout; _params must survive
+    # vacuum retires _v0; the current version keeps its own _params
     assert lsh_vacuum(path, retention_s=0)
     import os as _os
 
-    assert _os.path.isdir(_os.path.join(path, "_params"))
-    assert not any(d.startswith("band=") for d in _os.listdir(path))
+    assert _os.path.isdir(_os.path.join(path, "_v1", "_params"))
+    assert sorted(_os.listdir(path)) == ["_current", "_v1"]
     again = {
         q: [(int(r["vec_id"]), r["cosine"]) for r in
             lsh_probe_topk(spark, path, vecs[q], k=5).collect()]
@@ -1382,7 +1385,7 @@ def test_lsh_append_conflict_typed_and_band_complete_fold(
     monkeypatch.undo()
     assert sim.lsh_index_append(batch, path, dedup_against_index=True) == 0
     data, v = sim._idx_current(path)
-    assert v == 0
+    assert v == 1
     got = spark.read.parquet(data).groupBy("vec_id", "band").count()
     assert got.filter(F.col("count") > 1).count() == 0, "duplicate rows"
     per_id = got.groupBy("vec_id").count()
@@ -1486,35 +1489,6 @@ def test_concurrent_append_probe_stress(spark, emb, tmp_path, kind):
         probe_one(q)
 
 
-def test_fresh_build_over_versioned_index_refused(spark, emb, tmp_path):
-    """ADVICE r7: a fresh `.mode('overwrite')` build at a VERSIONED
-    index path would delete `_vK` dirs and `_current` out from under
-    live probes that already resolved the old version — the retention
-    guarantee `*_vacuum` exists to uphold. Builds now refuse with a
-    clear pointer to `*_maintain`; a flat (unversioned) rebuild stays
-    supported (the params-cache invalidation flow)."""
-    from qwatch_spark.operators.similarity import (
-        ivf_build_index,
-        ivf_maintain,
-        lsh_build_index,
-        lsh_maintain,
-    )
-
-    ivf_path = str(tmp_path / "ivf")
-    lsh_path = str(tmp_path / "lsh")
-    ivf_build_index(emb, ivf_path, n_cells=8)
-    lsh_build_index(emb, lsh_path, n_planes=16, n_bands=8)
-    # flat rebuild over a flat layout: still fine
-    ivf_build_index(emb, ivf_path, n_cells=8)
-    lsh_build_index(emb, lsh_path, n_planes=16, n_bands=8)
-    ivf_maintain(spark, ivf_path)
-    lsh_maintain(spark, lsh_path)
-    with pytest.raises(ValueError, match="ivf_maintain"):
-        ivf_build_index(emb, ivf_path, n_cells=8)
-    with pytest.raises(ValueError, match="lsh_maintain"):
-        lsh_build_index(emb, lsh_path, n_planes=16, n_bands=8)
-
-
 def test_fold_retry_write_skew_serialized(spark, tmp_path, monkeypatch):
     """ADVICE r8 (medium): the post-swap fold and a conflicted append
     retrying with dedup_against_index=True both anti-join the new
@@ -1542,15 +1516,20 @@ def test_fold_retry_write_skew_serialized(spark, tmp_path, monkeypatch):
     # (1) inject the batch into the OLD version inside the maintain's
     # rebuild window (after the file-snapshot pin, before the swap) —
     # the append succeeds (no swap yet) and its files become fold delta
-    orig_build = sim.ivf_build_index
+    orig_writer = sim._ivf_writer
     injected = threading.Event()
 
-    def build_then_inject(*a, **kw):
-        orig_build(*a, **kw)
-        if not injected.is_set():
-            injected.set()
-            n = sim.ivf_index_append(batch, path)
-            assert n == 60
+    def writer_then_inject(*a, **kw):
+        write = orig_writer(*a, **kw)
+
+        def write_then_inject(vdir):
+            write(vdir)
+            if not injected.is_set():
+                injected.set()
+                n = sim.ivf_index_append(batch, path)
+                assert n == 60
+
+        return write_then_inject
 
     # (2) hold the fold open at its WRITE step — the window in which
     # the retry's anti-join would race it without the marker
@@ -1563,7 +1542,7 @@ def test_fold_retry_write_skew_serialized(spark, tmp_path, monkeypatch):
         assert fold_release.wait(timeout=120), "test orchestration hang"
         orig_move(df_, vdir, cols)
 
-    monkeypatch.setattr(sim, "ivf_build_index", build_then_inject)
+    monkeypatch.setattr(sim, "_ivf_writer", writer_then_inject)
     monkeypatch.setattr(sim, "_append_via_move", held_move)
 
     maint_out: dict = {}

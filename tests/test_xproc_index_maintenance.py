@@ -86,7 +86,7 @@ def test_two_process_append_vs_maintain_exactly_once(spark, tmp_path):
     for b in range(N_BATCHES):
         want_ids |= set(batch_ids(b))
     data, v = sim._idx_current(path)
-    assert v >= 0, "maintainer never published a version"
+    assert v >= 1, "maintainer never published a version"
     got = spark.read.parquet(data).groupBy("vec_id", "band").count()
     assert got.filter(F.col("count") > 1).count() == 0, "duplicate rows"
     per_id = got.groupBy("vec_id").count()
