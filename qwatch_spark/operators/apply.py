@@ -13,9 +13,10 @@ at-most-once. Ours is set-oriented per micro-batch:
         bucket (merge-on-read — readers resolve base ∪ deltas under a
         latest-wins (warc_ts, seq) order, so late/out-of-order events
         can never regress state)
-      → footer stats → fp segment → atomic epoch-tagged manifest commit
-        (idempotent re-delivery)
-      → per-bucket lineage metrics + commit-log row
+      → footer stats → fp segment → the epoch record (commit-log row +
+        per-bucket lineage metrics, one object, put BEFORE the commit
+        and visible once the commit lands)
+      → atomic epoch-tagged manifest commit (idempotent re-delivery)
       → inline compaction under write_mode="auto".
 
 Deletes become tombstones (is_deleted=true, payload nulled) so an older
@@ -27,7 +28,6 @@ destroy handler keeping the destroyed node with `destroyed` stamped
 
 from __future__ import annotations
 
-import datetime as dt
 import logging
 import time
 from dataclasses import dataclass
@@ -218,10 +218,7 @@ def apply_changes(
 ) -> ApplyStats:
     cfg = cfg or PipelineConfig()
     if table.has_epoch(epoch_id):
-        # duplicate delivery: no-op, but heal the crash window between the
-        # manifest swap and the commit_log append (the epoch is committed;
-        # make sure the durable record says so)
-        table.ensure_commit_log_row(spark, epoch_id)
+        # duplicate delivery: no-op (its record was put before its commit)
         return ApplyStats(int(epoch_id), True, 0, 0, 0, 0, 0)
     t0 = time.time()
 
@@ -334,6 +331,9 @@ def apply_changes(
     phases["write"] = time.time() - t
     if not touched:  # fully-gated batch: manifest-only commit
         table.store.delete_tree(out)
+        table.put_epoch_record(
+            epoch_id, table.version, 0, 0, int((time.time() - t0) * 1000), []
+        )
         table.commit_epoch(epoch_id)
         return ApplyStats(
             int(epoch_id), False, 0, 0, 0, 0, int((time.time() - t0) * 1000)
@@ -383,9 +383,8 @@ def apply_changes(
     # upserts as 'U' (deletes stay exact); the table's last_op is
     # repaired to the true I/U at compaction, which reads the history
     # anyway (METRICS_SCHEMA documents the semantics)
-    metrics_rows = [
+    buckets = [
         {
-            "epoch_id": int(epoch_id),
             "bucket": int(b),
             "n_insert": 0,
             "n_update": int(s["n"] - s["nd"]),
@@ -402,6 +401,13 @@ def apply_changes(
         has_fp=FP_COL in {f.name for f in evolved_payload.fields},
     )
     phases["commit_fp"] = time.time() - t2
+    # the epoch record BEFORE the commit point: durable whenever the
+    # epoch is, and hidden from the readers until the commit lands
+    t2 = time.time()
+    table.put_epoch_record(
+        epoch_id, new_version, n_up, n_del, int((t2 - t0) * 1000), buckets
+    )
+    phases["lineage"] = time.time() - t2
     t2 = time.time()
     table.commit_prewritten_delta(
         touched, epoch_id, evolved_payload, new_version, vtoken, zmaps,
@@ -409,26 +415,7 @@ def apply_changes(
     )
     phases["commit_swap"] = time.time() - t2
     phases["commit"] = time.time() - t
-
-    # lineage AFTER the commit point: recomputable
-    t = time.time()
-    table.append_metrics(metrics_rows)
-    phases["lineage"] = time.time() - t
-
     wall_ms = int((time.time() - t0) * 1000)
-    table.append_commit_log(
-        spark,
-        {
-            "epoch_id": int(epoch_id),
-            "batch_fingerprint": f"v{table.version}",
-            "n_events": n_events,
-            "n_upserts": n_up,
-            "n_deletes": n_del,
-            "wall_ms": wall_ms,
-            "events_per_sec": n_events / max(wall_ms, 1) * 1000.0,
-            "committed_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-        },
-    )
     if cfg.write_mode == "auto":
         # bound read amplification: fold deltas once a bucket carries
         # more than compact_every of them (atomic maintenance swap)

@@ -45,8 +45,10 @@ Layout on disk::
                                     # the nonce makes each writer's dir
                                     # unique (loser of a commit race never
                                     # clobbers the winner's files)
-      metrics/                      # per-epoch per-bucket lineage (append)
-      commit_log/                   # one row per committed epoch (append)
+      commit_log/e=<epoch>.json     # the epoch record: its commit-log
+                                    # row + per-bucket metrics rows, put
+                                    # before the epoch's commit; read only
+                                    # for epochs the manifest has applied
 """
 
 from __future__ import annotations
@@ -73,6 +75,7 @@ MANIFEST = "manifest.json"
 COMMITS_DIR = "_commits"  # CAS protocol: put-if-absent commit log
 HISTORY_DIR = "manifests"  # per-version manifest history
 SHARDS_DIR = "manifest_shards"  # sharded-manifest bucket-entry files
+RECORDS_DIR = "commit_log"  # one epoch record per applied epoch
 # commit-stats marker a delta write adds (1 for deletes, null for
 # upserts): rows minus its footer null_count is the exact delete count
 DEL_COL = "_del"
@@ -449,6 +452,18 @@ class SnapshotTable:
         )
 
     @staticmethod
+    def _applied(manifest: dict, col: str) -> Column:
+        """`has_epoch` over `manifest` as a Column predicate on the epoch
+        column `col`: the watermark range plus the small out-of-order
+        set — bounded predicates, not an isin() over every epoch the
+        table ever applied."""
+        e = F.col(col)
+        cond = e.between(0, manifest.get("epoch_watermark", -1))
+        if manifest.get("applied_epochs"):
+            cond = cond | e.isin([int(x) for x in manifest["applied_epochs"]])
+        return cond
+
+    @staticmethod
     def _record_epoch(manifest: dict, epoch_id: int) -> None:
         """Record an applied epoch with BOUNDED manifest growth: a
         high-watermark (every epoch in [0, watermark] is applied) plus a
@@ -776,8 +791,6 @@ class SnapshotTable:
         recorded warc_ts range predates the predicate (manifest-only —
         cold history costs zero file opens)."""
         old = self._get_json(HISTORY_DIR, f"v={int(since_version)}.json")
-        old_wm = int(old.get("epoch_watermark", -1))
-        old_sparse = [int(e) for e in old.get("applied_epochs", [])]
         # bucket-diff pruning: a bucket whose (base, deltas) pointers are
         # identical in both manifests received no commits since — skip its
         # files entirely. CDF cost scales with the touched key-spread, not
@@ -793,13 +806,7 @@ class SnapshotTable:
         cur = self.read_buckets(
             spark, changed, include_deleted=True, min_warc_ts=min_warc_ts
         )
-        # applied-after test against the historical watermark + its small
-        # out-of-order set — bounded predicates, not an isin() over every
-        # epoch the table ever applied
-        cond = F.col("last_epoch") > F.lit(old_wm)
-        if old_sparse:
-            cond = cond & ~F.col("last_epoch").isin(old_sparse)
-        return cur.filter(cond)
+        return cur.filter(~self._applied(old, "last_epoch"))
 
     def versions(self) -> list[int]:
         return sorted(
@@ -993,7 +1000,7 @@ class SnapshotTable:
         event, the repaired value is the event-time truth rather than
         what happened at apply time; a WAL tail is in order, so the
         normal CDC case never hits this. The per-epoch METRICS rows
-        appended at apply time are immutable history and keep the
+        of the epoch records are immutable apply-time history and keep the
         coarse semantics (n_insert=0) — documented in
         schema.METRICS_SCHEMA; consumers wanting exact I/U splits read
         the table's last_op."""
@@ -1153,107 +1160,74 @@ class SnapshotTable:
                 cols.append(F.col(f"_row.{c}").alias(c))
         return agged.select(*cols)
 
-    # ---------- lineage / metrics ----------
+    # ---------- epoch record ----------
 
-    @staticmethod
-    def _pa_type(dt_):
-        import pyarrow as pa
-
-        return {
-            "long": pa.int64(),
-            "bigint": pa.int64(),
-            "int": pa.int32(),
-            "integer": pa.int32(),
-            "double": pa.float64(),
-            "string": pa.string(),
-            "boolean": pa.bool_(),
-            # tz-aware (isAdjustedToUTC) so Spark reads TIMESTAMP_LTZ,
-            # matching what its own writer produced; session is UTC-naive
-            "timestamp": pa.timestamp("us", tz="UTC"),
-        }[dt_.simpleString()]
-
-    def _append_rows(self, subdir: str, rows: list[dict], spark_schema) -> None:
-        """Append tiny bookkeeping rows as one parquet file written
-        DRIVER-SIDE via pyarrow — metrics and commit-log rows are a few
-        hundred bytes, and a full Spark write job per table per epoch
-        (plan + schedule + task + commit protocol) was a measurable part
-        of the per-epoch fixed cost. Spark reads the directory exactly as
-        before; files are uniquely named so appends never collide, and
-        each is one atomic object put, so a killed append leaves no torn
-        file where Spark scans."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        schema = pa.schema(
-            [(f.name, self._pa_type(f.dataType)) for f in spark_schema.fields]
-        )
-        cols = {f.name: [r.get(f.name) for r in rows] for f in spark_schema.fields}
-        buf = pa.BufferOutputStream()
-        pq.write_table(pa.Table.from_pydict(cols, schema=schema), buf)
+    def put_epoch_record(
+        self,
+        epoch_id: int,
+        version: int,
+        n_upserts: int,
+        n_deletes: int,
+        wall_ms: int,
+        buckets: list[dict],
+    ) -> None:
+        """Write the epoch's record, `commit_log/e=<epoch>.json`, as one
+        atomic object put: its commit-log row (COMMIT_LOG_SCHEMA; the
+        fingerprint is the table version the commit publishes) plus its
+        per-bucket metrics rows under `buckets` (METRICS_SCHEMA without
+        `epoch_id`). The apply puts it BEFORE the epoch's commit, so the
+        record is durable whenever the epoch is, and the readers show it
+        only once the manifest records the epoch. The name is fixed by
+        the epoch: a replay after a crash before the commit overwrites
+        the uncommitted record, and a replay after the commit returns at
+        `has_epoch` and writes nothing."""
+        n = int(n_upserts) + int(n_deletes)
+        rec = {
+            "epoch_id": int(epoch_id),
+            "batch_fingerprint": f"v{int(version)}",
+            "n_events": n,
+            "n_upserts": int(n_upserts),
+            "n_deletes": int(n_deletes),
+            "wall_ms": int(wall_ms),
+            "events_per_sec": n / max(wall_ms, 1) * 1000.0,
+            "committed_at": dt.datetime.now(dt.timezone.utc).isoformat(),
+            "buckets": buckets,
+        }
         self.store.put(
-            os.path.join(self.path, subdir, f"part-{uuid.uuid4().hex}.parquet"),
-            buf.getvalue().to_pybytes(),
+            os.path.join(self.path, RECORDS_DIR, f"e={int(epoch_id)}.json"),
+            json.dumps(rec).encode(),
         )
 
-    def append_metrics(self, metrics_rows: list[dict]) -> None:
-        from qwatch_spark.schema import METRICS_SCHEMA
+    def _read_records(self, spark: SparkSession) -> DataFrame:
+        """The epoch records of the epochs this table's manifest records
+        as applied (`has_epoch`'s predicate), so a record whose commit
+        never landed (a crash before the commit, a CAS loser's) is never
+        read. A killed put leaves only its hidden `.tmp`, which Spark's
+        file listing skips."""
+        from qwatch_spark.schema import EPOCH_RECORD_SCHEMA
 
-        self._append_rows("metrics", metrics_rows, METRICS_SCHEMA)
-
-    def append_commit_log(self, spark: SparkSession, row: dict) -> None:
-        from qwatch_spark.schema import COMMIT_LOG_SCHEMA
-
-        self._append_rows("commit_log", [row], COMMIT_LOG_SCHEMA)
-
-    def ensure_commit_log_row(self, spark: SparkSession, epoch_id: int) -> bool:
-        """Backfill a missing commit_log row for an applied epoch.
-
-        Covers the crash window between the manifest swap (the commit
-        point) and the commit_log append: on the duplicate-delivery skip
-        path the epoch would otherwise be permanently absent from the
-        durable record. The backfill row is marked 'backfill' with null
-        counters — per-bucket lineage for the epoch remains recoverable
-        from the data files' last_epoch column. Returns True if a row was
-        written (dedupable by epoch_id regardless)."""
-        present = (
-            self.read_commit_log(spark)
-            .filter(F.col("epoch_id") == int(epoch_id))
-            .limit(1)
-            .count()
-        )
-        if present:
-            return False
-        self.append_commit_log(
-            spark,
-            {
-                "epoch_id": int(epoch_id),
-                "batch_fingerprint": "backfill",
-                "n_events": None,
-                "n_upserts": None,
-                "n_deletes": None,
-                "wall_ms": None,
-                "events_per_sec": None,
-                "committed_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-            },
-        )
-        return True
-
-    def _read_rows(self, spark: SparkSession, subdir: str, schema) -> DataFrame:
-        d = os.path.join(self.path, subdir)
-        files = self.store.list_tree(d)
-        if not any(rel.endswith(".parquet") for rel, _size, _mt in files):
-            return spark.createDataFrame([], schema)
-        return spark.read.parquet(self.store.spark_path(d))
+        d = os.path.join(self.path, RECORDS_DIR)
+        if any(rel.endswith(".json") for rel, _s, _m in self.store.list_tree(d)):
+            recs = spark.read.schema(EPOCH_RECORD_SCHEMA).json(
+                self.store.spark_path(d)
+            )
+        else:
+            recs = spark.createDataFrame([], EPOCH_RECORD_SCHEMA)
+        return recs.filter(self._applied(self._manifest, "epoch_id"))
 
     def read_metrics(self, spark: SparkSession) -> DataFrame:
-        from qwatch_spark.schema import METRICS_SCHEMA
-
-        return self._read_rows(spark, "metrics", METRICS_SCHEMA)
+        """METRICS_SCHEMA rows: the records' `buckets`, exploded."""
+        return (
+            self._read_records(spark)
+            .select("epoch_id", F.explode("buckets").alias("m"))
+            .select("epoch_id", "m.*")
+        )
 
     def read_commit_log(self, spark: SparkSession) -> DataFrame:
+        """COMMIT_LOG_SCHEMA rows: one per applied epoch."""
         from qwatch_spark.schema import COMMIT_LOG_SCHEMA
 
-        return self._read_rows(spark, "commit_log", COMMIT_LOG_SCHEMA)
+        return self._read_records(spark).select(*COMMIT_LOG_SCHEMA.fieldNames())
 
     # ---------- maintenance ----------
 

@@ -57,8 +57,7 @@ EVENT_SCHEMA = T.StructType(
 # throughput metrics; the reference has only log lines, outputs/neo4j.go:124).
 # Per-epoch per-bucket lineage. Every epoch records its upserts as
 # n_update with n_insert=0: I-vs-U would need the table read the O(batch)
-# apply path exists to avoid (rows appended by the retired copy-on-write
-# mode may still carry exact n_insert). Deletes are exact. The TABLE's
+# apply path exists to avoid. Deletes are exact. The TABLE's
 # last_op column is the exact record (delta winners' last_op is
 # reconstructed from history at compaction; see SnapshotTable.compact);
 # metrics rows are immutable apply-time history.
@@ -84,6 +83,18 @@ COMMIT_LOG_SCHEMA = T.StructType(
         T.StructField("wall_ms", T.LongType(), True),
         T.StructField("events_per_sec", T.DoubleType(), True),
         T.StructField("committed_at", T.TimestampType(), True),
+    ]
+)
+
+# The epoch record `commit_log/e=<epoch>.json` (SnapshotTable.put_epoch_record):
+# the epoch's commit-log row plus its metrics rows, without epoch_id, under
+# `buckets`. read_commit_log and read_metrics are two views of it.
+EPOCH_RECORD_SCHEMA = T.StructType(
+    COMMIT_LOG_SCHEMA.fields
+    + [
+        T.StructField(
+            "buckets", T.ArrayType(T.StructType(METRICS_SCHEMA.fields[1:])), True
+        )
     ]
 )
 

@@ -115,6 +115,26 @@ def test_filter_rules_gate_payload_but_not_deletes(spark, table):
     assert got == {}  # zz-lang gated, bad url gated, b.com deleted
 
 
+def test_fully_gated_epoch_recorded_at_first_delivery(spark, table):
+    """An epoch whose every row is gated commits with its record at the
+    first delivery (no events, no buckets, the unchanged version as its
+    fingerprint); redeliveries skip and add no row."""
+    ts = dt.datetime(2024, 6, 1)
+    rows = [
+        {"seq": 1, "op": "I", "url": "https://a.com/1", "warc_ts": ts,
+         "html": b"<p>x</p>", "lang": "zz", "source": "s", "epoch_hint": 0},
+        {"seq": 2, "op": "I", "url": "not-a-url", "warc_ts": ts,
+         "html": b"<p>y</p>", "lang": "en", "source": "s", "epoch_hint": 0},
+    ]
+    df = spark.createDataFrame(rows, EVENT_SCHEMA).drop("epoch_hint")
+    stats = [apply_changes(spark, df, table, 0, CFG) for _ in range(3)]
+    assert [s.skipped for s in stats] == [False, True, True]
+    log = table.read_commit_log(spark).collect()
+    assert [(r["epoch_id"], r["n_events"]) for r in log] == [(0, 0)]
+    assert log[0]["batch_fingerprint"] == "v0"
+    assert table.read_metrics(spark).count() == 0
+
+
 def test_metrics_and_commit_log(spark, table):
     feed = gen_feed_df(spark, N)
     stats = replay_feed(spark, feed, table, CFG)
@@ -139,6 +159,14 @@ def test_metrics_and_commit_log(spark, table):
     }
     for r in log:
         assert per_epoch[r["epoch_id"]] == (r["n_upserts"], r["n_deletes"])
+    # both views keep their schemas' column names, types and order
+    from qwatch_spark.schema import COMMIT_LOG_SCHEMA, METRICS_SCHEMA
+
+    views = ((m, METRICS_SCHEMA), (table.read_commit_log(spark), COMMIT_LOG_SCHEMA))
+    for df, want in views:
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in want
+        ]
 
 
 def test_salted_and_unsalted_agree(spark, tmp_path):

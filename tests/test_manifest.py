@@ -1,6 +1,7 @@
 """Manifest bookkeeping gates: bounded applied-epochs growth (watermark +
-sparse set), stale concurrent-writer detection, commit-log backfill on the
-duplicate-delivery path, and dead-letter exactly-once under re-delivery."""
+sparse set), stale concurrent-writer detection, one epoch record per
+applied epoch across crashes and re-delivery, and dead-letter
+exactly-once under re-delivery."""
 
 import json
 import os
@@ -101,30 +102,12 @@ def test_concurrent_writer_data_never_clobbered(spark, tmp_path):
     # still reproduces the winner's state
     t3.vacuum(retention_s=0)
     assert snap(SnapshotTable(path)) == won
+    # no record of the aborted writer's epoch is visible
     epochs = {r["epoch_id"] for r in t3.read_metrics(spark).collect()}
-    assert epochs == {0, 1}  # no lineage from the aborted writer
-
-
-def test_commit_log_backfilled_on_duplicate_delivery(spark, tmp_path):
-    import shutil
-
-    from qwatch_spark.config import PipelineConfig
-    from qwatch_spark.datagen import gen_feed_df
-    from qwatch_spark.operators.apply import apply_changes
-
-    t = SnapshotTable.create(str(tmp_path / "t"), n_buckets=4)
-    feed = gen_feed_df(spark, 200)
-    apply_changes(spark, feed, t, 0, PipelineConfig(n_buckets=4))
-    # simulate the crash window: epoch committed, commit_log row lost
-    shutil.rmtree(os.path.join(t.path, "commit_log"))
-    st = apply_changes(spark, feed, t, 0, PipelineConfig(n_buckets=4))
-    assert st.skipped
-    log = t.read_commit_log(spark).collect()
-    assert [r["epoch_id"] for r in log] == [0]
-    assert log[0]["batch_fingerprint"] == "backfill"
-    # and a second duplicate does not double-backfill
-    apply_changes(spark, feed, t, 0, PipelineConfig(n_buckets=4))
-    assert t.read_commit_log(spark).count() == 1
+    assert epochs == {0, 1}
+    assert sorted(r["epoch_id"] for r in t3.read_commit_log(spark).collect()) == [
+        0, 1,
+    ]
 
 
 def test_read_key_point_lookup_prunes_to_one_bucket(spark, tmp_path):
@@ -402,6 +385,89 @@ def test_cas_table_full_apply_path(spark, tmp_path):
     t2 = SnapshotTable(path)
     assert t2.read(spark).count() == rows
     assert t2.version == t.version
+
+
+@pytest.mark.parametrize("backend", CAS_BACKENDS)
+def test_commit_to_an_empty_commit_log_raises(tmp_path, backend):
+    """`create` writes slot 0, so a table whose commit log is empty has
+    lost its history: a commit to it raises instead of adopting the
+    pointer, and nothing is written."""
+    path = _table_path(tmp_path, backend)
+    t = SnapshotTable.create(path, SCHEMA, n_buckets=4)
+    t.log.delete(0)
+    with pytest.raises(ValueError, match="is empty"):
+        t.commit_epoch(0)
+    assert t.log.slots() == [] and not SnapshotTable(path).has_epoch(0)
+
+
+@pytest.mark.parametrize("backend", CAS_BACKENDS)
+@pytest.mark.parametrize("crash", ["before_cas", "after_swap"])
+def test_epoch_record_survives_crash_around_commit(
+    spark, tmp_path, monkeypatch, backend, crash
+):
+    """The epoch record is put before the commit, so a crash on either
+    side of the CAS leaves, after redelivery, exactly one record for
+    the epoch, equal to a clean run's apart from its timings. Before the
+    CAS the redelivery commits and overwrites the hidden record; after
+    the pointer swap it skips and the record is already complete."""
+    from qwatch_spark.config import PipelineConfig
+    from qwatch_spark.datagen import gen_feed_df
+    from qwatch_spark.operators.apply import apply_changes
+    from qwatch_spark.plans.objectstore import S3Store
+
+    root = tmp_path / "s3"  # the autouse fake's root
+    monkeypatch.setattr(
+        S3Store, "spark_path_for", lambda bucket, key: str(root / bucket / key)
+    )
+    cfg = PipelineConfig(n_buckets=4, write_mode="delta")
+    feed = gen_feed_df(spark, 400, epoch_size=200)
+    batches = [
+        feed.filter(f"epoch_hint = {e}").drop("epoch_hint") for e in (0, 1)
+    ]
+    clean = SnapshotTable.create(str(tmp_path / "clean"), n_buckets=4)
+    for e in (0, 1):
+        apply_changes(spark, batches[e], clean, e, cfg)
+    path = _table_path(tmp_path, backend)
+    apply_changes(spark, batches[0], SnapshotTable.create(path, n_buckets=4), 0, cfg)
+
+    class Crash(Exception):
+        pass
+
+    real_swap = SnapshotTable._swap_or_cleanup
+
+    def crashing_swap(self, *args, **kwargs):
+        if crash == "after_swap":
+            real_swap(self, *args, **kwargs)
+        raise Crash(crash)
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotTable, "_swap_or_cleanup", crashing_swap)
+        with pytest.raises(Crash):
+            apply_changes(spark, batches[1], SnapshotTable(path), 1, cfg)
+    t = SnapshotTable(path)
+    assert t.has_epoch(1) == (crash == "after_swap")
+    st = apply_changes(spark, batches[1], t, 1, cfg)
+    assert st.skipped == (crash == "after_swap")
+
+    def records(table):
+        volatile = {"wall_ms", "events_per_sec", "committed_at"}
+        log = sorted(
+            tuple((k, v) for k, v in r.asDict().items() if k not in volatile)
+            for r in SnapshotTable(table.path).read_commit_log(spark).collect()
+        )
+        metrics = sorted(
+            tuple(r) for r in SnapshotTable(table.path).read_metrics(spark).collect()
+        )
+        return log, metrics
+
+    got, want = records(t), records(clean)
+    assert got == want
+    assert all(v is not None for row in got[0] for _k, v in row)
+    # one object per applied epoch, and no second directory
+    assert sorted(
+        rel for rel, _s, _m in t.store.list_tree(os.path.join(path, "commit_log"))
+    ) == ["e=0.json", "e=1.json"]
+    assert not t.store.list_tree(os.path.join(path, "metrics"))
 
 
 def test_commit_protocol_config_plumbing(tmp_path):
@@ -865,11 +931,11 @@ def test_overwrite_deletes_an_s3_commit_log(tmp_path):
 
 
 def test_killed_append_is_hidden_from_redelivery(spark, tmp_path, monkeypatch):
-    """A commit-log append killed mid-put leaves only its in-flight temp
-    file, named `.<name>.<hex>.tmp` beside the target, which Spark's
-    hidden-file filter skips. Redelivering the committed epoch must
-    still skip (backfilling the lost row), not fail reading a torn
-    parquet file on every retry."""
+    """An epoch-record put killed mid-put aborts the epoch BEFORE its
+    commit and leaves only its in-flight temp file, named
+    `.<name>.<hex>.tmp` beside the target, which Spark's hidden-file
+    filter skips. Redelivery applies the epoch and yields one full
+    record; later redeliveries skip and write nothing."""
     import pytest
 
     from qwatch_spark.config import PipelineConfig
@@ -900,19 +966,23 @@ def test_killed_append_is_hidden_from_redelivery(spark, tmp_path, monkeypatch):
     with pytest.raises(Killed):
         apply_changes(spark, batches[1], SnapshotTable(path), 1, cfg)
     monkeypatch.undo()
+    assert not SnapshotTable(path).has_epoch(1)
     leftovers = [
         f for f in os.listdir(os.path.join(path, "commit_log"))
         if f.endswith(".tmp")
     ]
-    assert len(leftovers) == 1 and leftovers[0].startswith(".part-")
+    assert len(leftovers) == 1 and leftovers[0].startswith(".e=1.json.")
+    logged = SnapshotTable(path).read_commit_log(spark).collect()
+    assert [r["epoch_id"] for r in logged] == [0]
 
-    for e in (1, 0, 1):  # the second redelivery of 1 must not backfill again
+    assert not apply_changes(spark, batches[1], SnapshotTable(path), 1, cfg).skipped
+    for e in (0, 1):
         assert apply_changes(spark, batches[e], SnapshotTable(path), e, cfg).skipped
     log = sorted(
-        (r["epoch_id"], r["batch_fingerprint"])
+        (r["epoch_id"], r["n_events"])
         for r in SnapshotTable(path).read_commit_log(spark).collect()
     )
-    assert [e for e, _fp in log] == [0, 1] and log[1][1] == "backfill"
+    assert [e for e, _n in log] == [0, 1] and log[1][1] > 0
 
 
 def test_s3_table_replay_compact_vacuum(spark, tmp_path, monkeypatch):
