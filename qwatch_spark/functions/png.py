@@ -1,19 +1,14 @@
-"""Pure-stdlib PNG codec (zlib + struct + numpy) — the REAL decode path
-for the multimodal operators.
+"""Pure-stdlib PNG codec (zlib + struct + numpy).
 
-The sandbox has no PIL/ffmpeg, but PNG itself needs nothing beyond zlib:
-this module implements a correct encoder/decoder for the dominant
-non-interlaced 8-bit cases (grayscale, gray+alpha, RGB, RGBA), including
-all five scanline filter types, so `codec="real"` in
-qwatch_spark.operators.multimodal decodes actual pixels end-to-end.
-GIF header sniffing (logical screen dimensions) rides along for
-metadata-only decode. Baseline JPEG lives in the sibling
-qwatch_spark.functions.jpeg; formats that genuinely need external
-codecs (video, audio) still raise NotImplementedError at the plug
-points.
+The project takes no PIL dependency, and PNG needs nothing beyond
+zlib: this module implements a correct encoder/decoder for the dominant
+non-interlaced 8-bit cases (grayscale, gray+alpha, RGB, RGBA),
+including all five scanline filter types, plus GIF header sniffing
+(logical screen dimensions) and nearest-neighbour resize.
 
-No reference analog — qwatch has no media path; this covers the
-training-data brief's multimodal-column requirement.
+No job, script or bench reaches it: it is the last module of the
+deleted media stack and runs only under tests/test_png_codec.py
+(ROADMAP direction 5 names its deletion as the next step).
 """
 
 from __future__ import annotations

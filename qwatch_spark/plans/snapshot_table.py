@@ -41,6 +41,9 @@ Layout on disk::
                                     # — pointer cache of the log's top
       _commits/m=<mutation>.json    # the CAS commit log (CasLog)
       manifests/v=<version>.json    # version history (time travel)
+      manifest_shards/s=<shard>-<nonce>.json  # bucket entries of shard
+                                    # b % k when created with
+                                    # manifest_shards=k (SHARDS_DIR)
       data/v=<version>-<nonce>/b=<bucket>/  # parquet via partitionBy("b");
                                     # the nonce makes each writer's dir
                                     # unique (loser of a commit race never
@@ -49,6 +52,10 @@ Layout on disk::
                                     # row + per-bucket metrics rows, put
                                     # before the epoch's commit; read only
                                     # for epochs the manifest has applied
+      _fp_bloom/                    # fingerprint bloom segments of the
+                                    # exact-dup gate (fp_bloom.BLOOM_DIR)
+      dead_letter/epoch=<id>/       # run_stream's default dead-letter
+                                    # ParquetSink
 """
 
 from __future__ import annotations
@@ -167,8 +174,7 @@ def _vtoken(new_version: int) -> str:
     Concurrent writers racing toward the same version each write their
     OWN directory, so the loser of the commit race can abort without
     ever having clobbered the winner's files — the CAS put stays the
-    only commit point, and loser data is just an orphan dir for vacuum.
-    Legacy plain-int tokens remain readable."""
+    only commit point, and loser data is just an orphan dir for vacuum."""
     return f"{int(new_version)}-{uuid.uuid4().hex[:8]}"
 
 

@@ -14,7 +14,8 @@ sink is at-least-once with no epoch identity at all).
 Implementations:
 
 - ParquetSink   — lake-native append directory (epoch=<id> subdirs);
-- ConsoleSink   — the outputs/log.go analog for debugging;
+- ConsoleSink   — the outputs/log.go analog for debugging, on the
+                  `qwatch_spark.sinks` logger (INFO);
 - MemorySink    — test double (collects to the driver; small data only).
 
 Custom targets (a real ES/JDBC/object-store writer) implement the same
@@ -24,6 +25,7 @@ Sink surface and can be handed to the streaming runner via
 
 from __future__ import annotations
 
+import logging
 import os
 from typing import Protocol, runtime_checkable
 
@@ -31,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from qwatch_spark.plans.objectstore import store_for
+
+log = logging.getLogger(__name__)
 
 
 @runtime_checkable
@@ -195,17 +199,20 @@ class DuckDBSink:
 
 
 class ConsoleSink:
-    """outputs/log.go analog: print each epoch's rows (debug only)."""
+    """outputs/log.go analog: log the DDL and each epoch's first rows,
+    as `df.show` renders them, at INFO (debug only; nothing goes to
+    stdout)."""
 
     def __init__(self, num_rows: int = 20):
         self.num_rows = num_rows
 
     def ddl(self, spark: SparkSession, schema: T.StructType) -> None:
-        print(f"[sink ddl] {schema.simpleString()}")
+        log.info("[sink ddl] %s", schema.simpleString())
 
     def append(self, df: DataFrame, epoch_id: int) -> None:
-        print(f"[sink epoch={epoch_id}]")
-        df.show(self.num_rows, truncate=False)
+        if log.isEnabledFor(logging.INFO):
+            rows = df._show_string(self.num_rows, truncate=False)
+            log.info("[sink epoch=%s]\n%s", epoch_id, rows)
 
     def read(self, spark: SparkSession) -> DataFrame:
         raise NotImplementedError("ConsoleSink is write-only")

@@ -1,11 +1,12 @@
 """Append-sink protocol (ES-output analog): ddl/append/read surface,
 epoch-keyed idempotent appends, runner integration with a custom sink."""
 
+import logging
 import os
 
 from pyspark.sql import types as T
 
-from qwatch_spark.sinks import MemorySink, ParquetSink, Sink
+from qwatch_spark.sinks import ConsoleSink, MemorySink, ParquetSink, Sink
 
 SCHEMA = T.StructType(
     [
@@ -71,6 +72,21 @@ def test_memory_sink_same_contract(spark):
     sink.append(spark.createDataFrame([("a", 1)], SCHEMA), 0)  # redelivery
     sink.append(spark.createDataFrame([("b", 2)], SCHEMA), 1)
     assert sink.read(spark).count() == 2
+
+
+def test_console_sink_logs_instead_of_printing(spark, caplog, capsys):
+    """ConsoleSink's DDL line and epoch rows reach the
+    `qwatch_spark.sinks` logger; nothing is written to stdout."""
+    sink = ConsoleSink(num_rows=5)
+    assert isinstance(sink, Sink)
+    with caplog.at_level(logging.INFO, logger="qwatch_spark.sinks"):
+        sink.ddl(spark, SCHEMA)
+        sink.append(spark.createDataFrame([("alpha", 1), ("beta", 2)], SCHEMA), 7)
+    assert capsys.readouterr().out == ""
+    ddl, epoch = [r.getMessage() for r in caplog.records]
+    assert ddl == "[sink ddl] struct<k:string,n:bigint>"
+    assert epoch.startswith("[sink epoch=7]\n")
+    assert "|alpha|1  |" in epoch and "|beta |2  |" in epoch
 
 
 def test_runner_routes_dead_letter_through_custom_sink(spark, tmp_path):
